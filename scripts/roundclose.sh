@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Round-close checklist, mechanized. Runs every check a round-close record
 # claims, in order, and prints a one-screen PASS/FAIL summary:
-#   1. full unit suite (sbt test)
+#   1. full unit suite (sbt test), then the benchmark's self-checks
+#      (python3 perfbench/test_perfbench.py)
 #   2. gate replay on all four corpora (sf0.001, sf0.01, sf0.1, adversarial)
 #      via graft.Verify -> scripts/check.py (DuckDB oracle, hash-exact)
 #   3. sf0.1 bench (graft.Bench, stdout line + BENCH_DETAIL_sf0.1.json)
@@ -47,6 +48,16 @@ if [ "$SKIP_TEST" -eq 0 ]; then
 else
   RESULTS+=("SKIP  sbt test")
 fi
+
+# the benchmark's self-checks (perfbench/): among them, its analytics
+# family map must cover every SparkEntry.queries key exactly once, so a
+# renamed or removed gate entry fails here instead of in the benchmark
+echo "== benchmark self-checks =="
+t_start
+python3 perfbench/test_perfbench.py > "$LOGS/perfbench_test.log" 2>&1
+ptrc=$?
+t_end
+step "benchmark self-checks (perfbench/test_perfbench.py) [${DT}s]" "$ptrc"
 
 echo "== [2/4] four-corpora gate replay =="
 declare -a CORPORA=(

@@ -30,6 +30,7 @@ object CcModeBench {
     val spark = graft.LocalSession.create(cpus)
 
     val jobs = new AtomicLong(0)
+    val stagesDone = new AtomicLong(0)
     // Per-JOB shuffle/task tallies (r22, VERDICT r21 #4): ccStar runs ONE
     // driver-blocking job per round, so job-granular metrics ARE
     // round-granular — the audit's question is whether the later rounds'
@@ -47,21 +48,29 @@ object CcModeBench {
       }
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        // a stage whose job start predates the last stageJob.clear()
+        // belongs to an earlier run: not part of the profiled run
         val j = stageJob.getOrDefault(sc.stageInfo.stageId, -1L)
-        jobShuf.computeIfAbsent(j, _ => new AtomicLong)
-          .addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        jobTasks.computeIfAbsent(j, _ => new AtomicLong)
-          .addAndGet(sc.stageInfo.numTasks.toLong)
+        if (j >= 0) {
+          jobShuf.computeIfAbsent(j, _ => new AtomicLong).addAndGet(
+            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          jobTasks.computeIfAbsent(j, _ => new AtomicLong)
+            .addAndGet(sc.stageInfo.numTasks.toLong)
+        }
+        stagesDone.incrementAndGet()
         ()
       }
     })
+    // the listener bus is asynchronous: wait until neither the started-job
+    // count nor the completed-stage count moves, so the last job's stage
+    // metrics have landed before anything reads them
     def settled(): Long = {
-      var prev = -1L; var cur = jobs.get()
+      var prev = (-1L, -1L); var cur = (jobs.get(), stagesDone.get())
       val deadline = System.currentTimeMillis() + 5000
       while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50); cur = jobs.get()
+        prev = cur; Thread.sleep(50); cur = (jobs.get(), stagesDone.get())
       }
-      cur
+      cur._1
     }
 
     // k disjoint copies of the entity graph, ids suffixed per copy —

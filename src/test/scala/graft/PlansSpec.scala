@@ -656,126 +656,6 @@ class PlansSpec extends AnyFunSuite {
       s"window 0 must raise the named guard, got: ${rootMsg(ex)}")
   }
 
-  test("minhash_signature_xx64 is value-identical to the explode + " +
-    "min(xxhash64(j, s)) aggregate form (the off-gate scale family's " +
-    "defining relation) on real documents, under CODEGEN_ONLY") {
-    import org.apache.spark.sql.functions._
-    val numHashes = 6 // deliberately NOT a multiple of 4 — no md5 tiling
-    val arrs = graft.operators.Docs.shingleArraysOf(
-      TripleStore.table(spark, sf, "documents"))
-    val sh = arrs.select(col("doc_id"), explode(col("ss")).as("s"))
-    val sigCols = (0 until numHashes).map(j =>
-      min(xxhash64(lit(j), col("s"))).as(s"mh$j"))
-    val agg = sh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(j => col(s"mh$j")): _*).as("mh_agg"))
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val kernel = arrs.select(col("doc_id"),
-        expr(s"minhash_signature_xx64(ss, $numHashes)").as("mh"))
-      val joined = kernel.join(agg, Seq("doc_id"), "full_outer")
-      assert(joined.filter(col("mh").isNull || col("mh_agg").isNull)
-        .count() == 0L, "kernel and aggregate form must cover the same docs")
-      val drift = joined
-        .filter(expr("CAST(mh AS STRING) <> CAST(mh_agg AS STRING)")).count()
-      assert(drift == 0L, s"$drift docs drifted from the xxhash64 aggregate")
-    } finally {
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-      spark.conf.unset("spark.sql.codegen.fallback")
-    }
-  }
-
-  test("minhash_signature_xx64 edge semantics mirror the md5 kernel: " +
-    "empty/all-NULL sets yield NULL, NULL elements skipped, width 0 raises") {
-    import spark.implicits._
-    val r = spark.sql(
-      """SELECT minhash_signature_xx64(array('a b c'), 6) AS one,
-        |       minhash_signature_xx64(CAST(array() AS ARRAY<STRING>), 6)
-        |         AS empty,
-        |       minhash_signature_xx64(array(CAST(NULL AS STRING)), 6)
-        |         AS allnull,
-        |       minhash_signature_xx64(array('a b c', CAST(NULL AS STRING)), 6)
-        |         AS skipnull,
-        |       minhash_signature_xx64(CAST(NULL AS ARRAY<STRING>), 6) AS nul"""
-        .stripMargin)
-      .selectExpr("size(one)", "one[0] = xxhash64(0, 'a b c')",
-        "one[5] = xxhash64(5, 'a b c')",
-        "empty IS NULL", "allnull IS NULL",
-        "CAST(skipnull AS STRING) = CAST(one AS STRING)", "nul IS NULL")
-      .as[(Int, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean)].head()
-    assert(r == ((6, true, true, true, true, true, true)))
-    val ex = intercept[Exception] {
-      spark.sql("SELECT minhash_signature_xx64(array('x'), 0)").collect()
-    }
-    def rootMsg(e: Throwable): String = {
-      var c = e
-      while (c.getCause != null && !c.getMessage.contains("non-positive"))
-        c = c.getCause
-      Option(c.getMessage).getOrElse("")
-    }
-    assert(rootMsg(ex).contains("non-positive width"),
-      s"width 0 must raise the named guard, got: ${rootMsg(ex)}")
-  }
-
-  test("simhash_bits_xx64 is value-identical to the explode + " +
-    "sum((xxhash64(j,t)>>k)&1 ? 1 : -1) aggregate form on real documents " +
-    "at the 64-bit scale config, under CODEGEN_ONLY") {
-    import org.apache.spark.sql.functions._
-    val bits = 64
-    val docs = TripleStore.table(spark, sf, "documents")
-    val toks = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-      .withColumn("h0", xxhash64(lit(0), col("t")))
-    val dims = (0 until bits).map(k =>
-      sum(when(expr(s"(h0 >> $k) & 1") === 1, 1).otherwise(-1)).as(s"d$k"))
-    val agg = toks.groupBy("doc_id").agg(dims.head, dims.tail: _*)
-      .select(col("doc_id"),
-        concat((0 until bits).map(k =>
-          when(col(s"d$k") >= 0, "1").otherwise("0")): _*).as("sim_agg"))
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val kernel = docs.filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          expr(s"simhash_bits_xx64(split(text, ' '), $bits)").as("simhash"))
-      val joined = kernel.join(agg, Seq("doc_id"), "full_outer")
-      assert(joined.filter(col("simhash").isNull || col("sim_agg").isNull)
-        .count() == 0L, "doc coverage must match")
-      val drift = joined.filter(col("simhash") =!= col("sim_agg")).count()
-      assert(drift == 0L,
-        s"$drift docs drifted from the xxhash64 aggregate fingerprints")
-    } finally {
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-      spark.conf.unset("spark.sql.codegen.fallback")
-    }
-  }
-
-  test("simhash_bits_xx64 edge semantics mirror the md5 kernel: NULL " +
-    "tokens count -1 per dim, empty arrays are all-1, sub-64 widths are a " +
-    "prefix of the 64-bit fingerprint, width 0 raises") {
-    import spark.implicits._
-    val r = spark.sql(
-      """SELECT simhash_bits_xx64(array(CAST(NULL AS STRING)), 4) AS nulltok,
-        |       simhash_bits_xx64(CAST(array() AS ARRAY<STRING>), 4) AS empty,
-        |       simhash_bits_xx64(array('a'), 64) AS full,
-        |       simhash_bits_xx64(array('a'), 4) AS prefix""".stripMargin)
-      .selectExpr("nulltok", "empty",
-        "prefix = substring(full, 1, 4)").as[(String, String, Boolean)].head()
-    assert(r == (("0000", "1111", true)))
-    val ex = intercept[Exception] {
-      spark.sql("SELECT simhash_bits_xx64(array('x'), 0)").collect()
-    }
-    def rootMsg(e: Throwable): String = {
-      var c = e
-      while (c.getCause != null && !c.getMessage.contains("non-positive"))
-        c = c.getCause
-      Option(c.getMessage).getOrElse("")
-    }
-    assert(rootMsg(ex).contains("non-positive width"),
-      s"width 0 must raise the named guard, got: ${rootMsg(ex)}")
-  }
-
   test("neardupPairs' staged-parquet shape (above the shingle-stage " +
     "threshold) reproduces the cached shape's q19 pair set exactly and " +
     "cleans up its staging directory") {
@@ -797,5 +677,46 @@ class PlansSpec extends AnyFunSuite {
       "staged and cached shapes must emit identical ordered pair rows")
     assert(stageDirs() == before,
       "the staged shape must delete its scratch directory before returning")
+  }
+
+  test("neardupPairs at the corpus-scale banding (24 hashes in 6 bands of " +
+    "4) returns exact, above-threshold Jaccards in both materialization " +
+    "shapes, and rejects widths that do not tile md5 quarters") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Docs
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.select(col("doc_a").cast("long"), col("doc_b").cast("long"),
+          col("jaccard").cast("double"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val cached = rows(Docs.neardupPairs(spark, sf, 24, 4))
+    assert(cached.nonEmpty, "the test corpus must yield scale-config pairs")
+    // the exact shingle sets, derived in memory from the raw text
+    val shingles: Map[Long, Set[String]] = TripleStore
+      .table(spark, sf, "documents")
+      .select(col("doc_id").cast("long"), col("text"))
+      .collect().flatMap { r =>
+        Option(r.getString(1)).map(_.split(" ", -1))
+          .filter(_.length >= 3)
+          .map(w => r.getLong(0) -> w.sliding(3).map(_.mkString(" ")).toSet)
+      }.toMap
+    for ((a, b, jac) <- cached) {
+      val (sa, sb) = (shingles(a), shingles(b))
+      val exact = (sa & sb).size.toDouble / (sa | sb).size
+      assert(math.abs(jac - exact) <= 0.00005 + 1e-12,
+        s"pair ($a, $b): jaccard $jac vs exact $exact")
+      assert(exact >= Docs.JaccardThreshold && jac >= Docs.JaccardThreshold,
+        s"pair ($a, $b) below the ${Docs.JaccardThreshold} threshold: $exact")
+    }
+    spark.conf.set("spark.graft.shingleStageBytes", "0")
+    val staged =
+      try rows(Docs.neardupPairs(spark, sf, 24, 4))
+      finally spark.conf.unset("spark.graft.shingleStageBytes")
+    assert(staged == cached,
+      "staged and cached shapes must emit identical ordered pair rows")
+    val ex = intercept[IllegalArgumentException] {
+      Docs.neardupPairs(spark, sf, 6, 3)
+    }
+    assert(ex.getMessage.contains("md5 quarters"),
+      s"a non-quarter width must raise the named guard, got: ${ex.getMessage}")
   }
 }

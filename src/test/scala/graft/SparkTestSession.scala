@@ -3,20 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (sessions are expensive;
-  * ScalaTest suites run sequentially in the forked JVM). */
+  * ScalaTest suites run sequentially in the forked JVM), built by the same
+  * factory as every runnable main — same confs, WARN log level, same log
+  * filter — at 4 threads. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    // pid-suffixed + cleaned up on exit: two concurrent `sbt test` JVMs
-    // must not overwrite each other's managed bucketed tables mid-scan
-    // (r17 VERDICT #4 — judge-reproduced FAILED_READ_FILE)
-    .config("spark.sql.warehouse.dir",
-      LocalSession.warehouseDir("graft_test_warehouse"))
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession.create("4")
 }
