@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Round-close checklist, mechanized. Runs every check a round-close record
 # claims, in order, and prints a one-screen PASS/FAIL summary:
-#   1. full unit suite (sbt test), then the benchmark's self-checks
+#   1. full unit suite (sbt test), a check that its JVM deleted its
+#      scratch root at exit, then the benchmark's self-checks
 #      (python3 perfbench/test_perfbench.py)
 #   2. gate replay on all four corpora (sf0.001, sf0.01, sf0.1, adversarial)
 #      via graft.Verify -> scripts/check.py (DuckDB oracle, hash-exact)
@@ -37,6 +38,7 @@ t_end() { DT=$(( $(date +%s) - T0 )); }
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="
   t_start
+  touch "$LOGS/test.start"
   sbt -batch test > "$LOGS/test.log" 2>&1
   trc=$?
   t_end
@@ -45,6 +47,13 @@ if [ "$SKIP_TEST" -eq 0 ]; then
   ntests=$(grep -Eo 'Total number of tests run: [0-9]+' "$LOGS/test.log" | tail -1)
   [ -n "$ntests" ] || ntests='?'
   step "sbt test ($ntests) [${DT}s]" "$trc"
+  # every JVM's graft.Scratch root is deleted when Hadoop closes its
+  # filesystems at exit: a root made during the suite that outlived the
+  # test JVM means that deletion broke
+  left=$(find "${TMPDIR:-/tmp}" -maxdepth 1 -name 'graft_scratch_*' \
+    -newer "$LOGS/test.start" 2>/dev/null | xargs)
+  step "test JVM deleted its scratch root at exit${left:+ (left: $left)}" \
+    "$([ -z "$left" ]; echo $?)"
 else
   RESULTS+=("SKIP  sbt test")
 fi

@@ -48,7 +48,7 @@ object LocalSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // q31's bucketed tables are catalog tables; keep their managed
       // locations out of the repo working tree. PID-SUFFIXED (r17 VERDICT
-      // #4, ivfIndexPath's discipline): the warehouse memoizes per
+      // #4): the warehouse memoizes per
       // SESSION, so every JVM rebuilds its own bucketed tables anyway —
       // a fixed shared path only adds an overwrite-while-read race (two
       // concurrent drivers: one's saveAsTable overwrite deletes part

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Scratch
 import graft.TripleStore.table
 
 /** Multimodal column plumbing: media as opaque `binary` columns with typed
@@ -334,30 +335,23 @@ object Multimodal {
 
   // --- Q82: the production binaryFile media SOURCE, driver-gated ------------
 
-  private val mediaFiles =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Once-per-session materialization of q77's synthetic containers as REAL
-    * `<doc_id>.<ext>` files in a tmp directory — the fixture that lets the
-    * production [[mediaFromFiles]] source execute in the driver gate. The
+  /** Once-per-JVM materialization of q77's synthetic containers as REAL
+    * `<doc_id>.<ext>` files in a scratch directory — the fixture that lets
+    * the production [[mediaFromFiles]] source execute in the driver gate. The
     * writer is DISTRIBUTED (r17): `foreachPartition` generates and writes
     * each partition's files executor-side, so the fixture generator scales
     * with the cluster instead of funnelling every container through one
     * driver loop (the r16 `collect()` shape was MediaScaleBench's 10M-file
     * bottleneck; in local mode the executors share the driver's tmp FS, and
     * on a real cluster the target would be a shared FS path). Memoized per
-    * sf dir with the replay scaffolds' shutdown-hook cleanup discipline. */
+    * sf dir. */
   def mediaFilesPath(spark: SparkSession, dir: String): String =
-    mediaFiles.computeIfAbsent(dir, { _ =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_media_files").toString
-      sys.addShutdownHook {
-        graft.streaming.StreamingLww.deleteRecursively(new java.io.File(out))
-      }
+    Scratch.once(("mediaFiles", dir)) {
+      val out = Scratch.path(spark, "graft_media_files")
       writeContainerFiles(spark, table(spark, dir, "documents")
         .select(col("doc_id")), out)
       out
-    })
+    }
 
   /** Executor-side container-file writer: one `<doc_id>.<ext>` file per
     * input row, generated and written inside `foreachPartition` (the
@@ -375,13 +369,21 @@ object Multimodal {
     // and the driver-side read would see a partial or empty directory.
     // Fail loudly at the boundary instead of producing an incomplete
     // fixture (ADVICE r17); a cluster deployment must pass a shared-FS
-    // path and flip this guard deliberately.
+    // path and flip this guard deliberately. Likewise, Spark reads `out`
+    // back through the filesystem it resolves to, which must be the local
+    // one the java.nio writes land on — under a non-local default FS the
+    // read would find no files and return an empty fixture.
     require(spark.sparkContext.isLocal,
       s"writeContainerFiles targets a local java.nio path ($out) but the " +
         s"master is ${spark.sparkContext.master} — on a distributed " +
         "master the per-executor writes would not land on one shared " +
         "filesystem; point `out` at a shared mount and relax this guard " +
         "deliberately")
+    val readFs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sessionState.newHadoopConf()).getUri
+    require(readFs.getScheme == "file",
+      s"writeContainerFiles writes $out through java.nio, but Spark reads " +
+        s"it through $readFs")
     docIds.as[Long].foreachPartition { (ids: Iterator[Long]) =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       ids.foreach { id =>

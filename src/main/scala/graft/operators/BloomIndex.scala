@@ -1,11 +1,11 @@
 package graft.operators
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.TripleStore.table
 
 /** The STORED-bloom incremental dedup — the steady-state shape of the
@@ -656,9 +656,6 @@ object BloomIndex {
 
   // --- Q76: the two-epoch ingest gate entry ---------------------------------
 
-  private val ran =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Q76: a TWO-epoch crawl ingest through the stored index — build from
     * the standing corpus (`doc_id % 10 < 8`), admit epoch 1
     * (`% 10 == 8`), fold its hashes into the index AND the corpus, admit
@@ -669,14 +666,8 @@ object BloomIndex {
     * concurrent first calls block on ONE run — q67's pattern) with the
     * result persisted and re-read on later calls. */
   def q76BloomIndexDedup(spark: SparkSession, dir: String): DataFrame = {
-    val out = ran.computeIfAbsent(dir, { _ =>
-      val base = Files.createTempDirectory("graft_bloom_index").toString
-      // ivfIndexPath's discipline: without this every JVM strands one
-      // index + result copy in tmp
-      sys.addShutdownHook {
-        graft.streaming.StreamingLww.deleteRecursively(
-          new java.io.File(base))
-      }
+    val out = Scratch.once(("bloomIndex", dir)) {
+      val base = Scratch.path(spark, "graft_bloom_index")
       val (idx, resultPath) = (s"$base/index", s"$base/result")
       val hashed = table(spark, dir, "documents")
         .select(col("doc_id"), sha2(col("text"), 256).as("content_hash"))
@@ -696,7 +687,7 @@ object BloomIndex {
         .select("epoch", "doc_id", "content_hash", "n_in_batch")
         .coalesce(1).write.mode("overwrite").parquet(resultPath)
       resultPath
-    })
+    }
     spark.read.parquet(out).orderBy("epoch", "doc_id")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Scratch
 import graft.TripleStore.table
 import graft.functions.StableRound.{stableRound, stableRoundSql}
 
@@ -256,13 +257,14 @@ object Docs {
     * shingle-array subtree feeds the (map-only) signature pass and,
     * exploded, the verify stage's sizes + intersection joins (4 plan
     * occurrences of the split/transform scan), so it is materialized
-    * once — `.cache()` below [[ShingleStageBytesDefault]], scratch
-    * parquet above it (r22, VERDICT r21 #2; NeardupScaleBench validated
-    * the staged shape at 10M docs in r20/r21 and now drives THIS method
-    * end-to-end). Both shapes are scoped to the call: the final (small)
-    * pair set is materialized eagerly by [[minhashVerify]] and the
-    * cache/stage dropped before returning, so repeated dedup sweeps in a
-    * long-lived session accumulate neither storage blocks nor tmp files. */
+    * once — `.cache()` below [[ShingleStageBytesDefault]], a
+    * [[Scratch.scoped]] parquet stage above it (r22, VERDICT r21 #2;
+    * NeardupScaleBench validated the staged shape at 10M docs in r20/r21
+    * and now drives THIS method end-to-end). Both shapes are scoped to
+    * the call: the final (small) pair set is materialized eagerly by
+    * [[minhashVerify]] and the cache/stage dropped before returning, so
+    * repeated dedup sweeps in a long-lived session accumulate neither
+    * storage blocks nor tmp files. */
   private[graft] def neardupPairs(spark: SparkSession, dir: String,
       numHashes: Int = NumHashes, bandRows: Int = GateBandRows): DataFrame = {
     val src = s"$dir/documents.parquet"
@@ -274,20 +276,10 @@ object Docs {
     if (inputBytes(spark, src) <= threshold) {
       val arrs = shingleArraysOf(table(spark, dir, "documents")).cache()
       try pairs(arrs) finally { arrs.unpersist(); () }
-    } else {
-      // pid+nano suffix: concurrent sweeps in one JVM (or two drivers on
-      // one tmpdir) must not overwrite each other's staging
-      val stage = sys.props("java.io.tmpdir") +
-        s"/graft_shingle_stage_p${ProcessHandle.current().pid()}_" +
-        java.lang.Long.toHexString(System.nanoTime())
+    } else Scratch.scoped(spark) { stage =>
       shingleArraysOf(table(spark, dir, "documents"))
         .write.mode("overwrite").parquet(stage)
-      try pairs(spark.read.parquet(stage))
-      finally {
-        graft.streaming.StreamingLww.deleteRecursively(
-          new java.io.File(stage))
-        ()
-      }
+      pairs(spark.read.parquet(stage))
     }
   }
 

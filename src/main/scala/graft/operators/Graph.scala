@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.TripleStore
 import graft.TripleStore.triples
 
@@ -242,21 +243,18 @@ object Graph {
       .orderBy("node")
   }
 
-  /** Once-per-session bucketed edge-table materialization for q81 —
-    * [[TripleStore.bucketedMergeTables]]'s memo discipline (injective
-    * name tag, per-key blocking compute) applied to [[writeBucketedEdges]]. */
-  private val bucketedEdges =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
+  /** Once-per-JVM bucketed edge-table materialization for q81 —
+    * [[TripleStore.bucketedMergeTables]]'s injective name tag applied to
+    * [[writeBucketedEdges]]. */
   def bucketedEdgeTable(spark: SparkSession, dir: String,
       numBuckets: Int = 4): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + java.lang.Integer.toHexString(dir.hashCode) + s"_$numBuckets"
     val name = s"graft_edges_bkt$tag"
-    bucketedEdges.computeIfAbsent((dir, numBuckets), { _ =>
+    Scratch.once(("bucketedEdges", dir, numBuckets)) {
       writeBucketedEdges(edges(spark, dir), name, numBuckets)
-      name
-    })
+    }
+    name
   }
 
   /** Q81: [[pageRankBucketed]] driver-gated — the exchange-free edge side's

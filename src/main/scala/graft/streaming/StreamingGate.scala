@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Scratch
 import graft.TripleStore
 import graft.operators.Relational
 
@@ -30,13 +31,6 @@ import graft.operators.Relational
   */
 object StreamingGate {
 
-  private val ran =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ranDedup =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ranSessions =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Number of wire files the batch relation is split into = number of
     * micro-batches each replay runs (maxFilesPerTrigger = 1). */
   private val NumBatches = 4
@@ -55,13 +49,13 @@ object StreamingGate {
     * session's full parallelism. */
   private val ReplayShufflePartitions = 8
 
-  /** The shared once-per-JVM replay scaffold both gate rows use: stage a
-    * temp (in, store, ckpt) trio, run the export + streaming query to
+  /** The shared once-per-JVM replay scaffold every gate row uses: stage a
+    * scratch (in, store, ckpt) trio, run the export + streaming query to
     * completion (with the shuffle-partition clamp above), memoize the
-    * merged store path per sf dir (computeIfAbsent: concurrent first
-    * calls block on ONE replay). Only the export and the sink vary
-    * between the entries; `run` receives the REPLAY session and must
-    * plan every replay job on it.
+    * merged store path per (entry, sf dir) through [[Scratch.once]]
+    * (concurrent first calls block on ONE replay). Only the export and the
+    * sink vary between the entries; `run` receives the REPLAY session and
+    * must plan every replay job on it.
     *
     * Clamp scope (ADVICE r19): the clamp previously saved/set/restored
     * the session-GLOBAL `spark.sql.shuffle.partitions` under a
@@ -75,16 +69,10 @@ object StreamingGate {
     * the clone only, so nothing global ever mutates and the lock is
     * gone. The memoized STORE is plain parquet, session-independent:
     * gate entries keep reading it from the caller's session. */
-  private def replayOnce(map: java.util.concurrent.ConcurrentHashMap[String, String],
-      spark: SparkSession, dir: String, prefix: String)(
+  private def replayOnce(spark: SparkSession, dir: String, prefix: String)(
       run: (SparkSession, String, String, String) => Unit): String =
-    map.computeIfAbsent(dir, { _ =>
-      val base = Files.createTempDirectory(prefix).toString
-      // ivfIndexPath's discipline: without this every JVM strands one
-      // replay store (+ wire files + checkpoint) per gate row in tmp
-      sys.addShutdownHook {
-        StreamingLww.deleteRecursively(new java.io.File(base))
-      }
+    Scratch.once((prefix, dir)) {
+      val base = Scratch.path(spark, prefix)
       val storePath = s"$base/store"
       val rs = spark.newSession()
       rs.conf.set("spark.sql.shuffle.partitions",
@@ -92,7 +80,7 @@ object StreamingGate {
       run(rs, s"$base/in", storePath, s"$base/ckpt")
       assert(Files.exists(Paths.get(storePath)), s"$prefix replay left no store")
       storePath
-    })
+    }
 
   /** Q67 — SPEC-ONLY since r17 (gate entry retired under the q21/q75
     * trim condition once q83 carried its second judged-green round):
@@ -103,7 +91,7 @@ object StreamingGate {
     * replay ≡ the q3 batch merge in-process; it was the replay's pure-
     * overlap cost (~4 streaming micro-batch runs × 4 corpora per close). */
   def q67StreamMerge(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ran, spark, dir, "graft_stream_gate") {
+    val store = replayOnce(spark, dir, "graft_stream_gate") {
       (rs, src, storePath, ckpt) =>
         // seed: the local store (q3's left side)
         TripleStore.triples(rs, dir)
@@ -130,7 +118,7 @@ object StreamingGate {
     * (min, sum): associative and commutative (StreamingDedupSpec pins the
     * equivalence in-process, including checkpoint-replay no-ops). */
   def q70StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ranDedup, spark, dir, "graft_stream_dedup") {
+    val store = replayOnce(spark, dir, "graft_stream_dedup") {
       (rs, src, storePath, ckpt) =>
         TripleStore.table(rs, dir, "documents")
           .select("doc_id", "text")
@@ -146,9 +134,6 @@ object StreamingGate {
     }
     spark.read.parquet(store).orderBy("content_hash")
   }
-
-  private val ranPart =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q79's shard cut points over the triple store's subject domain
     * (`<cust_…>` < `<nation_…>` < `<order_…>` in UTF-8 order): customers
@@ -169,7 +154,7 @@ object StreamingGate {
     * while at least one order shard was rewritten — a silent fall-back to
     * whole-store rewriting fails the gate loudly. */
   def q79StreamMergePart(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ranPart, spark, dir, "graft_stream_part") {
+    val store = replayOnce(spark, dir, "graft_stream_part") {
       (rs, src, storePath, ckpt) =>
         // seed: the local store, laid out shard-partitioned with the SAME
         // boundaries the sink routes on. COMPACTED first (q31's invariant):
@@ -223,9 +208,6 @@ object StreamingGate {
       .orderBy("subject", "predicate")
   }
 
-  private val ranRestart =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Q83: streaming checkpoint-RESTART recovery driver-gated — the restart
     * contract `StreamingLwwSpec` pins in-process (a NEW query incarnation
     * on the SAME checkpoint absorbs a post-restart extension without
@@ -248,12 +230,12 @@ object StreamingGate {
     * semantics — a recovered node is fed exactly the pending updates it
     * missed, not the full history (`MasterServer.py:186-205`). */
   def q83StreamRestart(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ranRestart, spark, dir, "graft_stream_restart") {
+    val store = replayOnce(spark, dir, "graft_stream_restart") {
       (rs, src, storePath, ckpt) =>
         TripleStore.triples(rs, dir).write.parquet(storePath)
         // the full wire export, staged OUTSIDE the watched source dir and
         // released into it in two phases (the staging dir sits under the
-        // same replay base, so the shared shutdown hook cleans it up)
+        // same replay base, so it is released with it)
         val stage = s"$src.stage"
         TripleStore.writeJsonl(
           TripleStore.remoteChangelog(rs, dir).repartition(NumBatches),
@@ -290,9 +272,6 @@ object StreamingGate {
     }
     spark.read.parquet(store).orderBy("subject", "predicate")
   }
-
-  private val ranTtl =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q80's watermark-driver sentinel key: a subject outside every corpus
     * domain (derived subjects are `<order_…>`), filtered from the result.
@@ -341,7 +320,7 @@ object StreamingGate {
     * metrics: peak state > 1 key, total `numRowsRemoved` > 0, and the
     * final batches leave exactly the one sentinel key. */
   def q80StreamTtl(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ranTtl, spark, dir, "graft_stream_ttl") {
+    val store = replayOnce(spark, dir, "graft_stream_ttl") {
       (rs, src, storePath, ckpt) =>
         import rs.implicits._
         // gate-scale export (q74's documented driver-built pattern): the
@@ -503,7 +482,7 @@ object StreamingGate {
     * per-user `row_number` over `session_start` (sessions of one user are
     * disjoint intervals, so the order is total and the mapping exact). */
   def q74StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(ranSessions, spark, dir, "graft_stream_sessions") {
+    val store = replayOnce(spark, dir, "graft_stream_sessions") {
       (rs, src, storePath, ckpt) =>
         import rs.implicits._
         val gap = Relational.SessionGapMs

@@ -659,23 +659,53 @@ class PlansSpec extends AnyFunSuite {
   test("neardupPairs' staged-parquet shape (above the shingle-stage " +
     "threshold) reproduces the cached shape's q19 pair set exactly and " +
     "cleans up its staging directory") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(concat_ws("|", col("doc_a"), col("doc_b"), col("jaccard")))
         .collect().map(_.getString(0)).toSeq
     val cached = rows(graft.operators.Docs.q19MinhashPairs(spark, sf))
-    def stageDirs(): Set[String] =
-      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
-        .getOrElse(Array.empty)
-        .map(_.getName).filter(_.startsWith("graft_shingle_stage_")).toSet
-    val before = stageDirs()
-    spark.conf.set("spark.graft.shingleStageBytes", "0")
-    val staged =
+    val root = graft.Scratch.root.toString
+    def scratchDirs(): Set[String] =
+      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+        .map(_.getName).toSet
+    // every parquet write's target, so the test sees the staging directory
+    // the staged branch made even though it is gone when the call returns
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qe.analyzed.foreach {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          written.add(c.outputPath.toUri.getPath); ()
+        case _ =>
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    def staging(): Seq[String] =
+      written.asScala.filter(_.startsWith(root + "/")).toSeq
+    val before = scratchDirs()
+    spark.listenerManager.register(listener)
+    val staged = try {
+      spark.conf.set("spark.graft.shingleStageBytes", "0")
       try rows(graft.operators.Docs.q19MinhashPairs(spark, sf))
       finally spark.conf.unset("spark.graft.shingleStageBytes")
+    } finally {
+      val deadline = System.currentTimeMillis() + 20000
+      while (System.currentTimeMillis() < deadline && staging().isEmpty)
+        Thread.sleep(50)
+      spark.listenerManager.unregister(listener)
+    }
     assert(staged == cached,
       "staged and cached shapes must emit identical ordered pair rows")
-    assert(stageDirs() == before,
+    assert(staging().nonEmpty,
+      s"the staged shape wrote no directory under the scratch root $root " +
+        s"(writes seen: ${written.asScala.mkString(", ")})")
+    assert(staging().forall(d => !new java.io.File(d).exists()) &&
+      scratchDirs() == before,
       "the staged shape must delete its scratch directory before returning")
   }
 
