@@ -35,6 +35,15 @@ step() { # step <name> <exitcode>
 t_start() { T0=$(date +%s); }
 t_end() { DT=$(( $(date +%s) - T0 )); }
 
+# one listener owner: graft.obs.Work is the only code in src/main that
+# attaches Spark listeners (it drains the bus exactly on both sides of the
+# block it meters); a listener added elsewhere brings back a private,
+# unsynchronized count
+owners=$(grep -rlE 'addSparkListener|listenerManager\.register' src/main/scala \
+  | grep -v '^src/main/scala/graft/obs/' | xargs)
+step "one listener owner (graft/obs)${owners:+ (also in: $owners)}" \
+  "$([ -z "$owners" ]; echo $?)"
+
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="
   t_start

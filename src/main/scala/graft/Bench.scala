@@ -1,39 +1,10 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.Work
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalSession.create(cpus)
-    // Per-query job/stage tally (BENCH_METHOD.md): an iterative query's cost
-    // at fixed data size is dominated by its driver-blocking job count, so a
-    // time regression with a flat job count is environment noise while a
-    // time regression with a job-count jump is a plan regression — the r9
-    // q60 anomaly was unattributable precisely because the artifact carried
-    // only seconds. Counted at onJobStart (submitted jobs + their stages).
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    val stageCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobCounter.incrementAndGet()
-        stageCounter.addAndGet(js.stageInfos.size.toLong)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // The listener bus is async: drain until the counters go quiet before
-    // reading a snapshot, so a run's tail events don't bleed into the next.
-    def settledCounts(): (Long, Long) = {
-      var prev = (-1L, -1L)
-      var cur = (jobCounter.get(), stageCounter.get())
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur
-        Thread.sleep(50)
-        cur = (jobCounter.get(), stageCounter.get())
-      }
-      cur
-    }
     // Warmup outside the timings: JVM/codegen/parquet-footer startup (else
     // the alphabetically-first query absorbs ~3 s of it) and the one-off
     // sharded materialization (an ETL write, not per-lookup cost — the
@@ -52,11 +23,16 @@ object Bench {
     // MEDIAN of 3 runs: single-shot times at this scale carry ±0.1 s of
     // JIT/GC noise, which round-over-round comparisons would read as
     // regressions.
+    //
+    // Each run also records its job and stage count (BENCH_METHOD.md): an
+    // iterative query's cost at fixed data size is dominated by its
+    // driver-blocking job count, so a time regression with a flat job count
+    // is environment noise while one with a job-count jump is a plan
+    // regression. The counts are exact: `Work.of` drains the listener bus
+    // on both sides of the run.
     val runs = 3
-    var counts = settledCounts()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val timed = (1 to runs).map { _ =>
-        val (j0, s0) = counts
+      val timed = (1 to runs).map(_ => Work.of(spark) {
         val t0 = System.nanoTime()
         val err =
           // noop sink, NOT count(): under a count the optimizer prunes the
@@ -69,9 +45,8 @@ object Bench {
           }
           catch { case e: Throwable => Some(e.getClass.getSimpleName) }
         val dt = (System.nanoTime() - t0) / 1e9
-        counts = settledCounts()
-        (dt, counts._1 - j0, counts._2 - s0, err)
-      }
+        (dt, err)
+      }).map { case ((dt, err), work) => (dt, work.jobs, work.stages, err) }
       val err = timed.flatMap(_._4).headOption
       // median over SUCCESSFUL runs only — a fast abort must not drag the
       // median down; if every run failed, fall back to all runs so the

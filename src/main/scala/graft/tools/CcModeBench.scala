@@ -1,11 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.Work
 import graft.operators.Graph
 
 /** One-off measurement: [[Graph.ccStar]]'s two round-materialization modes
@@ -29,50 +27,6 @@ object CcModeBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.LocalSession.create(cpus)
 
-    val jobs = new AtomicLong(0)
-    val stagesDone = new AtomicLong(0)
-    // Per-JOB shuffle/task tallies (r22, VERDICT r21 #4): ccStar runs ONE
-    // driver-blocking job per round, so job-granular metrics ARE
-    // round-granular — the audit's question is whether the later rounds'
-    // exchanges shrink (bytes) and coalesce (task counts) as the
-    // contracted edge set collapses geometrically, or whether a fixed
-    // partition count keeps paying full-width rounds on near-empty data.
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val jobShuf = new java.util.concurrent.ConcurrentHashMap[Long, AtomicLong]()
-    val jobTasks = new java.util.concurrent.ConcurrentHashMap[Long, AtomicLong]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        js.stageInfos.foreach(si => stageJob.put(si.stageId, js.jobId.toLong))
-        ()
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        // a stage whose job start predates the last stageJob.clear()
-        // belongs to an earlier run: not part of the profiled run
-        val j = stageJob.getOrDefault(sc.stageInfo.stageId, -1L)
-        if (j >= 0) {
-          jobShuf.computeIfAbsent(j, _ => new AtomicLong).addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          jobTasks.computeIfAbsent(j, _ => new AtomicLong)
-            .addAndGet(sc.stageInfo.numTasks.toLong)
-        }
-        stagesDone.incrementAndGet()
-        ()
-      }
-    })
-    // the listener bus is asynchronous: wait until neither the started-job
-    // count nor the completed-stage count moves, so the last job's stage
-    // metrics have landed before anything reads them
-    def settled(): Long = {
-      var prev = (-1L, -1L); var cur = (jobs.get(), stagesDone.get())
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50); cur = (jobs.get(), stagesDone.get())
-      }
-      cur._1
-    }
-
     // k disjoint copies of the entity graph, ids suffixed per copy —
     // materialized once so both modes contract the identical input
     val base = Graph.edges(spark, sfDir)
@@ -82,49 +36,50 @@ object CcModeBench {
     }.reduce(_ union _).localCheckpoint(true)
     val nEdges = edges.count()
 
-    def run(dir: Option[String]): (Double, Long, Long) = {
-      val j0 = settled()
-      val t0 = System.nanoTime()
-      val labels = Graph.ccStar(edges, checkpointDir = dir)
-      val n = labels.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      (dt, settled() - j0, n)
+    // (seconds, nodes, work)
+    def run(dir: Option[String]): (Double, Long, Work) = {
+      val ((dt, n), work) = Work.of(spark) {
+        val t0 = System.nanoTime()
+        val labels = Graph.ccStar(edges, checkpointDir = dir)
+        val n = labels.count()
+        ((System.nanoTime() - t0) / 1e9, n)
+      }
+      (dt, n, work)
     }
     // warmup contraction (JIT/codegen), then per-mode MEDIAN of 3 timed
     // runs (same convention as Bench): this host shows multi-second stalls
     // (BENCH_NOTES r11), so a one-shot local-vs-reliable overhead number
     // would be noise-prone (ADVICE r11)
     run(None)
-    def med3(f: () => (Double, Long, Long)): (Double, Long, Long) = {
+    def med3(f: () => (Double, Long, Work)): (Double, Long, Work) = {
       val rs = (1 to 3).map(_ => f())
       val byTime = rs.sortBy(_._1).apply(1)
-      require(rs.map(_._3).distinct.size == 1,
-        s"node-count disagreement across runs: ${rs.map(_._3)}")
+      require(rs.map(_._2).distinct.size == 1,
+        s"node-count disagreement across runs: ${rs.map(_._2)}")
       byTime
     }
-    val (tLocal, jLocal, nLocal) = med3(() => run(None))
+    val (tLocal, nLocal, wLocal) = med3(() => run(None))
     // the labels are consumed (count) inside the scope, so the caller may
     // delete the checkpoint dir afterwards, per ccStar's scaladoc
-    val (tRel, jRel, nRel) = graft.Scratch.scoped(spark) { ckDir =>
+    val (tRel, nRel, wRel) = graft.Scratch.scoped(spark) { ckDir =>
       med3(() => run(Some(ckDir)))
     }
     require(nLocal == nRel,
       s"mode disagreement: local $nLocal nodes vs reliable $nRel")
 
-    // one more instrumented local run with the per-job maps reset: its
-    // ordered per-job rows are the per-ROUND shuffle-byte/task profile
-    // (the first jobs are the input/canon materializations, the last the
-    // label join; everything between is one star round per job)
-    settled()
-    stageJob.clear(); jobShuf.clear(); jobTasks.clear()
-    run(None)
-    settled()
-    val perRound = jobShuf.keySet().toArray(Array.empty[java.lang.Long])
-      .map(_.toLong).sorted.map { j =>
-        val mb = jobShuf.get(j).get() / 1e6
-        s"""{"job":$j,"tasks":${jobTasks.get(j).get()},"shuffle_mb":${
-          String.format(java.util.Locale.ROOT, "%.2f", Double.box(mb))}}"""
-      }.mkString("[", ",", "]")
+    // one more local run, profiled per job: ccStar runs ONE driver-blocking
+    // job per round, so its ordered per-job rows are the per-ROUND
+    // shuffle-byte/task profile (the first jobs are the input/canon
+    // materializations, the last the label join; everything between is one
+    // star round per job). The question it answers (VERDICT r21 #4) is
+    // whether later rounds' exchanges shrink (bytes) and coalesce (task
+    // counts) as the contracted edge set collapses, or whether a fixed
+    // partition count keeps paying full-width rounds on near-empty data.
+    val perRound = run(None)._3.perJob.map { j =>
+      val mb = j.shuffleBytes / 1e6
+      s"""{"job":${j.id},"tasks":${j.tasks},"shuffle_mb":${
+        String.format(java.util.Locale.ROOT, "%.2f", Double.box(mb))}}"""
+    }.mkString("[", ",", "]")
     println(s"""{"metric":"cc_round_profile","edges":$nEdges,""" +
       s""""per_job":$perRound}""")
 
@@ -132,8 +87,8 @@ object CcModeBench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     println(s"""{"metric":"cc_mode_bench","unit":"sec","edges":$nEdges,""" +
       s""""nodes":$nLocal,"local_sec":${sec(tLocal)},""" +
-      s""""local_jobs":$jLocal,"reliable_sec":${sec(tRel)},""" +
-      s""""reliable_jobs":$jRel,"sf":"$sfDir","replicate":$replicate}""")
+      s""""local_jobs":${wLocal.jobs},"reliable_sec":${sec(tRel)},""" +
+      s""""reliable_jobs":${wRel.jobs},"sf":"$sfDir","replicate":$replicate}""")
     spark.stop()
   }
 }

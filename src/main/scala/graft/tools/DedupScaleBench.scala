@@ -1,12 +1,10 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.LocalSession
+import graft.obs.Work
 
 /** Incremental-dedup shapes at the reference's row count (VERDICT r12 #4):
   * the r11 20×-corpus stress covered the near-dup chain (q19→q60); this
@@ -53,29 +51,6 @@ object DedupScaleBench {
     // which is exactly the contrast the bench exists to show.
     val hashChars = if (args.length > 3) args(3).toInt else 64
     val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-    val shufWrite = new AtomicLong(0)
-    val shufRecords = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          ()
-        }
-      }
-    })
-    def settled(): (Long, Long) = {
-      var prev = (-1L, -1L)
-      var cur = (shufWrite.get, shufRecords.get)
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50)
-        cur = (shufWrite.get, shufRecords.get)
-      }
-      cur
-    }
 
     // deterministic synthetic hashes; materialized to parquet so both
     // plans read identical bytes and the corpus is a SCAN, not a range
@@ -192,18 +167,20 @@ object DedupScaleBench {
       // coexist on disk (the corpus alone is tens of GB; Spark frees
       // shuffle files via the GC-driven ContextCleaner, so an explicit
       // collection between plans is what makes the peak usage one
-      // plan's, not the sum's)
+      // plan's, not the sum's). The sleep gives the cleaner's thread time
+      // to delete the files; it waits on no listener event.
       System.gc()
       Thread.sleep(1500)
-      val (w0, r0) = settled()
-      val t0 = System.nanoTime()
-      val d = digest(mk())
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (w1, r1) = settled()
+      val ((d, secs), work) = Work.of(spark) {
+        val t0 = System.nanoTime()
+        val d = digest(mk())
+        (d, (System.nanoTime() - t0) / 1e9)
+      }
       val secsStr =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))
       println(s"""{"plan":"$name","secs":$secsStr,""" +
-        s""""shuffle_bytes":${w1 - w0},"shuffle_records":${r1 - r0},""" +
+        s""""shuffle_bytes":${work.shuffleBytes},""" +
+        s""""shuffle_records":${work.shuffleRecords},""" +
         s""""admitted":${d._1},"digest":${d._2}}""")
       d
     }

@@ -1,10 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import graft.obs.Work
 import graft.operators.Graph
 
 /** One-off measurement: [[Graph.pageRank]] at store scale (~10M edges) —
@@ -68,21 +66,6 @@ object PageRankScaleBench {
     val spark = graft.LocalSession.create(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    val jobs = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    })
-    def settled(): Long = {
-      var prev = -1L; var cur = jobs.get()
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50); cur = jobs.get()
-      }
-      cur
-    }
-
     val base = Graph.edges(spark, sfDir)
     val unioned = (0 until replicate).map { i =>
       base.select(concat(col("src"), lit(s"#$i")).as("src"),
@@ -101,21 +84,21 @@ object PageRankScaleBench {
     val nEdges = edges.count()
 
     // by-name rank producer so every mode shares ONE owner of the
-    // measurement discipline (settled-counter window, eager checkpoint,
-    // sum derivation)
+    // measurement discipline (the timed loop's exact job count, eager
+    // checkpoint, sum derivation)
     def run(mk: => org.apache.spark.sql.DataFrame) = {
-      val j0 = settled()
-      val t0 = System.nanoTime()
-      // evaluating mk RUNS the loop (its final frame is already an eager
-      // checkpoint) — a further localCheckpoint here would only copy |V|
-      // rows into a second retained block set per mode (r15: that copy was
-      // one of the deserialized frames that OOM'd the 100M rehearsal)
-      val ranks = mk
-      val secs = (System.nanoTime() - t0) / 1e9
-      val j = settled() - j0
+      val ((ranks, secs), work) = Work.of(spark) {
+        val t0 = System.nanoTime()
+        // evaluating mk RUNS the loop (its final frame is already an eager
+        // checkpoint) — a further localCheckpoint here would only copy |V|
+        // rows into a second retained block set per mode (r15: that copy
+        // was one of the deserialized frames that OOM'd the 100M rehearsal)
+        val ranks = mk
+        (ranks, (System.nanoTime() - t0) / 1e9)
+      }
       val sum = ranks.agg(org.apache.spark.sql.functions.sum("rank"))
         .head().getDouble(0)
-      (ranks, secs, j, sum)
+      (ranks, secs, work.jobs, sum)
     }
 
     val (rPlain, tPlain, jPlain, sPlain) = run(

@@ -1,10 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 import graft.{LocalSession, SparkEntry}
+import graft.obs.Work
 
 /** Memory-pressure rehearsal for the gate's heaviest entries (VERDICT r12
   * #3): at 100 TB, per-partition memory pressure is the NORM, and the
@@ -33,54 +30,28 @@ object SpillRehearsal {
         "q33_connected_components", "q60_neardup_clusters")
     val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    val memSpilled = new AtomicLong(0)
-    val diskSpilled = new AtomicLong(0)
-    val peakExec = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-          peakExec.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          ()
-        }
-      }
-    })
-    // listener bus is async — drain until quiet before snapshotting
-    def settled(): (Long, Long, Long) = {
-      var prev = (-1L, -1L, -1L)
-      var cur = (memSpilled.get, diskSpilled.get, peakExec.get)
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50)
-        cur = (memSpilled.get, diskSpilled.get, peakExec.get)
-      }
-      cur
-    }
-
     val heap = Runtime.getRuntime.maxMemory()
     println(s"""{"spill_rehearsal":"start","sf":"$sfDir","heap_bytes":$heap}""")
     var failures = 0
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown gate entry '$name'"))
-      val (m0, d0, _) = settled()
-      peakExec.set(0)
-      val t0 = System.nanoTime()
-      val err =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          None
-        } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (m1, d1, pk) = settled()
+      val ((err, secs), work) = Work.of(spark) {
+        val t0 = System.nanoTime()
+        val err =
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            None
+          } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+        (err, (System.nanoTime() - t0) / 1e9)
+      }
       if (err.nonEmpty) failures += 1
       val secsStr =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))
       println(s"""{"query":"$name","secs":$secsStr,""" +
-        s""""spill_mem_bytes":${m1 - m0},"spill_disk_bytes":${d1 - d0},""" +
-        s""""peak_task_exec_bytes":$pk,""" +
+        s""""spill_mem_bytes":${work.memorySpillBytes},""" +
+        s""""spill_disk_bytes":${work.diskSpillBytes},""" +
+        s""""peak_task_exec_bytes":${work.peakExecutionMemory},""" +
         s""""status":"${err.getOrElse("completed")}"}""")
     }
     println(s"""{"spill_rehearsal":"done","n_fail":$failures}""")

@@ -1,11 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.{LocalSession, TripleStore}
+import graft.obs.Work
 import graft.operators.{Relational, Temporal}
 
 /** Temporal joins at 10M events — the last pillar without a same-scale
@@ -15,9 +13,9 @@ import graft.operators.{Relational, Temporal}
   *   - RANGE join: events → 24 h purchase windows. The scale claim is the
   *     REPLICATION BOUND — with bucketWidth ≥ window length each interval
   *     lands in ≤ 2 time buckets, so the exchanged interval volume is
-  *     ≤ 2·|intervals| regardless of span (measured via the shuffle-record
-  *     listener), and the join is an equi-join Catalyst can hash — never a
-  *     BroadcastNestedLoopJoin.
+  *     ≤ 2·|intervals| regardless of span (measured as the run's
+  *     shuffle-write records), and the join is an equi-join Catalyst can
+  *     hash — never a BroadcastNestedLoopJoin.
   *   - AS-OF join: non-purchases → newest ≤24 h-old purchase. ONE hash
   *     exchange of the tagged union (no join node at all) — the
   *     shuffle-record count must be ≤ |probe| + |build| + ε.
@@ -32,25 +30,12 @@ object TemporalScaleBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    val shufRecords = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten); ()
-        }
+    // (result, seconds, shuffle records written)
+    def timed[A](f: => A): (A, Double, Long) = {
+      val ((a, secs), work) = Work.of(spark) {
+        val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
       }
-    })
-    def settled(): Long = {
-      var prev = -1L; var cur = shufRecords.get()
-      val deadline = System.currentTimeMillis() + 5000
-      while (cur != prev && System.currentTimeMillis() < deadline) {
-        prev = cur; Thread.sleep(50); cur = shufRecords.get()
-      }
-      cur
-    }
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+      (a, secs, work.shuffleRecords)
     }
     // noop sink + Observation, NOT count(): under a count the optimizer
     // prunes unreferenced subtrees — the as-of join's whole Window node
@@ -87,9 +72,7 @@ object TemporalScaleBench {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.StableRound.stableRound(sum(col("value")), 2)
           .as("sum_value"))
-    val r0 = settled()
-    val (nRange, tRange) = timed(runAndCount(rangeDf))
-    val rangeShuffled = settled() - r0
+    val (nRange, tRange, rangeShuffled) = timed(runAndCount(rangeDf))
 
     // as-of join: full q46 shape
     val probeDf = e.filter(col("event_type") =!= "purchase")
@@ -102,9 +85,7 @@ object TemporalScaleBench {
     val asofDf = Temporal.asofJoin(probeDf, buildDf, Seq("user_id"),
       "ts_ms", "ts_ms", "event_id", "purchase_id",
       Seq("purchase_id", "purchase_value"), Some(windowMs))
-    val a0 = settled()
-    val (nAsof, tAsof) = timed(runAndCount(asofDf))
-    val asofShuffled = settled() - a0
+    val (nAsof, tAsof, asofShuffled) = timed(runAndCount(asofDf))
 
     def f(v: Double) =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))

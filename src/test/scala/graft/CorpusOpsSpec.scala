@@ -330,28 +330,19 @@ class CorpusOpsSpec extends AnyFunSuite {
     // file-source overhead, not eagerness.
     def jobsDuring(body: => String): (Seq[String], String) = {
       val names = new scala.collection.mutable.ArrayBuffer[String]()
-      val sentinel = new java.util.concurrent.CountDownLatch(1)
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-          if (desc.contains("graft_q61_sentinel")) sentinel.countDown()
-          else names.synchronized { names ++= j.stageInfos.map(_.name) }
-        }
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          names.synchronized { names ++= j.stageInfos.map(_.name) }
       }
+      // drained first, so no earlier test's job reaches the listener
+      graft.obs.Work.drain(spark)
       spark.sparkContext.addSparkListener(l)
       try {
         val out = body
-        // drain deterministically: the listener bus is FIFO, so once the
-        // sentinel job's start event arrives, every event from `body` has
-        // been delivered — no fixed-sleep race under a busy bus
-        spark.sparkContext.setJobDescription("graft_q61_sentinel")
-        try spark.range(1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          "listener bus never delivered the sentinel job event")
-        (names.toSeq, out)
+        // drained, every job `body` started has reached the listener
+        graft.obs.Work.drain(spark)
+        (names.synchronized(names.toSeq), out)
       } finally spark.sparkContext.removeSparkListener(l)
     }
     val (controlJobs, _) = jobsDuring {

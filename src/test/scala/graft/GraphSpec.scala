@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Work
 import graft.operators.Graph
 
 class GraphSpec extends AnyFunSuite {
@@ -385,16 +386,11 @@ class GraphSpec extends AnyFunSuite {
       val edges = Seq(
         ("<a>", "<h>"), ("<b>", "<h>"), ("<c>", "<h>"),
         ("<h>", "<a>"), ("<c>", "<d>")).toDF("src", "dst")
-      Graph.pageRank(edges, iters = 5)
-      // positive control: a deliberate action AFTER the build proves the
-      // listener bus is flowing before the negative assertions below
-      edges.limit(1).collect()
-      val deadline = System.currentTimeMillis() + 20000
-      while (System.currentTimeMillis() < deadline &&
-        !events.contains("collect")) Thread.sleep(50)
-      Thread.sleep(1000) // let any per-iteration stragglers surface
+      // Work.of drains the bus after the loop, so every action the loop
+      // ran has reached the listener; its jobs show the loop did run
+      val (_, work) = Work.of(spark)(Graph.pageRank(edges, iters = 5))
+      assert(work.jobs > 0, "the rank loop ran no jobs")
       val evs = events.toArray(Array.empty[String]).toSeq
-      assert(evs.contains("collect"), s"listener saw no events at all: $evs")
       // the unfused implementations ran .head() per iteration (dangling
       // mass) and .count() at setup (node count); the fused plan runs
       // neither — both scalars ride as broadcast 1-row aggregates
@@ -453,99 +449,45 @@ class GraphSpec extends AnyFunSuite {
 
   test("ccStar local finish replaces the round tail with probe + collect: " +
     "a multi-round chain builds AND labels in a fixed small job budget") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.add(js.jobId); ()
-      }
-    }
-    val sc = spark.sparkContext
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.addSparkListener(listener)
     try {
-      def settle(): Unit = {
-        var prev = -1
-        val deadline = System.currentTimeMillis() + 10000
-        while (jobs.size != prev && System.currentTimeMillis() < deadline) {
-          prev = jobs.size
-          Thread.sleep(200)
-        }
-      }
-      settle()
-      val base = jobs.size
       // a chain this long needs multiple distributed contraction rounds —
       // each a blocking probe job plus 3 exchanges. The local finish must
       // spend exactly ONE probe and ONE collect instead, regardless of the
       // chain's diameter.
       val chain = (1 until 40).map(i => (f"<c_$i%02d>", f"<c_${i + 1}%02d>"))
-      val labels = Graph.ccStar(chain.toDF("src", "dst"))
-        .as[(String, String)].collect().toMap
+      val (labels, work) = Work.of(spark) {
+        Graph.ccStar(chain.toDF("src", "dst"))
+          .as[(String, String)].collect().toMap
+      }
       assert(labels.values.toSet == Set("<c_01>"))
-      settle()
       // probe (head: 1–2 incremental jobs) + local-finish collect + the
       // final label collect — far under the ~5 jobs even TWO distributed
       // rounds would add on top
-      assert(jobs.size - base <= 4,
-        s"local finish did not bound the job count: ${jobs.size - base} " +
+      assert(work.jobs <= 4,
+        s"local finish did not bound the job count: ${work.jobs} " +
           "jobs for an under-threshold chain (expected probe + collect + " +
           "label collect)")
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("ccStar build pays no eager materialization jobs: an already-star " +
     "input costs only the fused probe action") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.add(js.jobId); ()
-      }
-    }
-    val sc = spark.sparkContext
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.addSparkListener(listener)
     try {
-      // settle FIRST: an AsyncEventQueue delivers still-queued events from
-      // earlier tests' jobs to a freshly added listener — without a
-      // pre-build drain those inflate the count and fail this test
-      // spuriously (the same bus-bleed Bench.settledCounts exists for)
-      def settle(): Unit = {
-        var prev = -1
-        val deadline = System.currentTimeMillis() + 10000
-        while (jobs.size != prev && System.currentTimeMillis() < deadline) {
-          prev = jobs.size
-          Thread.sleep(200)
-        }
-      }
-      settle()
-      val base = jobs.size
       val stars = Seq(("<b>", "<a>"), ("<c>", "<a>")).toDF("src", "dst")
-      Graph.ccStar(stars) // build only — the result DataFrame stays lazy
-      // drain the async listener bus behind a sentinel action, then wait
-      // until the sentinel's job surfaces
-      val before = jobs.size
-      spark.range(1).count()
-      val deadline = System.currentTimeMillis() + 20000
-      while (System.currentTimeMillis() < deadline && jobs.size == before)
-        Thread.sleep(50)
-      settle()
+      // build only — the result DataFrame stays lazy
+      val (_, work) = Work.of(spark)(Graph.ccStar(stars))
       // The build's only action is the fused isStarSet probe; its isEmpty
       // may take 1–2 incremental executeTake jobs. The retired
       // eager-checkpoint shape paid 2 extra materialization jobs (edges0,
-      // e) BEFORE the probe — 4+ total. Sentinel included in the count.
-      assert(jobs.size - base <= 3,
-        s"eager materialization jobs leaked back in: ${jobs.size - base} " +
-          "jobs for an already-star build (expected fused probe + sentinel)")
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+      // e) BEFORE the probe — 4+ total.
+      assert(work.jobs <= 2,
+        s"eager materialization jobs leaked back in: ${work.jobs} " +
+          "jobs for an already-star build (expected the fused probe)")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("ccStar on the store: every order reaches its region's component") {

@@ -694,9 +694,7 @@ class PlansSpec extends AnyFunSuite {
       try rows(graft.operators.Docs.q19MinhashPairs(spark, sf))
       finally spark.conf.unset("spark.graft.shingleStageBytes")
     } finally {
-      val deadline = System.currentTimeMillis() + 20000
-      while (System.currentTimeMillis() < deadline && staging().isEmpty)
-        Thread.sleep(50)
+      graft.obs.Work.drain(spark)
       spark.listenerManager.unregister(listener)
     }
     assert(staged == cached,
