@@ -36,13 +36,19 @@ t_start() { T0=$(date +%s); }
 t_end() { DT=$(( $(date +%s) - T0 )); }
 
 # one listener owner: graft.obs.Work is the only code in src/main that
-# attaches Spark listeners (it drains the bus exactly on both sides of the
-# block it meters); a listener added elsewhere brings back a private,
-# unsynchronized count
-owners=$(grep -rlE 'addSparkListener|listenerManager\.register' src/main/scala \
-  | grep -v '^src/main/scala/graft/obs/' | xargs)
+# attaches Spark or streaming listeners (it drains the bus exactly on both
+# sides of the block it meters); a listener added elsewhere brings back a
+# private, unsynchronized count
+owners=$(grep -rlE 'addSparkListener|listenerManager\.register|streams\.addListener' \
+  src/main/scala | grep -v '^src/main/scala/graft/obs/' | xargs)
 step "one listener owner (graft/obs)${owners:+ (also in: $owners)}" \
   "$([ -z "$owners" ]; echo $?)"
+# one thread-count reader: LocalSession.create() reads SPARK_GRAFT_CPUS, so
+# every main shares one default
+readers=$(grep -rl 'SPARK_GRAFT_CPUS' src/main/scala \
+  | grep -v '^src/main/scala/graft/LocalSession\.scala$' | xargs)
+step "one SPARK_GRAFT_CPUS reader (LocalSession)${readers:+ (also in: $readers)}" \
+  "$([ -z "$readers" ]; echo $?)"
 
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="

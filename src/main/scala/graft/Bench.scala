@@ -1,10 +1,10 @@
 package graft
 import graft.obs.Work
+import graft.tools.Harness.{quote => js}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSession.create(cpus)
+    val spark = LocalSession.create()
     // Warmup outside the timings: JVM/codegen/parquet-footer startup (else
     // the alphabetically-first query absorbs ~3 s of it) and the one-off
     // sharded materialization (an ETL write, not per-lookup cost — the
@@ -153,8 +153,6 @@ object Bench {
     }
   }
 
-  private def js(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
   // Locale.ROOT, NOT the f interpolator: String.format under a
   // comma-decimal default locale (de_DE etc.) would render 0.72 as "0,72"
   // and break the JSON the line-budget work exists to make parseable.

@@ -19,6 +19,11 @@ object LocalSession {
     dir
   }
 
+  /** [[create]] with `SPARK_GRAFT_CPUS` threads, by default one per
+    * available processor: the one place a main reads its thread count. */
+  def create(): SparkSession = create(sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString))
+
   /** `local[cpus]` session with the engine extensions and the confs the
     * gate queries rely on; log level WARN (keeps INFO noise out of the
     * output whose tail a harness may capture). */

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Lww
 import graft.streaming.StreamingLww
+import graft.tools.Harness.{emit, median3, obj, sink, timed}
 
 /** Same-scale comparison against the reference's published numbers
   * (report.pdf §7: YAGO 10,207,584 triples; point query 0.9002 s, single
@@ -16,54 +17,30 @@ import graft.streaming.StreamingLww
   * does offline in its notebook), and times the three headline operations
   * in their faithful single-operation form plus the full-store LWW
   * compaction as the batch-throughput number. Prints one JSON line.
+  *
+  * Usage: `sbt "runMain graft.ScaleBench [targetRows] [numShards]"`, by
+  * default the reference's 10,207,584 triples in 3 shards. Larger
+  * `targetRows` with proportionally more shards is the scaling rehearsal:
+  * on the sorted range-sharded layout the three headline operations are
+  * footer-pruned probes, so their cost should track the pruned bytes, not
+  * the store.
+  *
+  * The headline probes are pure reads, so each reports the median of three
+  * runs as `<key>` and the first run as `<key>_cold` ([[Harness.median3]]);
+  * one-shot sections (ETL writes, compaction, streaming) stay single-run:
+  * they either mutate state or are throughput paths read as such.
   */
 object ScaleBench {
 
-  private val YagoRows = 10207584L
-
   def main(args: Array[String]): Unit = {
+    val targetRows = if (args.nonEmpty) args(0).toLong else 10207584L
+    val numShards = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = LocalSession.create(cpus)
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    // Headline probes are pure reads, so repeat them and take the median
-    // (BENCH_METHOD rule 2 — single-shot times at this scale carry the
-    // page-cache/JIT noise that made the r12 run-to-run headline band
-    // 0.19-0.33 / 0.68-1.10 / 0.84-1.54 s on identical plans). One-shot
-    // sections (ETL writes, compaction, streaming) stay single-run: they
-    // either mutate state or are throughput paths the judge reads as such.
-    // Returns (result, cold, median): BOTH regimes land in the JSON line —
-    // `<key>` is the median (the steady-state serving number), `<key>_cold`
-    // is the FIRST TIMED RUN. Honest label (ADVICE r13): by the time a
-    // headline's run 1 fires, earlier sections and the warm-up probe have
-    // already scanned the store, so run 1 is JVM/page-cache PARTIALLY warm
-    // — closer to a single-shot baseline than the median, but not a true
-    // cold start. (ADVICE r12 origin: reporting only the warm median
-    // against a likely single-shot baseline compares different regimes.)
-    def timedMedian3[A](f: => A): (A, Double, Double) = {
-      val (a1, t1) = timed(f)
-      val (_, t2) = timed(f)
-      val (_, t3) = timed(f)
-      (a1, t1, Seq(t1, t2, t3).sorted.apply(1))
-    }
-    // materialize through the noop sink, NOT count(): under a count the
-    // optimizer prunes non-key aggregate payloads, so an LWW merge would be
-    // timed without computing a single max_by winner (same artifact Bench
-    // fixed). The Observation listener recovers the row count from the SAME
-    // run (a `.count()` afterwards would re-execute the whole job).
-    def runAndCount(df: DataFrame): Long = {
-      val obs = org.apache.spark.sql.Observation()
-      df.observe(obs, count(lit(1)).as("rows"))
-        .write.format("noop").mode("overwrite").save()
-      obs.get("rows").asInstanceOf[Long]
-    }
+    val spark: SparkSession = LocalSession.create()
 
     val base = TripleStore.triples(spark, sfDir)
     val n = base.count()
-    val reps = math.max(1L, math.ceil(YagoRows.toDouble / n).toLong)
+    val reps = math.max(1L, math.ceil(targetRows.toDouble / n).toLong)
     val big = base.crossJoin(
         spark.range(reps).select(col("id").as("rep")))
       .select(concat(col("subject"), lit("_r"), col("rep")).as("subject"),
@@ -72,7 +49,7 @@ object ScaleBench {
 
     // ETL: global range partition + in-partition sort (notebook cells 1+4)
     val (_, tEtl) = timed {
-      TripleStore.writeSharded(big, path, numShards = 3)
+      TripleStore.writeSharded(big, path, numShards)
     }
     val store = spark.read.parquet(path)
     val total = store.count()
@@ -81,7 +58,7 @@ object ScaleBench {
     // Sorted row groups + pushed equality => min/max skipping prunes almost
     // the whole store.
     store.filter(col("subject") === "<order_1>_r0").count()
-    val (c1, tSearchCold, tSearch) = timedMedian3 {
+    val (c1, tSearchCold, tSearch) = median3 {
       // fetch the matching ROWS (the reference returns them over HTTP), not
       // a count the optimizer can satisfy from the subject column alone
       store.filter(col("subject") === "<order_42>_r7").collect().length
@@ -90,7 +67,7 @@ object ScaleBench {
     // O2 single upsert (reference 2.4244 s): point probe + comparator,
     // returning old+new rows — the reference's actual contract
     // (MongoDBConnector.py:46-102 touches one key, not the store).
-    val (rows2, tUpsertCold, tUpsert) = timedMedian3 {
+    val (rows2, tUpsertCold, tUpsert) = median3 {
       Lww.upsertPoint(store, "<order_42>_r7", "<hasStatus>", "UPDATED",
         4102444800000L).collect()
     }
@@ -122,17 +99,17 @@ object ScaleBench {
     val cpo = graft.plans.RangeBucket.codePointOrdering
     val subjects = pending.map(_.getString(0))
     val (loS, hiS) = (subjects.min(cpo), subjects.max(cpo))
-    val (c3, tMergeCold, tMerge) = timedMedian3 {
+    val (c3, tMergeCold, tMerge) = median3 {
       val affected = store
         .filter(col("subject").between(loS, hiS))
         .join(broadcast(changelog.select("subject", "predicate")),
           Seq("subject", "predicate"), "left_semi")
-      runAndCount(Lww.merge(affected, changelog))
+      sink(Lww.merge(affected, changelog))
     }
 
     // Batch compaction throughput: full-store LWW dedup (the 100 TB path).
     val (c4, tCompact) = timed {
-      runAndCount(Lww.upsert(store, changelog))
+      sink(Lww.upsert(store, changelog))
     }
 
     // Predicate-shaped access at scale: the z-ordered layout clusters BOTH
@@ -150,10 +127,10 @@ object ScaleBench {
     zStore.filter(col("predicate") === "<inRegion>").count()
     store.filter(col("predicate") === "<inRegion>").count()
     val (cZ, tZProbe) = timed {
-      runAndCount(zStore.filter(col("predicate") === "<hasPriority>"))
+      sink(zStore.filter(col("predicate") === "<hasPriority>"))
     }
     val (cS, tSProbe) = timed {
-      runAndCount(store.filter(col("predicate") === "<hasPriority>"))
+      sink(store.filter(col("predicate") === "<hasPriority>"))
     }
     assert(cZ == cS, s"layouts disagree on the probe: $cZ vs $cS")
     // count-only twin: materializing 3.3M matched rows through the sink
@@ -225,7 +202,7 @@ object ScaleBench {
     val storeNow = spark.read.parquet(path)
     val replicaB = Lww.upsert(storeNow, changelog).localCheckpoint(true)
     val (_, tAggMerge) = timed {
-      runAndCount(Lww.merge(storeNow, replicaB))
+      sink(Lww.merge(storeNow, replicaB))
     }
     Seq("sb_replica_a", "sb_replica_b")
       .foreach(t => TripleStore.dropTableAndLocation(spark, t))
@@ -234,26 +211,29 @@ object ScaleBench {
       TripleStore.writeBucketed(replicaB, "sb_replica_b", 32)
     }
     val (cCo, tCoMerge) = timed {
-      runAndCount(Lww.mergeCoLocated(
+      sink(Lww.mergeCoLocated(
         spark.table("sb_replica_a"), spark.table("sb_replica_b")))
     }
 
-    println(
-      s"""{"metric":"scalebench","rows":$total,"unit":"sec","etl_write":$tEtl,""" +
-      s""""point_search":$tSearch,"point_upsert":$tUpsert,"merge_1k_pending":$tMerge,""" +
-      s""""point_search_cold":$tSearchCold,"point_upsert_cold":$tUpsertCold,""" +
-      s""""merge_1k_pending_cold":$tMergeCold,""" +
-      s""""full_compaction":$tCompact,"search_rows":$c1,"upsert_rows":${rows2.length},""" +
-      s""""merge_rows":$c3,"compact_rows":$c4,""" +
-      s""""zorder_etl":$tZEtl,"pred_probe_zorder":$tZProbe,""" +
-      s""""pred_probe_sharded":$tSProbe,"pred_probe_rows":$cZ,""" +
-      s""""pred_count_zorder":$tZCount,"pred_count_sharded":$tSCount,""" +
-      s""""stream_part_etl":$tPartEtl,"stream_part_batch":$tPartBatch,""" +
-      s""""stream_full_batch":$tFullBatch,"stream_touched_shards":$touchedShards,""" +
-      s""""stream_total_shards":${boundaries.size + 1},""" +
-      s""""replica_merge_agg":$tAggMerge,"replica_merge_colocated":$tCoMerge,""" +
-      s""""bucket_etl":$tBucketEtl,"colocated_rows":$cCo,""" +
-      s""""baseline":{"search":0.9002,"upsert":2.4244,"merge":2.2729}}""")
+    emit("metric" -> "scalebench", "rows" -> total, "shards" -> numShards,
+      "unit" -> "sec", "etl_write" -> tEtl,
+      "point_search" -> tSearch, "point_upsert" -> tUpsert,
+      "merge_1k_pending" -> tMerge,
+      "point_search_cold" -> tSearchCold, "point_upsert_cold" -> tUpsertCold,
+      "merge_1k_pending_cold" -> tMergeCold,
+      "full_compaction" -> tCompact, "search_rows" -> c1,
+      "upsert_rows" -> rows2.length, "merge_rows" -> c3, "compact_rows" -> c4,
+      "zorder_etl" -> tZEtl, "pred_probe_zorder" -> tZProbe,
+      "pred_probe_sharded" -> tSProbe, "pred_probe_rows" -> cZ,
+      "pred_count_zorder" -> tZCount, "pred_count_sharded" -> tSCount,
+      "stream_part_etl" -> tPartEtl, "stream_part_batch" -> tPartBatch,
+      "stream_full_batch" -> tFullBatch,
+      "stream_touched_shards" -> touchedShards,
+      "stream_total_shards" -> (boundaries.size + 1),
+      "replica_merge_agg" -> tAggMerge, "replica_merge_colocated" -> tCoMerge,
+      "bucket_etl" -> tBucketEtl, "colocated_rows" -> cCo,
+      "baseline" -> obj("search" -> 0.9002, "upsert" -> 2.4244,
+        "merge" -> 2.2729))
     spark.stop()
   }
 }

@@ -14,8 +14,7 @@ object Verify {
     // entry name should fail in milliseconds, not after a JVM spin-up
     only.diff(SparkEntry.queries.keySet).foreach { n =>
       sys.error(s"unknown gate entry '$n'") }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSession.create(cpus)
+    val spark = LocalSession.create()
     new java.io.File(outDir).mkdirs()
     // Itemized session warmup for FULL-gate replays (r22, VERDICT r21 #6 /
     // r20 #5): without it the first entry in iteration order (q49 since
@@ -55,18 +54,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // a full JSON string escape: a tab or CR in the SQL must not make the
+    // oracle's json.load fail
+    import graft.tools.Harness.{quote => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -366,7 +366,7 @@ object StreamingGate {
         // two-sentinel handshake untouched): the previous foreachBatch
         // ran a parquet commit per micro-batch — 7 write jobs of KB-scale
         // output, the committer a fixed share of each ~0.5–0.9 s addBatch
-        // (ReplayProbe's per-batch durationMs, from the replay's progress
+        // (the per-batch durationMs of the replay's progress
         // events). Batches now collect into a driver buffer (gate-scale,
         // bounded — the documented harness-collect class) tagged with
         // their batch id; the store is written once

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.obs.Work
 import graft.operators.Graph
 
@@ -15,54 +12,44 @@ import graft.operators.Graph
   * instead of a guess. Also reports per-mode Spark job counts: ccStar's
   * latency floor at fixed data size is its driver-blocking job count.
   *
-  * Usage: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.CcModeBench
-  * [sfDir] [replicate]"` — edges are the sf dir's entity graph, optionally
-  * replicated k× with disjoint id suffixes (components stay disjoint per
-  * copy, so labels scale trivially and the work is k× honest edges).
+  * Usage: `sbt "runMain graft.tools.CcModeBench [sfDir] [replicate]"` —
+  * edges are the sf dir's entity graph, optionally replicated k× with
+  * disjoint id suffixes (components stay disjoint per copy, so labels scale
+  * trivially and the work is k× honest edges).
   */
 object CcModeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val replicate = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalSession.create(cpus)
+    val spark = graft.LocalSession.create()
 
-    // k disjoint copies of the entity graph, ids suffixed per copy —
     // materialized once so both modes contract the identical input
-    val base = Graph.edges(spark, sfDir)
-    val edges = (0 until replicate).map { i =>
-      base.select(concat(col("src"), lit(s"#$i")).as("src"),
-        concat(col("dst"), lit(s"#$i")).as("dst"))
-    }.reduce(_ union _).localCheckpoint(true)
+    val edges = Harness.replicateEdges(Graph.edges(spark, sfDir), replicate)
+      .localCheckpoint(true)
     val nEdges = edges.count()
 
-    // (seconds, nodes, work)
-    def run(dir: Option[String]): (Double, Long, Work) = {
-      val ((dt, n), work) = Work.of(spark) {
-        val t0 = System.nanoTime()
-        val labels = Graph.ccStar(edges, checkpointDir = dir)
-        val n = labels.count()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      (dt, n, work)
-    }
+    // (nodes, work) of one contraction
+    def run(dir: Option[String]): (Long, Work) =
+      Work.of(spark)(Graph.ccStar(edges, checkpointDir = dir).count())
     // warmup contraction (JIT/codegen), then per-mode MEDIAN of 3 timed
     // runs (same convention as Bench): this host shows multi-second stalls
     // (BENCH_NOTES r11), so a one-shot local-vs-reliable overhead number
     // would be noise-prone (ADVICE r11)
     run(None)
-    def med3(f: () => (Double, Long, Work)): (Double, Long, Work) = {
-      val rs = (1 to 3).map(_ => f())
-      val byTime = rs.sortBy(_._1).apply(1)
-      require(rs.map(_._2).distinct.size == 1,
-        s"node-count disagreement across runs: ${rs.map(_._2)}")
-      byTime
+    def measure(dir: Option[String]): (Double, Long, Work) = {
+      val nodes = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val ((n, work), _, secs) = Harness.median3 {
+        val r = run(dir); nodes += r._1; r
+      }
+      require(nodes.distinct.size == 1,
+        s"node-count disagreement across runs: $nodes")
+      (secs, n, work)
     }
-    val (tLocal, nLocal, wLocal) = med3(() => run(None))
+    val (tLocal, nLocal, wLocal) = measure(None)
     // the labels are consumed (count) inside the scope, so the caller may
     // delete the checkpoint dir afterwards, per ccStar's scaladoc
     val (tRel, nRel, wRel) = graft.Scratch.scoped(spark) { ckDir =>
-      med3(() => run(Some(ckDir)))
+      measure(Some(ckDir))
     }
     require(nLocal == nRel,
       s"mode disagreement: local $nLocal nodes vs reliable $nRel")
@@ -75,20 +62,13 @@ object CcModeBench {
     // whether later rounds' exchanges shrink (bytes) and coalesce (task
     // counts) as the contracted edge set collapses, or whether a fixed
     // partition count keeps paying full-width rounds on near-empty data.
-    val perRound = run(None)._3.perJob.map { j =>
-      val mb = j.shuffleBytes / 1e6
-      s"""{"job":${j.id},"tasks":${j.tasks},"shuffle_mb":${
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(mb))}}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"metric":"cc_round_profile","edges":$nEdges,""" +
-      s""""per_job":$perRound}""")
-
-    def sec(v: Double) = // Locale.ROOT: comma-decimal locales break JSON
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    println(s"""{"metric":"cc_mode_bench","unit":"sec","edges":$nEdges,""" +
-      s""""nodes":$nLocal,"local_sec":${sec(tLocal)},""" +
-      s""""local_jobs":${wLocal.jobs},"reliable_sec":${sec(tRel)},""" +
-      s""""reliable_jobs":${wRel.jobs},"sf":"$sfDir","replicate":$replicate}""")
+    Harness.emit("metric" -> "cc_round_profile", "edges" -> nEdges,
+      "per_job" -> run(None)._2.perJob.map(j => Harness.obj("job" -> j.id,
+        "tasks" -> j.tasks, "shuffle_mb" -> j.shuffleBytes / 1e6)))
+    Harness.emit("metric" -> "cc_mode_bench", "unit" -> "sec",
+      "edges" -> nEdges, "nodes" -> nLocal, "local_sec" -> tLocal,
+      "local_jobs" -> wLocal.jobs, "reliable_sec" -> tRel,
+      "reliable_jobs" -> wRel.jobs, "sf" -> sfDir, "replicate" -> replicate)
     spark.stop()
   }
 }

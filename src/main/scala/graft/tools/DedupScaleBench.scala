@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.LocalSession
+import graft.{LocalSession, Scratch}
 import graft.obs.Work
+import graft.operators.BloomIndex
 
 /** Incremental-dedup shapes at the reference's row count (VERDICT r12 #4):
   * the r11 20×-corpus stress covered the near-dup chain (q19→q60); this
@@ -29,7 +30,7 @@ import graft.obs.Work
   * before any number is reported. Prints one JSON line per plan with wall
   * seconds and shuffle/broadcast volumes from task metrics, then a summary.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.DedupScaleBench
+  * Usage: sbt "runMain graft.tools.DedupScaleBench
   *        [corpusRows] [batchRows] [nShards] [hashChars] [steadyAppends]"
   * `steadyAppends` > 0 adds the steady-state rung (r20): that many crawl
   * generations through the real admit→append cycle on the sharded index,
@@ -50,10 +51,12 @@ object DedupScaleBench {
     // key's width; only the anti-join comparison plan pays for wide keys,
     // which is exactly the contrast the bench exists to show.
     val hashChars = if (args.length > 3) args(3).toInt else 64
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
 
     // deterministic synthetic hashes; materialized to parquet so both
-    // plans read identical bytes and the corpus is a SCAN, not a range
+    // plans read identical bytes and the corpus is a SCAN, not a range.
+    // Fixed paths, unlike the indexes below: reusing these fixtures across
+    // runs is the point of the manifest
     val tmp = sys.props("java.io.tmpdir")
     val corpusPath = s"$tmp/graft_dedupscale_corpus"
     val batchPath = s"$tmp/graft_dedupscale_batch"
@@ -153,15 +156,6 @@ object DedupScaleBench {
         pos.join(broadcast(hits), Seq("content_hash"), "left_anti")))
     }
 
-    // order-independent result digest: count + XOR of row hashes (sum
-    // would overflow a long under ANSI arithmetic)
-    def digest(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        expr("bit_xor(xxhash64(doc_id, content_hash, n_in_batch))").as("h"))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-
     def run(name: String, mk: () => DataFrame): (Long, Long) = {
       // at the 1B rung consecutive plans' shuffle files must not
       // coexist on disk (the corpus alone is tens of GB; Spark frees
@@ -171,22 +165,17 @@ object DedupScaleBench {
       // to delete the files; it waits on no listener event.
       System.gc()
       Thread.sleep(1500)
-      val ((d, secs), work) = Work.of(spark) {
-        val t0 = System.nanoTime()
-        val d = digest(mk())
-        (d, (System.nanoTime() - t0) / 1e9)
-      }
-      val secsStr =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))
-      println(s"""{"plan":"$name","secs":$secsStr,""" +
-        s""""shuffle_bytes":${work.shuffleBytes},""" +
-        s""""shuffle_records":${work.shuffleRecords},""" +
-        s""""admitted":${d._1},"digest":${d._2}}""")
+      val ((d, secs), work) =
+        Work.of(spark)(Harness.timed(Harness.digest(mk())))
+      Harness.emit("plan" -> name, "secs" -> secs,
+        "shuffle_bytes" -> work.shuffleBytes,
+        "shuffle_records" -> work.shuffleRecords,
+        "admitted" -> d._1, "digest" -> d._2)
       d
     }
 
-    println(s"""{"dedup_scale":"start","corpus_rows":$corpusRows,""" +
-      s""""batch_rows":$batchRows}""")
+    Harness.emit("dedup_scale" -> "start", "corpus_rows" -> corpusRows,
+      "batch_rows" -> batchRows)
     val dAnti = run("q52_anti_join", () => antiJoinPlan())
     // SINGLE-BLOB plans retire past ~256 MB of filter (r19, the 1B rung):
     // a one-filter bloom_build holds the WHOLE numBits/8 bytes in every
@@ -202,29 +191,25 @@ object DedupScaleBench {
       val dBloom4 = run("q61_bloom_build4", () => bloomPlan(Some(4)))
       Seq(dBloom, dBloom4)
     } else {
-      println("""{"plan":"q61_bloom_route","skipped":"single-blob filter > 256 MB — the r16-retired shape"}""")
-      println("""{"plan":"q61_bloom_build4","skipped":"single-blob filter > 256 MB — the r16-retired shape"}""")
+      Seq("q61_bloom_route", "q61_bloom_build4").foreach(p => Harness.emit(
+        "plan" -> p, "skipped" -> "single-blob filter > 256 MB — the r16-retired shape"))
       Seq.empty
     }
     // q76 shape: the bloom as STORED state — build once OUTSIDE the timed
     // admit (the amortized steady-state), admit probes the artifact. The
     // gate geometry is corpus-sized here: ~10 bits/key like the inline
     // variants, so the routing fp rate is comparable.
-    val idxPath = s"$tmp/graft_dedupscale_index"
     val storedDigests = if (singleBlobOk) {
-      val (_, tBuildIdx) = {
-        val t0 = System.nanoTime()
-        graft.operators.BloomIndex.buildSized(
-          corpus.select("content_hash"), idxPath, corpusRows, corpusRows * 10)
-        ((), (System.nanoTime() - t0) / 1e9)
-      }
-      println(s"""{"plan":"q76_index_build_once","secs":${
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(tBuildIdx))}}""")
+      val idxPath = Scratch.path(spark, "graft_dedupscale_index")
+      val (_, tBuildIdx) = Harness.timed(BloomIndex.buildSized(
+        corpus.select("content_hash"), idxPath, corpusRows, corpusRows * 10))
+      Harness.emit("plan" -> "q76_index_build_once", "secs" -> tBuildIdx)
       Seq(run("q76_stored_bloom_admit", () =>
-        graft.operators.BloomIndex.admit(spark, idxPath, batch, corpus)
+        BloomIndex.admit(spark, idxPath, batch, corpus)
           .select("doc_id", "content_hash", "n_in_batch")))
     } else {
-      println("""{"plan":"q76_stored_bloom_admit","skipped":"single-blob filter > 256 MB — N-sharded is the scale path"}""")
+      Harness.emit("plan" -> "q76_stored_bloom_admit",
+        "skipped" -> "single-blob filter > 256 MB — N-sharded is the scale path")
       Seq.empty
     }
     // r16 SHARDED mode: the same admit relation through an N-way index
@@ -234,30 +219,28 @@ object DedupScaleBench {
     // shards ≈ full corpus at N shards) — the driver-side single-blob OR
     // this mode retires grew linearly instead.
     val nShards = if (args.length > 2) args(2).toLong else 8L
-    val shardedPath = s"$tmp/graft_dedupscale_index_sh"
-    val tSh0 = System.nanoTime()
-    graft.operators.BloomIndex.buildSized(corpus.select("content_hash"),
-      shardedPath, corpusRows, corpusRows * 10, nShards)
-    println(s"""{"plan":"q76_sharded_build_once","n_shards":$nShards,"secs":${
-      String.format(java.util.Locale.ROOT, "%.2f",
-        Double.box((System.nanoTime() - tSh0) / 1e9))}}""")
+    val shardedPath = Scratch.path(spark, "graft_dedupscale_index_sh")
+    val (_, tSh) = Harness.timed(BloomIndex.buildSized(
+      corpus.select("content_hash"), shardedPath, corpusRows, corpusRows * 10,
+      nShards))
+    Harness.emit("plan" -> "q76_sharded_build_once", "n_shards" -> nShards,
+      "secs" -> tSh)
     // per-task blob residency + fetch telemetry (r19, VERDICT #6): local
     // mode shares one JVM, so the cache counters see every task. The
     // admit's fetch count must stay <= probe tasks x shards (each task
     // pays each probed shard once; the cache dedups within-task reuse),
     // and resident bytes must hold at most one generation of blobs.
-    graft.operators.BloomIndex.ShardBlobCache.clear()
-    val loads0 = graft.operators.BloomIndex.ShardBlobCache.loads.get()
+    BloomIndex.ShardBlobCache.clear()
+    val loads0 = BloomIndex.ShardBlobCache.loads.get()
     val dSharded = run(s"q76_sharded_admit_n$nShards", () =>
-      graft.operators.BloomIndex.admit(spark, shardedPath, batch, corpus)
+      BloomIndex.admit(spark, shardedPath, batch, corpus)
         .select("doc_id", "content_hash", "n_in_batch"))
-    println(s"""{"plan":"shard_cache_telemetry","n_shards":$nShards,""" +
-      s""""fetches":${
-        graft.operators.BloomIndex.ShardBlobCache.loads.get() - loads0},""" +
-      s""""entries":${
-        graft.operators.BloomIndex.ShardBlobCache.entryCount()},""" +
-      s""""resident_bytes":${
-        graft.operators.BloomIndex.ShardBlobCache.residentBytes()}}""")
+    def cacheTelemetry(plan: String, loadsBefore: Long): Unit = Harness.emit(
+      "plan" -> plan, "n_shards" -> nShards,
+      "fetches" -> (BloomIndex.ShardBlobCache.loads.get() - loadsBefore),
+      "entries" -> BloomIndex.ShardBlobCache.entryCount(),
+      "resident_bytes" -> BloomIndex.ShardBlobCache.residentBytes())
+    cacheTelemetry("shard_cache_telemetry", loads0)
     // reads the LATEST version dir (a rebuild into a reused root now
     // lands in the next free slot, not a fixed v0)
     def maxBlobBytes(path: String): Long = {
@@ -272,8 +255,8 @@ object DedupScaleBench {
     // full 10/6 bits/shard vs quarter 10/1)
     val qShards = math.max(1L, nShards / 4)
     val qRows = corpusRows * qShards / nShards
-    val quarterPath = s"$tmp/graft_dedupscale_index_shq"
-    graft.operators.BloomIndex.buildSized(
+    val quarterPath = Scratch.path(spark, "graft_dedupscale_index_shq")
+    BloomIndex.buildSized(
       corpus.filter(col("doc_id") < qRows).select("content_hash"),
       quarterPath, qRows, qRows * 10, qShards)
     val (bFull, bQuarter) = (maxBlobBytes(shardedPath), maxBlobBytes(quarterPath))
@@ -283,9 +266,9 @@ object DedupScaleBench {
     // geometry, it cannot detect a data-dependent regression. Reported
     // because the absolute per-shard byte size IS the 1T story (what one
     // append task holds), not as a pass/fail signal.
-    println(s"""{"plan":"shard_blob_bytes","informational":true,""" +
-      s""""n_shards":$nShards,"small_rows":$qRows,"small_shards":$qShards,""" +
-      s""""per_shard_bytes_full":$bFull,"per_shard_bytes_quarter":$bQuarter}""")
+    Harness.emit("plan" -> "shard_blob_bytes", "informational" -> true,
+      "n_shards" -> nShards, "small_rows" -> qRows, "small_shards" -> qShards,
+      "per_shard_bytes_full" -> bFull, "per_shard_bytes_quarter" -> bQuarter)
     // the DATA-DEPENDENT shard-health claim: xxhash64-pmod routing spreads
     // real keys evenly, so per-shard key counts must be tight around the
     // mean (a skewed or broken shard function would concentrate keys —
@@ -303,9 +286,9 @@ object DedupScaleBench {
     val balGated = corpusRows / nShards >= 100000L
     val balanced = !balGated ||
       (balMax <= balMean * 1.2 && balMin >= balMean * 0.8)
-    println(s"""{"plan":"shard_key_balance","n_shards":$nShards,""" +
-      s""""max_keys":$balMax,"min_keys":$balMin,"mean_keys":${balMean.toLong},""" +
-      s""""gated":$balGated,"balanced":$balanced}""")
+    Harness.emit("plan" -> "shard_key_balance", "n_shards" -> nShards,
+      "max_keys" -> balMax, "min_keys" -> balMin, "mean_keys" -> balMean.toLong,
+      "gated" -> balGated, "balanced" -> balanced)
     // --- steady-state (multi-generation) mode: r20, VERDICT r19 #5 -------
     // The 1B rung measured a FRESH v0 index; a real daily-crawl index is
     // v0 + K appends with the 3-snapshot GC. This mode drives K crawl
@@ -338,15 +321,13 @@ object DedupScaleBench {
       var corpusAll = corpus
       (1 to steadyK).foreach { g =>
         val b = genBatch(g).localCheckpoint(true)
-        val t0 = System.nanoTime()
-        val admitted = graft.operators.BloomIndex
-          .admit(spark, shardedPath, b, corpusAll)
-        graft.operators.BloomIndex.append(spark, shardedPath,
-          admitted.select("content_hash"))
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(s"""{"plan":"steady_gen$g","admitted":${admitted.count()},""" +
-          s""""admit_append_secs":${
-            String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))}}""")
+        val (admitted, secs) = Harness.timed {
+          val admitted = BloomIndex.admit(spark, shardedPath, b, corpusAll)
+          BloomIndex.append(spark, shardedPath, admitted.select("content_hash"))
+          admitted
+        }
+        Harness.emit("plan" -> s"steady_gen$g", "admitted" -> admitted.count(),
+          "admit_append_secs" -> secs)
         corpusAll = corpusAll
           .unionByName(admitted.select("doc_id", "content_hash"))
       }
@@ -357,24 +338,17 @@ object DedupScaleBench {
         .map(_.getName.drop(1).toLong).sorted.toSeq
       val wantVersions = (steadyK - 2 to steadyK).map(_.toLong)
       val gcOk = steadyK < 2 || versions == wantVersions
-      println(s"""{"plan":"steady_gc","versions":${
-        versions.mkString("[", ",", "]")},"ok":$gcOk}""")
+      Harness.emit("plan" -> "steady_gc", "versions" -> versions, "ok" -> gcOk)
       // the steady-state admit: a FRESH generation against the K-appended
       // index, with cache telemetry, digest-checked against the anti-join
       // over the grown corpus
       val probeBatch = genBatch(steadyK + 1).localCheckpoint(true)
-      graft.operators.BloomIndex.ShardBlobCache.clear()
-      val loadsS0 = graft.operators.BloomIndex.ShardBlobCache.loads.get()
+      BloomIndex.ShardBlobCache.clear()
+      val loadsS0 = BloomIndex.ShardBlobCache.loads.get()
       val dSteady = run(s"steady_admit_after_$steadyK", () =>
-        graft.operators.BloomIndex.admit(spark, shardedPath, probeBatch,
+        BloomIndex.admit(spark, shardedPath, probeBatch,
           corpusAll).select("doc_id", "content_hash", "n_in_batch"))
-      println(s"""{"plan":"steady_cache_telemetry","n_shards":$nShards,""" +
-        s""""fetches":${
-          graft.operators.BloomIndex.ShardBlobCache.loads.get() - loadsS0},""" +
-        s""""entries":${
-          graft.operators.BloomIndex.ShardBlobCache.entryCount()},""" +
-        s""""resident_bytes":${
-          graft.operators.BloomIndex.ShardBlobCache.residentBytes()}}""")
+      cacheTelemetry("steady_cache_telemetry", loadsS0)
       val dSteadyTruth = run("steady_anti_join_truth", () =>
         admit(probeBatch.join(corpusAll, Seq("content_hash"), "left_anti")))
       // r22 CONTROL (VERDICT r21 #3 "bloom compaction"): the same probe
@@ -390,26 +364,23 @@ object DedupScaleBench {
       // extra 5% prev-generation dup class, i.e. ~50% more bloom-positive
       // rows through the exact check) against DIFFERENT corpus frames
       // (grown union vs base parquet) — this control holds both fixed.
-      val compactPath = s"$tmp/graft_dedupscale_index_compact"
-      val tC0 = System.nanoTime()
-      graft.operators.BloomIndex.buildSized(
+      val compactPath = Scratch.path(spark, "graft_dedupscale_index_compact")
+      val (_, tC) = Harness.timed(BloomIndex.buildSized(
         corpusAll.select("content_hash"), compactPath,
-        corpusRows, corpusRows * 10, nShards)
-      println(s"""{"plan":"steady_compact_build_once","secs":${
-        String.format(java.util.Locale.ROOT, "%.2f",
-          Double.box((System.nanoTime() - tC0) / 1e9))}}""")
-      graft.operators.BloomIndex.ShardBlobCache.clear()
+        corpusRows, corpusRows * 10, nShards))
+      Harness.emit("plan" -> "steady_compact_build_once", "secs" -> tC)
+      BloomIndex.ShardBlobCache.clear()
       val dCompact = run("steady_admit_compacted", () =>
-        graft.operators.BloomIndex.admit(spark, compactPath, probeBatch,
+        BloomIndex.admit(spark, compactPath, probeBatch,
           corpusAll).select("doc_id", "content_hash", "n_in_batch"))
       steadyOk = gcOk && dSteady == dSteadyTruth && dCompact == dSteadyTruth
-      println(s"""{"plan":"steady_done","digests_agree":${
-        dSteady == dSteadyTruth},"compact_digest_agrees":${
-        dCompact == dSteadyTruth},"gc_ok":$gcOk}""")
+      Harness.emit("plan" -> "steady_done",
+        "digests_agree" -> (dSteady == dSteadyTruth),
+        "compact_digest_agrees" -> (dCompact == dSteadyTruth), "gc_ok" -> gcOk)
     }
     val agree =
       (inlineDigests ++ storedDigests :+ dSharded).forall(_ == dAnti)
-    println(s"""{"dedup_scale":"done","plans_agree":$agree}""")
+    Harness.emit("dedup_scale" -> "done", "plans_agree" -> agree)
     spark.stop()
     if (!agree || !balanced || !steadyOk) sys.exit(1)
   }

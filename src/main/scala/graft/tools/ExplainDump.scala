@@ -25,7 +25,7 @@ object ExplainDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = LocalSession.create()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -29,13 +29,12 @@ import graft.functions.Multimodal
   *     one-row-in/N-out shape a video pipeline pays.
   *
   * Prints one JSON line. Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.MediaScaleBench [rows]"
+  *   sbt "runMain graft.tools.MediaScaleBench [rows]"
   */
 object MediaScaleBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val spark = LocalSession.create(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
     import spark.implicits._
 
     def media = spark.range(n).as[Long].map { id =>
@@ -43,13 +42,8 @@ object MediaScaleBench {
       Multimodal.MediaRow(id, bytes, fmt, bytes.length.toLong)
     }
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
     // leg 1: the decode pipeline end-to-end, noop-materialized
-    val (_, tDecode) = timed {
+    val (_, tDecode) = Harness.timed {
       Multimodal.extractImageFeatures(media)
         .write.format("noop").mode("overwrite").save()
     }
@@ -67,7 +61,7 @@ object MediaScaleBench {
       .count()
 
     // leg 2: frame sampling fan-out (8-byte frames, every 2nd kept)
-    val (nFrames, tFrames) = timed {
+    val (nFrames, tFrames) = Harness.timed {
       val frames = Multimodal.sampleFrames(media, frameBytes = 8, stride = 2)
       val acc = spark.sparkContext.longAccumulator("frames")
       frames.foreachPartition { (it: Iterator[Multimodal.MediaFrame]) =>
@@ -78,14 +72,10 @@ object MediaScaleBench {
       acc.value.longValue()
     }
 
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def rate(t: Double) =
-      String.format(java.util.Locale.ROOT, "%.0f", Double.box(n / t))
-    println(s"""{"metric":"media_scale","rows":$n,""" +
-      s""""decode_sec":${f(tDecode)},"decode_rows_per_sec":${rate(tDecode)},""" +
-      s""""dim_violations":$violations,""" +
-      s""""frames":$nFrames,"frames_sec":${f(tFrames)}}""")
+    Harness.emit("metric" -> "media_scale", "rows" -> n,
+      "decode_sec" -> tDecode, "decode_rows_per_sec" -> n / tDecode,
+      "dim_violations" -> violations, "frames" -> nFrames,
+      "frames_sec" -> tFrames)
     spark.stop()
     if (violations != 0) {
       System.err.println(s"[media_scale] $violations dimension mismatches " +

@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.LocalSession
+import graft.{LocalSession, Scratch}
+import graft.tools.Harness.{digest, timed}
 import graft.operators.{Docs, Vectors}
 
 /** Near-dup/text pillar at 10M-doc cardinality (r20, VERDICT r19 #2 — the
@@ -36,7 +37,7 @@ import graft.operators.{Docs, Vectors}
   * the sub-quadratic budget (candPerDoc), digest mismatch vs the gate
   * path, or a guard violation.
   *
-  * Usage: SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_DRIVER_MEM=48g \
   *   sbt "runMain graft.tools.NeardupScaleBench [docs] [wordsPerDoc]
   *        [vocab] [dupMod] [vectors] [hotRows] [subsetDocs] [noise]
   *        [numHashes] [bandRows]"
@@ -89,17 +90,6 @@ object NeardupScaleBench {
       .select(col("id").as("vec_id"), array(dims: _*).as("embedding"))
   }
 
-  /** Order-independent digest of a q19-shaped pair frame: count + XOR of
-    * row hashes (DedupScaleBench's convention — a sum would overflow a
-    * long under ANSI arithmetic). */
-  private def digest(pairs: DataFrame): (Long, Long) = {
-    val r = pairs.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(doc_a, doc_b, jaccard))"), lit(0L))
-        .as("d")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   def main(args: Array[String]): Unit = {
     val docs = if (args.length > 0) args(0).toLong else 10000000L
     val wordsPerDoc = if (args.length > 1) args(1).toInt else 40
@@ -120,17 +110,10 @@ object NeardupScaleBench {
     // Zipf false candidates by J² more per band
     val numHashes = if (args.length > 8) args(8).toInt else 24
     val bandRows = if (args.length > 9) args(9).toInt else 4
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-    val tmp = sys.props("java.io.tmpdir")
-    val fullDir = s"$tmp/graft_neardupscale_full"
-    val subDir = s"$tmp/graft_neardupscale_subset"
+    val fullDir = Scratch.path(spark, "graft_neardupscale_full")
+    val subDir = Scratch.path(spark, "graft_neardupscale_subset")
     val corpus = synthDocs(spark, docs, wordsPerDoc, vocab, dupMod)
     corpus.write.mode("overwrite").parquet(s"$fullDir/documents.parquet")
     corpus.filter(col("doc_id") < subsetDocs)
@@ -209,20 +192,19 @@ object NeardupScaleBench {
     val (nVecCand, tVecCand) =
       timed(Vectors.candidatePairs(refined).count())
 
-    println(s"""{"metric":"neardup_scale","docs":$docs,""" +
-      s""""prod_path_sec":${f(tProd)},"prod_digest_ok":$prodOk,""" +
-      s""""num_hashes":$numHashes,"band_rows":$bandRows,""" +
-      s""""words_per_doc":$wordsPerDoc,"vocab":$vocab,"dup_mod":$dupMod,""" +
-      s""""true_pairs":$truePairs,"cand_pairs":$nCand,""" +
-      s""""cand_sec":${f(tCand)},"verified_pairs":$nPairs,""" +
-      s""""planted_found":$planted,"recall":${f(recall)},""" +
-      s""""verify_sec":${f(tVerify)},"digest_ok":$digestOk,""" +
-      s""""simhash_pairs":$nSim,"simhash_planted":$nSimPlanted,""" +
-      s""""simhash_sec":${f(tSim)},"vectors":$vectors,"hot_rows":$hotRows,""" +
-      s""""bucket_pre_max":$preMax,"bucket_post_max":$postMax,""" +
-      s""""max_bucket":$MaxBucket,"band_sec":${f(tBand)},""" +
-      s""""refine_sec":${f(tRefine)},"vec_cand_pairs":$nVecCand,""" +
-      s""""vec_cand_sec":${f(tVecCand)}}""")
+    Harness.emit("metric" -> "neardup_scale", "docs" -> docs,
+      "prod_path_sec" -> tProd, "prod_digest_ok" -> prodOk,
+      "num_hashes" -> numHashes, "band_rows" -> bandRows,
+      "words_per_doc" -> wordsPerDoc, "vocab" -> vocab, "dup_mod" -> dupMod,
+      "true_pairs" -> truePairs, "cand_pairs" -> nCand, "cand_sec" -> tCand,
+      "verified_pairs" -> nPairs, "planted_found" -> planted,
+      "recall" -> recall, "verify_sec" -> tVerify, "digest_ok" -> digestOk,
+      "simhash_pairs" -> nSim, "simhash_planted" -> nSimPlanted,
+      "simhash_sec" -> tSim, "vectors" -> vectors, "hot_rows" -> hotRows,
+      "bucket_pre_max" -> preMax, "bucket_post_max" -> postMax,
+      "max_bucket" -> MaxBucket, "band_sec" -> tBand,
+      "refine_sec" -> tRefine, "vec_cand_pairs" -> nVecCand,
+      "vec_cand_sec" -> tVecCand)
     spark.stop()
 
     // sub-quadratic budget: candidates per doc, generous but orders below

@@ -28,7 +28,7 @@ import graft.operators.Graph
   * All modes must agree on the ranks (max |Δ| over a full join) before
   * the numbers are reported. Prints one JSON line.
   *
-  * Usage: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.PageRankScaleBench
+  * Usage: `sbt "runMain graft.tools.PageRankScaleBench
   * [sfDir] [replicate] [iters] [modes] [input]"` — disjoint id-suffixed
   * graph copies, so the work is k× honest edges with k× honest nodes.
   * `modes` (default `plain,prepart,bucketed`) selects the comparison modes
@@ -63,14 +63,9 @@ object PageRankScaleBench {
     require(Set("mem", "disk")(input), s"input must be mem|disk, got $input")
     require(input == "mem" || !modes("prepart"),
       "prepart is a memory-checkpoint mode; run it with input=mem")
-    val spark = graft.LocalSession.create(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.LocalSession.create()
 
-    val base = Graph.edges(spark, sfDir)
-    val unioned = (0 until replicate).map { i =>
-      base.select(concat(col("src"), lit(s"#$i")).as("src"),
-        concat(col("dst"), lit(s"#$i")).as("dst"))
-    }.reduce(_ union _)
+    val unioned = Harness.replicateEdges(Graph.edges(spark, sfDir), replicate)
     val edges = input match {
       case "mem" => unioned.localCheckpoint(true)
       case "disk" =>
@@ -87,15 +82,11 @@ object PageRankScaleBench {
     // measurement discipline (the timed loop's exact job count, eager
     // checkpoint, sum derivation)
     def run(mk: => org.apache.spark.sql.DataFrame) = {
-      val ((ranks, secs), work) = Work.of(spark) {
-        val t0 = System.nanoTime()
-        // evaluating mk RUNS the loop (its final frame is already an eager
-        // checkpoint) — a further localCheckpoint here would only copy |V|
-        // rows into a second retained block set per mode (r15: that copy
-        // was one of the deserialized frames that OOM'd the 100M rehearsal)
-        val ranks = mk
-        (ranks, (System.nanoTime() - t0) / 1e9)
-      }
+      // evaluating mk RUNS the loop (its final frame is already an eager
+      // checkpoint) — a further localCheckpoint here would only copy |V|
+      // rows into a second retained block set per mode (r15: that copy
+      // was one of the deserialized frames that OOM'd the 100M rehearsal)
+      val ((ranks, secs), work) = Work.of(spark)(Harness.timed(mk))
       val sum = ranks.agg(org.apache.spark.sql.functions.sum("rank"))
         .head().getDouble(0)
       (ranks, secs, work.jobs, sum)
@@ -114,10 +105,8 @@ object PageRankScaleBench {
     // then the loop through the catalog table
     val edgeTable = "graft_prbench_edges_bkt"
     val bktOpt = if (!modes("bucketed")) None else {
-      val t0 = System.nanoTime()
-      Graph.writeBucketedEdges(edges, edgeTable,
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      val tLayout = (System.nanoTime() - t0) / 1e9
+      val (_, tLayout) = Harness.timed(Graph.writeBucketedEdges(edges,
+        edgeTable, spark.sparkContext.defaultParallelism))
       Some((tLayout, run(Graph.pageRankBucketed(spark, edgeTable, iters))))
     }
 
@@ -164,26 +153,20 @@ object PageRankScaleBench {
       .head().getDouble(0)
     val maxDiff = (preOpt.map(p => diffTo(p._2._1)).toSeq ++
       bktOpt.map(b => diffTo(b._2._1)).toSeq).foldLeft(0.0)(math.max)
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val preJson = preOpt.map { case (_, (_, tPre, jPre, sPre)) =>
-      s""""prepart_sec":${f(tPre)},"prepart_jobs":$jPre,""" +
-        s""""contrib_exchanges_prepart":${exPre.get},""" +
-        s""""rank_sum_prepart":${f(sPre)},"""
-    }.getOrElse("")
-    val bktJson = bktOpt.map { case (tLayout, (_, tBkt, jBkt, sBkt)) =>
-      s""""bucketed_sec":${f(tBkt)},"bucketed_jobs":$jBkt,""" +
-        s""""bucketed_layout_sec":${f(tLayout)},""" +
-        s""""contrib_exchanges_bucketed":${exBkt.get},""" +
-        s""""rank_sum_bucketed":${f(sBkt)},"""
-    }.getOrElse("")
-    println(s"""{"metric":"pagerank_scale","edges":$nEdges,"iters":$iters,""" +
-      s""""input":"$input",""" +
-      s""""plain_sec":${f(tPlain)},"plain_jobs":$jPlain,""" +
-      preJson + bktJson +
-      s""""contrib_exchanges_plain":$exPlain,""" +
-      s""""rank_sum_plain":${f(sPlain)},""" +
-      s""""max_rank_diff":$maxDiff}""")
+    val preJson = preOpt.toSeq.flatMap { case (_, (_, tPre, jPre, sPre)) =>
+      Seq("prepart_sec" -> tPre, "prepart_jobs" -> jPre,
+        "contrib_exchanges_prepart" -> exPre.get, "rank_sum_prepart" -> sPre)
+    }
+    val bktJson = bktOpt.toSeq.flatMap { case (tLayout, (_, tBkt, jBkt, sBkt)) =>
+      Seq("bucketed_sec" -> tBkt, "bucketed_jobs" -> jBkt,
+        "bucketed_layout_sec" -> tLayout,
+        "contrib_exchanges_bucketed" -> exBkt.get, "rank_sum_bucketed" -> sBkt)
+    }
+    Harness.emit(Seq[(String, Any)]("metric" -> "pagerank_scale",
+      "edges" -> nEdges, "iters" -> iters, "input" -> input,
+      "plain_sec" -> tPlain, "plain_jobs" -> jPlain) ++ preJson ++ bktJson ++
+      Seq("contrib_exchanges_plain" -> exPlain, "rank_sum_plain" -> sPlain,
+        "max_rank_diff" -> maxDiff): _*)
     spark.stop()
     if (maxDiff > 1e-9) {
       System.err.println(s"[pagerank_scale] modes disagree: $maxDiff")

@@ -108,17 +108,8 @@ object PlanFingerprint {
     finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  private def js(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def renderJson(fps: Map[String, Fp], sfDir: String): String = {
+    import Harness.{quote => js}
     val entries = fps.toSeq.sortBy(_._1).map { case (name, fp) =>
       s"""  ${js(name)}: {"hash":${js(fp.hash)},"nodes":${fp.nodes},""" +
         s""""exchanges":${fp.exchanges},"broadcasts":${fp.broadcasts},""" +
@@ -134,8 +125,7 @@ object PlanFingerprint {
   def main(args: Array[String]): Unit = {
     val round = if (args.nonEmpty) args(0) else "12"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = graft.LocalSession.create(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.LocalSession.create()
     val fps = deriveAll(spark, sfDir)
     val out = if (args.length > 1) args(1) else s"PLAN_r$round.json"
     Files.writeString(Paths.get(out), renderJson(fps, sfDir))

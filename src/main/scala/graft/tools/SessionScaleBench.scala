@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.{LocalSession, Scratch, TripleStore}
+import graft.obs.Work
 import graft.operators.Relational
 import graft.streaming.SessionReplay
 
@@ -23,13 +23,13 @@ import graft.streaming.SessionReplay
   *     file source, state store, and parquet sink in the loop.
   *   - BOUNDED STATE: the state store must hold only each user's
   *     not-yet-closable tail — the per-batch `numRowsTotal` peak from the
-  *     progress listener should sit far below the event count, because
+  *     replay's progress events should sit far below the event count, because
   *     closed sessions leave state at emission (the scaladoc claim,
   *     measured). A leak (state ~ events) is the failure mode this
   *     rehearsal exists to catch.
   *
   * Prints one JSON line. Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.SessionScaleBench [reps]"
+  *   sbt "runMain graft.tools.SessionScaleBench [reps]"
   */
 object SessionScaleBench {
 
@@ -38,7 +38,7 @@ object SessionScaleBench {
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 100
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
     import spark.implicits._
 
     val gap = Relational.SessionGapMs
@@ -69,61 +69,41 @@ object SessionScaleBench {
     // file per time slice, so no intra-slice file ordering can strand
     // early events behind the watermark
     val placer = new SessionReplay.Placer(spark, src)
-    val tEx0 = System.nanoTime()
-    (0 until NumSlices).foreach { i =>
-      val (lo, hi) =
-        (loTs + span * i / NumSlices, loTs + span * (i + 1) / NumSlices)
-      val tmp = s"$base/slice$i"
-      big.filter(col("ts_ms") >= lo && col("ts_ms") < hi)
-        .coalesce(1).write.json(tmp)
-      val part = placer.fs.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(_.getName.matches("part-.*\\.json"))
-      require(part.length == 1, s"expected 1 part file in $tmp")
-      placer.place(part.head, f"slice$i%02d.json")
-    }
-    SessionReplay.placeSentinels(placer, hiTs, gap)
-    val tExport = (System.nanoTime() - tEx0) / 1e9
-
-    // per-batch state-store size from the progress stream
-    val maxState = new java.util.concurrent.atomic.AtomicLong(0)
-    val maxStateMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        nBatches.incrementAndGet()
-        e.progress.stateOperators.foreach { s =>
-          maxState.getAndUpdate(m => math.max(m, s.numRowsTotal))
-          maxStateMem.getAndUpdate(m => math.max(m, s.memoryUsedBytes))
-        }
-        ()
+    val (_, tExport) = Harness.timed {
+      (0 until NumSlices).foreach { i =>
+        val (lo, hi) =
+          (loTs + span * i / NumSlices, loTs + span * (i + 1) / NumSlices)
+        val tmp = s"$base/slice$i"
+        big.filter(col("ts_ms") >= lo && col("ts_ms") < hi)
+          .coalesce(1).write.json(tmp)
+        val part = placer.fs.listStatus(new Path(tmp)).map(_.getPath)
+          .filter(_.getName.matches("part-.*\\.json"))
+        require(part.length == 1, s"expected 1 part file in $tmp")
+        placer.place(part.head, f"slice$i%02d.json")
       }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
+      SessionReplay.placeSentinels(placer, hiTs, gap)
+    }
 
-    val t0 = System.nanoTime()
-    SessionReplay.run(spark, src, gap, watermarkDelay = "10 minutes",
-      storePath, ckpt)
-    val tStream = (System.nanoTime() - t0) / 1e9
+    // the replay's progress events carry each batch's state-store size;
+    // Work.of drains the bus, so the last batch's event is counted too
+    val ((_, tStream), work) = Work.of(spark)(Harness.timed(
+      SessionReplay.run(spark, src, gap, watermarkDelay = "10 minutes",
+        storePath, ckpt)))
+    val states = work.progress.flatMap(_.stateOperators)
+    val maxState = states.map(_.numRowsTotal).maxOption.getOrElse(0L)
+    val maxStateMem = states.map(_.memoryUsedBytes).maxOption.getOrElse(0L)
 
     val closed = spark.read.parquet(storePath)
       .filter(!(col("user_id") <=> lit(SessionReplay.SentinelUser)))
     val nSessions = closed.count()
     val nUsers = closed.select("user_id").distinct().count()
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    println(s"""{"metric":"session_scale","events":$nEvents,"reps":$reps,""" +
-      s""""slices":$NumSlices,"export_sec":${f(tExport)},""" +
-      s""""stream_sec":${f(tStream)},""" +
-      s""""events_per_sec":${f(nEvents / tStream)},""" +
-      s""""sessions":$nSessions,"users":$nUsers,""" +
-      s""""max_state_rows":${maxState.get},""" +
-      s""""max_state_bytes":${maxStateMem.get},"batches":${nBatches.get},""" +
-      s""""state_keys_to_users":${f(maxState.get.toDouble /
-        math.max(1L, nUsers))}}""")
+    Harness.emit("metric" -> "session_scale", "events" -> nEvents,
+      "reps" -> reps, "slices" -> NumSlices, "export_sec" -> tExport,
+      "stream_sec" -> tStream, "events_per_sec" -> nEvents / tStream,
+      "sessions" -> nSessions, "users" -> nUsers,
+      "max_state_rows" -> maxState, "max_state_bytes" -> maxStateMem,
+      "batches" -> work.progress.size,
+      "state_keys_to_users" -> maxState.toDouble / math.max(1L, nUsers))
     spark.stop()
   }
 }

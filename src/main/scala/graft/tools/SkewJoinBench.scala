@@ -28,15 +28,14 @@ import graft.operators.Skew
   * aborts otherwise. Per-shape MEDIAN of 3 timed runs after a warmup
   * (Bench convention; this host shows multi-second stalls, BENCH_NOTES).
   *
-  * Usage: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.SkewJoinBench
+  * Usage: `sbt "runMain graft.tools.SkewJoinBench
   * [sfDir] [replicate]"` — records land in BENCH_NOTES.
   */
 object SkewJoinBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val replicate = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalSession.create(cpus)
+    val spark = graft.LocalSession.create()
 
     // skewed corpus: k disjoint copies (subjects suffixed per copy), then
     // 90 % of rows re-tagged onto one hot predicate — materialized once so
@@ -53,7 +52,7 @@ object SkewJoinBench {
     val skewed =
       if (replicate <= 8) built.localCheckpoint(true)
       else {
-        val p = sys.props("java.io.tmpdir") + "/graft_skewbench_corpus"
+        val p = graft.Scratch.path(spark, "graft_skewbench_corpus")
         built.write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
       }
@@ -80,34 +79,25 @@ object SkewJoinBench {
     // shuffle bytes drop under any sane AQE skew threshold — the skew this
     // tool exists to measure would be optimized away into a different
     // (narrower) query than the q72 shape actually ships.
-    def run(mode: String): Double = {
+    def run(mode: String): Long = {
       spark.conf.set("spark.sql.adaptive.enabled",
         (mode == "aqe").toString)
-      val t0 = System.nanoTime()
-      joined(mode).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      Harness.sink(joined(mode))
     }
-    def med3(mode: String): Double = {
-      run(mode) // warmup (JIT/codegen; input is already checkpointed)
-      (1 to 3).map(_ => run(mode)).sorted.apply(1)
-    }
-
-    // semantics parity once per mode (cheap count), then timed medians
-    val counts = Seq("plain", "salted", "aqe")
-      .map(m => m -> joined(m).count()).toMap
+    // per mode: a warmup run (JIT/codegen; input is already checkpointed)
+    // whose row count is the semantics-parity check, then the timed median
+    val modes = Seq("plain", "salted", "aqe")
+      .map(m => m -> (run(m), Harness.median3(run(m))._3)).toMap
+    val counts = modes.map { case (m, (n, _)) => m -> n }
     require(counts.values.toSet.size == 1,
       s"mode disagreement on joined row count: " +
         counts.map { case (m, n) => s"$m=$n" }.mkString(", "))
-    val modes = Seq("plain", "salted", "aqe").map(m => m -> med3(m)).toMap
 
-    def sec(v: Double) = // Locale.ROOT: comma-decimal locales break JSON
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    println(s"""{"metric":"skew_join_bench","unit":"sec","rows":$nRows,""" +
-      s""""joined":${counts("plain")},""" +
-      s""""plain_sec":${sec(modes("plain"))},""" +
-      s""""salted_sec":${sec(modes("salted"))},""" +
-      s""""aqe_sec":${sec(modes("aqe"))},""" +
-      s""""sf":"$sfDir","replicate":$replicate,"hot_share":0.9}""")
+    Harness.emit("metric" -> "skew_join_bench", "unit" -> "sec",
+      "rows" -> nRows, "joined" -> counts("plain"),
+      "plain_sec" -> modes("plain")._2, "salted_sec" -> modes("salted")._2,
+      "aqe_sec" -> modes("aqe")._2, "sf" -> sfDir, "replicate" -> replicate,
+      "hot_share" -> 0.9)
     spark.stop()
   }
 }

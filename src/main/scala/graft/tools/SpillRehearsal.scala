@@ -15,7 +15,7 @@ import graft.obs.Work
   * heap is the success case — the plan held; only an OOM/abort is a fail.
   *
   * Usage:
-  *   SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=32 \
+  *   SPARK_DRIVER_MEM=2g \
   *     sbt "runMain graft.tools.SpillRehearsal /root/testdata/sf0.1 \
   *          q19_minhash_neardup q33_connected_components ..."
   * Prints one JSON line per query plus a trailing summary line.
@@ -28,33 +28,28 @@ object SpillRehearsal {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q3_lww_merge", "q19_minhash_neardup",
         "q33_connected_components", "q60_neardup_clusters")
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
 
-    val heap = Runtime.getRuntime.maxMemory()
-    println(s"""{"spill_rehearsal":"start","sf":"$sfDir","heap_bytes":$heap}""")
+    Harness.emit("spill_rehearsal" -> "start", "sf" -> sfDir,
+      "heap_bytes" -> Runtime.getRuntime.maxMemory())
     var failures = 0
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown gate entry '$name'"))
-      val ((err, secs), work) = Work.of(spark) {
-        val t0 = System.nanoTime()
-        val err =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            None
-          } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        (err, (System.nanoTime() - t0) / 1e9)
-      }
+      val ((err, secs), work) = Work.of(spark)(Harness.timed(
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          None
+        }
+        catch { case e: Throwable => Some(e.getClass.getSimpleName) }))
       if (err.nonEmpty) failures += 1
-      val secsStr =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))
-      println(s"""{"query":"$name","secs":$secsStr,""" +
-        s""""spill_mem_bytes":${work.memorySpillBytes},""" +
-        s""""spill_disk_bytes":${work.diskSpillBytes},""" +
-        s""""peak_task_exec_bytes":${work.peakExecutionMemory},""" +
-        s""""status":"${err.getOrElse("completed")}"}""")
+      Harness.emit("query" -> name, "secs" -> secs,
+        "spill_mem_bytes" -> work.memorySpillBytes,
+        "spill_disk_bytes" -> work.diskSpillBytes,
+        "peak_task_exec_bytes" -> work.peakExecutionMemory,
+        "status" -> err.getOrElse("completed"))
     }
-    println(s"""{"spill_rehearsal":"done","n_fail":$failures}""")
+    Harness.emit("spill_rehearsal" -> "done", "n_fail" -> failures)
     spark.stop()
     if (failures > 0) sys.exit(1)
   }

@@ -21,31 +21,19 @@ import graft.operators.{Relational, Temporal}
   *     shuffle-record count must be ≤ |probe| + |build| + ε.
   *
   * Prints one JSON line. Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.TemporalScaleBench [reps]"
+  *   sbt "runMain graft.tools.TemporalScaleBench [reps]"
   */
 object TemporalScaleBench {
 
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 100
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = LocalSession.create()
 
-    // (result, seconds, shuffle records written)
-    def timed[A](f: => A): (A, Double, Long) = {
-      val ((a, secs), work) = Work.of(spark) {
-        val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-      }
-      (a, secs, work.shuffleRecords)
-    }
-    // noop sink + Observation, NOT count(): under a count the optimizer
-    // prunes unreferenced subtrees — the as-of join's whole Window node
-    // vanishes (RemoveRedundantWindow) and the "benchmark" measures a
-    // query the gate never ships (the Bench/ScaleBench artifact, again)
-    def runAndCount(df: org.apache.spark.sql.DataFrame): Long = {
-      val obs = org.apache.spark.sql.Observation()
-      df.observe(obs, count(lit(1)).as("rows"))
-        .write.format("noop").mode("overwrite").save()
-      obs.get("rows").asInstanceOf[Long]
+    // (rows, seconds, shuffle records written) of one noop-sink run
+    def run(df: org.apache.spark.sql.DataFrame): (Long, Double, Long) = {
+      val ((rows, secs), work) = Work.of(spark)(Harness.timed(Harness.sink(df)))
+      (rows, secs, work.shuffleRecords)
     }
 
     val windowMs = 24L * 3600 * 1000
@@ -72,7 +60,7 @@ object TemporalScaleBench {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.StableRound.stableRound(sum(col("value")), 2)
           .as("sum_value"))
-    val (nRange, tRange, rangeShuffled) = timed(runAndCount(rangeDf))
+    val (nRange, tRange, rangeShuffled) = run(rangeDf)
 
     // as-of join: full q46 shape
     val probeDf = e.filter(col("event_type") =!= "purchase")
@@ -85,16 +73,14 @@ object TemporalScaleBench {
     val asofDf = Temporal.asofJoin(probeDf, buildDf, Seq("user_id"),
       "ts_ms", "ts_ms", "event_id", "purchase_id",
       Seq("purchase_id", "purchase_value"), Some(windowMs))
-    val (nAsof, tAsof, asofShuffled) = timed(runAndCount(asofDf))
+    val (nAsof, tAsof, asofShuffled) = run(asofDf)
 
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    println(s"""{"metric":"temporal_scale","events":$nEvents,""" +
-      s""""intervals":$nWins,"range_sec":${f(tRange)},""" +
-      s""""range_rows":$nRange,"range_shuffle_records":$rangeShuffled,""" +
-      s""""range_bound_2x_intervals_plus_events":${2 * nWins + nEvents},""" +
-      s""""asof_sec":${f(tAsof)},"asof_rows":$nAsof,""" +
-      s""""asof_shuffle_records":$asofShuffled}""")
+    Harness.emit("metric" -> "temporal_scale", "events" -> nEvents,
+      "intervals" -> nWins, "range_sec" -> tRange, "range_rows" -> nRange,
+      "range_shuffle_records" -> rangeShuffled,
+      "range_bound_2x_intervals_plus_events" -> (2 * nWins + nEvents),
+      "asof_sec" -> tAsof, "asof_rows" -> nAsof,
+      "asof_shuffle_records" -> asofShuffled)
     spark.stop()
   }
 }

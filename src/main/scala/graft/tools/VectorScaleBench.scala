@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.LocalSession
+import graft.{LocalSession, Scratch}
+import graft.tools.Harness.{median3, timed}
 import graft.operators.Vectors
 
 /** ANN at 10M-vector cardinality (r16; the r13 run was 1M — the one
@@ -36,7 +37,7 @@ import graft.operators.Vectors
   * Exits non-zero on: IVF recall < 0.6, int8 recall < 0.6, or an
   * append row-count identity violation.
   *
-  * Usage: SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_DRIVER_MEM=48g \
   *   sbt "runMain graft.tools.VectorScaleBench [rows] [k] [nprobe]
   *        [trainMod] [batchRows] [store: float|int8]"
   *
@@ -84,13 +85,7 @@ object VectorScaleBench {
     val nprobe = if (args.length > 2) args(2).toInt else 4
     val trainMod = if (args.length > 3) args(3).toLong else 10L
     val batchRows = if (args.length > 4) args(4).toLong else 100000L
-    val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = LocalSession.create()
 
     // int8-at-rest mode (r17, the 100M rung): the corpus is PERSISTED as
     // the q58 codec's storage row (quantizedStoreRows — ~6.4 GB of int8
@@ -106,10 +101,9 @@ object VectorScaleBench {
     // the deterministic generator re-evaluated on the fly (compute-only,
     // never stored) so recall is still scored against FLOAT truth.
     val int8AtRest = args.length > 5 && args(5) == "int8"
-    val tmp = sys.props("java.io.tmpdir")
-    val corpusPath = s"$tmp/graft_vecscale_corpus"
-    val floatPath = s"$tmp/graft_vecscale_float"
-    val layout = s"$tmp/graft_vecscale_index"
+    val corpusPath = Scratch.path(spark, "graft_vecscale_corpus")
+    lazy val floatPath = Scratch.path(spark, "graft_vecscale_float")
+    val layout = Scratch.path(spark, "graft_vecscale_index")
     if (int8AtRest) {
       // the float corpus exists only TRANSIENTLY: written once, scanned
       // once by the exact baseline below, deleted before the build
@@ -220,10 +214,7 @@ object VectorScaleBench {
     def ivf() =
       if (int8AtRest) Vectors.ivfProbeQuantized(lists, centroids, nprobe, TopK)
       else Vectors.ivfProbe(lists, centroids, nprobe, TopK)
-    val (approx, tIvf0) = timed(ivf().collect())
-    val (_, tIvf1) = timed(ivf().collect())
-    val (_, tIvf2) = timed(ivf().collect())
-    val tIvf = Seq(tIvf0, tIvf1, tIvf2).sorted.apply(1)
+    val (approx, tIvf0, tIvf) = median3(ivf().collect())
     val ivfRecall = recallOf(exactSets, sets(approx))
 
     // int8 serving scan: q85's production kernel — over the STORED
@@ -233,10 +224,7 @@ object VectorScaleBench {
     def int8() =
       if (int8AtRest) Vectors.quantizedServingTopkFromStore(vecs, TopK)
       else Vectors.quantizedServingTopk(vecs, TopK)
-    val (int8Rows, tInt80) = timed(int8().collect())
-    val (_, tInt81) = timed(int8().collect())
-    val (_, tInt82) = timed(int8().collect())
-    val tInt8 = Seq(tInt80, tInt81, tInt82).sorted.apply(1)
+    val (int8Rows, tInt80, tInt8) = median3(int8().collect())
     val int8Recall = recallOf(exactSets, sets(int8Rows))
 
     // incremental ingest: one crawl batch through ivfAppendBatch (frozen
@@ -268,17 +256,17 @@ object VectorScaleBench {
         Vectors.ivfProbeQuantized(grownLists, centroids, nprobe, TopK)
       else Vectors.ivfProbe(grownLists, centroids, nprobe, TopK)).collect())
 
-    println(s"""{"metric":"vector_scale","vectors":$nVecs,"dim":$Dim,""" +
-      s""""store":"${if (int8AtRest) "int8" else "float"}",""" +
-      s""""k":$k,"nprobe":$nprobe,"train_mod":$trainMod,""" +
-      s""""indexed":$nAssigned,"build_sec":${f(tBuild)},""" +
-      s""""exact_topk_sec":${f(tExact)},"ivf_topk_sec":${f(tIvf)},""" +
-      s""""ivf_topk_cold_sec":${f(tIvf0)},"recall_at_10":${f(ivfRecall)},""" +
-      s""""int8_topk_sec":${f(tInt8)},"int8_topk_cold_sec":${f(tInt80)},""" +
-      s""""int8_recall_at_10":${f(int8Recall)},""" +
-      s""""append_rows":$batchRows,"append_sec":${f(tAppend)},""" +
-      s""""append_identity_ok":$appendOk,"replay_suppressed_ok":$replayOk,""" +
-      s""""ivf_grown_cold_sec":${f(tIvfGrown)},"queries":${exactSets.size}}""")
+    Harness.emit("metric" -> "vector_scale", "vectors" -> nVecs, "dim" -> Dim,
+      "store" -> (if (int8AtRest) "int8" else "float"),
+      "k" -> k, "nprobe" -> nprobe, "train_mod" -> trainMod,
+      "indexed" -> nAssigned, "build_sec" -> tBuild,
+      "exact_topk_sec" -> tExact, "ivf_topk_sec" -> tIvf,
+      "ivf_topk_cold_sec" -> tIvf0, "recall_at_10" -> ivfRecall,
+      "int8_topk_sec" -> tInt8, "int8_topk_cold_sec" -> tInt80,
+      "int8_recall_at_10" -> int8Recall,
+      "append_rows" -> batchRows, "append_sec" -> tAppend,
+      "append_identity_ok" -> appendOk, "replay_suppressed_ok" -> replayOk,
+      "ivf_grown_cold_sec" -> tIvfGrown, "queries" -> exactSets.size)
     spark.stop()
     val bad =
       (if (ivfRecall < 0.6) Seq(s"ivf recall $ivfRecall") else Nil) ++
