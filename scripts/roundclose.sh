@@ -43,6 +43,16 @@ owners=$(grep -rlE 'addSparkListener|listenerManager\.register|streams\.addListe
   src/main/scala | grep -v '^src/main/scala/graft/obs/' | xargs)
 step "one listener owner (graft/obs)${owners:+ (also in: $owners)}" \
   "$([ -z "$owners" ]; echo $?)"
+# one pin owner: graft.Scratch is the only code in src/main that
+# checkpoints, persists or releases executor blocks (pin / pinned /
+# release; its Spark-private unpersist goes through the org/apache/spark
+# bridge); a hand-placed localCheckpoint, persist or unpersist elsewhere
+# brings back blocks that nothing releases
+pinners=$(grep -rlE 'localCheckpoint\(|\.persist\(|\.unpersist\(|LogicalRDD' \
+  src/main/scala \
+  | grep -vE '^src/main/scala/(graft/Scratch\.scala|org/apache/spark/)' | xargs)
+step "one pin owner (Scratch)${pinners:+ (also in: $pinners)}" \
+  "$([ -z "$pinners" ]; echo $?)"
 # one thread-count reader: LocalSession.create() reads SPARK_GRAFT_CPUS, so
 # every main shares one default
 readers=$(grep -rl 'SPARK_GRAFT_CPUS' src/main/scala \

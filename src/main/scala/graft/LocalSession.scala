@@ -50,45 +50,6 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the deliberate superseded-block release in the graph loops
-    // (Graph.pageRankLoop / ccStar — it fixed a real 10M-edge OOM) makes
-    // RDD.unpersist WARN "RDD was locally checkpointed ... cannot be
-    // recomputed" once per released round; at bench scale that repetition
-    // fills the 2,000-char harness tail that should carry diagnostics
-    // (VERDICT r14). The release is correct by construction (the next
-    // round is eagerly materialized before the old blocks drop), so the
-    // per-unpersist reminder is noise here — DENY exactly that message,
-    // and ONLY at WARN. (The first version raised the whole
-    // org.apache.spark.rdd package to ERROR, which also hid every OTHER
-    // rdd-package WARN — block-recompute, caching diagnostics — from the
-    // very tail the change protects; the Logging trait logs under the
-    // CONCRETE subclass, so no logger-name scoping is both precise and
-    // complete. r15 review finding. The second version was a bare
-    // RegexFilter, which denies the message at ANY level — including a
-    // future ERROR such as the actual block-recompute failure that fires
-    // when a released checkpoint's blocks turn out to be needed, precisely
-    // the diagnostic the tail must keep; r15 ADVICE. Hence the level check
-    // below: a LoggerConfig-attached filter is consulted via the
-    // filter(LogEvent) overload only — the pre-event overloads stay at
-    // AbstractFilter's NEUTRAL default, which never denies.)
-    locally {
-      import org.apache.logging.log4j.Level
-      import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
-      import org.apache.logging.log4j.core.filter.AbstractFilter
-      val ctx = org.apache.logging.log4j.LogManager
-        .getContext(false).asInstanceOf[LoggerContext]
-      ctx.getConfiguration.getRootLogger.addFilter(
-        new AbstractFilter(Filter.Result.DENY, Filter.Result.NEUTRAL) {
-          override def filter(event: LogEvent): Filter.Result =
-            if (event.getLevel == Level.WARN && event.getMessage != null &&
-                event.getMessage.getFormattedMessage != null &&
-                event.getMessage.getFormattedMessage
-                  .contains("was locally checkpointed"))
-              getOnMatch
-            else getOnMismatch
-        })
-      ctx.updateLoggers()
-    }
     spark
   }
 }

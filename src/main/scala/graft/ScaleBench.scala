@@ -200,7 +200,7 @@ object ScaleBench {
     // aggregation) while the co-located side merges pre-written tables,
     // inflating the comparison
     val storeNow = spark.read.parquet(path)
-    val replicaB = Lww.upsert(storeNow, changelog).localCheckpoint(true)
+    val replicaB = Scratch.pin(Lww.upsert(storeNow, changelog))
     val (_, tAggMerge) = timed {
       sink(Lww.merge(storeNow, replicaB))
     }

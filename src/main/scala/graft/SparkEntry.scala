@@ -209,15 +209,6 @@ object SparkEntry {
     // approximate index's QUERY form, still oracle-exact because every
     // argmax is deterministically tie-broken (see Vectors.q66IvfTopk).
     "q66_ivf_topk" -> (Vectors.q66IvfTopk(_, _)),
-    // NOTE r17 trim: q67_stream_merge (the monolithic readStream merge)
-    // was retired from the gate once q83_stream_restart carried its
-    // SECOND judged-green round (r15+r16 — the same retire-the-subsumed-
-    // twin condition q21 and q75 met): q83's phase-1 IS q67's relation
-    // (same JSONL wire export, same mergeIntoStore sink, q3's oracle
-    // verbatim) plus the checkpoint-restart proof on top, and q79 runs
-    // the same replay through the partitioned sink. q67StreamMerge stays
-    // the spec baseline — StreamingLwwSpec pins its replay ≡ the q3 batch
-    // merge relation in-process.
     // LSH-bucketed ANN top-k — the query form of q22's bucketing, the LSH
     // sibling of q66's IVF probe (deterministic planes, exact oracle).
     "q68_lsh_topk" -> (Vectors.q68LshTopk(_, _)),
@@ -276,8 +267,8 @@ object SparkEntry {
     // replay suppressed in-run by the marker guard), the grown layout
     // probed — the ANN twin of q76's two-epoch dedup shape.
     "q78_ivf_ingest" -> (Vectors.q78IvfIngest(_, _)),
-    // The partitioned streaming sink through a REAL readStream: q67's
-    // replay into mergeIntoStorePartitioned (per-shard pruned I/O +
+    // The partitioned streaming sink through a REAL readStream: q83's
+    // changelog replay into mergeIntoStorePartitioned (per-shard pruned I/O +
     // atomic swap); same merge relation/oracle as q3, and the gate run
     // asserts the changelog-free shards stayed byte-untouched.
     "q79_stream_merge_part" ->
@@ -300,10 +291,11 @@ object SparkEntry {
     // FAILFAST parse, length-column n_bytes), decoded by the same batch
     // path — q77's oracle verbatim, different ingest path (q31-vs-q3).
     "q82_media_files" -> (Multimodal.q82MediaFiles(_, _)),
-    // Streaming checkpoint-RESTART recovery: q67's replay split across two
-    // query incarnations over ONE checkpoint (the second resumes from it,
-    // processing exactly the post-restart extension — asserted in-run from
-    // numInputRows); same merge relation and oracle as q3/q67.
+    // Streaming checkpoint-RESTART recovery: the changelog's JSONL replay
+    // split across two query incarnations over ONE checkpoint (the second
+    // resumes from it, processing exactly the post-restart extension —
+    // asserted in-run from numInputRows); same merge relation and oracle
+    // as q3.
     "q83_stream_restart" ->
       (graft.streaming.StreamingGate.q83StreamRestart(_, _)),
     // O22's live analog: the footer-derived PHYSICAL shard map over the

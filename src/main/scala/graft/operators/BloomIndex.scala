@@ -371,17 +371,6 @@ object BloomIndex {
   /** The probe's synthesized hash column (dropped before the result). */
   private val HashCol = "__graft_bloom_h"
 
-  /** Release a `localCheckpoint(true)` frame's blocks deterministically —
-    * GC + ContextCleaner loses the race under a steady-state ingest, and
-    * each leaked checkpoint strands its full frame in executor storage
-    * (the module's own convention, shared by [[admit]] and [[append]]). */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit = {
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-    ()
-  }
-
   /** The PROBE plan — the lazy, shape-pinned half of [[admit]]: the batch
     * is shard-routed (`repartition` on the shard column, so each task
     * touches ~one shard), and a `mapPartitions` evaluates
@@ -447,18 +436,17 @@ object BloomIndex {
     * exact-checked against the corpus via the broadcast semi/anti pair.
     * EAGER (r17 VERDICT #5): the probe feeds three consuming branches
     * (clean, pos, and pos's broadcast hit set), so the probed frame is
-    * `localCheckpoint(true)`-ed — the routing exchange AND the
+    * pinned eagerly ([[graft.Scratch.pin]]) — the routing exchange AND the
     * mapPartitions probe execute exactly once per batch, not once per
-    * branch — and its batch-sized blocks are released deterministically
-    * before returning (the module's own [[append]] convention). The
-    * returned frame is itself a checkpoint of the RESULT (bounded by the
-    * admitted set, the small end of the batch); a long-running ingest
-    * loop that wants those blocks back immediately can pass it to
-    * [[releaseCheckpoint]] once consumed. */
+    * branch — and its batch-sized blocks are released before returning:
+    * GC + ContextCleaner loses the race under a steady-state ingest. The
+    * returned frame is itself pinned (bounded by the admitted set, the
+    * small end of the batch); a long-running ingest loop that wants those
+    * blocks back immediately can pass it to [[graft.Scratch.release]] once
+    * consumed. */
   def admit(spark: SparkSession, path: String, batch: DataFrame,
       corpus: DataFrame): DataFrame = {
-    val probed = probePlan(spark, path, batch).localCheckpoint(true)
-    try {
+    Scratch.pinned(Scratch.pin(probePlan(spark, path, batch))) { probed =>
       val clean = probed.filter(!col("maybe_dup")).drop("maybe_dup")
       val pos = probed.filter(col("maybe_dup")).drop("maybe_dup")
       val hits = corpus
@@ -471,8 +459,8 @@ object BloomIndex {
         .groupBy("content_hash")
         .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_in_batch"))
         .select("doc_id", "content_hash", "n_in_batch")
-        .localCheckpoint(true)
-    } finally releaseCheckpoint(probed)
+        .transform(Scratch.pin(_))
+    }
   }
 
   /** OR two serialized blooms of identical geometry — the index append's
@@ -528,22 +516,20 @@ object BloomIndex {
     // clean no-op (no new version). Checkpointed before the emptiness
     // probe so the batch's shard aggregation runs ONCE, not once for the
     // probe and again for the merge join.
-    val adds = shardedBlooms(admittedHashes, expected, numBits, numShards)
-      .localCheckpoint(true)
-    // the checkpoint's blocks are released DETERMINISTICALLY on every
-    // path out of this call (round-conventions trap #3: relying on
-    // GC + ContextCleaner loses the race under a steady-state ingest —
-    // each append would otherwise strand its full add bitset in executor
-    // storage, exactly the accumulation the sharding exists to avoid)
-    try appendFrom(spark, adds, cur, curV, path,
-      expected, numBits, nAppends, numShards)
-    finally releaseCheckpoint(adds)
+    // released on every path out of this call: each append would
+    // otherwise strand its full add bitset in executor storage, exactly
+    // the accumulation the sharding exists to avoid
+    Scratch.pinned(Scratch.pin(
+        shardedBlooms(admittedHashes, expected, numBits, numShards))) {
+      appendFrom(spark, _, cur, curV, path,
+        expected, numBits, nAppends, numShards)
+    }
   }
 
   /** [[append]]'s post-checkpoint body — the early return, the
     * executor-side merge, the staged write and the CAS commit — split
-    * out so the caller's `finally` can release the add-bloom checkpoint
-    * on every exit path. */
+    * out so the caller's [[graft.Scratch.pinned]] releases the add-bloom
+    * checkpoint on every exit path. */
   private def appendFrom(spark: SparkSession, adds: DataFrame,
       cur: DataFrame, curV: Long, path: String, expected: Long,
       numBits: Long, nAppends: Long, numShards: Long): Unit = {
@@ -663,8 +649,8 @@ object BloomIndex {
     * set is corpus₀ ∪ hashes(epoch 1) — every epoch-1 hash is either
     * already standing or was admitted, so the oracle can state it
     * directly. Memoized per sf dir (the ingest MUTATES the index;
-    * concurrent first calls block on ONE run — q67's pattern) with the
-    * result persisted and re-read on later calls. */
+    * concurrent first calls block on ONE run — the streaming replays'
+    * pattern) with the result persisted and re-read on later calls. */
   def q76BloomIndexDedup(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.once(("bloomIndex", dir)) {
       val base = Scratch.path(spark, "graft_bloom_index")

@@ -262,21 +262,21 @@ object Docs {
     * NeardupScaleBench validated the staged shape at 10M docs in r20/r21
     * and now drives THIS method end-to-end). Both shapes are scoped to
     * the call: the final (small) pair set is materialized eagerly by
-    * [[minhashVerify]] and the cache/stage dropped before returning, so
-    * repeated dedup sweeps in a long-lived session accumulate neither
-    * storage blocks nor tmp files. */
+    * [[minhashVerify]], then the candidate set and the cache/stage are
+    * released before returning, so repeated dedup sweeps in a long-lived
+    * session accumulate neither storage blocks nor tmp files. */
   private[graft] def neardupPairs(spark: SparkSession, dir: String,
       numHashes: Int = NumHashes, bandRows: Int = GateBandRows): DataFrame = {
     val src = s"$dir/documents.parquet"
     val threshold = spark.conf.getOption("spark.graft.shingleStageBytes")
       .map(_.toLong).getOrElse(ShingleStageBytesDefault)
     def pairs(arrs: DataFrame): DataFrame =
-      minhashVerify(minhashCandidates(arrs, numHashes, bandRows),
-        explodeShingles(arrs))
-    if (inputBytes(spark, src) <= threshold) {
-      val arrs = shingleArraysOf(table(spark, dir, "documents")).cache()
-      try pairs(arrs) finally { arrs.unpersist(); () }
-    } else Scratch.scoped(spark) { stage =>
+      Scratch.pinned(minhashCandidates(arrs, numHashes, bandRows))(
+        minhashVerify(_, explodeShingles(arrs)))
+    if (inputBytes(spark, src) <= threshold)
+      Scratch.pinned(shingleArraysOf(table(spark, dir, "documents")).cache())(
+        pairs)
+    else Scratch.scoped(spark) { stage =>
       shingleArraysOf(table(spark, dir, "documents"))
         .write.mode("overwrite").parquet(stage)
       pairs(spark.read.parquet(stage))
@@ -351,7 +351,7 @@ object Docs {
       // the intersection join and the doc-id prune in [[minhashVerify]] —
       // re-evaluating the signature/banding subtree per consumer
       // measurably dominates
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
   }
 
   /** q19's verify stage: exact shingle Jaccard over the candidate pairs
@@ -379,7 +379,7 @@ object Docs {
       .orderBy("doc_a", "doc_b")
       // eager: the near-dup pair set is tiny relative to the corpus;
       // materializing it here lets the caller drop the shingle cache
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
   }
 
   /** q19's pair derivation minus the presentation ORDER BY — reusable as a
@@ -1339,13 +1339,12 @@ object Docs {
     // ONCE, call-scoped (q19's pattern): this is exactly the "curated
     // corpus" checkpoint a real pipeline writes between curation and
     // packing rather than re-deriving curation per downstream job.
-    val kept = scored
+    Scratch.pinned(scored
       .withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy("content_hash")))
       .filter(col("keep") && col("n_copies") > 0 && col("doc_id") === col("rep"))
       .select("doc_id", "w", "n_tokens", "n_copies")
-      .cache()
-    try {
+      .cache()) { kept =>
       val bench = table(spark, dir, "documents")
         .filter(col("text").isNotNull && col("doc_id") % 7 === 0)
         .select(split(col("text"), " ").as("w"))
@@ -1362,9 +1361,9 @@ object Docs {
         .agg(count(lit(1)).as("n_docs"), sum("mass").as("n_tokens"))
         .orderBy("shard", "chunk_id")
         // eager: the chunk table is tiny; materializing it here lets the
-        // finally drop the curated-set cache before returning
-        .localCheckpoint(true)
-    } finally { kept.unpersist(); () }
+        // curated-set cache be released before returning
+        .transform(Scratch.pin(_))
+    }
   }
 
   val q53Sql: String =

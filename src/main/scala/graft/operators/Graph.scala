@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters.SeqHasAsJava
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Scratch
 import graft.TripleStore
@@ -81,23 +82,21 @@ object Graph {
     * plan-asserted, measured — see BENCH_NOTES). */
   def pageRank(edgeDf: DataFrame, iters: Int = 10,
       damping: Double = 0.85): DataFrame =
-    pageRankLoop(
-      ckptSer(edgeDf.select(col("src"), col("dst"))),
+    pageRankLoop(pinSer(edgeDf.select(col("src"), col("dst"))),
       iters, damping)
 
-  /** Eager localCheckpoint with SERIALIZED block storage for the graph
-    * loop's O(|V|)/O(|E|) frames. The deserialized default
-    * (MEMORY_AND_DISK) inflates each row to a boxed object graph (~3× the
-    * UnsafeRow bytes) and re-inflates every disk-evicted block back into
-    * the memory store on read (`maybeCacheDiskValuesInMemory`) — at 99M
-    * nodes the retained rank/node/out-degree frames OOM'd an 80 GiB heap
-    * exactly there (r15 100M-edge rehearsal stack:
-    * `DeserializedValuesHolder.getBuilder`). Serialized blocks stay
-    * UnsafeRow-compact and page from disk without re-inflation; at gate
-    * scale (≤165k nodes) the extra deser CPU is unmeasurable. */
-  private def ckptSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+  /** The graph loop's O(|V|)/O(|E|) frames are pinned with SERIALIZED block
+    * storage. The deserialized default (MEMORY_AND_DISK) inflates each row
+    * to a boxed object graph (~3× the UnsafeRow bytes) and re-inflates
+    * every disk-evicted block back into the memory store on read
+    * (`maybeCacheDiskValuesInMemory`) — at 99M nodes the retained
+    * rank/node/out-degree frames OOM'd an 80 GiB heap exactly there (r15
+    * 100M-edge rehearsal stack: `DeserializedValuesHolder.getBuilder`).
+    * Serialized blocks stay UnsafeRow-compact and page from disk without
+    * re-inflation; at gate scale (≤165k nodes) the extra deser CPU is
+    * unmeasurable. */
+  private def pinSer(df: DataFrame): DataFrame =
+    Scratch.pin(df, level = StorageLevel.MEMORY_AND_DISK_SER)
 
   /** [[pageRank]] over a BUCKETED catalog edge table ([[writeBucketedEdges]])
     * — the 100× plan win PageRankScaleBench identified but pre-partitioning
@@ -151,29 +150,24 @@ object Graph {
     * iteration plus twice at build time, never recomputed from lineage. */
   private def pageRankLoop(edges: DataFrame, iters: Int,
       damping: Double): DataFrame = {
-    // deterministic block release for a superseded round's localCheckpoint:
-    // waiting for GC + ContextCleaner loses the race at scale — back-to-back
-    // 10M-edge runs OOMed an 8 GiB heap on accumulated superseded rank
-    // blocks before this (PageRankScaleBench r13). Safe once the next round
-    // is EAGERLY materialized: nothing references the old blocks. (For a
-    // bucketed-table edge side, ckptRdd finds no LogicalRDD — a no-op.)
-    def ckptRdd(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    def release(df: DataFrame): Unit =
-      ckptRdd(df).foreach(_.unpersist(blocking = false))
-    val nodes = ckptSer(edges.select(col("src").as("node"))
+    // superseded rounds are released as they go: waiting for GC +
+    // ContextCleaner loses the race at scale — back-to-back 10M-edge runs
+    // OOMed an 8 GiB heap on accumulated superseded rank blocks before this
+    // (PageRankScaleBench r13). Safe once the next round is EAGERLY
+    // materialized: nothing references the old blocks. (A bucketed-table
+    // edge side has nothing to release.)
+    val nodes = pinSer(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct())
     // node count as a broadcast-able 1-ROW AGGREGATE, not a driver count():
     // materialized once (an eager checkpoint job, same cost the count paid)
     // and then ridden into the init and every iteration's plan exactly like
     // the dangling-mass scalar — the whole build is driver-action-free
     // (GraphSpec's listener asserts no count/head action fires)
-    val nCount = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-      .localCheckpoint(true)
-    val outDeg = ckptSer(edges.groupBy(col("src").as("node"))
+    val nCount = Scratch.pin(
+      nodes.agg(count(lit(1)).cast("double").as("n_nodes")))
+    val outDeg = pinSer(edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("out_deg")))
-    var ranks = ckptSer(nodes.crossJoin(broadcast(nCount))
+    var ranks = pinSer(nodes.crossJoin(broadcast(nCount))
       .select(col("node"), (lit(1.0) / col("n_nodes")).as("rank")))
     for (_ <- 1 to iters) {
       // mass parked on dangling nodes (not in outDeg), as a broadcast
@@ -186,18 +180,18 @@ object Graph {
         .select(col("dst").as("node"),
           (col("rank") / col("out_deg")).as("c"))
         .groupBy("node").agg(sum(col("c")).as("in_mass"))
-      val next = ckptSer(nodes.join(contribs, Seq("node"), "left_outer")
+      val next = pinSer(nodes.join(contribs, Seq("node"), "left_outer")
         .crossJoin(broadcast(dangling))
         .crossJoin(broadcast(nCount))
         .select(col("node"),
           ((lit(1.0) - lit(damping)) / col("n_nodes") +
             lit(damping) * (coalesce(col("in_mass"), lit(0.0)) +
               col("dangling_mass") / col("n_nodes"))).as("rank")))
-      release(ranks) // superseded round — next is already materialized
+      Scratch.release(ranks) // superseded — next is already materialized
       ranks = next
     }
     // the auxiliaries are dead once the final (checkpointed) ranks exist
-    Seq(edges, nodes, nCount, outDeg).foreach(release)
+    Seq(edges, nodes, nCount, outDeg).foreach(Scratch.release)
     ranks
   }
 
@@ -385,12 +379,12 @@ object Graph {
     * the wrong one on local[32]. NOTE the dir is `SparkContext`-GLOBAL
     * (Spark has no per-query checkpoint dir): setting it here is
     * last-writer-wins across the session, so concurrent reliable-mode
-    * callers should share one dir. Superseded rounds' checkpoint files are
-    * deleted as soon as the next round's files land (each round's lineage
-    * is truncated at its own files, so older generations are dead weight
-    * that would otherwise accumulate per round × per invocation); the
-    * FINAL round's and the input snapshot's files back the returned lazy
-    * DataFrame and stay — the caller owns the dir's lifecycle once done
+    * callers should share one dir. In both modes a superseded round's
+    * blocks or files are released as soon as the next round's land (each
+    * round's lineage is truncated at its own checkpoint, so older
+    * generations are dead weight that would otherwise accumulate per round
+    * × per invocation); the FINAL round and the input snapshot back the
+    * returned lazy DataFrame and stay — the caller owns them once done
     * consuming the result.
     *
     * `localFinishEdges`: star contraction shrinks the edge set
@@ -419,32 +413,7 @@ object Graph {
     // contract); local mode persists partitions as the action computes them.
     def mark(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    // Reliable-mode hygiene: the checkpoint FILES a marked round wrote
-    // (None until materialized, and always None in local mode). Once round
-    // N's files are down, round N-1's are unreachable by any lineage —
-    // delete them, or a long-lived session leaks one edge-set copy per
-    // round per invocation into the checkpoint store.
-    def reliableFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.flatMap(_.getCheckpointFile)
-    def deleteReliable(old: String): Unit =
-      try {
-        val p = new org.apache.hadoop.fs.Path(old)
-        p.getFileSystem(
-          edgeDf.sparkSession.sessionState.newHadoopConf())
-          .delete(p, true)
-        ()
-      } catch {
-        case scala.util.control.NonFatal(ex) => System.err.println(
-          s"[graft.Graph] ccStar: could not delete superseded " +
-            s"checkpoint $old: $ex")
-      }
-    def dropSuperseded(oldRound: DataFrame, newRound: DataFrame): Unit =
-      // best-effort, and ONLY once the new round's files verifiably exist
-      for (_ <- reliableFile(newRound); old <- reliableFile(oldRound))
-        deleteReliable(old)
+      else Scratch.pin(df, eager = false)
     // one materialization of the input: the edge list feeds canon here AND
     // both sides of the closing node-domain union — without this the source
     // scan (a parquet read for the store graph) runs three times
@@ -525,7 +494,10 @@ object Graph {
         .filter(col("hi") =!= col("lo")).distinct())
       val (s, n) = probe(small)
       stable = s; nEdges = n
-      if (checkpointDir.isDefined) dropSuperseded(e, small)
+      // once round N is written, round N-1 is unreachable by any lineage:
+      // release it, or a long-lived session leaks one edge-set copy per
+      // round per invocation into executor storage or the checkpoint dir
+      if (Scratch.materialized(small)) Scratch.release(e)
       e = small
       iter += 1
     }
@@ -533,12 +505,10 @@ object Graph {
       // Local finish: the contracted set fits the threshold — ONE collect
       // (cheap: the probe just materialized/pinned these partitions) and an
       // in-driver union-find replace the remaining O(log) rounds. The
-      // collected round's checkpoint files are dead the moment the local
-      // star set exists (the result plan no longer reads them).
+      // collected round is dead the moment the local star set exists in
+      // driver memory (the result plan no longer reads it).
       val finished = localStarSet(e)
-      // the local set exists by construction (driver memory) — no
-      // new-round file check gates this deletion
-      if (checkpointDir.isDefined) reliableFile(e).foreach(deleteReliable)
+      Scratch.release(e)
       e = finished
       stable = true
     }

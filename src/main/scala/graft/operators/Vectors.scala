@@ -345,14 +345,12 @@ object Vectors {
           s"$trainSampleMod == 0) holds only $nTrain rows — fewer than " +
           s"k=$k clusters; lower trainSampleMod or k")
     }
-    // localCheckpoint BEFORE the first assignStep collects the seeds
-    // (ADVICE r19): the seed frame's lineage is the full sphereNormalized
-    // scan + a global sort-limit — without the checkpoint, iteration 1
-    // would execute that scan once just to seed the argmax literals and
-    // once more inside its own aggregation
-    var centroids = train.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cluster"), col("v").as("c"))
-      .localCheckpoint(true)
+    // pinned BEFORE the first assignStep collects the seeds (ADVICE r19):
+    // the seed frame's lineage is the full sphereNormalized scan + a global
+    // sort-limit — unpinned, iteration 1 would execute that scan once just
+    // to seed the argmax literals and once more inside its own aggregation
+    var centroids = Scratch.pin(train.orderBy("vec_id").limit(k)
+      .select(col("vec_id").as("cluster"), col("v").as("c")))
     def assign(cents: DataFrame): DataFrame = assignStep(train, cents)
     for (_ <- 1 to iters) {
       val means = assign(centroids)
@@ -369,7 +367,9 @@ object Vectors {
         .join(means.select(col("cluster"), col("c").as("c_new")),
           Seq("cluster"), "left_outer")
         .select(col("cluster"), coalesce(col("c_new"), col("c_prev")).as("c"))
-      centroids = kept.localCheckpoint(true)
+      val next = Scratch.pin(kept)
+      Scratch.release(centroids) // superseded — next is already materialized
+      centroids = next
     }
     // the FINAL assignment covers the full corpus regardless of the
     // training sample — every vector gets a list
@@ -491,7 +491,7 @@ object Vectors {
   def ivfTopk(spark: SparkSession, dir: String, k: Int, nprobe: Int,
       topk: Int): DataFrame = {
     val (assigned, centroids) = ivfAssign(spark, dir, k, iters = 3)
-    ivfProbe(assigned.localCheckpoint(true), centroids, nprobe, topk)
+    ivfProbe(Scratch.pin(assigned), centroids, nprobe, topk)
   }
 
   /** Once-per-JVM materialization of the IVF index as a parquet LAYOUT
@@ -505,10 +505,12 @@ object Vectors {
     Scratch.once(("ivfIndex", dir, k, iters)) {
       val out = Scratch.path(spark, "graft_ivf")
       val (assigned, centroids) = ivfAssign(spark, dir, k, iters)
-      assigned.repartitionByRange(col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.mode("overwrite").parquet(s"$out/lists")
-      centroids.write.mode("overwrite").parquet(s"$out/centroids")
+      Scratch.pinned(centroids) { cs =>
+        assigned.repartitionByRange(col("cluster"))
+          .sortWithinPartitions("cluster", "vec_id")
+          .write.mode("overwrite").parquet(s"$out/lists")
+        cs.write.mode("overwrite").parquet(s"$out/centroids")
+      }
       out
     }
 
@@ -739,10 +741,12 @@ object Vectors {
       val (corpus0, epoch1) = ingestSplit(table(spark, dir, "embeddings"))
       val (assigned, centroids) =
         ivfAssignVectors(corpus0, IvfGateK, iters = 3)
-      assigned.repartitionByRange(col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.mode("overwrite").parquet(s"$idx/lists")
-      centroids.write.mode("overwrite").parquet(s"$idx/centroids")
+      Scratch.pinned(centroids) { cs =>
+        assigned.repartitionByRange(col("cluster"))
+          .sortWithinPartitions("cluster", "vec_id")
+          .write.mode("overwrite").parquet(s"$idx/lists")
+        cs.write.mode("overwrite").parquet(s"$idx/centroids")
+      }
       ivfAppendBatch(spark, idx, epoch1, batchId = Some(0L), streamId = "q78")
       // the replay: same stream, same batch id — MUST be suppressed (the
       // at-least-once redelivery the marker exists for), exercised in the
@@ -825,7 +829,7 @@ object Vectors {
     // cached: the refined banding feeds both sides of the candidate join —
     // without it the dominant cost (numBands × planesPerBand folds/vector)
     // doubles. Scoped to this call: the candidate set (bounded by the bucket
-    // guard) is materialized eagerly, then the cache dropped.
+    // guard) is pinned eagerly, then the cache released.
     // zero-norm vectors carry no direction: excluded ONCE, up front —
     // banding them would only inflate one bucket (all sign bits fire),
     // skew the over-full-bucket guard and generate candidate pairs the
@@ -833,13 +837,11 @@ object Vectors {
     val proj = vectors.select(col("vec_id"), col("embedding"),
       sqrt(dot("embedding", "embedding")).as("nrm"))
       .filter(col("nrm") > 0)
-    val banded = refineOverfullBuckets(
-      bandedProjection(proj.select("vec_id", "embedding"), numBands,
-        planesPerBand),
-      maxBucketSize, numBands * planesPerBand).cache()
-    val cand =
-      try candidatePairs(banded).localCheckpoint(true)
-      finally { banded.unpersist(); () }
+    val cand = Scratch.pinned(refineOverfullBuckets(
+        bandedProjection(proj.select("vec_id", "embedding"), numBands,
+          planesPerBand),
+        maxBucketSize, numBands * planesPerBand).cache())(
+      banded => Scratch.pin(candidatePairs(banded)))
     cand
       .join(proj.select(col("vec_id").as("id_a"), col("embedding").as("va"),
         col("nrm").as("na")), Seq("id_a"))
@@ -893,9 +895,9 @@ object Vectors {
   def lshTopk(spark: SparkSession, dir: String, k: Int,
       numPlanes: Int = NumPlanes): DataFrame = {
     // cache feeds both sides of the bucket self-join; call-scoped — the
-    // n×k result is materialized eagerly, then the cache dropped
-    val e = lshProjected(table(spark, dir, "embeddings"), numPlanes).cache()
-    try {
+    // n×k result is pinned eagerly, then the cache released
+    Scratch.pinned(
+        lshProjected(table(spark, dir, "embeddings"), numPlanes).cache()) { e =>
       // zero-norm vectors keep their bucket assignment (the q22 census and
       // this path share one bucket definition) but can neither query nor
       // rank — the division below excludes them on BOTH join sides
@@ -911,8 +913,8 @@ object Vectors {
             .as("cos_sim"))
         .withColumn("rank", row_number().over(w).cast(LongType))
         .filter(col("rank") <= k)
-        .localCheckpoint(true)
-    } finally { e.unpersist(); () }
+        .transform(Scratch.pin(_))
+    }
   }
 
   // --- Q68: the LSH top-k QUERY form, oracle-gated --------------------------
@@ -1017,10 +1019,9 @@ object Vectors {
     // the query's dominant cost — so single-computation is made STRUCTURAL
     // (k·q-row checkpoint) rather than left to exchange-reuse/AQE, the
     // same convention as ivfTopk/lshTopk's pinned inputs.
-    val exact = q21TopkCosine(spark, dir)
+    val exact = Scratch.pin(q21TopkCosine(spark, dir)
       .filter(col("rank") <= IvfGateTopK)
-      .select("query_id", "neighbor_id")
-      .localCheckpoint(true)
+      .select("query_id", "neighbor_id"))
     def hitsVs(approx: DataFrame, out: String): DataFrame = exact
       .join(approx, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as(out))
@@ -1355,19 +1356,21 @@ object Vectors {
       val qstore = spark.read.parquet(quantizedStorePath(spark, dir))
       val (_, centroids) =
         ivfAssignVectors(dequantizedView(qstore), k, iters)
-      val cs = collectCentroids(centroids)
-      qstore.filter(col("max_abs_micro") > 0)
-        .withColumn("d",
-          call_function("int8_decode", col("q"), col("max_abs_micro")))
-        .filter(call_function("vec_dot", col("d"), col("d")) > 0)
-        .withColumn("v", call_function("vec_normalize", col("d")))
-        .select(col("vec_id"),
-          nearestClusterCol(cs, col("v")).as("cluster"),
-          col("max_abs_micro"), col("q"))
-        .repartitionByRange(col("cluster"))
-        .sortWithinPartitions("cluster", "vec_id")
-        .write.mode("overwrite").parquet(s"$out/lists")
-      centroids.write.mode("overwrite").parquet(s"$out/centroids")
+      Scratch.pinned(centroids) { cents =>
+        val cs = collectCentroids(cents)
+        qstore.filter(col("max_abs_micro") > 0)
+          .withColumn("d",
+            call_function("int8_decode", col("q"), col("max_abs_micro")))
+          .filter(call_function("vec_dot", col("d"), col("d")) > 0)
+          .withColumn("v", call_function("vec_normalize", col("d")))
+          .select(col("vec_id"),
+            nearestClusterCol(cs, col("v")).as("cluster"),
+            col("max_abs_micro"), col("q"))
+          .repartitionByRange(col("cluster"))
+          .sortWithinPartitions("cluster", "vec_id")
+          .write.mode("overwrite").parquet(s"$out/lists")
+        cents.write.mode("overwrite").parquet(s"$out/centroids")
+      }
       out
     }
 

@@ -82,34 +82,8 @@ object StreamingGate {
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Q67 — SPEC-ONLY since r17 (gate entry retired under the q21/q75
-    * trim condition once q83 carried its second judged-green round):
-    * [[q83StreamRestart]]'s phase-1 is this exact relation (same JSONL
-    * wire export, same [[StreamingLww.mergeIntoStore]] sink, q3's oracle
-    * verbatim) plus the checkpoint-restart proof, and q79 replays the
-    * same wire through the partitioned sink. StreamingLwwSpec pins this
-    * replay ≡ the q3 batch merge in-process; it was the replay's pure-
-    * overlap cost (~4 streaming micro-batch runs × 4 corpora per close). */
-  def q67StreamMerge(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(spark, dir, "graft_stream_gate") {
-      (rs, src, storePath, ckpt) =>
-        // seed: the local store (q3's left side)
-        TripleStore.triples(rs, dir)
-          .write.parquet(storePath)
-        // the wire: remote changelog as JSONL files, several so the stream
-        // actually micro-batches (repartition count = batch count)
-        TripleStore.writeJsonl(
-          TripleStore.remoteChangelog(rs, dir).repartition(NumBatches), src)
-        StreamingLww.mergeIntoStore(
-            StreamingLww.jsonlSource(rs, src, maxFilesPerTrigger = 1),
-            storePath, ckpt, Trigger.AvailableNow())
-          .awaitTermination()
-    }
-    spark.read.parquet(store).orderBy("subject", "predicate")
-  }
-
   /** Q70: the exact-dedup pillar driven through an ACTUAL streaming query —
-    * q67's pattern applied to [[StreamingDedup.mergeIntoDedupStore]]. The
+    * q83's replay pattern applied to [[StreamingDedup.mergeIntoDedupStore]]. The
     * documents table is exported as JSONL (doc_id, text), split into
     * [[NumBatches]] files, and replayed through `readStream`
     * (`maxFilesPerTrigger=1`, so the dedup-store merge really runs
@@ -143,11 +117,11 @@ object StreamingGate {
   private val PartBoundaries =
     Seq("<nation_", "<order_", "<order_3", "<order_6")
 
-  /** Q79: the PARTITIONED streaming sink driver-gated — q67's JSONL replay
+  /** Q79: the PARTITIONED streaming sink driver-gated — q83's JSONL replay
     * driven into [[StreamingLww.mergeIntoStorePartitioned]] (per-batch I/O
     * pruned to the shards the batch touches, per-shard atomic swap)
     * instead of the monolithic whole-store rewrite. Same relation, same
-    * oracle as q3/q67 (chunked LWW merge ≡ one-shot; the store layout is
+    * oracle as q3/q83 (chunked LWW merge ≡ one-shot; the store layout is
     * physical, not semantic). The gate run itself asserts the scale claim:
     * the cust/nation shards receive no changelog keys and their part files
     * must be BYTE-UNTOUCHED after the replay (file listing + sizes equal),
@@ -159,7 +133,7 @@ object StreamingGate {
         // seed: the local store, laid out shard-partitioned with the SAME
         // boundaries the sink routes on. COMPACTED first (q31's invariant):
         // a materialized store holds at most one row per logical key. The
-        // monolithic q67 sink masks a duplicated-key seed because every
+        // monolithic mergeIntoStore sink masks a duplicated-key seed: every
         // batch re-merges the WHOLE store; the partitioned sink correctly
         // never rewrites an untouched shard, so raw duplicate keys there
         // would survive to the final read (the adversarial corpus catches
@@ -209,14 +183,14 @@ object StreamingGate {
     * contract `StreamingLwwSpec` pins in-process (a NEW query incarnation
     * on the SAME checkpoint absorbs a post-restart extension without
     * reprocessing what the first incarnation committed) finally executing
-    * in the driver gate. q67's JSONL replay is split across TWO
-    * `readStream` incarnations over ONE checkpoint into
+    * in the driver gate. The remote changelog's JSONL replay is split
+    * across TWO `readStream` incarnations over ONE checkpoint into
     * [[StreamingLww.mergeIntoStore]]: the wire export is staged whole, half
     * the files are released and incarnation 1 runs to termination
     * (`Trigger.AvailableNow` — it stops exactly like a killed query: offsets
     * committed, store swapped, JVM-side query object gone), then the
     * remaining files land and incarnation 2 starts FROM THE CHECKPOINT.
-    * Same relation and oracle as q3/q67 (chunked LWW merge ≡ one-shot).
+    * Same relation and oracle as q3 (chunked LWW merge ≡ one-shot).
     *
     * The recovery claim is asserted IN the gate run, not just implied by
     * the final hash (the strict-`>` merge is idempotent, so values alone
@@ -459,7 +433,7 @@ object StreamingGate {
   private val SentinelUser = SessionReplay.SentinelUser
 
   /** Q74: gap-sessionization driven through an ACTUAL streaming query — the
-    * q67/q70 replay pattern applied to
+    * q70/q83 replay pattern applied to
     * [[StreamingSessions.sessionize]], oracled by batch q39's SQL (valid
     * because once the watermark passes a session's `end + gap` its emission
     * is final and deterministic, so the complete closed-session table ≡ the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.Triple
+import graft.{Scratch, Triple}
 import graft.operators.Lww
 
 /** Q11: the reference's asynchronous LWW exchange as Structured Streaming.
@@ -176,22 +176,24 @@ object StreamingLww {
       .foreachBatch { (batch: Dataset[Triple], _: Long) =>
         val swap = new StoreSwap(batch.sparkSession, storePath)
         swap.recover()
-        val b = batch.toDF().withColumn("shard", shardCol(boundaries))
-          .localCheckpoint(true)
-        // bounded driver-side collect: at most |boundaries|+1 shard ids
-        val touched = b.select("shard").distinct().as[Int].collect().toSeq
-        if (touched.nonEmpty) {
-          val base =
-            if (swap.hasShards)
-              spark.read.parquet(storePath)
-                .filter(col("shard").isin(touched: _*))
-            else b.limit(0)
-          Lww.merge(base, b)
-            .withColumn("shard", shardCol(boundaries))
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("shard")
-            .parquet(swap.staging)
-          swap.commitShards(touched.map(k => s"shard=$k"))
+        // pinned for the batch: released once its shards are committed
+        Scratch.pinned(Scratch.pin(
+            batch.toDF().withColumn("shard", shardCol(boundaries)))) { b =>
+          // bounded driver-side collect: at most |boundaries|+1 shard ids
+          val touched = b.select("shard").distinct().as[Int].collect().toSeq
+          if (touched.nonEmpty) {
+            val base =
+              if (swap.hasShards)
+                spark.read.parquet(storePath)
+                  .filter(col("shard").isin(touched: _*))
+              else b.limit(0)
+            Lww.merge(base, b)
+              .withColumn("shard", shardCol(boundaries))
+              .write.mode(SaveMode.Overwrite)
+              .partitionBy("shard")
+              .parquet(swap.staging)
+            swap.commitShards(touched.map(k => s"shard=$k"))
+          }
         }
       }
       .start()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Scratch
 import graft.obs.Work
 import graft.operators.Graph
 
@@ -25,7 +26,7 @@ object CcModeBench {
 
     // materialized once so both modes contract the identical input
     val edges = Harness.replicateEdges(Graph.edges(spark, sfDir), replicate)
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
     val nEdges = edges.count()
 
     // (nodes, work) of one contraction

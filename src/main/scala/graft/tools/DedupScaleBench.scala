@@ -320,7 +320,7 @@ object DedupScaleBench {
             1, hashChars).as("content_hash"))
       var corpusAll = corpus
       (1 to steadyK).foreach { g =>
-        val b = genBatch(g).localCheckpoint(true)
+        val b = Scratch.pin(genBatch(g))
         val (admitted, secs) = Harness.timed {
           val admitted = BloomIndex.admit(spark, shardedPath, b, corpusAll)
           BloomIndex.append(spark, shardedPath, admitted.select("content_hash"))
@@ -342,7 +342,7 @@ object DedupScaleBench {
       // the steady-state admit: a FRESH generation against the K-appended
       // index, with cache telemetry, digest-checked against the anti-join
       // over the grown corpus
-      val probeBatch = genBatch(steadyK + 1).localCheckpoint(true)
+      val probeBatch = Scratch.pin(genBatch(steadyK + 1))
       BloomIndex.ShardBlobCache.clear()
       val loadsS0 = BloomIndex.ShardBlobCache.loads.get()
       val dSteady = run(s"steady_admit_after_$steadyK", () =>

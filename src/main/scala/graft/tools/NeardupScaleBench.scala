@@ -27,11 +27,12 @@ import graft.operators.{Docs, Vectors}
   *     (64-bit fingerprints, 2×32-bit bands — lossless for hamming ≤ 1;
   *     the 32-bit band domain keeps random collisions ~n²/2^33).
   *   - over-full-bucket guard: a cosine banding over `vectors` synthetic
-  *     embeddings with a planted `hotRows` near-parallel cluster sized to
-  *     overflow one bucket; asserts the guard was EXERCISED (pre-refine
-  *     max bucket > maxBucketSize) and that refinement actually bounded it
-  *     (post-refine max ≤ maxBucketSize), then measures the candidate
-  *     join over the refined banding.
+  *     embeddings with a planted `hotRows` near-parallel cluster and a
+  *     bucket cap derived from `hotRows` and `noise` so the cluster
+  *     overflows one bucket; asserts the guard was EXERCISED (pre-refine
+  *     max bucket > cap) and that refinement actually bounded it
+  *     (post-refine max ≤ cap), then measures the candidate join over the
+  *     refined banding.
   *
   * Exits non-zero on: planted-pair recall < 0.95, candidate volume above
   * the sub-quadratic budget (candPerDoc), digest mismatch vs the gate
@@ -98,10 +99,8 @@ object NeardupScaleBench {
     val vectors = if (args.length > 4) args(4).toLong else 10000000L
     val hotRows = if (args.length > 5) args(5).toLong else 100000L
     val subsetDocs = if (args.length > 6) args(6).toLong else 200000L
-    // hot-cluster relative noise: the empirical dial for the per-plane
-    // sign-flip rate (~0.09 at 0.25), sized so the hot bucket overflows
-    // maxBucket at 24 coarse planes and the guard's two 8-plane
-    // refinement rounds bound it
+    // hot-cluster relative noise: the dial for the per-plane sign-flip
+    // rate (~0.09 at 0.25); the bucket cap below is derived from it
     val noise = if (args.length > 7) args(7).toDouble else 0.25
     // the MinHash SCALE banding (minhashCandidates' r20 dials): the gate's
     // 4 bands of 2 collide quadratically under the Zipf head at 10M docs
@@ -145,11 +144,11 @@ object NeardupScaleBench {
 
     // --- leg B: digest cross-check vs the gate path on the subset --------
     val stagedDigest = digest {
-      val arrsS = Docs.shingleArraysOf(
-        spark.read.parquet(s"$subDir/documents.parquet")).cache()
-      try Docs.minhashVerify(Docs.minhashCandidates(arrsS),
-        arrsS.select(col("doc_id"), explode(col("ss")).as("s")))
-      finally { arrsS.unpersist(); () }
+      Scratch.pinned(Docs.shingleArraysOf(
+          spark.read.parquet(s"$subDir/documents.parquet")).cache()) { arrsS =>
+        Docs.minhashVerify(Docs.minhashCandidates(arrsS),
+          arrsS.select(col("doc_id"), explode(col("ss")).as("s")))
+      }
     }
     val gateDigest = digest(Docs.q19MinhashPairs(spark, subDir))
     val digestOk = stagedDigest == gateDigest
@@ -158,7 +157,7 @@ object NeardupScaleBench {
     val ((nSim, nSimPlanted), tSim) = timed {
       val sim = Docs.simhashNeardupPairs(spark, fullDir,
         simBits = 64, numBands = 2, maxHamming = 1L)
-        .localCheckpoint(true)
+        .transform(Scratch.pin(_))
       (sim.count(),
         sim.filter(col("doc_a") % dupMod === 0 &&
           col("doc_b") === col("doc_a") + 1).count())
@@ -175,19 +174,23 @@ object NeardupScaleBench {
     val prodOk = prodDigest == stagedPairsDigest
 
     // --- leg D: the over-full-bucket guard under a planted hot cluster ---
-    val vecs = synthVectors(spark, vectors, hotRows, noise)
-      .localCheckpoint(true)
-    val MaxBucket = 4096
-    val banded = Vectors.bandedProjection(vecs, numBands = 2,
-      planesPerBand = 24)
+    val vecs = Scratch.pin(synthVectors(spark, vectors, hotRows, noise))
+    // a hot row keeps its center's sign on a plane w.p. ~1 - atan(noise)/π,
+    // so the center's 24-plane bucket holds ~hotRows·stay^24 of them and
+    // the two 8-plane refinement rounds leave ~hotRows·stay^40: the cap
+    // sits at the geometric middle, below the first and above the second
+    val stay = 1 - math.atan(noise) / math.Pi
+    val MaxBucket = math.max(1, (hotRows * math.pow(stay, 32)).toInt)
     def maxBucket(b: DataFrame): Long =
       b.groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
         .agg(max(col("n"))).head().getLong(0)
-    val (preMax, tBand) = timed(maxBucket(banded.cache()))
-    val (refined, tRefine) =
-      timed(Vectors.refineOverfullBuckets(banded, MaxBucket,
-        firstReservedPlane = 48).localCheckpoint(true))
-    banded.unpersist()
+    val ((preMax, tBand), (refined, tRefine)) = Scratch.pinned(
+        Vectors.bandedProjection(vecs, numBands = 2, planesPerBand = 24)
+          .cache()) { banded =>
+      (timed(maxBucket(banded)),
+        timed(Scratch.pin(Vectors.refineOverfullBuckets(banded, MaxBucket,
+          firstReservedPlane = 48))))
+    }
     val postMax = maxBucket(refined)
     val (nVecCand, tVecCand) =
       timed(Vectors.candidatePairs(refined).count())

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.obs.Work
 import graft.operators.Graph
 
@@ -12,7 +13,7 @@ import graft.operators.Graph
   *   - `plain`: the edge list as derived — every iteration's src-join
   *     re-shuffles the (big) edge side.
   *   - `prepart`: edges hash-repartitioned on `src` ONCE and checkpointed —
-  *     `LogicalRDD` preserves the partitioning, so each iteration's
+  *     the checkpoint preserves the partitioning, so each iteration's
   *     src-join reuses it and only the (smaller) rank side moves. This is
   *     the scaladoc's "pre-partitioned edge table keeps the big side
   *     exchange-free" claim, measured instead of argued. (r13 result: the
@@ -67,12 +68,12 @@ object PageRankScaleBench {
 
     val unioned = Harness.replicateEdges(Graph.edges(spark, sfDir), replicate)
     val edges = input match {
-      case "mem" => unioned.localCheckpoint(true)
+      case "mem" => Scratch.pin(unioned)
       case "disk" =>
         // a per-run scratch dir, deleted at exit: a fixed path left a
         // stranded ~99M-edge parquet copy per rehearsal and let two
         // concurrent invocations overwrite each other's edges
-        val path = graft.Scratch.path(spark, "graft_prbench_edges")
+        val path = Scratch.path(spark, "graft_prbench_edges")
         unioned.write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
     }
@@ -96,7 +97,7 @@ object PageRankScaleBench {
       if (input == "disk") Graph.pageRankMaterialized(edges, iters)
       else Graph.pageRank(edges, iters))
     val preOpt = if (!modes("prepart")) None else {
-      val pre = edges.repartition(col("src")).localCheckpoint(true)
+      val pre = Scratch.pin(edges.repartition(col("src")))
       Some((pre, run(Graph.pageRank(pre, iters))))
     }
 
@@ -127,8 +128,8 @@ object PageRankScaleBench {
         // eager one would materialize an extra |V|-row block per call on
         // top of the three retained rank checkpoints (the accumulation
         // pattern the r13 OOM notes warn about)
-        val outDeg = e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("out_deg")).localCheckpoint(false)
+        val outDeg = Scratch.pin(e.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("out_deg")), eager = false)
         val plan = e
           .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
           .join(outDeg.withColumnRenamed("node", "src"), Seq("src"))

@@ -54,7 +54,7 @@ object SessionScaleBench {
       .select((col("user_id") + col("rep") * 10000000L).as("user_id"),
         (col("event_id") + col("rep") * 1000000000L).as("event_id"),
         col("ts_ms"), col("value"))
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
     val nEvents = big.count()
     val (loTs, hiTs) = ev.agg(min(col("ts_ms")), max(col("ts_ms")))
       .as[(Long, Long)].head()

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.TripleStore
+import graft.{Scratch, TripleStore}
 import graft.operators.Skew
 
 /** One-off measurement: the hot-key JOIN shapes behind q72 on data that is
@@ -50,16 +50,16 @@ object SkewJoinBench {
       .withColumn("predicate",
         when(rand(7) < 0.9, lit("<hotPredicate>")).otherwise(col("predicate")))
     val skewed =
-      if (replicate <= 8) built.localCheckpoint(true)
+      if (replicate <= 8) Scratch.pin(built)
       else {
-        val p = graft.Scratch.path(spark, "graft_skewbench_corpus")
+        val p = Scratch.path(spark, "graft_skewbench_corpus")
         built.write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
       }
     val nRows = skewed.count()
     val dim = skewed.select(col("predicate")).distinct()
       .withColumn("pred_len", length(col("predicate")).cast("long"))
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // scale AQE's skew trigger to bench data size (defaults are sized for

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{LocalSession, TripleStore}
+import graft.{LocalSession, Scratch, TripleStore}
 import graft.obs.Work
 import graft.operators.{Relational, Temporal}
 
@@ -44,12 +44,12 @@ object TemporalScaleBench {
       .select((col("user_id") + col("rep") * 10000000L).as("user_id"),
         (col("event_id") + col("rep") * 1000000000L).as("event_id"),
         col("event_type"), col("value"), col("ts_ms"))
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
     val nEvents = e.count()
     val wins = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("win_id"),
         col("ts_ms").as("w_start"), (col("ts_ms") + windowMs).as("w_end"))
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
     val nWins = wins.count()
 
     // range join: full q45 shape (join + per-window aggregate)

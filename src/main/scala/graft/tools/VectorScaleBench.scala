@@ -128,7 +128,7 @@ object VectorScaleBench {
     def exactLeg(norm: DataFrame): (Array[org.apache.spark.sql.Row], Double) = {
       val queries = norm.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        .localCheckpoint(true)
+        .transform(Scratch.pin(_))
       val w = Window.partitionBy("query_id")
         .orderBy(col("cos_sim").desc, col("neighbor_id"))
       timed(queries.crossJoin(norm)
@@ -157,7 +157,7 @@ object VectorScaleBench {
       val queries = raw.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"),
           call_function("vec_normalize", col("d")).as("qv"))
-        .localCheckpoint(true)
+        .transform(Scratch.pin(_))
       val w = Window.partitionBy("query_id")
         .orderBy(col("cos_sim").desc, col("neighbor_id"))
       timed(queries.crossJoin(raw)
@@ -237,7 +237,7 @@ object VectorScaleBench {
     // batches arrive as parquet attributes, which is what the checkpoint
     // restores here)
     val batch = synthVectors(spark, batchRows, k, idOffset = rows)
-      .localCheckpoint(true)
+      .transform(Scratch.pin(_))
     def append(): Unit =
       if (int8AtRest) Vectors.ivfAppendBatchQuantized(spark, layout, batch,
         batchId = Some(0L), streamId = "vecscale")

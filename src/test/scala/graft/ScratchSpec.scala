@@ -90,6 +90,84 @@ class ScratchSpec extends AnyFunSuite {
     assert(!new File(dir).exists(), s"$dir survived a failed body")
   }
 
+  test("no operator leaves a pinned block behind beyond what its result " +
+    "reads") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions._
+    import operators.{BloomIndex, Docs, Graph, Vectors}
+    import streaming.StreamingLww
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dirs = scala.collection.mutable.Buffer[JPath]()
+    def tmp(prefix: String): String = {
+      val d = Files.createTempDirectory(prefix); dirs += d; d.toString
+    }
+    // the RDDs the result's own plan reads, subqueries included: the only
+    // blocks an operator may leave pinned
+    def backing(df: DataFrame): Set[Int] =
+      df.queryExecution.withCachedData.collectWithSubqueries {
+        case l: LogicalRDD => Seq(l.rdd.id)
+        case m: InMemoryRelation =>
+          if (m.cacheBuilder.isCachedColumnBuffersLoaded)
+            Seq(m.cacheBuilder.cachedColumnBuffers.id)
+          else Nil
+      }.flatten.toSet
+    def hashed(ids: Seq[Long]): DataFrame = ids.map(i => (i, s"doc ${i % 45}"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), sha2(col("text"), 256).as("content_hash"))
+    // a chain forces several contraction rounds when the local finish is off
+    val edges = (Seq(("<b>", "<a>"), ("<c>", "<b>"), ("<d>", "<c>"),
+      ("<e>", "<d>"), ("<f>", "<e>"), ("<p>", "<q>"))).toDF("src", "dst")
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "Docs.neardupPairs" -> (() => Docs.neardupPairs(spark, sf)),
+      "Docs.q53CorpusToBatches" -> (() => Docs.q53CorpusToBatches(spark, sf)),
+      "Vectors.cosineNearDupPairs" -> (() => Vectors.cosineNearDupPairs(
+        TripleStore.table(spark, sf, "embeddings"), Vectors.NearDupThreshold)),
+      "Vectors.lshTopk" -> (() => Vectors.lshTopk(spark, sf, 10)),
+      "Vectors.ivfTopk" -> (() =>
+        Vectors.ivfTopk(spark, sf, k = 16, nprobe = 4, topk = 10)),
+      "Vectors.q71AnnRecall" -> (() => Vectors.q71AnnRecall(spark, sf)),
+      "BloomIndex.admit + append" -> { () =>
+        val idx = tmp("graft_pin_bloom") + "/i"
+        val corpus = hashed(0L until 40L)
+        BloomIndex.build(corpus.select("content_hash"), idx)
+        val admitted = BloomIndex.admit(spark, idx, hashed(30L until 60L), corpus)
+        BloomIndex.append(spark, idx, admitted.select("content_hash"))
+        admitted
+      },
+      "Graph.pageRank" -> (() => Graph.pageRank(edges, iters = 3)),
+      "Graph.ccStar (local finish off)" -> (() =>
+        Graph.ccStar(edges, localFinishEdges = 0)),
+      "StreamingLww.mergeIntoStorePartitioned, two batches" -> { () =>
+        implicit val sqlCtx = spark.sqlContext
+        val dir = tmp("graft_pin_sink")
+        val source = MemoryStream[Triple]
+        for (b <- Seq(
+            Seq(Triple("<a>", "<p>", "v1", 100L), Triple("<c>", "<q>", "x", 50L)),
+            Seq(Triple("<c>", "<q>", "y", 80L), Triple("<d>", "<r>", "z", 60L)))) {
+          source.addData(b: _*)
+          StreamingLww.mergeIntoStorePartitioned(source.toDS(), s"$dir/store",
+            s"$dir/ckpt", Seq("<b>", "<c>")).awaitTermination()
+        }
+        spark.read.parquet(s"$dir/store")
+      })
+    try {
+      val leaks = cases.flatMap { case (name, run) =>
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val result = run()
+        result.collect()
+        val left = sc.getPersistentRDDs.keySet.toSet -- before -- backing(result)
+        if (left.isEmpty) None
+        else Some(s"$name left ${left.size} RDD(s) pinned: " +
+          left.toSeq.sorted.mkString(", "))
+      }
+      assert(leaks.isEmpty, leaks.mkString("\n"))
+    } finally dirs.foreach(d => FileUtils.deleteQuietly(d.toFile))
+  }
+
   test("neardupPairs' staged shape stages and deletes through a non-local " +
     "default filesystem") {
     import org.apache.spark.sql.functions._

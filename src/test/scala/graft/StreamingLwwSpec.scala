@@ -488,16 +488,12 @@ class StreamingLwwSpec extends AnyFunSuite {
     assert(streamed.size == 4)
   }
 
-  test("q67 spec baseline (gate entry retired r17, subsumed by q83's " +
-    "phase-1): the monolithic JSONL readStream replay merges to exactly " +
-    "the q3 batch LWW relation") {
-    // q67_stream_merge left the driver gate once q83_stream_restart — the
-    // same wire export and mergeIntoStore sink, split across two query
-    // incarnations over one checkpoint — carried its second judged-green
-    // round (the q21/q75 retire-the-subsumed-twin condition). This test
-    // keeps q67's own replay scaffold pinned to its oracle relation.
+  test("q83's replay merges to exactly the q3 batch LWW relation") {
+    // q83 streams the remote changelog as JSONL files into mergeIntoStore,
+    // in two query incarnations over one checkpoint; chunked strict-`>`
+    // LWW merging equals the one-shot batch merge
     val sf = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingGate.q67StreamMerge(spark, sf)
+    val streamed = graft.streaming.StreamingGate.q83StreamRestart(spark, sf)
       .collect().map(_.toString).toSeq
     val batch = Lww.merge(
         graft.TripleStore.triples(spark, sf),
