@@ -144,11 +144,10 @@ object ScaleBench {
       store.filter(col("predicate") === "<hasPriority>").count()
     }
 
-    // Streaming sink contrast at the same scale: one 1,000-update micro-batch
-    // through the partition-wise sink (reads + rewrites only the shard
-    // directories the batch touches) vs the whole-store-rewrite sink. This is
-    // the number behind the 100 TB claim: the partitioned batch cost tracks
-    // the touched share of the store, the monolithic one tracks the store.
+    // Streaming sink at the same scale: one 1,000-update micro-batch through
+    // the partition-wise sink, which reads and rewrites only the shard
+    // directories the batch touches. This is the number behind the 100 TB
+    // claim: the batch cost tracks the touched share of the store.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -157,9 +156,10 @@ object ScaleBench {
     // ~even 16-way range boundaries sampled from the store itself, sorted in
     // CODE-POINT order (Spark's binary UTF-8 `>=`), not JVM UTF-16 order —
     // the two diverge above the BMP and an out-of-order boundary list turns
-    // contiguous shard ranges into interleaved ones
+    // contiguous shard ranges into interleaved ones. Seeded, so a rerun
+    // draws the same boundaries and its batch touches the same shards.
     val cpOrd = graft.plans.RangeBucket.codePointOrdering
-    val sample = store.select("subject").sample(0.002).as[String]
+    val sample = store.select("subject").sample(0.002, seed = 16L).as[String]
       .collect().sorted(cpOrd)
     val boundaries = (1 to 15)
       .map(i => sample((sample.length.toLong * i / 16).toInt)).distinct
@@ -178,12 +178,6 @@ object ScaleBench {
       StreamingLww.mergeIntoStorePartitioned(srcPart.toDS(), partPath,
         ckptDir + "/part", boundaries).awaitTermination()
     }
-    val srcFull = MemoryStream[Triple]
-    srcFull.addData(updates: _*)
-    val (_, tFullBatch) = timed {
-      StreamingLww.mergeIntoStore(srcFull.toDS(), path, ckptDir + "/full")
-        .awaitTermination()
-    }
 
     // Whole-replica anti-entropy at scale (the reference's merge_2_servers
     // over FULL stores, MasterServer.py:384-432): replica B = the store with
@@ -193,21 +187,18 @@ object ScaleBench {
     //   (b) co-located — both replicas bucketed on the logical key, merge is
     //       a full-outer SMJ with ZERO Exchange (the shuffle happened once
     //       at write time and is amortized over every subsequent round).
-    // fresh read: the monolithic sink above swapped the store directory, so
-    // the original `store` plan's file listing is stale. replicaB is
-    // MATERIALIZED before timing — otherwise the aggregate-merge timing
-    // would also re-execute the embedded upsert (a second full-store
+    // replicaB is MATERIALIZED before timing — otherwise the aggregate-merge
+    // timing would also re-execute the embedded upsert (a second full-store
     // aggregation) while the co-located side merges pre-written tables,
     // inflating the comparison
-    val storeNow = spark.read.parquet(path)
-    val replicaB = Scratch.pin(Lww.upsert(storeNow, changelog))
+    val replicaB = Scratch.pin(Lww.upsert(store, changelog))
     val (_, tAggMerge) = timed {
-      sink(Lww.merge(storeNow, replicaB))
+      sink(Lww.merge(store, replicaB))
     }
     Seq("sb_replica_a", "sb_replica_b")
       .foreach(t => TripleStore.dropTableAndLocation(spark, t))
     val (_, tBucketEtl) = timed {
-      TripleStore.writeBucketed(storeNow, "sb_replica_a", 32)
+      TripleStore.writeBucketed(store, "sb_replica_a", 32)
       TripleStore.writeBucketed(replicaB, "sb_replica_b", 32)
     }
     val (cCo, tCoMerge) = timed {
@@ -227,7 +218,6 @@ object ScaleBench {
       "pred_probe_sharded" -> tSProbe, "pred_probe_rows" -> cZ,
       "pred_count_zorder" -> tZCount, "pred_count_sharded" -> tSCount,
       "stream_part_etl" -> tPartEtl, "stream_part_batch" -> tPartBatch,
-      "stream_full_batch" -> tFullBatch,
       "stream_touched_shards" -> touchedShards,
       "stream_total_shards" -> (boundaries.size + 1),
       "replica_merge_agg" -> tAggMerge, "replica_merge_colocated" -> tCoMerge,

@@ -267,10 +267,11 @@ object SparkEntry {
     // replay suppressed in-run by the marker guard), the grown layout
     // probed — the ANN twin of q76's two-epoch dedup shape.
     "q78_ivf_ingest" -> (Vectors.q78IvfIngest(_, _)),
-    // The partitioned streaming sink through a REAL readStream: q83's
-    // changelog replay into mergeIntoStorePartitioned (per-shard pruned I/O +
-    // atomic swap); same merge relation/oracle as q3, and the gate run
-    // asserts the changelog-free shards stayed byte-untouched.
+    // The partitioned streaming sink through a REAL readStream: the
+    // changelog replay q83 shares, into mergeIntoStorePartitioned
+    // (per-shard pruned I/O + atomic swap); same merge relation/oracle as
+    // q3, and the replay asserts the changelog-free shards stayed
+    // byte-untouched.
     "q79_stream_merge_part" ->
       (graft.streaming.StreamingGate.q79StreamMergePart(_, _)),
     // TTL state eviction through a REAL readStream: winnersWithTtl over a
@@ -291,7 +292,7 @@ object SparkEntry {
     // FAILFAST parse, length-column n_bytes), decoded by the same batch
     // path — q77's oracle verbatim, different ingest path (q31-vs-q3).
     "q82_media_files" -> (Multimodal.q82MediaFiles(_, _)),
-    // Streaming checkpoint-RESTART recovery: the changelog's JSONL replay
+    // Streaming checkpoint-RESTART recovery: q79's changelog JSONL replay,
     // split across two query incarnations over ONE checkpoint (the second
     // resumes from it, processing exactly the post-restart extension —
     // asserted in-run from numInputRows); same merge relation and oracle

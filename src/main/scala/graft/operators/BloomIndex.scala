@@ -59,13 +59,10 @@ import graft.TripleStore.table
   * `num_shards` is pinned at [[build]] time into the artifact; 1 (the
   * default, and the q76 gate config) reproduces the unsharded semantics
   * exactly — same bits, since a bloom's bitset is a function of the key
-  * SET, not of merge order. A pre-r16 artifact (no `shard`/`num_shards`
-  * columns) is read as a 1-shard index and self-upgrades on its next
-  * append. Spark's own sketch format is used end-to-end: `bloom_build`
-  * (BloomFilterAggregate) serializes the very `BloomFilter` that
-  * `BloomFilter.readFrom`/`mightContainLong` consume, so the SQL
-  * aggregate builds it and the JVM probes/merges it with no
-  * translation. */
+  * SET, not of merge order. Spark's own sketch format is used end-to-end:
+  * `bloom_build` (BloomFilterAggregate) serializes the very `BloomFilter`
+  * that `BloomFilter.readFrom`/`mightContainLong` consume, so the SQL
+  * aggregate builds it and the JVM probes/merges it with no translation. */
 object BloomIndex {
 
   /** Gate-scale geometry (q61's convention): ~10 bits/key at the corpus
@@ -321,14 +318,12 @@ object BloomIndex {
     * row is found. The filter prunes at ROW-GROUP level from footer
     * statistics (parquet-mr's RowGroupFilter), so a non-matching file
     * costs one footer read and zero data pages — the fetch reads exactly
-    * one bounded blob however many shards the version holds. A version
-    * with no `shard` column (pre-r16 artifact) is a 1-shard index: its
-    * single row is the shard-0 blob. Returns None for a NULL bloom (the
-    * shard holds no corpus keys — definitively not-a-duplicate); a
-    * MISSING shard row is corruption (every version carries all
-    * `num_shards` rows by construction) and fails loudly. */
+    * one bounded blob however many shards the version holds. Returns None
+    * for a NULL bloom (the shard holds no corpus keys — definitively
+    * not-a-duplicate); a MISSING shard row is corruption (every version
+    * carries all `num_shards` rows by construction) and fails loudly. */
   private[graft] def fetchShardBlob(conf: org.apache.hadoop.conf.Configuration,
-      versionPath: String, shard: Long, hasShardCol: Boolean)
+      versionPath: String, shard: Long)
       : Option[org.apache.spark.util.sketch.BloomFilter] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
@@ -342,18 +337,16 @@ object BloomIndex {
     var blob: Option[Array[Byte]] = null
     val it = parts.iterator
     while (blob == null && it.hasNext) {
-      val b0 = org.apache.parquet.hadoop.ParquetReader.builder(
+      val reader = org.apache.parquet.hadoop.ParquetReader.builder(
         new org.apache.parquet.hadoop.example.GroupReadSupport(), it.next())
         .withConf(conf)
-      val reader = (if (hasShardCol)
-        b0.withFilter(FilterCompat.get(FilterApi.eq(
+        .withFilter(FilterCompat.get(FilterApi.eq(
           FilterApi.longColumn("shard"), java.lang.Long.valueOf(shard))))
-      else b0).build()
+        .build()
       try {
         var g = reader.read()
         while (blob == null && g != null) {
-          val s = if (hasShardCol) g.getLong("shard", 0) else 0L
-          if (s == shard)
+          if (g.getLong("shard", 0) == shard)
             blob = if (g.getFieldRepetitionCount("bloom") == 0) None
               else Some(g.getBinary("bloom", 0).getBytes)
           else g = reader.read()
@@ -388,16 +381,12 @@ object BloomIndex {
     * synchronized map access at local[32] is measurable lock contention
     * (ADVICE r17). The one eager step is a single-row metadata read for
     * `num_shards` at plan construction (the shard count shapes the
-    * routing) plus one version-dir listing for the cache fingerprint; a
-    * pre-r16 artifact without the shard column reads as 1-shard with no
-    * routing exchange. */
+    * routing) plus one version-dir listing for the cache fingerprint. */
   private[graft] def probePlan(spark: SparkSession, path: String,
       batch: DataFrame): DataFrame = {
     val (ver, verNum) = latest(spark, path)
-    val verDf = spark.read.parquet(ver)
-    val hasShards = verDf.schema.fieldNames.contains("num_shards")
     val numShards =
-      if (hasShards) verDf.select(col("num_shards")).head().getLong(0) else 1L
+      spark.read.parquet(ver).select(col("num_shards")).head().getLong(0)
     val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     val root = new org.apache.hadoop.fs.Path(ver).getParent.toString
@@ -422,7 +411,7 @@ object BloomIndex {
         val s = java.lang.Math.floorMod(hv, numShards)
         val bf = local.getOrElseUpdate(s,
           ShardBlobCache.get(BlobKey(root, verNum, fp, s))(
-            fetchShardBlob(conf.value, ver, s, hasShards)))
+            fetchShardBlob(conf.value, ver, s)))
         org.apache.spark.sql.Row.fromSeq(
           r.toSeq :+ bf.exists(_.mightContainLong(hv)))
       }
@@ -499,12 +488,7 @@ object BloomIndex {
   def append(spark: SparkSession, path: String,
       admittedHashes: DataFrame): Unit = {
     val (curPath, curV) = latest(spark, path)
-    // pre-r16 artifact (no shard columns) = a 1-shard index; the upgraded
-    // frame writes the next version in the sharded schema (self-upgrade)
-    val cur0 = spark.read.parquet(curPath)
-    val cur =
-      if (cur0.schema.fieldNames.contains("num_shards")) cur0
-      else cur0.withColumn("shard", lit(0L)).withColumn("num_shards", lit(1L))
+    val cur = spark.read.parquet(curPath)
     val meta = cur
       .select("expected", "num_bits", "n_appends", "num_shards").head()
     val (expected, numBits) = (meta.getLong(0), meta.getLong(1))

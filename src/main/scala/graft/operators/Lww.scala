@@ -109,7 +109,9 @@ object Lww {
     * comparator. Over a [[graft.TripleStore.writeSharded]] layout the probe
     * prunes to one range shard and skips row groups by min/max, so latency
     * is O(one shard's matching row groups) regardless of store size —
-    * the Spark twin of the reference's O(1) claim (report.pdf §7.1). */
+    * the Spark twin of the reference's O(1) claim (report.pdf §7.1).
+    * [[upsert]] lets `prio` lead, so one update always beats the probed
+    * rows: the new row is the update itself and the key is scanned once. */
   def upsertPoint(base: DataFrame, subject: String, predicate: String,
       newObject: String, tsMs: Long): DataFrame = {
     val spark = base.sparkSession
@@ -118,7 +120,7 @@ object Lww {
       .toDF("subject", "predicate", "object", "ts_ms")
     val old = base.filter(col("subject") === subject &&
       col("predicate") === predicate)
-    upsert(old, update).withColumn("row_kind", lit("new_row"))
+    update.withColumn("row_kind", lit("new_row"))
       .unionByName(old.withColumn("row_kind", lit("old_row")))
   }
 

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, CreateStruct, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, BloomFilterAggregate, MaxBy}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, BloomFilterAggregate, MaxBy}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.aggregate.ScalaAggregator
@@ -32,149 +32,78 @@ object LwwObjectToMaxBy extends Rule[LogicalPlan] {
 }
 
 /** Engine extensions, installed via `spark.sql.extensions=graft.plans.
-  * GraftExtensions`: the [[HammingDistance]], [[RangeBucket]] and
-  * [[RollingKgramHashes]] native functions and the [[LwwObjectToMaxBy]]
-  * optimizer rule. */
+  * GraftExtensions`: the native SQL functions of the companion's
+  * `Functions` table and the [[LwwObjectToMaxBy]] optimizer rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("hamming_distance"),
-      new ExpressionInfo(classOf[HammingDistance].getName, "hamming_distance"),
-      (children: Seq[Expression]) =>
-        HammingDistance(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("range_bucket"),
-      new ExpressionInfo(classOf[RangeBucket].getName, "range_bucket"),
-      (children: Seq[Expression]) =>
-        RangeBucket(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("gram_run_stats"),
-      new ExpressionInfo(classOf[GramRunStats].getName, "gram_run_stats"),
-      (children: Seq[Expression]) =>
-        GramRunStats(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinhashSignature].getName,
-        "minhash_signature"),
-      (children: Seq[Expression]) =>
-        MinhashSignature(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_bits"),
-      new ExpressionInfo(classOf[SimhashBits].getName, "simhash_bits"),
-      (children: Seq[Expression]) =>
-        SimhashBits(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("window_mins"),
-      new ExpressionInfo(classOf[WindowMins].getName, "window_mins"),
-      (children: Seq[Expression]) =>
-        WindowMins(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_kgram_hashes"),
-      new ExpressionInfo(classOf[RollingKgramHashes].getName,
-        "rolling_kgram_hashes"),
-      (children: Seq[Expression]) =>
-        RollingKgramHashes(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("zorder_key"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "zorder_key"),
-      (children: Seq[Expression]) =>
-        ZOrderKey(children(0), children(1))))
-    // `lww_object(object, ts_ms)` in SQL text: the reference's whole surface
-    // is queries-from-outside (MasterServer.py:292-330), so the LWW winner
-    // function must be reachable from spark.sql, not just the Column API.
-    // Registered DIRECTLY as the native max_by(obj, struct(ts, obj)) the
-    // optimizer rule below rewrites the typed UDAF into — SQL users get the
-    // codegen-friendly plan with no UDAF round-trip at all. (The analyzer
-    // wraps a bare AggregateFunction into an AggregateExpression.)
-    ext.injectFunction((
-      new FunctionIdentifier("lww_object"),
-      new ExpressionInfo(classOf[MaxBy].getName, "lww_object"),
-      (children: Seq[Expression]) => {
-        val obj = children.head
-        val ts = children(1)
-        MaxBy(obj, CreateStruct(Seq(ts, obj))): AggregateFunction
-      }))
-    // the native vector kernels (r19): compiled replacements for the
-    // interpreted aggregate/zip_with/transform folds on the vectors
-    // pillar's hot paths — bit-exact to the declarative forms they
-    // replace (see VectorKernels' contract), so every oracle carries
-    // over unchanged.
-    // arity checked up front: a wrong-arity SQL call must surface as an
-    // analysis-time error naming the function, not a raw
-    // IndexOutOfBoundsException from children(1)
-    def arity(name: String, n: Int, children: Seq[Expression]): Unit =
-      if (children.size != n)
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> name, "expectedNum" -> n.toString,
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        arity("vec_dot", 2, children)
-        VecDot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_normalize"),
-      new ExpressionInfo(classOf[VecNormalize].getName, "vec_normalize"),
-      (children: Seq[Expression]) => {
-        arity("vec_normalize", 1, children)
-        VecNormalize(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("int8_dot"),
-      new ExpressionInfo(classOf[Int8Dot].getName, "int8_dot"),
-      (children: Seq[Expression]) => {
-        arity("int8_dot", 2, children)
-        Int8Dot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("int8_norm2"),
-      new ExpressionInfo(classOf[Int8Norm2].getName, "int8_norm2"),
-      (children: Seq[Expression]) => {
-        arity("int8_norm2", 1, children)
-        Int8Norm2(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("int8_decode"),
-      new ExpressionInfo(classOf[Int8Decode].getName, "int8_decode"),
-      (children: Seq[Expression]) => {
-        arity("int8_decode", 2, children)
-        Int8Decode(children(0), children(1))
-      }))
-    // r20: the IVF assignment argmax with the centroid MATRIX bound once —
-    // plan and codegen O(1) in k (the greatest-over-k-struct-literals form
-    // it replaces carried O(k·d) plan literals and a k-ary method, the
-    // production-k ceiling). Bit-identical membership (see the kernel's
-    // contract), so the q66/q78/q86 oracles carry over unchanged.
-    ext.injectFunction((
-      new FunctionIdentifier("nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
-      (children: Seq[Expression]) => {
-        arity("nearest_centroid", 3, children)
-        NearestCentroid(children(0), children(1), children(2))
-      }))
-    // Spark's OWN bloom-filter expression pair (the machinery behind
-    // runtime row-level filtering), surfaced as callable functions:
-    // `bloom_build(xxhash64(key), est_items, num_bits)` aggregates a
-    // serialized filter; `bloom_might_contain(filter, xxhash64(key))`
-    // probes it — codegen'd, no-false-negative. The q61 zero-corpus-shuffle
-    // incremental dedup is built on these.
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_build"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_build"),
-      (children: Seq[Expression]) =>
-        new BloomFilterAggregate(children(0), children(1), children(2)):
-          AggregateFunction))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[Expression]) =>
-        BloomFilterMightContain(children(0), children(1))))
+    GraftExtensions.Functions.foreach { case (name, cls, n, build) =>
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          GraftExtensions.arity(name, n, children)
+          build(children)
+        }))
+    }
     ext.injectOptimizerRule(_ => LwwObjectToMaxBy)
   }
+}
+
+object GraftExtensions {
+
+  /** Every injected function: (SQL name, expression class, arity, builder).
+    *  - `lww_object(object, ts_ms)`: the reference's whole surface is
+    *    queries-from-outside (`MasterServer.py:292-330`), so the LWW winner
+    *    must be reachable from SQL text. It is registered directly as the
+    *    native `max_by(obj, struct(ts, obj))` that [[LwwObjectToMaxBy]]
+    *    rewrites the typed UDAF into (the analyzer wraps a bare aggregate
+    *    function into an `AggregateExpression`).
+    *  - the vector kernels and `nearest_centroid`: compiled replacements
+    *    for the interpreted folds on the vectors pillar's hot paths,
+    *    bit-exact to the declarative forms (see VectorKernels' contract);
+    *    `nearest_centroid` binds the centroid matrix once, so plan and
+    *    codegen are O(1) in k.
+    *  - `bloom_build(xxhash64(key), est_items, num_bits)` and
+    *    `bloom_might_contain(filter, xxhash64(key))`: Spark's own
+    *    runtime-filter bloom pair (codegen'd, no false negatives), on which
+    *    q61's incremental dedup is built. */
+  private val Functions
+      : Seq[(String, Class[_], Int, Seq[Expression] => Expression)] =
+    Seq(
+      ("hamming_distance", classOf[HammingDistance], 2,
+        c => HammingDistance(c(0), c(1))),
+      ("range_bucket", classOf[RangeBucket], 2, c => RangeBucket(c(0), c(1))),
+      ("gram_run_stats", classOf[GramRunStats], 2,
+        c => GramRunStats(c(0), c(1))),
+      ("minhash_signature", classOf[MinhashSignature], 2,
+        c => MinhashSignature(c(0), c(1))),
+      ("simhash_bits", classOf[SimhashBits], 2, c => SimhashBits(c(0), c(1))),
+      ("window_mins", classOf[WindowMins], 2, c => WindowMins(c(0), c(1))),
+      ("rolling_kgram_hashes", classOf[RollingKgramHashes], 2,
+        c => RollingKgramHashes(c(0), c(1))),
+      ("zorder_key", classOf[ZOrderKey], 2, c => ZOrderKey(c(0), c(1))),
+      ("lww_object", classOf[MaxBy], 2,
+        c => MaxBy(c(0), CreateStruct(Seq(c(1), c(0))))),
+      ("vec_dot", classOf[VecDot], 2, c => VecDot(c(0), c(1))),
+      ("vec_normalize", classOf[VecNormalize], 1, c => VecNormalize(c(0))),
+      ("int8_dot", classOf[Int8Dot], 2, c => Int8Dot(c(0), c(1))),
+      ("int8_norm2", classOf[Int8Norm2], 1, c => Int8Norm2(c(0))),
+      ("int8_decode", classOf[Int8Decode], 2, c => Int8Decode(c(0), c(1))),
+      ("nearest_centroid", classOf[NearestCentroid], 3,
+        c => NearestCentroid(c(0), c(1), c(2))),
+      ("bloom_build", classOf[BloomFilterAggregate], 3,
+        c => new BloomFilterAggregate(c(0), c(1), c(2))),
+      ("bloom_might_contain", classOf[BloomFilterMightContain], 2,
+        c => BloomFilterMightContain(c(0), c(1))))
+
+  /** A wrong-arity SQL call surfaces as an analysis-time error naming the
+    * function, not as a raw IndexOutOfBoundsException from `children(n)`. */
+  private def arity(name: String, n: Int, children: Seq[Expression]): Unit =
+    if (children.size != n)
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> name, "expectedNum" -> n.toString,
+          "actualNum" -> children.size.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
 }

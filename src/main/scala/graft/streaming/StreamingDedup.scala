@@ -68,7 +68,7 @@ object StreamingDedup {
     * hash-range-partition the store (q52's bucketed layout) and rewrite
     * only touched shards.
     *
-    * The swap is [[StoreSwap]]'s, as in [[StreamingLww.mergeIntoStore]].
+    * The swap is [[StoreSwap]]'s whole-store `commit`.
     * One extra guard the LWW sink does not need: `sum(n_copies)` is NOT
     * idempotent (LWW's strict-`>` merge is), so the store carries an
     * `_applied_upto` marker (underscore-prefixed: invisible to the parquet

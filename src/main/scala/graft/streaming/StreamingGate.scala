@@ -10,23 +10,19 @@ import graft.Scratch
 import graft.TripleStore
 import graft.operators.Relational
 
-/** Q67: the anti-entropy merge driven through an ACTUAL streaming query —
-  * the gate entry that closes the loop StreamingLwwSpec proves in-process.
+/** The streaming gate entries: each exports a corpus table in a wire
+  * format, replays it through an ACTUAL `readStream` query
+  * (`maxFilesPerTrigger=1`, so every sink really runs micro-batch by
+  * micro-batch) and returns the resulting store for the gate's hash
+  * compare against a DuckDB oracle:
+  *   - q70: exact-dedup store ([[StreamingDedup.mergeIntoDedupStore]]);
+  *   - q74: gap sessionization ([[StreamingSessions.sessionize]]);
+  *   - q79 and q83: one LWW replay ([[lwwReplay]]) into the partition-wise
+  *     sink, across two query incarnations over one checkpoint;
+  *   - q80: TTL state eviction ([[StreamingLww.winnersWithTtl]]).
   *
-  * The remote changelog (`MasterServer.py:384-432`'s per-round payload) is
-  * exported in the reference's JSONL wire format, split into several files,
-  * and replayed through `readStream` → [[StreamingLww.mergeIntoStore]]
-  * (micro-batched by `maxFilesPerTrigger=1`, so the LWW merge really runs
-  * incrementally) into a store seeded with the local triples. The final
-  * store is returned for the driver's hash compare against the SAME oracle
-  * as q3/q31/q32 (SparkEntry.MergeOracleSql) — valid because chunked LWW
-  * merge ≡ one-shot merge here: the comparator is associative/commutative
-  * (LwwSpec's CRDT laws) and the changelog carries at most one row per
-  * logical key (every 3rd order's `<hasStatus>`), so no within-stream tie
-  * can interact with the store's local-wins prio across batch boundaries.
-  *
-  * Memoized per sf dir (the streaming job runs once per JVM, like q28's
-  * reshard); repeated calls re-read the merged store only.
+  * Each replay runs once per JVM and corpus ([[replayOnce]]); repeated
+  * calls re-read its store only.
   */
 object StreamingGate {
 
@@ -109,43 +105,47 @@ object StreamingGate {
     spark.read.parquet(store).orderBy("content_hash")
   }
 
-  /** q79's shard cut points over the triple store's subject domain
-    * (`<cust_…>` < `<nation_…>` < `<order_…>` in UTF-8 order): customers
-    * and nations land in shards 0/1, which the remote changelog — always
-    * `<order_…>` subjects ([[TripleStore.remoteChangelog]]) — can NEVER
-    * touch, so the replay has shards that must come out byte-identical. */
+  /** The LWW replay's shard cut points over the triple store's subject
+    * domain (`<cust_…>` < `<nation_…>` < `<order_…>` in UTF-8 order):
+    * customers and nations land in shards 0/1, which the remote changelog —
+    * always `<order_…>` subjects ([[TripleStore.remoteChangelog]]) — can
+    * NEVER touch, so the replay has shards that must come out
+    * byte-identical. */
   private val PartBoundaries =
     Seq("<nation_", "<order_", "<order_3", "<order_6")
 
-  /** Q79: the PARTITIONED streaming sink driver-gated — q83's JSONL replay
-    * driven into [[StreamingLww.mergeIntoStorePartitioned]] (per-batch I/O
-    * pruned to the shards the batch touches, per-shard atomic swap)
-    * instead of the monolithic whole-store rewrite. Same relation, same
-    * oracle as q3/q83 (chunked LWW merge ≡ one-shot; the store layout is
-    * physical, not semantic). The gate run itself asserts the scale claim:
-    * the cust/nation shards receive no changelog keys and their part files
-    * must be BYTE-UNTOUCHED after the replay (file listing + sizes equal),
-    * while at least one order shard was rewritten — a silent fall-back to
-    * whole-store rewriting fails the gate loudly. */
-  def q79StreamMergePart(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(spark, dir, "graft_stream_part") {
+  /** The remote changelog's JSONL replay into
+    * [[StreamingLww.mergeIntoStorePartitioned]], run once per JVM and
+    * corpus for both q79 and q83. The seed is the local store, COMPACTED
+    * (a materialized store holds at most one row per logical key, and the
+    * sink never rewrites an untouched shard, so a duplicated seed key
+    * would survive to the final read) and laid out shard-partitioned on
+    * [[PartBoundaries]]. The wire export is staged outside the watched
+    * source dir and released in two phases over ONE checkpoint: the first
+    * query incarnation runs to termination (`Trigger.AvailableNow` stops
+    * like a killed query: offsets committed, shards swapped, query object
+    * gone), then the rest lands and a second incarnation starts from the
+    * checkpoint. The merged relation equals q3's one-shot merge: the
+    * comparator is associative and commutative (LwwSpec's CRDT laws, and
+    * compacting a side first never changes a later merge's winner).
+    *
+    * Both entries' claims are asserted in the run, since the strict-`>`
+    * merge is idempotent and the final hash alone cannot show them:
+    *   - q79 (per-batch I/O pruned to the touched shards): the cust/nation
+    *     shards' files are byte-untouched (name, size and md5 equal),
+    *     while at least one order shard was rewritten;
+    *   - q83 (restart resumes, never replays): each incarnation's
+    *     `numInputRows` total equals EXACTLY its phase's wire line count
+    *     (O13's recovery semantics: a recovered node is fed exactly the
+    *     updates it missed, `MasterServer.py:186-205`). */
+  private def lwwReplay(spark: SparkSession, dir: String): DataFrame = {
+    val store = replayOnce(spark, dir, "graft_stream_lww") {
       (rs, src, storePath, ckpt) =>
-        // seed: the local store, laid out shard-partitioned with the SAME
-        // boundaries the sink routes on. COMPACTED first (q31's invariant):
-        // a materialized store holds at most one row per logical key. The
-        // monolithic mergeIntoStore sink masks a duplicated-key seed: every
-        // batch re-merges the WHOLE store; the partitioned sink correctly
-        // never rewrites an untouched shard, so raw duplicate keys there
-        // would survive to the final read (the adversarial corpus catches
-        // exactly this — same class as the uncompacted q31 bucketed store)
         TripleStore.triples(rs, dir)
           .transform(graft.operators.Lww.compact)
           .withColumn("shard",
             graft.plans.RangeBucket.shardId(col("subject"), PartBoundaries))
           .write.partitionBy("shard").parquet(storePath)
-        // each file's signature includes an md5 of its bytes, so
-        // "untouched" means not rewritten, not merely same-named and
-        // same-sized (gate-scale shards bound the hash pass)
         val fs = fsOf(rs, storePath)
         def listing(): Map[String, Set[(String, Long, String)]] = {
           def md5(f: Path): String = {
@@ -160,12 +160,39 @@ object StreamingGate {
             .toMap
         }
         val before = listing()
+        // the staging dir sits under the same replay base, so it is
+        // released with it
+        val stage = s"$src.stage"
         TripleStore.writeJsonl(
-          TripleStore.remoteChangelog(rs, dir).repartition(NumBatches), src)
-        StreamingLww.mergeIntoStorePartitioned(
+          TripleStore.remoteChangelog(rs, dir).repartition(NumBatches),
+          stage)
+        val parts = fs.listStatus(new Path(stage)).map(_.getPath)
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+        require(parts.length >= 2,
+          s"LWW replay needs >= 2 wire files to split, got ${parts.length}")
+        fs.mkdirs(new Path(src))
+        def release(files: Seq[Path]): Long = files.map { f =>
+          val dst = new Path(src, f.getName)
+          require(fs.rename(f, dst), s"LWW replay could not release $f")
+          val s = scala.io.Source.fromInputStream(fs.open(dst), "UTF-8")
+          try s.getLines().count(_.nonEmpty).toLong finally s.close()
+        }.sum
+        def runIncarnation(files: Seq[Path], label: String): Unit = {
+          val expectRows = release(files)
+          require(expectRows > 0, s"q83 $label phase carried no rows")
+          val q = StreamingLww.mergeIntoStorePartitioned(
             StreamingLww.jsonlSource(rs, src, maxFilesPerTrigger = 1),
             storePath, ckpt, PartBoundaries, Trigger.AvailableNow())
-          .awaitTermination()
+          q.awaitTermination()
+          val got = q.recentProgress.toSeq.map(_.numInputRows).sum
+          require(got == expectRows,
+            s"q83 $label incarnation processed $got input rows, expected " +
+              s"exactly $expectRows — the checkpoint did not scope it to " +
+              "its own phase of the wire")
+        }
+        val (phase1, phase2) = parts.splitAt(parts.length / 2)
+        runIncarnation(phase1, "first")
+        runIncarnation(phase2, "second (restarted)")
         val after = listing()
         val untouched = before.keySet.filter(k => after.get(k) == before.get(k))
         require((after.keySet -- untouched).nonEmpty,
@@ -179,71 +206,17 @@ object StreamingGate {
       .orderBy("subject", "predicate")
   }
 
-  /** Q83: streaming checkpoint-RESTART recovery driver-gated — the restart
-    * contract `StreamingLwwSpec` pins in-process (a NEW query incarnation
-    * on the SAME checkpoint absorbs a post-restart extension without
-    * reprocessing what the first incarnation committed) finally executing
-    * in the driver gate. The remote changelog's JSONL replay is split
-    * across TWO `readStream` incarnations over ONE checkpoint into
-    * [[StreamingLww.mergeIntoStore]]: the wire export is staged whole, half
-    * the files are released and incarnation 1 runs to termination
-    * (`Trigger.AvailableNow` — it stops exactly like a killed query: offsets
-    * committed, store swapped, JVM-side query object gone), then the
-    * remaining files land and incarnation 2 starts FROM THE CHECKPOINT.
-    * Same relation and oracle as q3 (chunked LWW merge ≡ one-shot).
-    *
-    * The recovery claim is asserted IN the gate run, not just implied by
-    * the final hash (the strict-`>` merge is idempotent, so values alone
-    * cannot distinguish resume from replay): each incarnation's
-    * `numInputRows` total must equal EXACTLY its phase's wire line count —
-    * incarnation 2 reprocessing phase 1 (offsets not restored) or missing
-    * part of phase 2 fails loudly here. Reference anchor: O13's recovery
-    * semantics — a recovered node is fed exactly the pending updates it
-    * missed, not the full history (`MasterServer.py:186-205`). */
-  def q83StreamRestart(spark: SparkSession, dir: String): DataFrame = {
-    val store = replayOnce(spark, dir, "graft_stream_restart") {
-      (rs, src, storePath, ckpt) =>
-        TripleStore.triples(rs, dir).write.parquet(storePath)
-        // the full wire export, staged OUTSIDE the watched source dir and
-        // released into it in two phases (the staging dir sits under the
-        // same replay base, so it is released with it)
-        val stage = s"$src.stage"
-        TripleStore.writeJsonl(
-          TripleStore.remoteChangelog(rs, dir).repartition(NumBatches),
-          stage)
-        val fs = fsOf(rs, stage)
-        val parts = fs.listStatus(new Path(stage)).map(_.getPath)
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
-        require(parts.length >= 2,
-          s"q83 replay needs >= 2 wire files to split, got ${parts.length}")
-        fs.mkdirs(new Path(src))
-        def release(files: Seq[Path]): Long = files.map { f =>
-          val dst = new Path(src, f.getName)
-          require(fs.rename(f, dst), s"q83 replay could not release $f")
-          val s = scala.io.Source.fromInputStream(fs.open(dst), "UTF-8")
-          try s.getLines().count(_.nonEmpty).toLong finally s.close()
-        }.sum
-        def runIncarnation(expectRows: Long, label: String): Unit = {
-          val q = StreamingLww.mergeIntoStore(
-            StreamingLww.jsonlSource(rs, src, maxFilesPerTrigger = 1),
-            storePath, ckpt, Trigger.AvailableNow())
-          q.awaitTermination()
-          val got = q.recentProgress.toSeq.map(_.numInputRows).sum
-          require(got == expectRows,
-            s"q83 $label incarnation processed $got input rows, expected " +
-              s"exactly $expectRows — the checkpoint did not scope it to " +
-              "its own phase of the wire")
-        }
-        val (phase1, phase2) = parts.splitAt(parts.length / 2)
-        val n1 = release(phase1)
-        require(n1 > 0, "q83 phase 1 carried no rows")
-        runIncarnation(n1, "first")
-        val n2 = release(phase2)
-        require(n2 > 0, "q83 phase 2 carried no rows")
-        runIncarnation(n2, "second (restarted)")
-    }
-    spark.read.parquet(store).orderBy("subject", "predicate")
-  }
+  /** Q79: the partition-wise streaming sink in the gate, through
+    * [[lwwReplay]]; same relation and oracle as q3 (the store layout is
+    * physical, not semantic). */
+  def q79StreamMergePart(spark: SparkSession, dir: String): DataFrame =
+    lwwReplay(spark, dir)
+
+  /** Q83: streaming checkpoint-RESTART recovery in the gate, through
+    * [[lwwReplay]]'s two query incarnations over one checkpoint; same
+    * relation and oracle as q3. */
+  def q83StreamRestart(spark: SparkSession, dir: String): DataFrame =
+    lwwReplay(spark, dir)
 
   /** q80's watermark-driver sentinel key: a subject outside every corpus
     * domain (derived subjects are `<order_…>`), filtered from the result.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -98,43 +99,6 @@ object StreamingLww {
       }
   }
 
-  /** Streaming changelog → persistent store: each micro-batch LWW-merges
-    * into the parquet store via `foreachBatch` (the reference's
-    * merge-orchestration loop, `MasterServer.py:384-432`, as a sink). The
-    * default trigger processes batches as they arrive; pass
-    * `Trigger.ProcessingTime("5 seconds")` for the reference's 5 s
-    * anti-entropy cadence (`MasterServer.py:233`).
-    *
-    * The store swap is [[StoreSwap]]'s write-new-then-rename (never read
-    * and overwrite the same files in one job). This whole-store rewrite is
-    * the SMALL-store sink (one swap, single directory); the scale path is
-    * [[mergeIntoStorePartitioned]], which prunes the read and the rewrite
-    * to the shards each batch touches.
-    */
-  def mergeIntoStore(updates: Dataset[Triple], storePath: String,
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = updates.sparkSession
-    updates.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[Triple], _: Long) =>
-        val swap = new StoreSwap(batch.sparkSession, storePath)
-        swap.recover()
-        val base =
-          if (swap.exists) spark.read.parquet(storePath)
-          else batch.limit(0).toDF()
-        // merge (strict->) not upsert: a stale arrival must lose to the
-        // store's newer row (MongoDBConnector.py:150-153), and batch
-        // retries (same rows redelivered) are then no-ops — idempotent.
-        Lww.merge(base, batch.toDF())
-          .write.mode(SaveMode.Overwrite).parquet(swap.staging)
-        swap.commit()
-      }
-      .start()
-  }
-
   /** Stable range-shard of a subject against sorted boundary cut points:
     * shard k holds subjects in [boundaries(k-1), boundaries(k)) — the Spark
     * twin of the reference's declared `SHARDING` dict (`MasterServer.py:59-63`),
@@ -145,11 +109,19 @@ object StreamingLww {
   private def shardCol(boundaries: Seq[String]): Column =
     graft.plans.RangeBucket.shardId(col("subject"), boundaries)
 
-  /** The scale-safe streaming sink: the store is a shard-PARTITIONED parquet
+  /** The streaming LWW sink, the reference's merge-orchestration loop
+    * (`MasterServer.py:384-432`) as a `foreachBatch` sink. The default
+    * trigger processes batches as they arrive; pass
+    * `Trigger.ProcessingTime("5 seconds")` for the reference's 5 s
+    * anti-entropy cadence (`MasterServer.py:233`).
+    *
+    * The store is a shard-PARTITIONED parquet
     * layout (`storePath/shard=k/`), and each micro-batch LWW-merges into
     * ONLY the shards its keys touch — read pruned to those partition
     * directories, merged output staged and swapped in per touched shard by
-    * [[StoreSwap]]. Each move is one `FileSystem.rename` on the store's
+    * [[StoreSwap]]. The batch is read once and pins no executor blocks: it
+    * is written partitioned by shard to a [[Scratch.scoped]] directory,
+    * whose `shard=k` names are the touched shards. Each move is one `FileSystem.rename` on the store's
     * filesystem, atomic where that rename is (HDFS, local disk); a rename
     * that returns `false` fails the batch. A crash in ANY window leaves
     * each shard wholly old or wholly new — never deleted — and the
@@ -166,38 +138,47 @@ object StreamingLww {
     * same structure. */
   def mergeIntoStorePartitioned(updates: Dataset[Triple], storePath: String,
       checkpointPath: String, boundaries: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = updates.sparkSession
-    import spark.implicits._
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     updates.writeStream
       .outputMode("update")
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[Triple], _: Long) =>
-        val swap = new StoreSwap(batch.sparkSession, storePath)
+        val bs = batch.sparkSession
+        val swap = new StoreSwap(bs, storePath)
         swap.recover()
-        // pinned for the batch: released once its shards are committed
-        Scratch.pinned(Scratch.pin(
-            batch.toDF().withColumn("shard", shardCol(boundaries)))) { b =>
-          // bounded driver-side collect: at most |boundaries|+1 shard ids
-          val touched = b.select("shard").distinct().as[Int].collect().toSeq
+        // the batch is read ONCE, into scratch shard directories: their
+        // names are the touched shards and the merge reads them back (a
+        // second action on `batch` would re-read the source and count its
+        // rows twice in the query's numInputRows)
+        Scratch.scoped(bs) { dir =>
+          val staged = new Path(dir, "batch")
+          val rows = batch.toDF().withColumn("shard", shardCol(boundaries))
+          rows.write.partitionBy("shard").parquet(staged.toString)
+          val touched = staged.getFileSystem(bs.sessionState.newHadoopConf())
+            .listStatus(staged).map(_.getPath.getName)
+            .filter(_.startsWith("shard=")).toSeq
           if (touched.nonEmpty) {
+            // the store's layout is the staged batch's: reading both with
+            // that schema spares a footer-reading job per read
+            def read(path: String): DataFrame =
+              bs.read.schema(rows.schema).parquet(path)
+            val b = read(staged.toString)
             val base =
               if (swap.hasShards)
-                spark.read.parquet(storePath)
-                  .filter(col("shard").isin(touched: _*))
+                read(storePath).filter(col("shard")
+                  .isin(touched.map(_.stripPrefix("shard=").toInt): _*))
               else b.limit(0)
             Lww.merge(base, b)
               .withColumn("shard", shardCol(boundaries))
               .write.mode(SaveMode.Overwrite)
               .partitionBy("shard")
               .parquet(swap.staging)
-            swap.commitShards(touched.map(k => s"shard=$k"))
+            swap.commitShards(touched)
           }
         }
       }
       .start()
-  }
 
   /** [[winners]] with watermark-driven state eviction (SURVEY §2.2's
     * `GroupStateTimeout` ask): per-key state is dropped once the event-time

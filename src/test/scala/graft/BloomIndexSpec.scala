@@ -401,7 +401,7 @@ class BloomIndexSpec extends AnyFunSuite {
       .select(xxhash64(col("content_hash")).as("h"))
       .as[Long].collect().groupBy(h => java.lang.Math.floorMod(h, 4L))
     (0L until 4L).foreach { s =>
-      val bf = BloomIndex.fetchShardBlob(conf, ver, s, hasShardCol = true)
+      val bf = BloomIndex.fetchShardBlob(conf, ver, s)
       byShard.get(s) match {
         case Some(keys) =>
           assert(bf.nonEmpty, s"shard $s should carry a bloom")
@@ -418,35 +418,9 @@ class BloomIndexSpec extends AnyFunSuite {
       }
     }
     val e = intercept[IllegalArgumentException] {
-      BloomIndex.fetchShardBlob(conf, ver, 99L, hasShardCol = true)
+      BloomIndex.fetchShardBlob(conf, ver, 99L)
     }
     assert(e.getMessage.contains("missing"))
-  }
-
-  test("a pre-r16 artifact (no shard/num_shards columns) reads as a " +
-    "1-shard index: admit matches the anti-join relation and the next " +
-    "append self-upgrades the schema") {
-    val corpus = hashed((0L until 30L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
-    // the r15 layout verbatim: one row, no shard columns
-    corpus.select(call_function("bloom_build",
-        xxhash64(col("content_hash")), lit(BloomIndex.Expected),
-        lit(BloomIndex.NumBits)).as("bloom"))
-      .select(col("bloom"), lit(BloomIndex.Expected).as("expected"),
-        lit(BloomIndex.NumBits).as("num_bits"), lit(0L).as("n_appends"))
-      .coalesce(1).write.parquet(s"$idx/v0")
-    val batch = hashed(Seq((100L, "doc 3"), (101L, "fresh a"),
-      (102L, "fresh b"), (103L, "fresh b")))
-    assert(admitted(idx, batch, corpus) == reference(batch, corpus))
-    val a = BloomIndex.admit(spark, idx, batch, corpus)
-    BloomIndex.append(spark, idx, a.select("content_hash"))
-    val v1 = spark.read.parquet(s"$idx/v1")
-    assert(v1.schema.fieldNames.contains("num_shards") &&
-      v1.select("num_shards").head().getLong(0) == 1L,
-      "append over a legacy artifact must write the sharded schema")
-    // the upgraded index rejects the replay
-    val corpus1 = corpus.unionByName(batch.select("doc_id", "content_hash"))
-    assert(admitted(idx, batch, corpus1).isEmpty)
   }
 
   test("ShardBlobCache memoizes per key, bounds resident BYTES (not " +

@@ -29,10 +29,9 @@ class ConcurrencySpec extends AnyFunSuite {
     "q60_neardup_clusters", "q61_bloom_dedup", "q62_source_report",
     "q63_clf_score", "q64_mix_plan",
     // round-8: the memoized IVF index layout (concurrent first probes must
-    // block on ONE build) and the once-per-session streaming-replay store
-    // (q67_stream_merge held this slot until its r17 retirement; q83 runs
-    // the same JSONL replay scaffold across TWO query incarnations over
-    // one checkpoint — a strictly larger concurrent-memoization surface)
+    // block on ONE build) and the once-per-JVM streaming-replay store (q83
+    // runs the JSONL replay across TWO query incarnations over one
+    // checkpoint)
     "q66_ivf_topk", "q83_stream_restart",
     // round-9: the broadcast-query LSH probe (q68), the memoized z-ordered
     // layout (q69 — concurrent first probes must block on ONE ETL write),
@@ -74,6 +73,30 @@ class ConcurrencySpec extends AnyFunSuite {
       results.foreach { case (n, r) =>
         assert(r == serial(n), s"$n diverged under concurrent execution")
       }
+    } finally { pool.shutdown(); () }
+  }
+
+  test("q79 and q83 share one LWW replay: their concurrent first calls " +
+    "run two query incarnations and four micro-batches between them") {
+    // a private copy of the corpus: the replay runs once per JVM and
+    // corpus path, and other suites replay this corpus under its own path
+    val dir = Scratch.path(spark, "lww_replay_corpus")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(sf),
+      new java.io.File(dir))
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val (rows, work) = graft.obs.Work.of(spark) {
+        Await.result(Future.sequence(Seq(
+          graft.streaming.StreamingGate.q79StreamMergePart(_, _),
+          graft.streaming.StreamingGate.q83StreamRestart(_, _)).map(q =>
+          Future(q(spark, dir).collect().map(_.toString).toSeq))),
+          5.minutes)
+      }
+      assert(rows.head == rows(1) && rows.head.nonEmpty)
+      assert(work.progress.map(_.runId).distinct.size == 2)
+      assert(work.progress.size == 4,
+        s"${work.progress.size} micro-batches across both entries")
     } finally { pool.shutdown(); () }
   }
 }

@@ -200,6 +200,20 @@ class LwwSpec extends AnyFunSuite {
     assert(out == Set(("<s>", "<p>", "NEW", 50L, "new_row")))
   }
 
+  test("upsertPoint scans its one key once: one Spark job per call") {
+    Scratch.scoped(spark) { dir =>
+      df(List(("<s>", "<p>", "OLD", 100L), ("<s2>", "<p>", "OTHER", 5L)))
+        .write.parquet(s"$dir/store")
+      val store = spark.read.parquet(s"$dir/store")
+      val (out, work) = graft.obs.Work.of(spark) {
+        Lww.upsertPoint(store, "<s>", "<p>", "NEW", 50L).collect()
+      }
+      assert(out.length == 2)
+      assert(work.jobs == 1,
+        s"upsertPoint ran ${work.jobs} jobs; one scan of the key needs 1")
+    }
+  }
+
   test("changelogUnion: newer changelog wins key collisions " +
     "(MasterServer.py:106-115)") {
     val older = List(("<s>", "<p>", "OLD", 100L))

@@ -61,4 +61,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .as[(String, String, String)].collect().toSet
     assert(got == want && got.nonEmpty)
   }
+
+  test("a wrong-arity call to any injected function is an analysis error " +
+    "naming the function") {
+    val arities = Seq("hamming_distance" -> 2, "range_bucket" -> 2,
+      "gram_run_stats" -> 2, "minhash_signature" -> 2, "simhash_bits" -> 2,
+      "window_mins" -> 2, "rolling_kgram_hashes" -> 2, "zorder_key" -> 2,
+      "lww_object" -> 2, "vec_dot" -> 2, "vec_normalize" -> 1,
+      "int8_dot" -> 2, "int8_norm2" -> 1, "int8_decode" -> 2,
+      "nearest_centroid" -> 3, "bloom_build" -> 3, "bloom_might_contain" -> 2)
+    arities.foreach { case (name, n) =>
+      Seq(n - 1, n + 1).filter(_ > 0).foreach { k =>
+        val call = s"SELECT $name(${Seq.fill(k)("'a'").mkString(", ")})"
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(call))
+        assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" &&
+          e.getMessage.contains(name), s"$call: ${e.getMessage}")
+      }
+    }
+  }
 }

@@ -92,52 +92,6 @@ class StreamingLwwSpec extends AnyFunSuite {
     assert(batchTwin == Set(Triple("<t>", "<p>", "😀", 500L)))
   }
 
-  test("foreachBatch merge sink: store converges to the batch LWW result " +
-    "across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val source = MemoryStream[Triple]
-    source.addData(batch1: _*)
-    val q1 = StreamingLww.mergeIntoStore(source.toDS(), storePath, ckpt)
-    q1.awaitTermination() // AvailableNow: drains what's there, then stops
-    source.addData(batch2: _*)
-    val q2 = StreamingLww.mergeIntoStore(source.toDS(), storePath, ckpt)
-    q2.awaitTermination()
-
-    val store = spark.read.parquet(storePath).as[Triple].collect().toSet
-    val batch = Lww.upsert(
-        Seq.empty[Triple].toDF("subject", "predicate", "object", "ts_ms"),
-        (batch1 ++ batch2).toDF("subject", "predicate", "object", "ts_ms"))
-      .as[Triple].collect().toSet
-    assert(store == batch)
-  }
-
-  test("merge sink crash recovery: a store stranded at '.old' mid-swap is " +
-    "restored before the next batch merges") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_crash")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val source = MemoryStream[Triple]
-    source.addData(batch1: _*)
-    StreamingLww.mergeIntoStore(source.toDS(), storePath, ckpt)
-      .awaitTermination()
-    // simulate dying between the two swap moves: base gone, .old present
-    java.nio.file.Files.move(java.nio.file.Paths.get(storePath),
-      java.nio.file.Paths.get(storePath + ".old"))
-    source.addData(batch2: _*)
-    StreamingLww.mergeIntoStore(source.toDS(), storePath, ckpt)
-      .awaitTermination()
-    val store = spark.read.parquet(storePath).as[Triple].collect().toSet
-    // batch1's state must have survived the simulated crash
-    assert(store == Set(
-      Triple("<a>", "<p>", "v2", 300L),
-      Triple("<b>", "<p>", "v2", 400L),
-      Triple("<c>", "<q>", "new", 50L)))
-  }
-
   test("partitioned merge sink: converges to batch LWW and leaves " +
     "untouched shards' files byte-for-byte alone") {
     implicit val sqlCtx = spark.sqlContext
@@ -186,6 +140,29 @@ class StreamingLwwSpec extends AnyFunSuite {
       .as[Triple].collect().toSet
     assert(store == batch)
     assert(store.contains(Triple("<c>", "<q>", "y", 80L))) // LWW within shard
+  }
+
+  test("partitioned merge sink reads each micro-batch once: a batch into " +
+    "an existing store runs 3 Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    Scratch.scoped(spark) { dir =>
+      val boundaries = Seq("<b>", "<c>")
+      val source = MemoryStream[Triple]
+      def run(): Unit = StreamingLww.mergeIntoStorePartitioned(source.toDS(),
+        s"$dir/store", s"$dir/ckpt", boundaries).awaitTermination()
+      source.addData(Triple("<a>", "<p>", "v1", 100L),
+        Triple("<c>", "<q>", "x", 50L))
+      run()
+      source.addData(Triple("<a>", "<p>", "v2", 300L),
+        Triple("<c>", "<q>", "y", 80L))
+      val (_, work) = graft.obs.Work.of(spark)(run())
+      // the batch's rows are read once: a second read would count twice
+      assert(work.progress.map(_.numInputRows) == Seq(2L))
+      // the batch's staged write, then the merge's shuffle and its write;
+      // a pinned batch, a touched-shard collect or a footer-reading
+      // schema inference would each add jobs
+      assert(work.jobs == 3, s"one micro-batch ran ${work.jobs} jobs")
+    }
   }
 
   /** The partitioned sink's crash-recovery case on session `s`: after a
@@ -489,9 +466,9 @@ class StreamingLwwSpec extends AnyFunSuite {
   }
 
   test("q83's replay merges to exactly the q3 batch LWW relation") {
-    // q83 streams the remote changelog as JSONL files into mergeIntoStore,
-    // in two query incarnations over one checkpoint; chunked strict-`>`
-    // LWW merging equals the one-shot batch merge
+    // q83 streams the remote changelog as JSONL files into the
+    // partition-wise sink, in two query incarnations over one checkpoint;
+    // chunked strict-`>` LWW merging equals the one-shot batch merge
     val sf = "/root/testdata/sf0.001"
     val streamed = graft.streaming.StreamingGate.q83StreamRestart(spark, sf)
       .collect().map(_.toString).toSeq
