@@ -59,6 +59,15 @@ readers=$(grep -rl 'SPARK_GRAFT_CPUS' src/main/scala \
   | grep -v '^src/main/scala/graft/LocalSession\.scala$' | xargs)
 step "one SPARK_GRAFT_CPUS reader (LocalSession)${readers:+ (also in: $readers)}" \
   "$([ -z "$readers" ]; echo $?)"
+# one local-filesystem owner: NioLocalFs.scala subclasses Hadoop's local
+# filesystem and LocalSession registers it for file:; a subclass or an
+# fs.*.file.impl setting elsewhere brings back the chmod / readlink forks
+# of Hadoop's shell path
+localfs=$(grep -rlE 'LocalFileSystem|fs\.file\.impl|fs\.AbstractFileSystem\.file\.impl' \
+  src/main/scala \
+  | grep -vE '^src/main/scala/graft/(NioLocalFs|LocalSession)\.scala$' | xargs)
+step "one local-filesystem owner (NioLocalFs)${localfs:+ (also in: $localfs)}" \
+  "$([ -z "$localfs" ]; echo $?)"
 
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="

@@ -48,6 +48,12 @@ object LocalSession {
       // its copy in tmp.
       .config("spark.sql.warehouse.dir", warehouseDir("graft_warehouse"))
       .config("spark.ui.enabled", "false")
+      // file: through graft's fork-free local filesystem (NioLocalFs.scala),
+      // for both Hadoop APIs: FileSystem (data files, _SUCCESS, staging
+      // directories) and FileContext (streaming offset and commit logs)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalAfs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -605,7 +605,7 @@ object BloomIndex {
   /** The rename's TRUE return is still not proof of winning the slot: a
     * racer committing `target` inside the check-to-rename window makes
     * Hadoop rename-onto-an-existing-DIRECTORY move the source INTO it and
-    * report success (HDFS semantics; RawLocalFileSystem's copy fallback
+    * report success (HDFS semantics; the local filesystem's copy fallback
     * lands the same nested shape) — the loser's snapshot would sit
     * invisibly (dot-prefixed) inside the winner's version and its hashes
     * would never be folded in. Detect the nested shape, remove it, and

@@ -127,6 +127,9 @@ object StreamingDedup {
       } else checkpointPath
     } catch { case scala.util.control.NonFatal(_) => checkpointPath }
 
+  /** The dedup store's columns, as every merge writes them. */
+  private val StoreSchema = "content_hash STRING, rep_doc_id LONG, n_copies LONG"
+
   /** One micro-batch's merge, exposed for direct replay testing.
     * `streamId` is the replay-guard scope — in production the owning
     * query's PERSISTED ID resolved by [[streamScope]] (never the checkpoint
@@ -169,7 +172,8 @@ object StreamingDedup {
           count(lit(1)).as("n_copies"))
       val merged =
         if (swap.exists)
-          spark.read.parquet(storePath).unionByName(agg)
+          // the store's fixed schema spares a footer-reading job per batch
+          spark.read.schema(StoreSchema).parquet(storePath).unionByName(agg)
             .groupBy("content_hash")
             .agg(min(col("rep_doc_id")).as("rep_doc_id"),
               sum(col("n_copies")).as("n_copies"))

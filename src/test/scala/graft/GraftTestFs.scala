@@ -4,13 +4,14 @@ import java.io.File
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** A non-local default filesystem for tests: the local disk under the
   * scheme `graftfs`, with every path stored under [[GraftTestFs.prefix]].
-  * Statuses and listings carry the caller's paths, not the stored ones. */
-class GraftTestFs extends RawLocalFileSystem {
+  * Statuses and listings carry the caller's paths, not the stored ones.
+  * Built on [[NioRawLocalFs]], so it launches no processes either. */
+class GraftTestFs extends NioRawLocalFs {
   override def getUri: URI = URI.create("graftfs:///")
   override def pathToFile(path: Path): File =
     new File(GraftTestFs.prefix.toString + makeQualified(path).toUri.getPath)

@@ -135,6 +135,19 @@ class StreamingDedupSpec extends AnyFunSuite {
       "a new stream's first batch was wrongly treated as a replay")
   }
 
+  test("a batch merged into an existing store reads it with the store's " +
+    "schema: no footer-reading inference job") {
+    Scratch.scoped(spark) { dir =>
+      val store = s"$dir/store"
+      StreamingDedup.applyDedupBatch(
+        Seq((1L, "a")).toDF("doc_id", "text"), store, 0L, "ckptA")
+      val (_, work) = graft.obs.Work.of(spark)(StreamingDedup.applyDedupBatch(
+        Seq((2L, "a"), (3L, "b")).toDF("doc_id", "text"), store, 1L, "ckptA"))
+      // a bare read of the store adds a footer-reading schema-inference job
+      assert(work.jobs == 3, s"one batch ran ${work.jobs} jobs")
+    }
+  }
+
   test("replay-guard scope survives checkpoint recreation: the scope is the " +
     "query's PERSISTED id (not the path), so a new stream at the same " +
     "checkpoint path is not suppressed") {
