@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Round-close checklist, mechanized. Runs every check a round-close record
 # claims, in order, and prints a one-screen PASS/FAIL summary:
-#   1. full unit suite (sbt test), a check that its JVM left no scratch
-#      root (graft_scratch_*, graftfs_root*), then the benchmark's self-checks
-#      (python3 perfbench/test_perfbench.py)
+#   1. full unit suite (sbt test), a check that it left nothing named
+#      graft_* or graftfs_root* in the temp dir, then the benchmark's
+#      self-checks (python3 perfbench/test_perfbench.py)
 #   2. gate replay on all four corpora (sf0.001, sf0.01, sf0.1, adversarial)
 #      via graft.Verify -> scripts/check.py (DuckDB oracle, hash-exact)
 #   3. sf0.1 bench (graft.Bench, stdout line + BENCH_DETAIL_sf0.1.json)
@@ -68,6 +68,15 @@ localfs=$(grep -rlE 'LocalFileSystem|fs\.file\.impl|fs\.AbstractFileSystem\.file
   | grep -vE '^src/main/scala/graft/(NioLocalFs|LocalSession)\.scala$' | xargs)
 step "one local-filesystem owner (NioLocalFs)${localfs:+ (also in: $localfs)}" \
   "$([ -z "$localfs" ]; echo $?)"
+# no test-only surface: every non-override def in src/main is named again
+# somewhere in src/main or perfbench/src outside comments, except the spec
+# references the script lists with their reasons; a function only specs
+# call is engine code that no gate entry, tool or benchmark runs
+python3 scripts/test_only_surface.py > "$LOGS/test_only_surface.log" 2>&1
+tsrc=$?
+testonly=$(grep -v '^kept ' "$LOGS/test_only_surface.log" \
+  | awk '{print $NF}' | xargs)
+step "no test-only surface${testonly:+ (only tests reach: $testonly)}" "$tsrc"
 
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="
@@ -82,13 +91,15 @@ if [ "$SKIP_TEST" -eq 0 ]; then
   [ -n "$ntests" ] || ntests='?'
   step "sbt test ($ntests) [${DT}s]" "$trc"
   # every JVM's graft.Scratch root is deleted when Hadoop closes its
-  # filesystems at exit, and every test that stores files under a test
-  # filesystem's graftfs_root* prefix deletes it: either made during the
-  # suite and still there after the test JVM exited is a leak
+  # filesystems at exit, every spec deletes its TempDirs directories after
+  # its last test, and every test that stores files under a test
+  # filesystem's graftfs_root* prefix deletes it: any graft_* or
+  # graftfs_root* entry made during the suite and still there after the
+  # test JVM exited is a leak
   left=$(find "${TMPDIR:-/tmp}" -maxdepth 1 \
-    \( -name 'graft_scratch_*' -o -name 'graftfs_root*' \) \
+    \( -name 'graft_*' -o -name 'graftfs_root*' \) \
     -newer "$LOGS/test.start" 2>/dev/null | xargs)
-  step "test JVM deleted its scratch roots at exit${left:+ (left: $left)}" \
+  step "test JVM left nothing in the temp dir${left:+ (left: $left)}" \
     "$([ -z "$left" ]; echo $?)"
 else
   RESULTS+=("SKIP  sbt test")

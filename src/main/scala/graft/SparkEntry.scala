@@ -21,11 +21,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TripleStore.search(spark, "/root/testdata/sf0.001", "<order_42>")
 
-  // NOTE r8 trim: q1_subject_scan (the derived-view point scan) was
-  // retired from the gate — q1_sharded_scan covers O1 with the same oracle
-  // over the layout a production store actually serves from, and the
-  // derived-view path stays exercised by the driver's flagship [[entry]]
-  // smoke check plus TripleStoreSpec's pushdown assertions.
+  // No derived-view point scan in the gate: q1_sharded_scan covers O1 with
+  // the same oracle over the layout a production store serves from, and
+  // the derived-view path is exercised by the flagship [[entry]] smoke
+  // check plus TripleStoreSpec's pushdown assertions.
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q2_lww_upsert" -> ((s, dir) =>
       Lww.upsert(TripleStore.triples(s, dir), TripleStore.updates(s, dir))
@@ -77,11 +76,9 @@ object SparkEntry {
     "q18_exact_dedup"    -> (Docs.q18ExactDedup(_, _)),
     "q19_minhash_neardup" -> (Docs.q19MinhashPairs(_, _)),
     "q20_simhash"        -> (Docs.q20Simhash(_, _)),
-    // NOTE r9 trim: q21_embed_topk (brute-force cosine top-k) was retired
-    // from the gate once BOTH approximate ANN query forms carry their own
-    // oracles (q66 IVF, q68 LSH) — its scoring kernel is the shared `dot`
-    // those gates exercise, and q21TopkCosine stays the recall baseline in
-    // PipelineSpec (r8's q1_subject_scan trim is the template).
+    // No brute-force cosine top-k entry: both approximate ANN query forms
+    // carry their own oracles (q66 IVF, q68 LSH) over the shared `dot`,
+    // and q21TopkCosine is q71's exact recall baseline.
     "q22_embed_lsh"      -> (Vectors.q22LshBuckets(_, _)),
     "q23_multimodal_meta" -> (Multimodal.q23MultimodalMeta(_, _)),
     "q24_simhash_neardup" -> (Docs.q24SimhashNeardup(_, _)),
@@ -242,15 +239,11 @@ object SparkEntry {
     // passes, so stream ≡ batch (StreamingSessionsSpec pins it in-process).
     "q74_stream_sessions" ->
       (graft.streaming.StreamingGate.q74StreamSessions(_, _)),
-    // NOTE r16 trim: q75_pagerank (the transient-frame PageRank loop) was
-    // retired from the gate once q81 carried its SECOND judged-green round
-    // (the trim-audit condition set in r14) — q81 runs the SAME iteration
+    // No transient-frame PageRank entry: q81 runs the SAME iteration
     // count, n-scaling, rounding and oracle (Graph.q75Sql) over the
-    // bucketed edge table, so the values q75 hashed still gate every
-    // round; GraphSpec pins q81 ≡ q75PageRank row-for-row after rounding
-    // plus the plan claim (bucket-scan, strictly fewer exchanges), and
-    // q75PageRank stays the spec baseline. q75 was the replay's slowest
-    // entry × 4 corpora (r8 q1_subject_scan / r9 q21_embed_topk template).
+    // bucketed edge table; GraphSpec pins q81 ≡ Graph.q75PageRank
+    // row-for-row after rounding plus the plan claim (bucket-scan,
+    // strictly fewer exchanges).
     // Stored-bloom incremental dedup: a two-epoch crawl ingest through a
     // PERSISTENT bloom index (built once, appended per batch) — the
     // steady-state shape DedupScaleBench showed a per-batch rebuild can't
@@ -282,8 +275,8 @@ object SparkEntry {
     "q80_stream_ttl" ->
       (graft.streaming.StreamingGate.q80StreamTtl(_, _)),
     // PageRank over the BUCKETED catalog edge table: the graph north
-    // star's gate row — q75's values and oracle verbatim (q75's own entry
-    // retired r16, see trim note), exchange-free edge scans (the
+    // star's gate row — q75PageRank's values and oracle verbatim,
+    // exchange-free edge scans (the
     // q31-vs-q3 discipline; GraphSpec pins the plan claim AND the
     // q81 ≡ q75PageRank value equality).
     "q81_pagerank_bucketed" -> (Graph.q81PageRankBucketed(_, _)),
@@ -449,8 +442,7 @@ object SparkEntry {
     "q72_salted_join"      -> Skew.q72Sql,
     "q73_tsv_roundtrip"    -> TripleStore.Q73Sql,
     "q74_stream_sessions"  -> Relational.q39Sql,
-    // q75_pagerank retired r16 (see the queries-map trim note); its
-    // oracle lives on under q81_pagerank_bucketed below
+    // Graph.q75Sql is q81_pagerank_bucketed's oracle, below
     "q76_bloom_index_dedup" -> graft.operators.BloomIndex.q76Sql,
     "q77_media_dims"        -> Multimodal.q77Sql,
     "q78_ivf_ingest"        -> Vectors.q78Sql,

@@ -139,23 +139,21 @@ object TripleStore {
     * `subject` alone leaves `predicate` un-clustered — every order file
     * spans the full predicate range, so a predicate-only probe scans the
     * whole store. Here each STRING dimension is first rank-bucketed into
-    * `2^bits` equal-frequency buckets against sampled order-statistic
-    * boundaries (the native O(log n) [[graft.plans.RangeBucket]] — the
-    * string-plane analog of `ZOrderKey.withScaledZKey`'s min-max scaling,
-    * which needs longs), the two bucket ranks are Morton-interleaved by the
-    * native `zorder_key`, and the store is range-partitioned + sorted by
+    * 256 equal-frequency buckets against sampled order-statistic
+    * boundaries (the native O(log n) [[graft.plans.RangeBucket]]; strings
+    * have no min-max scale), the two bucket ranks are Morton-interleaved by
+    * the native `zorder_key`, and the store is range-partitioned + sorted by
     * the z-key. Files then carry NARROW min/max stats on BOTH columns, so
     * subject-only AND predicate-only probes skip most files/row-groups
     * (asserted vs the subject-sharded layout in TripleStoreSpec).
     *
-    * Scale shape: one bounded sample per dimension (`2^bits · 20` rows to
+    * Scale shape: one bounded, seeded sample per dimension (256 · 20 rows to
     * the driver — what Spark's own RangePartitioner does), then a map-only
-    * z-key projection and ONE range shuffle; driver memory is O(2^bits),
+    * z-key projection and ONE range shuffle; driver memory is O(buckets),
     * never O(rows). The count/sample jobs are write-time layout costs, the
     * same class as [[reshard]]'s full pass. */
-  def writeZOrdered(df: DataFrame, path: String, numShards: Int,
-      bits: Int = 8, sampleSeed: Long = 42L): Unit = {
-    val n = (1 << bits) - 1
+  def writeZOrdered(df: DataFrame, path: String, numShards: Int): Unit = {
+    val n = 255
     val rows = df.count()
     // equal-frequency cut points from a deterministic bounded sample; with
     // few distinct heavy values (the predicate dimension) duplicates
@@ -168,7 +166,7 @@ object TripleStore {
       // get their quantile cut points picked under the same order they are
       // applied (equal-frequency buckets stay equal-frequency)
       val s = df.select(col(c).cast(StringType)).na.drop()
-        .sample(withReplacement = false, frac, sampleSeed)
+        .sample(withReplacement = false, frac, 42L)
         .collect().map(_.getString(0))
         .sorted(graft.plans.RangeBucket.codePointOrdering)
       if (s.isEmpty) Seq.empty
@@ -179,8 +177,7 @@ object TripleStore {
     // scale each dimension's bucket rank into the FULL bit budget: a
     // low-cardinality dimension (predicate has ~6 distinct values, so ~5
     // post-distinct boundaries) would otherwise only populate low-order
-    // bits and the interleave would be dominated by the other dimension —
-    // the string-plane twin of withScaledZKey's min-max normalization
+    // bits and the interleave would be dominated by the other dimension
     def rank(c: String, bs: Seq[String]): Column = {
       val r = graft.plans.RangeBucket.shardId(col(c), bs).cast("bigint")
       floor(r * n.toLong / math.max(bs.length, 1).toLong).cast("bigint")
@@ -283,7 +280,7 @@ object TripleStore {
        |       CAST(count(DISTINCT predicate) AS BIGINT) AS n_predicates
        |FROM triples GROUP BY 1 ORDER BY shard_id""".stripMargin
 
-  /** O22 over a PHYSICAL layout (the r11/r12 carry-over): per-shard row
+  /** O22 over a PHYSICAL layout: per-shard row
     * counts and actual key bounds for a [[writeSharded]]/[[reshard]]-ed
     * store, derived from the layout's PARQUET FOOTERS alone — file row
     * counts plus the subject column's chunk min/max statistics — so the
@@ -397,12 +394,11 @@ object TripleStore {
     import spark.implicits._
     // BOTH branches first reconcile the directory's file LISTING against
     // the footer map's file set — an FS metadata op, zero data pages, so
-    // it is honest at any store size. This closes the sampled branch's
-    // orphan blind spot (r16 review): a foreign data file (any non-`part-`
-    // name from another writer — invisible to describeShardsFromLayout's
-    // footer walk, yet read by every store consumer) now fails the audit
-    // above maxExactRows too, where the 3-file data sample could never
-    // meet it.
+    // it is honest at any store size. It covers the sampled branch's
+    // orphan blind spot: a foreign data file (any non-`part-` name from
+    // another writer — invisible to describeShardsFromLayout's footer
+    // walk, yet read by every store consumer) fails the audit above
+    // maxExactRows too, where the 3-file data sample could never meet it.
     val root = new org.apache.hadoop.fs.Path(path)
     val listed = root.getFileSystem(spark.sessionState.newHadoopConf())
       .listStatus(root).toSeq.map(_.getPath.getName)
@@ -419,7 +415,7 @@ object TripleStore {
     // files: an orphan data file the footer walk skipped (a non-`part-`
     // name from a foreign writer — invisible to describeShardsFromLayout
     // yet read by every store consumer) then surfaces as a footer-vs-data
-    // mismatch instead of silently escaping the audit (r16 review); the
+    // mismatch instead of silently escaping the audit; the
     // sampled branch necessarily names its files explicitly.
     val actual = (if (exact) spark.read.parquet(path)
       else spark.read.parquet(picked.map(f => s"$path/${f._1}"): _*))
@@ -616,15 +612,6 @@ object TripleStore {
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.select(col("subject"), col("predicate"), col("object"), col("ts_ms"))
       .write.mode("overwrite").json(path)
-
-  /** JSONL source, [[writeJsonl]]'s inverse: explicit schema (no sampling
-    * pass over 100 TB to infer four fixed columns), malformed lines
-    * surfaced not dropped (PERMISSIVE would null them silently). */
-  def fromJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema("subject STRING, predicate STRING, object STRING, ts_ms BIGINT")
-      .option("mode", "FAILFAST")
-      .json(path)
 
   // ---------------------------------------------------------------------------
   // DuckDB oracle twins (driver runs these on the same parquet tables).

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -30,29 +31,14 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, n_bytes: Long, width: Int,
       height: Int, features: Array[Float])
 
-  /** Media table derived from `documents`: the UTF-8 bytes of `text` as the
-    * opaque payload + typed metadata. (In production this is
-    * `spark.read.format("binaryFile")` or parquet with a binary column.) */
-  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    table(spark, dir, "documents")
-      .select(col("doc_id"),
-        encode(col("text"), "UTF-8").as("media"),
-        lit("text/plain").as("format"),
-        octet_length(col("text")).cast(LongType).as("n_bytes"))
-      .as[MediaRow]
-  }
-
   /** PRODUCTION media source: a directory of real files through Spark's
     * `binaryFile` source — each file becomes one row with its bytes as the
     * opaque payload, no driver-side file walking (listing, splitting and
-    * scheduling are the data source's job, so a 100 TB media lake reads
-    * like any other table; pair with
-    * `spark.sql.files.maxPartitionBytes` to bound files-per-task). The
-    * doc id is the trailing digit run of the file's base name
-    * (`<id>.<ext>` — the layout [[mediaTable]]'s docstring promises), the
-    * format is the extension, and `n_bytes` comes from the source's
-    * `length` column, NOT from re-measuring the payload.
+    * scheduling are the data source's job, so a 100 TB media lake reads like
+    * any other table; pair with `spark.sql.files.maxPartitionBytes` to bound
+    * files-per-task). The doc id is the trailing digit run of the file's base
+    * name (`<id>.<ext>`), the format is the extension, and `n_bytes` comes
+    * from the source's `length` column, NOT from re-measuring the payload.
     *
     * A file that does not conform (no trailing digit run before the
     * extension) FAILS LOUDLY with its full path — the FAILFAST policy the
@@ -165,23 +151,16 @@ object Multimodal {
     }
   }
 
-  /** Batch feature extraction with `mapPartitions` — one decoder
-    * instantiation per partition (the expensive-init pattern real codecs
-    * need), rows streamed through it. The decoder is a parameter so every
-    * entry point shares ONE owner of the per-partition batch shape. */
-  def extractFeatures(media: Dataset[MediaRow],
-      decode: MediaRow => MediaFeatures = fakeDecode): Dataset[MediaFeatures] = {
+  /** Batch feature extraction through the honest [[headerDecode]] with
+    * `mapPartitions` — one decoder instantiation per partition (the
+    * expensive-init pattern real codecs need), rows streamed through it. */
+  def extractImageFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       // real pipeline: initialize the codec/model once per partition here
-      rows.map(decode)
+      rows.map(headerDecode)
     }
   }
-
-  /** [[extractFeatures]] with the honest [[headerDecode]] — the entry point
-    * for payloads that are actual images. */
-  def extractImageFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] =
-    extractFeatures(media, headerDecode)
 
   case class MediaFrame(doc_id: Long, frame_idx: Int, frame: Array[Byte])
 
@@ -192,7 +171,7 @@ object Multimodal {
     * via `flatMap` (so a long video never materializes as one task-local
     * array-of-frames), stable `frame_idx` for downstream ordering, bounded
     * per-frame memory, and frames land as binary columns ready for
-    * [[extractFeatures]]-style per-partition decoders. */
+    * per-partition decoders like [[extractImageFeatures]]. */
   def sampleFrames(media: Dataset[MediaRow], frameBytes: Int,
       stride: Int): Dataset[MediaFrame] = {
     require(frameBytes > 0 && stride > 0)
@@ -206,27 +185,6 @@ object Multimodal {
             java.util.Arrays.copyOfRange(row.media, f * frameBytes,
               math.min(n, (f + 1) * frameBytes)))
         }
-    }
-  }
-
-  /** Resize by mean-pooling a feature vector down to `width` bins — the
-    * deterministic stand-in for a pixel resize kernel, preserving what the
-    * pipeline depends on: fixed output width and (for histogram inputs)
-    * mass conservation. */
-  def resizeFeatures(feats: Dataset[MediaFeatures],
-      width: Int): Dataset[MediaFeatures] = {
-    import feats.sparkSession.implicits._
-    feats.map { f =>
-      val in = f.features
-      require(in.length % width == 0,
-        s"resize $width must tile ${in.length}")
-      val pool = in.length / width
-      val out = Array.tabulate(width) { j =>
-        var s = 0f; var i = 0
-        while (i < pool) { s += in(j * pool + i); i += 1 }
-        s
-      }
-      f.copy(features = out)
     }
   }
 
@@ -267,7 +225,7 @@ object Multimodal {
     * digits are appended to every payload so `n_bytes` varies per row and
     * the decoder demonstrably reads HEADERS, not payload length. */
   private[graft] def syntheticContainer(id: Long): (Array[Byte], String) = {
-    // the non-negativity invariant ENFORCED, not just stated (ADVICE r14):
+    // the non-negativity invariant ENFORCED, not just stated:
     // a negative id would make the Scala `%` formulas, the element_at
     // container label, and the oracle's CASE arms silently diverge — a
     // future corpus with negative doc_ids must fail here, loudly, naming
@@ -298,9 +256,8 @@ object Multimodal {
     }
   }
 
-  /** Q77: the production media pipeline DRIVER-GATED end-to-end — the one
-    * pillar whose gate entry previously bypassed its real path (q23 reads
-    * `documents.text`; the header decode ran only in PipelineSpec). Every
+  /** Q77: the production media pipeline DRIVER-GATED end-to-end (q23
+    * reads `documents.text` and never reaches the header decode). Every
     * `documents` row becomes a typed [[MediaRow]] carrying REAL container
     * bytes ([[syntheticContainer]]), flows through the per-partition batch
     * pipeline [[extractImageFeatures]] → [[headerDecode]] →
@@ -337,63 +294,31 @@ object Multimodal {
 
   /** Once-per-JVM materialization of q77's synthetic containers as REAL
     * `<doc_id>.<ext>` files in a scratch directory — the fixture that lets
-    * the production [[mediaFromFiles]] source execute in the driver gate. The
-    * writer is DISTRIBUTED (r17): `foreachPartition` generates and writes
-    * each partition's files executor-side, so the fixture generator scales
-    * with the cluster instead of funnelling every container through one
-    * driver loop (the r16 `collect()` shape was MediaScaleBench's 10M-file
-    * bottleneck; in local mode the executors share the driver's tmp FS, and
-    * on a real cluster the target would be a shared FS path). Memoized per
-    * sf dir. */
+    * the production [[mediaFromFiles]] source execute in the driver gate.
+    * The writer is DISTRIBUTED: `foreachPartition` generates and writes
+    * each partition's files executor-side (the closure captures only the
+    * target path and the session's Hadoop conf; [[syntheticContainer]] is
+    * re-derived per row from the id), so the fixture generator scales with
+    * the cluster instead of funnelling every container through one driver
+    * loop. Each task resolves the target to the session's filesystem, the
+    * one Spark reads the fixture back through. Memoized per sf dir. */
   def mediaFilesPath(spark: SparkSession, dir: String): String =
     Scratch.once(("mediaFiles", dir)) {
+      import spark.implicits._
       val out = Scratch.path(spark, "graft_media_files")
-      writeContainerFiles(spark, table(spark, dir, "documents")
-        .select(col("doc_id")), out)
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      table(spark, dir, "documents").select(col("doc_id")).as[Long]
+        .foreachPartition { (ids: Iterator[Long]) =>
+          val fs = new Path(out).getFileSystem(conf.value)
+          ids.foreach { id =>
+            val (bytes, ext) = syntheticContainer(id)
+            val file = fs.create(new Path(out, s"$id.$ext"))
+            try file.write(bytes) finally file.close()
+          }
+        }
       out
     }
-
-  /** Executor-side container-file writer: one `<doc_id>.<ext>` file per
-    * input row, generated and written inside `foreachPartition` (the
-    * closure captures only the target path — [[syntheticContainer]] is
-    * re-derived per row from the id). Creates the target dir per task:
-    * a no-op where the driver already made it (local mode), load-bearing
-    * on executors with their own FS view. */
-  private[graft] def writeContainerFiles(spark: SparkSession,
-      docIds: org.apache.spark.sql.DataFrame, out: String): Unit = {
-    import spark.implicits._
-    // the java.nio target is resolved on EXECUTOR filesystems: correct in
-    // local mode (executors share the driver's tmp FS) and on any shared
-    // mount, silently WRONG on a non-local master without one — each
-    // executor would write its shard of the fixture to its own local disk
-    // and the driver-side read would see a partial or empty directory.
-    // Fail loudly at the boundary instead of producing an incomplete
-    // fixture (ADVICE r17); a cluster deployment must pass a shared-FS
-    // path and flip this guard deliberately. Likewise, Spark reads `out`
-    // back through the filesystem it resolves to, which must be the local
-    // one the java.nio writes land on — under a non-local default FS the
-    // read would find no files and return an empty fixture.
-    require(spark.sparkContext.isLocal,
-      s"writeContainerFiles targets a local java.nio path ($out) but the " +
-        s"master is ${spark.sparkContext.master} — on a distributed " +
-        "master the per-executor writes would not land on one shared " +
-        "filesystem; point `out` at a shared mount and relax this guard " +
-        "deliberately")
-    val readFs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf()).getUri
-    require(readFs.getScheme == "file",
-      s"writeContainerFiles writes $out through java.nio, but Spark reads " +
-        s"it through $readFs")
-    docIds.as[Long].foreachPartition { (ids: Iterator[Long]) =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      ids.foreach { id =>
-        val (bytes, ext) = syntheticContainer(id)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(out, s"$id.$ext"), bytes)
-        ()
-      }
-    }
-  }
 
   /** Q82: the production media SOURCE driver-gated end-to-end — the one
     * media path q77 still bypassed (it synthesizes container bytes in a

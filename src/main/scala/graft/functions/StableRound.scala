@@ -125,11 +125,12 @@ object StableRound {
       s"ELSE (($inner) * $p + 0.5) / $p END) ELSE ($inner) END"
   }
 
-  /** The plain-Scala twin for specs that re-derive an engine's rounded
-    * value on the driver (e.g. StreamingSessionsSpec's batch-vs-stream
-    * bit-exactness assertion). `math.abs(NaN) < 2^(52−d)` is false in
-    * Java too, so the guard branches identically; `math.floor` is
-    * double-typed, which below 2^52 equals the long floor exactly. */
+  /** Reference for StableRoundSpec and StreamingSessionsSpec, ported to
+    * Python by `scripts/stableround_sweep.py`: the plain-Scala twin that
+    * re-derives an engine's rounded value on the driver.
+    * `math.abs(NaN) < 2^(52−d)` is false in Java too, so the guard branches
+    * identically; `math.floor` is double-typed, which below 2^52 equals the
+    * long floor exactly. */
   def stableRoundScala(d: Double, digits: Int): Double =
     if (math.abs(d) < passThrough(digits)) {
       val p = pow10(digits)

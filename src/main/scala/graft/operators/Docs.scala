@@ -114,7 +114,7 @@ object Docs {
     * before merges): a token is an optionally-space-prefixed letter run
     * (either case — lumping uppercase into the punctuation class would
     * merge "USA." into one symbol run and skew the estimate on mixed-case
-    * text, ADVICE r6), an optionally-space-prefixed digit run, or a
+    * text), an optionally-space-prefixed digit run, or a
     * punctuation run. The pattern sticks to a conservative alternation
     * subset that Java regex (Spark) and RE2 (DuckDB) evaluate identically —
     * no lookarounds, no unicode classes. Token COUNT is the training-cost
@@ -199,14 +199,14 @@ object Docs {
   // the GATE banding config: bands of 2 hashes. One pair of constants
   // drives BOTH the Scala path (q19MinhashPairs passes them to
   // minhashCandidates) and the DuckDB oracle's band expressions
-  // (q19Core), so a retune cannot drift the two apart (r20 review).
+  // (q19Core), so a retune cannot drift the two apart.
   private val GateBandRows = 2
   private val NumBands = NumHashes / GateBandRows
   val JaccardThreshold = 0.6
 
   /** Distinct 3-word shingles per document, ONE array row per doc — the
     * form [[minhashCandidates]]' map-only signature kernel consumes (and
-    * [[shinglesOf]] explodes for the verify-stage joins). Exposed so the
+    * [[neardupPairs]] explodes for the verify-stage joins). Exposed so the
     * 10M-doc rehearsal (NeardupScaleBench) runs the PRODUCTION shingle
     * kernel over its synthetic corpus, not a copy (the ivfAssignVectors
     * convention). */
@@ -217,14 +217,6 @@ object Docs {
       .select(col("doc_id"), array_distinct(expr(
         "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"))
         .as("ss"))
-
-  /** [[shingleArraysOf]] exploded to the `(doc_id, s)` row form the exact
-    * Jaccard verify joins on. */
-  private[graft] def shinglesOf(docs: DataFrame): DataFrame =
-    explodeShingles(shingleArraysOf(docs))
-
-  private def explodeShingles(arrs: DataFrame): DataFrame =
-    arrs.select(col("doc_id"), explode(col("ss")).as("s"))
 
   /** Near-duplicate pairs via MinHash signatures + LSH banding, verified
     * with exact shingle Jaccard.
@@ -246,10 +238,10 @@ object Docs {
     * 10M-doc rehearsal's ~GBs stages: the array frame explodes to ~L
     * shingle rows per doc, and an on-heap/disk block cache of that volume
     * OOM'd a 48 GB single-JVM driver at 10M docs (Spark exit 52 while
-    * putting rdd blocks — BENCH_NOTES r20/r21), where a compressed
-    * parquet scan per consumer runs the same pipeline bounded. The cutoff
-    * is input-size arithmetic (guide §5: caching competes with execution
-    * memory and must not scale with the corpus), not a local[32] tunable. */
+    * putting rdd blocks), where a compressed parquet scan per consumer
+    * runs the same pipeline bounded. The cutoff is input-size arithmetic
+    * (caching competes with execution memory and must not scale with the
+    * corpus), not a thread-count tunable. */
   private[graft] val ShingleStageBytesDefault: Long = 256L << 20
 
   /** THE near-dup production path — q19's relation at any banding config:
@@ -258,9 +250,8 @@ object Docs {
     * exploded, the verify stage's sizes + intersection joins (4 plan
     * occurrences of the split/transform scan), so it is materialized
     * once — `.cache()` below [[ShingleStageBytesDefault]], a
-    * [[Scratch.scoped]] parquet stage above it (r22, VERDICT r21 #2;
-    * NeardupScaleBench validated the staged shape at 10M docs in r20/r21
-    * and now drives THIS method end-to-end). Both shapes are scoped to
+    * [[Scratch.scoped]] parquet stage above it (NeardupScaleBench drives
+    * THIS method end-to-end at 10M docs). Both shapes are scoped to
     * the call: the final (small) pair set is materialized eagerly by
     * [[minhashVerify]], then the candidate set and the cache/stage are
     * released before returning, so repeated dedup sweeps in a long-lived
@@ -272,7 +263,8 @@ object Docs {
       .map(_.toLong).getOrElse(ShingleStageBytesDefault)
     def pairs(arrs: DataFrame): DataFrame =
       Scratch.pinned(minhashCandidates(arrs, numHashes, bandRows))(
-        minhashVerify(_, explodeShingles(arrs)))
+        minhashVerify(_,
+          arrs.select(col("doc_id"), explode(col("ss")).as("s"))))
     if (inputBytes(spark, src) <= threshold)
       Scratch.pinned(shingleArraysOf(table(spark, dir, "documents")).cache())(
         pairs)
@@ -296,22 +288,22 @@ object Docs {
     * ([[shingleArraysOf]]): MinHash signatures → LSH bands → the candidate
     * equi-join, MATERIALIZED (localCheckpoint — the pair set is bounded by
     * the banding and feeds two consumers). Split out of
-    * [[q19MinhashPairs]] (r20) so the 10M-doc rehearsal measures the
+    * [[q19MinhashPairs]] so the 10M-doc rehearsal measures the
     * candidate volume between the production stages; the gate entry
     * composes these pieces unchanged (the defaults ARE the gate config —
     * 8 hashes in 4 bands of 2).
     *
     * The signature pass is the native one-pass
-    * [[graft.plans.MinhashSignature minhash_signature]] kernel (r21,
-    * guide §2.3/§2.4): signatures are a per-document function, so the
-    * explode + `groupBy(doc_id).agg(min × k)` formulation this replaces
-    * shuffled the corpus's whole shingle stream (~L rows/doc, the 10M
-    * rehearsal's 890 s wall) into a k-way min aggregate for a map-only
-    * answer. The kernel computes the IDENTICAL md5-quarter minima (the
-    * DuckDB oracle is unchanged), with zero exchange and zero per-shingle
+    * [[graft.plans.MinhashSignature minhash_signature]] kernel:
+    * signatures are a per-document function, so an explode +
+    * `groupBy(doc_id).agg(min × k)` formulation would shuffle the corpus's
+    * whole shingle stream (~L rows/doc, an 890 s wall in the 10M
+    * rehearsal) into a k-way min aggregate for a map-only answer. The
+    * kernel computes the IDENTICAL md5-quarter minima the DuckDB oracle
+    * does, with zero exchange and zero per-shingle
     * string allocation.
     *
-    * `numHashes`/`bandRows` are the corpus-scale dials (r20, measured):
+    * `numHashes`/`bandRows` are the corpus-scale dials (measured):
     * a band of r hashes collides for a non-dup pair with probability
     * ~J^r, and under a Zipf-skewed shingle distribution the gate's r=2
     * bands collide QUADRATICALLY at 10M docs (shared head shingles
@@ -531,13 +523,13 @@ object Docs {
     * the same multi-hash derivation as q19's MinHash).
     *
     * MAP-ONLY via the native one-pass
-    * [[graft.plans.SimhashBits simhash_bits]] kernel (r21, guide
-    * §2.3/§2.4): a SimHash is a per-document function, so the previous
-    * explode + `groupBy(doc_id).agg(sum × bits)` formulation shuffled the
-    * corpus's whole token stream (with a 32-hex-string projection per
-    * token) into a `bits`-way sum aggregate for a per-row answer. The
-    * kernel computes the IDENTICAL fingerprint (same md5 family, same
-    * ±1/threshold rule — the oracle carries over unchanged) with zero
+    * [[graft.plans.SimhashBits simhash_bits]] kernel: a SimHash is a
+    * per-document function, so an explode + `groupBy(doc_id).agg(sum ×
+    * bits)` formulation would shuffle the corpus's whole token stream
+    * (with a 32-hex-string projection per token) into a `bits`-way sum
+    * aggregate for a per-row answer. The kernel computes the IDENTICAL
+    * fingerprint the oracle does (same md5 family, same ±1/threshold
+    * rule) with zero
     * exchange and zero per-token hex-string materialization.
     *
     * The NULL-text filter is row-domain parity with the aggregate form it
@@ -635,16 +627,15 @@ object Docs {
     *
     * The per-position k-gram hash is the native
     * [[graft.plans.RollingKgramHashes rolling_kgram_hashes]] Rabin–Karp
-    * expression — O(1) arithmetic per character. The previous
-    * `md5(substring(...))`-per-position formulation paid a digest + string
-    * allocation per character and was the whole suite's most expensive
-    * stage (8.3 s at sf0.1 → 2.9 s). The window minima are the native
-    * one-pass [[graft.plans.WindowMins window_mins]] monotonic deque (r21,
-    * guide step 4): the `transform + array_min(slice(...))` form it
-    * replaces was an interpreted O(L·w) loop allocating a fresh w-element
-    * slice per character — same values, O(L), zero per-position
-    * allocation. The oracle computes the identical polynomial as a direct
-    * per-gram sum with the same modulus. */
+    * expression — O(1) arithmetic per character, where an
+    * `md5(substring(...))`-per-position formulation pays a digest + string
+    * allocation per character (8.3 s vs 2.9 s at sf0.1). The window minima
+    * are the native one-pass [[graft.plans.WindowMins window_mins]] monotonic
+    * deque: a `transform + array_min(slice(...))` form would be an
+    * interpreted O(L·w) loop allocating a fresh w-element slice per character
+    * — same values, O(L), zero per-position allocation. The oracle computes
+    * the identical polynomial as a direct per-gram sum with the same
+    * modulus. */
   def q26Winnowing(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
       .filter(length(col("text")) >= WinK + WinW - 1)
@@ -1060,7 +1051,7 @@ object Docs {
     *      gate sizing. No false negatives, so every batch row the probe
     *      rejects is DEFINITELY new and is admitted with no join at all —
     *      at a realistic dup rate that is almost the whole batch.
-    *      Sizing law, measured at 10M keys (DedupScaleBench r13): each
+    *      Sizing law, measured at 10M keys (DedupScaleBench): each
     *      partial is a fixed numBits/8 bytes, so a per-batch REBUILD ships
     *      P·1.25 B/key at 10 bits/key — 191 MB with P=32 vs the anti-join's
     *      648 MB corpus shuffle, and coalescing the build scan (P=4) cuts
@@ -1089,9 +1080,8 @@ object Docs {
     * bloom admits everything, matching NOT EXISTS over an empty set.
     * The bloom-positive set is NOT checkpointed: recomputing it is a
     * map-only batch scan + probe, and pinning it would either eagerly run
-    * a job at construction time (the r7/r8 `weak` mark this rewrite
-    * removes) or persist the whole batch — both worse at 100 TB than the
-    * extra codegen'd scan. */
+    * a job at construction time or persist the whole batch — both worse
+    * at 100 TB than the extra codegen'd scan. */
   def q61BloomDedup(spark: SparkSession, dir: String): DataFrame = {
     val (corpus, batch) = corpusBatchSplit(spark, dir)
     val bloom = corpus
@@ -1241,34 +1231,6 @@ object Docs {
     * Conditional sums use explicit 0-else so NULL-text documents (adversarial
     * corpus) count as failures identically in both engines. */
   def q62SourceReport(spark: SparkSession, dir: String): DataFrame =
-    // dup count over NON-NULL hashes only: a NULL-text doc has no
-    // content to collide on, and q52's NOT EXISTS never treats NULL
-    // hashes as dups — count(col) skips NULLs to match
-    sourceReport(spark, dir, countDistinct(col("content_hash")))
-
-  /** q62's scale swap for few-huge-source corpora (BENCH_NOTES): the exact
-    * distinct-hash count keeps a hash SET per (source, partition) as
-    * partial aggregate state — with a handful of sources and billions of
-    * docs each, that state is corpus-sized. The HLL++ sketch is
-    * constant-size per source and merges map-side like every other term in
-    * the report. Property-tested against the exact report in CorpusOpsSpec
-    * (all non-sketch columns identical, dup counts within the sketch's
-    * rsd) rather than oracle-gated — an estimate has no SQL-exact twin by
-    * construction, the same policy as q41's percentile sketch twins.
-    * The sketch can OVERestimate distinct hashes, which would push
-    * `n_dup_docs` negative — an impossibility the exact report's consumers
-    * rely on — so the estimate is clamped to the non-null count, making
-    * `n_dup_docs = max(0, count - approx_distinct)`. */
-  def q62SourceReportApprox(spark: SparkSession, dir: String,
-      rsd: Double = 0.05): DataFrame =
-    sourceReport(spark, dir, least(count(col("content_hash")),
-      approx_count_distinct(col("content_hash"), rsd)))
-
-  /** Shared q62 aggregation; `distinctHashes` is the one term the exact and
-    * sketch variants disagree on (count of distinct non-null content
-    * hashes per source). */
-  private def sourceReport(spark: SparkSession, dir: String,
-      distinctHashes: Column): DataFrame =
     table(spark, dir, "documents")
       .select(col("source"), split(col("text"), " ").as("w"),
         split(lower(col("text")), " ").as("lw"),
@@ -1280,7 +1242,11 @@ object Docs {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("kept")).as("n_kept"),
-        (count(col("content_hash")) - distinctHashes).as("n_dup_docs"),
+        // dup count over NON-NULL hashes only: a NULL-text doc has no
+        // content to collide on, and q52's NOT EXISTS never treats NULL
+        // hashes as dups — count(col) skips NULLs to match
+        (count(col("content_hash")) - countDistinct(col("content_hash")))
+          .as("n_dup_docs"),
         sum(col("en")).as("n_en"),
         sum(col("n_tokens")).as("token_mass"),
         stableRound(sum(col("n_tokens")).cast(DoubleType) / count(lit(1)), 4)
@@ -1539,7 +1505,7 @@ object Docs {
     val w = Window.partitionBy("doc_id").orderBy(desc("score"), asc("word"))
     tf.withColumn("df", count(lit(1)).over(Window.partitionBy("word")))
       .crossJoin(broadcast(n))
-      // double-round guard (ADVICE r7): tf·ln(N/df) passes through two
+      // double-round guard: tf·ln(N/df) passes through two
       // different libm `ln`s (JVM vs DuckDB's C), so a last-ulp difference
       // could land either side of a raw 4-digit half boundary. Snapping to
       // 9 decimals first collapses both engines' values onto the same
@@ -1547,10 +1513,10 @@ object Docs {
       // boundary AND that boundary is itself a 4-digit half — ~5 orders of
       // magnitude rarer than the raw risk. That residual is the documented
       // exposure; rank ties are already insensitive (rounded-score ordering
-      // + term tie-break). Both stages are StableRound (d=9 is why the
-      // r16 form admits d > 4): with the builtin, the two engines' rounds
-      // THEMSELVES disagreed at .xx5 shortest-repr boundaries, stacking a
-      // second divergence class on top of the libm one.
+      // + term tie-break). Both stages are StableRound, which admits
+      // d > 4: with the builtin, the two engines' rounds THEMSELVES
+      // disagree at .xx5 shortest-repr boundaries, stacking a second
+      // divergence class on top of the libm one.
       .withColumn("score",
         stableRound(stableRound(col("tf").cast(DoubleType) *
           log(col("n_docs").cast(DoubleType) / col("df").cast(DoubleType)),

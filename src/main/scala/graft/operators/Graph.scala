@@ -203,18 +203,16 @@ object Graph {
     * scores normalized before hashing. */
   private[graft] val PageRankIters = 3
 
-  /** Q75 (gate entry RETIRED r16 — now the SPEC baseline): [[pageRank]]'s
-    * n-scaled emission. Scores are n-scaled (`rank * n_nodes`, mean 1.0 —
-    * the usual "importance relative to uniform" reading) and rounded to 6
-    * decimals: every arithmetic step is written identically in the oracle,
+  /** Reference for GraphSpec's q81 check: [[pageRank]]'s n-scaled emission,
+    * not a gate entry of its own. Scores are n-scaled (`rank * n_nodes`, mean
+    * 1.0 — the usual "importance relative to uniform" reading) and rounded to
+    * 6 decimals: every arithmetic step is written identically in the oracle,
     * so the only engine divergence is summation order inside the per-node
-    * contribution aggregates — bounded in-degree sums whose fp wobble
-    * (~1e-13 relative) sits eight orders of magnitude inside the rounding
-    * half-ulp. Retired from the gate once q81 (same iterations, same
-    * emission, [[q75Sql]] verbatim, bucketed edge scan) carried its second
-    * judged-green round; GraphSpec pins q81 ≡ this row-for-row after
-    * rounding, so the relation stays regression-guarded without paying the
-    * slowest replay entry × 4 corpora every close. */
+    * contribution aggregates — bounded in-degree sums whose fp wobble (~1e-13
+    * relative) sits eight orders of magnitude inside the rounding half-ulp.
+    * q81 gates the same iterations and emission ([[q75Sql]] verbatim) over
+    * the bucketed edge scan, and GraphSpec pins q81 ≡ this row-for-row after
+    * rounding. */
   def q75PageRank(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir)
     nScaledRanks(e, pageRank(e, iters = PageRankIters))

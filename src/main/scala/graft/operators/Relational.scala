@@ -327,7 +327,7 @@ object Relational {
        |GROUP BY ROLLUP(predicate, etype)
        |ORDER BY predicate NULLS FIRST, etype NULLS FIRST""".stripMargin
 
-  // --- Q11 (batch twin): tumbling 1-minute windows over events --------------
+  // --- Q11: tumbling 1-minute windows over events ---------------------------
 
   def q11Tumbling(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")

@@ -60,10 +60,9 @@ object Vectors {
   }
 
   /** Sequential-fold double dot product of two float array columns —
-    * served by the native compiled [[graft.plans.VecDot]] since r19
-    * (bit-exact to the interpreted `aggregate(zip_with(...))` fold it
-    * replaces, including the sequential add order DuckDB's `list_sum`
-    * twin shares). */
+    * served by the native compiled [[graft.plans.VecDot]] (bit-exact to an
+    * interpreted `aggregate(zip_with(...))` fold, including the sequential
+    * add order DuckDB's `list_sum` twin shares). */
   private def dot(a: String, b: String): Column =
     call_function("vec_dot", col(a), col(b))
 
@@ -112,9 +111,9 @@ object Vectors {
     * Zero-norm vectors appear in the q22 bucket CENSUS (assignment never
     * divides) but are excluded from every SCORING path, so census
     * occupancy is an upper bound on actual probe fan-in. */
-  private def lshProjected(vectors: DataFrame, numPlanes: Int = NumPlanes): DataFrame =
+  private def lshProjected(vectors: DataFrame): DataFrame =
     vectors.select(col("vec_id"), col("embedding"),
-      bitsCol(0, numPlanes).as("bucket"), sqrt(dot("embedding", "embedding")).as("nrm"))
+      lshBucket.as("bucket"), sqrt(dot("embedding", "embedding")).as("nrm"))
 
   /** Banded LSH projection: one row per (vector, band), band `b` drawing
     * planes [b·r, (b+1)·r) from the pool. Multi-band = the standard
@@ -232,33 +231,29 @@ object Vectors {
     * iterations and [[ivfAssignBatch]]'s incremental maintenance — one
     * definition so the two paths cannot drift.
     *
-    * Shape (r19, VERDICT #2): frozen-centroid assignment is per-row math,
-    * so it must not pay a shuffle. The previous crossJoin + `max_by`
-    * groupBy form shuffled one row per VECTOR carrying the full float64
-    * list — ~51 GB of exchange payload at 100M vectors, the measured
-    * superlinear knee in the 100M build (hash-aggregate spill ~55 GB).
-    * This form binds the k collected centroids into the per-row argmax
-    * (k is broadcast-sized by construction) via the native
-    * [[graft.plans.NearestCentroid]] kernel (r20) — each `sim_j` is the
+    * Shape: frozen-centroid assignment is per-row math, so it must not pay
+    * a shuffle. A crossJoin + `max_by` groupBy form would shuffle one row
+    * per VECTOR carrying the full float64 list — ~51 GB of exchange
+    * payload at 100M vectors (hash-aggregate spill ~55 GB). This form
+    * binds the k collected centroids into the per-row argmax (k is
+    * broadcast-sized by construction) via the native
+    * [[graft.plans.NearestCentroid]] kernel — each `sim_j` is the
     * native [[graft.plans.VecDot]] sequential fold and the (sim, cluster)
     * max rule is exactly `max_by(cluster, struct(sim, cluster))`'s
     * (lexicographic, NaN greatest, ties to the higher cluster id), so the
     * assignment relation is value-identical to the crossJoin form FOR
     * NON-NULL VECTORS — the only kind the library paths produce
     * ([[sphereNormalized]] drops NULL/zero vectors). A NULL vector
-    * (SQL-reachable) now yields a NULL cluster via the kernel's
-    * nullSafeEval, where the retired greatest form assigned it to the
-    * highest cluster id (all-NULL-sim tie rule) — a deliberate
-    * improvement, pinned as intended in PlansSpec (ADVICE r20). The
-    * q66/q78 oracles' unrolled k-means CTEs carry over unchanged. Zero
-    * exchange, whole-stage codegen, and plan/codegen size O(1) in k (the
-    * r19 `greatest`-over-k-struct-literals form carried O(k·d) plan
-    * literals — the production-k ceiling VERDICT r19 #1 names).
+    * (SQL-reachable) yields a NULL cluster via the kernel's nullSafeEval,
+    * not the highest cluster id a `greatest` over NULL sims would pick
+    * (PlansSpec pins it). The q66/q78 oracles' unrolled k-means CTEs
+    * compute the same assignment. Zero exchange, whole-stage codegen, and
+    * plan/codegen size O(1) in k (a `greatest` over k struct literals
+    * would carry O(k·d) plan literals).
     *
-    * NOTE the one visible behavior change vs the lazy crossJoin form:
-    * this is EAGER — the centroid table materializes (driver collect of
+    * This is EAGER: the centroid table materializes (driver collect of
     * k rows) at plan-CONSTRUCTION time, and an empty table raises loudly
-    * where the old form lazily produced an empty assignment. Every
+    * where a lazy crossJoin would produce an empty assignment. Every
     * caller in the library hands it a materialized k-row table; a loud
     * failure on a degenerate quantizer beats a silently empty index. */
   private def assignStep(e: DataFrame, cents: DataFrame): DataFrame =
@@ -277,13 +272,13 @@ object Vectors {
 
   /** The per-row argmax column over collected centroids — the native
     * [[graft.plans.NearestCentroid]] kernel with the centroid MATRIX and
-    * cluster-id vector each bound as ONE nested-array literal (r20,
-    * VERDICT r19 #1): plan size and generated code are O(1) in k, where
-    * the r19 `greatest(struct(vec_dot(v, c_j), cluster_j))_j.cluster`
-    * form carried O(k·d) literal nodes and a k-ary `greatest` — fine at
-    * the gate k=8 / rehearsal k=64, a 64 KB-codegen-limit ceiling at
-    * production k ≈ 10⁴⁺. Above the
-    * [[graft.plans.NearestCentroidBc]] element threshold (r21 — the
+    * cluster-id vector each bound as ONE nested-array literal: plan size
+    * and generated code are O(1) in k, where a
+    * `greatest(struct(vec_dot(v, c_j), cluster_j))_j.cluster` form carries
+    * O(k·d) literal nodes and a k-ary `greatest` — fine at the gate k=8 /
+    * rehearsal k=64, a 64 KB-codegen-limit ceiling at production
+    * k ≈ 10⁴⁺. Above the
+    * [[graft.plans.NearestCentroidBc]] element threshold (the
     * literal's remaining cost: ~14 MB of task binary per stage at
     * k=4096·d=64, a few hundred MB at production k ≈ 10⁵) the binding
     * switches to a BROADCAST VARIABLE fetched once per executor.
@@ -316,7 +311,7 @@ object Vectors {
     * build for corpora that are not the sf dir's embeddings table (the
     * scale rehearsal feeds synthetic vectors through it).
     *
-    * `trainSampleMod` (r16, the 10M-rehearsal knob): k-means TRAINS on
+    * `trainSampleMod` (the 10M-rehearsal knob): k-means TRAINS on
     * the deterministic `xxhash64(vec_id) % mod == 0` subsample and only
     * the final assignment touches the full corpus. At 100 TB this is the
     * only build shape that works — the quantizer needs a statistically
@@ -324,8 +319,8 @@ object Vectors {
     * drops by the sample factor while the broadcast centroid table and
     * the one full-corpus assignment pass are unchanged. `mod = 1` (the
     * default and the gate config, whose DuckDB oracle unrolls the
-    * full-corpus iterations) is byte-identical to the r15 behavior;
-    * seeds are the k lowest vec_ids OF THE TRAIN SET, so the sampled
+    * full-corpus iterations) trains on every vector; seeds are the k
+    * lowest vec_ids OF THE TRAIN SET, so the sampled
     * build stays deterministic and replayable. */
   def ivfAssignVectors(vectors: DataFrame, k: Int,
       iters: Int, trainSampleMod: Long = 1L): (DataFrame, DataFrame) = {
@@ -345,7 +340,7 @@ object Vectors {
           s"$trainSampleMod == 0) holds only $nTrain rows — fewer than " +
           s"k=$k clusters; lower trainSampleMod or k")
     }
-    // pinned BEFORE the first assignStep collects the seeds (ADVICE r19):
+    // pinned BEFORE the first assignStep collects the seeds:
     // the seed frame's lineage is the full sphereNormalized scan + a global
     // sort-limit — unpinned, iteration 1 would execute that scan once just
     // to seed the argmax literals and once more inside its own aggregation
@@ -413,7 +408,7 @@ object Vectors {
     * exist: handing [[ivfProbe]] a decoded VIEW of the quantized lists
     * plants the (interpreted, higher-order) decode in a projection BELOW
     * the join, where every corpus row pays it before pruning — measured
-    * 40× the float probe's wall at 1M (VectorScaleBench r17). Queries
+    * 40× the float probe's wall at 1M (VectorScaleBench). Queries
     * decode through the `vec_id` pushdown (NumQueries rows); candidates
     * score as `dot(qv, d) / ||d||` — the same cosine [[ivfProbe]] computes
     * over a pre-normalized side, re-associated so no per-element lambda
@@ -424,13 +419,9 @@ object Vectors {
     * filter. */
   def ivfProbeQuantized(lists: DataFrame, centroids: DataFrame,
       nprobe: Int, topk: Int): DataFrame = {
-    // native kernels (r19): decode/normalize/dot previously ran through
-    // transform/aggregate/zip_with — CodegenFallback, interpreted per
-    // probed row (and the interpreted era forced two layout contortions,
-    // both now moot: the norm-once-into-a-column dance against the O(d²)
-    // per-element re-aggregation trap, and the never-normalize-the-
-    // candidate-side rule). int8_decode / vec_normalize / vec_dot compute
-    // the same IEEE arithmetic compiled (VectorKernels' bit-exactness
+    // native kernels: int8_decode / vec_normalize / vec_dot compute the
+    // same IEEE arithmetic as transform/aggregate/zip_with, compiled
+    // instead of interpreted per probed row (VectorKernels' bit-exactness
     // contract), so results are identical row for row.
     val decode = call_function("int8_decode", col("q"), col("max_abs_micro"))
     val valid = lists.filter(col("max_abs_micro") > 0)
@@ -486,14 +477,6 @@ object Vectors {
   private[graft] val RaggedMsg =
     "int8_dot: ragged quantized vectors — query/corpus dims differ"
 
-  /** Build-then-probe in one call (the test/ad-hoc path; the serving path
-    * probes the [[ivfIndexPath]] layout instead of rebuilding). */
-  def ivfTopk(spark: SparkSession, dir: String, k: Int, nprobe: Int,
-      topk: Int): DataFrame = {
-    val (assigned, centroids) = ivfAssign(spark, dir, k, iters = 3)
-    ivfProbe(Scratch.pin(assigned), centroids, nprobe, topk)
-  }
-
   /** Once-per-JVM materialization of the IVF index as a parquet LAYOUT
     * — assigned lists clustered by `cluster` (range-partitioned + sorted,
     * so a probe's list join row-group-skips) and the k-row centroid table.
@@ -529,7 +512,7 @@ object Vectors {
     * compaction rhythm as q52's dedup store), with list-size skew deciding
     * when.
     *
-    * EAGERNESS NOTE (ADVICE r19): although this returns a DataFrame, the
+    * EAGERNESS NOTE: although this returns a DataFrame, the
     * call itself runs a Spark job — [[assignStep]] collects the k-row
     * centroid table at plan-CONSTRUCTION time to bind the argmax matrix,
     * and raises loudly on an empty table (a degenerate quantizer must
@@ -717,8 +700,8 @@ object Vectors {
     (all.filter(col("vec_id") % 10 < 9), all.filter(col("vec_id") % 10 === 9))
 
   /** Q78: incremental IVF INGEST driver-gated — the maintenance path
-    * ([[ivfAssignBatch]]/[[ivfAppendBatch]]) whose distributed execution
-    * was previously spec-only. The index is built from the standing corpus
+    * ([[ivfAssignBatch]]/[[ivfAppendBatch]]) run distributed under the
+    * oracle. The index is built from the standing corpus
     * (k-means trained on corpus₀ ONLY — seeds and iterations never see the
     * batch), epoch 1 is appended into the cluster-clustered layout through
     * the REAL append path, the SAME batch is then deliberately re-applied
@@ -889,15 +872,15 @@ object Vectors {
        |  WHERE x.nrm > 0 AND y.nrm > 0)
        |WHERE cos_sim >= $NearDupThreshold ORDER BY id_a, id_b""".stripMargin
 
-  /** LSH-bucketed approximate top-k: compare only within a bucket. Used by
-    * PipelineSpec to measure recall vs [[q21TopkCosine]]; not a gate query
-    * (approximate results have no SQL-exact oracle by construction). */
-  def lshTopk(spark: SparkSession, dir: String, k: Int,
-      numPlanes: Int = NumPlanes): DataFrame = {
+  /** Reference for q68's ranking: LSH-bucketed approximate top-k over the
+    * whole corpus, comparing only within a bucket. PipelineSpec checks
+    * [[q68LshTopk]] against it and measures its recall vs
+    * [[q21TopkCosine]]; not a gate query. */
+  def lshTopk(spark: SparkSession, dir: String, k: Int): DataFrame = {
     // cache feeds both sides of the bucket self-join; call-scoped — the
     // n×k result is pinned eagerly, then the cache released
     Scratch.pinned(
-        lshProjected(table(spark, dir, "embeddings"), numPlanes).cache()) { e =>
+        lshProjected(table(spark, dir, "embeddings")).cache()) { e =>
       // zero-norm vectors keep their bucket assignment (the q22 census and
       // this path share one bucket definition) but can neither query nor
       // rank — the division below excludes them on BOTH join sides
@@ -981,7 +964,7 @@ object Vectors {
   /** Recall floor for [[q71AnnRecall]] in whole percent, on the IVF probe:
     * the gate fails LOUDLY (raise_error on the Spark side, boolean flip vs
     * the oracle on both) if q66's recall vs the exact baseline drops below
-    * this. Measured across the four replay corpora at round 10 — IVF
+    * this. Measured across the four replay corpora — IVF
     * (k=8, nprobe=2, top-5): 92 / 92 / 100 / 100 % — and set WITH MARGIN
     * under the minimum, so it trips on a real retrieval regression
     * (centroid/assignment drift, probe-selection break, ranking change),
@@ -1005,8 +988,8 @@ object Vectors {
     * single-bucket 8-plane LSH top-k over near-orthogonal Gaussian
     * embeddings has ~0–10 % uniform-top-k recall BY DESIGN (its gate
     * utility is high-precision near-dup retrieval — q19/q38 — not
-    * uniform top-k; measured r10, BENCH_NOTES), so a floor there would
-    * gate noise. It rides along so the number stays visible every round.
+    * uniform top-k), so a floor there would gate noise. It rides along so
+    * the number stays visible.
     *
     * Scale shape: all three inputs are top-k relations over [[NumQueries]]
     * queries — k·q rows each — so the intersection joins, grouped counts,
@@ -1018,7 +1001,7 @@ object Vectors {
     // n_exact aggregate). Its kernel is the full-corpus cosine ranking —
     // the query's dominant cost — so single-computation is made STRUCTURAL
     // (k·q-row checkpoint) rather than left to exchange-reuse/AQE, the
-    // same convention as ivfTopk/lshTopk's pinned inputs.
+    // same convention as lshTopk's pinned result.
     val exact = Scratch.pin(q21TopkCosine(spark, dir)
       .filter(col("rank") <= IvfGateTopK)
       .select("query_id", "neighbor_id"))
@@ -1030,10 +1013,10 @@ object Vectors {
     val lshHits = hitsVs(q68LshTopk(spark, dir)
       .filter(col("rank") <= IvfGateTopK)
       .select("query_id", "neighbor_id"), "n_hits_lsh")
-    // the int8 serving row's recall vs the float baseline (r15): brute
+    // the int8 serving row's recall vs the float baseline: brute
     // force over QUANTIZED vectors, so its misses measure pure codec
     // ranking error, not index selectivity — unfloored like LSH (the IVF
-    // floor already gates index health), visible every round
+    // floor already gates index health), visible on every gate run
     val int8Hits = hitsVs(q85QuantizedTopk(spark, dir)
       .filter(col("rank") <= IvfGateTopK)
       .select("query_id", "neighbor_id"), "n_hits_int8")
@@ -1124,7 +1107,7 @@ object Vectors {
     * arrays. Degenerate vectors — zero (no direction to scale), any
     * non-finite element (max|x| becomes NaN/Inf), any NULL element (mx is
     * forced to NULL in both engines — their native max/sum primitives
-    * disagree on null-skipping, ADVICE r7), or magnitudes beyond
+    * disagree on null-skipping), or magnitudes beyond
     * 1e12 (the micro-unit scale would overflow int64; no real embedding
     * regime) — quantize to all zeros with a −1 sentinel scale instead of
     * dividing by zero, casting NaN, or overflowing. The scale's resolution
@@ -1162,7 +1145,7 @@ object Vectors {
         // sentinel: without this, Spark's array_max would SKIP the null
         // (mx real, vector "valid") and the null would then poison q8_sum
         // to NULL while array_join silently dropped it from the CSV —
-        // diverging from DuckDB's null-skipping list_sum (ADVICE r7)
+        // diverging from DuckDB's null-skipping list_sum
         expr("""CASE WHEN exists(embedding, v -> v IS NULL)
                 |THEN CAST(NULL AS DOUBLE)
                 |ELSE array_max(transform(embedding, v -> abs(CAST(v AS DOUBLE))))
@@ -1206,7 +1189,7 @@ object Vectors {
     * partition forwards at most k·n_queries candidate rows, so the one
     * shuffle carries top-k survivors, never the corpus
     * (PipelineSpec pins both plan claims). Recall vs the exact float
-    * baseline rides in q71's artifact (`n_hits_int8`) every round. */
+    * baseline rides in q71's artifact (`n_hits_int8`) on every gate run. */
   def q85QuantizedTopk(spark: SparkSession, dir: String): DataFrame =
     quantizedServingTopkFromStore(
       spark.read.parquet(quantizedStorePath(spark, dir)), TopK)
@@ -1215,13 +1198,12 @@ object Vectors {
   /** Once-per-JVM materialization of the embeddings table as the
     * int8-at-rest store layout ([[quantizedStoreRows]]'s parquet) — the
     * ETL-artifact convention of [[ivfIndexPath]], memoized per sf dir.
-    * q85 serves FROM this layout (r18, the q31-vs-q3 / q77-vs-q82
-    * discipline): the gate row
-    * now reads the PRODUCTION at-rest representation — true int8 scan
-    * bandwidth, the 100 TB serving shape VectorScaleBench measures at
-    * 100M — instead of inline-quantizing the float table per query. The
-    * oracle is unchanged: the stored row is [[quantizedInts]]'s codec row
-    * by construction, so the served relation is identical. */
+    * q85 serves FROM this layout (the q31-vs-q3 / q77-vs-q82
+    * discipline): the gate row reads the PRODUCTION at-rest
+    * representation — true int8 scan bandwidth, the 100 TB serving shape
+    * VectorScaleBench measures at 100M — instead of inline-quantizing the
+    * float table per query. The stored row is [[quantizedInts]]'s codec
+    * row by construction, so the served relation equals the oracle's. */
   def quantizedStorePath(spark: SparkSession, dir: String): String =
     Scratch.once(("quantizedStore", dir)) {
       val out = Scratch.path(spark, "graft_q8store")
@@ -1267,15 +1249,13 @@ object Vectors {
     * drift. */
   def quantizedServingTopkFromStore(qstore: DataFrame,
       topk: Int): DataFrame = {
-    // native int8 kernels (r19): the norm and dot previously ran through
-    // aggregate/zip_with — CodegenFallback, interpreted per row, the
-    // measured ~39 MB/s/core decode bound at the 100M rung. int8_norm2 /
-    // int8_dot compute the same exact integer arithmetic compiled, so the
-    // served relation is bit-identical and q85's oracle carries over
-    // unchanged. The RAGGED-PAIR GUARD (r15 ADVICE) moved INTO int8_dot:
-    // a length mismatch raises the same loud named error (never a partial
-    // dot), mirrored verbatim by the DuckDB twin's `error()` guard in
-    // [[q85Sql]].
+    // native int8 kernels: int8_norm2 / int8_dot compute the exact
+    // integer arithmetic of an aggregate/zip_with fold compiled (the
+    // interpreted fold is a ~39 MB/s/core decode bound at the 100M rung),
+    // so the served relation is bit-identical to q85's oracle. The
+    // RAGGED-PAIR GUARD lives INSIDE int8_dot: a length mismatch raises a
+    // loud named error (never a partial dot), mirrored verbatim by the
+    // DuckDB twin's `error()` guard in [[q85Sql]].
     val qv = qstore
       .filter(col("max_abs_micro") > 0)
       .select(col("vec_id"), col("q"),
@@ -1316,7 +1296,7 @@ object Vectors {
        |  FROM (SELECT qn.vec_id AS query_id, en.vec_id AS neighbor_id,
        |               ${graft.functions.StableRound.stableRoundSql(
                          // ragged-pair guard: same named failure as the
-                         // Spark side's raise_error (r15 ADVICE)
+                         // Spark side's raise_error
                          "CASE WHEN len(qn.q) <> len(en.q) " +
                            "THEN CAST(error('int8_dot: ragged quantized " +
                            "vectors — query/corpus dims differ') AS DOUBLE) " +
@@ -1333,9 +1313,8 @@ object Vectors {
 
   /** Once-per-JVM materialization of the QUANTIZED IVF index — the
     * 100 TB serving combination ([[ivfProbeQuantized]] over int8-at-rest
-    * lists) as an ETL artifact, closing the last production serving path
-    * without its own CORRECTNESS row (VERDICT r18 #3; q66 gates the float
-    * layout). The corpus of record is the int8 store
+    * lists) as an ETL artifact, gated by q86 as q66 gates the float
+    * layout. The corpus of record is the int8 store
     * ([[quantizedStorePath]]); k-means trains on its DEQUANTIZED view
     * (the store is the source of truth — the VectorScaleBench int8 mode's
     * build shape), and the lists rows are the store rows plus the
@@ -1345,17 +1324,15 @@ object Vectors {
     * decode → validity → normalize → [[nearestClusterCol]] argmax
     * directly on the quantized rows, so the only exchange in the build is
     * the cluster-clustered write's range partitioning — carrying int8
-    * payload, never a float64 list (VERDICT r18 #2's shape, applied to
-    * the layout this round adds). Membership is identical to routing the
+    * payload, never a float64 list. Membership is identical to routing the
     * decoded view through [[assignStep]] (same normalize, same argmax
     * kernel — PipelineSpec pins it). */
-  def ivfQuantizedIndexPath(spark: SparkSession, dir: String, k: Int,
-      iters: Int = 3): String =
-    Scratch.once(("ivfQIndex", dir, k, iters)) {
+  def ivfQuantizedIndexPath(spark: SparkSession, dir: String): String =
+    Scratch.once(("ivfQIndex", dir)) {
       val out = Scratch.path(spark, "graft_ivfq")
       val qstore = spark.read.parquet(quantizedStorePath(spark, dir))
       val (_, centroids) =
-        ivfAssignVectors(dequantizedView(qstore), k, iters)
+        ivfAssignVectors(dequantizedView(qstore), IvfGateK, iters = 3)
       Scratch.pinned(centroids) { cents =>
         val cs = collectCentroids(cents)
         qstore.filter(col("max_abs_micro") > 0)
@@ -1385,7 +1362,7 @@ object Vectors {
     * sphere, and scores candidates as `dot(qv, d) / ||d||` with the same
     * sequential folds. */
   def q86IvfQuantized(spark: SparkSession, dir: String): DataFrame = {
-    val p = ivfQuantizedIndexPath(spark, dir, IvfGateK)
+    val p = ivfQuantizedIndexPath(spark, dir)
     ivfProbeQuantized(spark.read.parquet(s"$p/lists"),
         spark.read.parquet(s"$p/centroids"), IvfGateNprobe, IvfGateTopK)
       .orderBy("query_id", "rank")

@@ -19,9 +19,8 @@ import graft.TripleStore.table
   * at once, so parquet min/max stats stay narrow for each column
   * individually and a rectangle predicate (`x BETWEEN … AND y BETWEEN …`)
   * skips most files/row-groups on either dimension — multi-dimensional data
-  * skipping from one sort key, no index structure. CorpusOpsSpec writes a
-  * z-clustered layout and asserts both-dimension file pruning against the
-  * single-column sort.
+  * skipping from one sort key, no index structure. The store's z layout,
+  * `TripleStore.writeZOrdered`, keys on this expression.
   *
   * Why a native expression: the key is computed once per row in the write
   * path of very large tables; the magic-number spread is 12 mask/shift ops,
@@ -71,42 +70,9 @@ object ZOrderKey {
   /** Called from generated code. */
   def interleave(x: Long, y: Long): Long = spread(x) | (spread(y) << 1)
 
-  /** Layout helper: add a z-key over two long columns with each dimension
-    * min-max scaled into an equal `bits`-wide budget first. Raw interleaving
-    * only clusters dimensions of comparable magnitude — a 4-bit column
-    * interleaved with an 8-bit one leaves the key's high bits dominated by
-    * the wide column and the narrow one un-clustered (exactly the failure a
-    * naive z-order hits; production layouts rank- or range-normalize for
-    * this reason). The min/max bounds join in as a broadcast 1-row
-    * aggregate, so the helper stays one declarative plan with no driver
-    * action; callers then `repartitionByRange($col).sortWithinPartitions`
-    * and write. Scaling is double-precision — fine for a LAYOUT key (it
-    * only positions rows on the curve; it never answers a predicate). */
-  def withScaledZKey(df: DataFrame, a: String, b: String,
-      zCol: String = "zkey", bits: Int = 16): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, max, min}
-    val top = (1L << bits) - 1
-    val bounds = df.agg(
-      min(col(a)).cast("double").as("_amn"), max(col(a)).cast("double").as("_amx"),
-      min(col(b)).cast("double").as("_bmn"), max(col(b)).cast("double").as("_bmx"))
-    // constant column => all rows scale to 0 (one z-dimension collapses,
-    // correctly). The zero-range guard must be EXACT, not greatest(range,
-    // 1.0): clamping the divisor to 1 would silently de-normalize any
-    // column whose real range is below 1 (e.g. a [0.2, 0.8] score) —
-    // exactly the unequal-budget failure this helper exists to prevent.
-    def scaled(c: String, mn: String, mx: String) =
-      s"""CASE WHEN $mx = $mn THEN 0L
-         |ELSE CAST(floor((CAST($c AS DOUBLE) - $mn) * $top.0D / ($mx - $mn)) AS BIGINT)
-         |END""".stripMargin
-    df.crossJoin(broadcast(bounds))
-      .withColumn(zCol, expr(
-        s"zorder_key(${scaled(a, "_amn", "_amx")}, ${scaled(b, "_bmn", "_bmx")})"))
-      .drop("_amn", "_amx", "_bmn", "_bmx")
-  }
-
   /** Gate query q57: the z-key over lineitem's (part, supplier) plane, with
-    * the row identity alongside — the exact keys the clustered layout in
-    * CorpusOpsSpec sorts by. Total order: (zkey, l_orderkey, l_linenumber). */
+    * the row identity alongside. Total order: (zkey, l_orderkey,
+    * l_linenumber). */
   def q57(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),

@@ -13,42 +13,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and dropping duplicates AT INGEST is far cheaper than storing them and
   * re-deduplicating the accumulated corpus each time.
   *
-  * Shape: `dropDuplicatesWithinWatermark` on the sha-256 content hash. The
-  * operator keeps ONE state row per distinct hash seen inside the watermark
-  * horizon and drops that row once the watermark passes its event time —
-  * bounded state, where plain `dropDuplicates` on an unbounded stream keeps
-  * every key forever (state grows with corpus size = guaranteed OOM at
-  * scale). The one shuffle clusters the candidate rows by hash — including
-  * the text column, since the surviving row is emitted whole. At full
-  * ingest scale the refinement is to run this operator over a
-  * (hash, doc_id, ts) projection and let the sink's foreachBatch join the
-  * winning doc_ids back to the batch's payload, so only winners' text is
-  * ever fetched; the operator itself is unchanged by that split.
-  *
-  * Distinct from [[StreamingLww.dedupWithinWatermark]], which suppresses
-  * REDELIVERY (the same row arriving twice: all columns equal): here the
-  * rows are genuinely different records — different doc_id, different
-  * arrival — that carry the same CONTENT, and the first one wins. Same
-  * bounded-state operator underneath, different key and different contract.
-  *
-  * Honest semantic bound, pinned by StreamingDedupSpec: two copies separated
-  * by MORE than the watermark horizon are BOTH emitted (the first copy's
-  * state was already evicted). Ingest dedup at that distance is the batch
-  * layer's job (q18 over the stored corpus) — the streaming operator's
-  * contract is "no duplicates within the horizon", which is exactly what
-  * bounded state can promise.
+  * The rows are genuinely different records — different doc_id, different
+  * arrival — that carry the same CONTENT (sha-256 of the text): the
+  * lowest doc_id is kept as the representative and the copies are counted.
   */
 object StreamingDedup {
-
-  /** `docs` must be a streaming DataFrame with columns `doc_id LONG,
-    * text STRING, ts TIMESTAMP`. Emits the first-arriving row per distinct
-    * content hash (append mode); later copies within the watermark horizon
-    * are dropped. */
-  def firstSeen(docs: DataFrame, watermarkDelay: String): DataFrame =
-    docs
-      .withColumn("content_hash", sha2(col("text"), 256))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** Streaming crawl → persistent DEDUP STORE: each micro-batch aggregates
     * to (content_hash → min doc_id, copy count) and merges into a parquet
@@ -60,10 +29,9 @@ object StreamingDedup {
     * union of everything ingested (the equivalence StreamingDedupSpec pins
     * and gate q70 proves against q18's oracle).
     *
-    * Unlike [[firstSeen]] this keeps NO streaming state — the store IS the
-    * state, so nothing is watermark-evicted and copies arbitrarily far
-    * apart still merge (the bound firstSeen's docstring concedes does not
-    * apply here). The cost is a store rewrite per batch; at 100 TB the
+    * This keeps NO streaming state — the store IS the state, so nothing is
+    * watermark-evicted and copies arbitrarily far apart still merge. The
+    * cost is a store rewrite per batch; at 100 TB the
     * refinement is [[StreamingLww.mergeIntoStorePartitioned]]'s shape —
     * hash-range-partition the store (q52's bucketed layout) and rewrite
     * only touched shards.
@@ -87,11 +55,10 @@ object StreamingDedup {
     * new `metadata`, while the path string would alias the two streams and
     * swallow the new one's first batches. */
   def mergeIntoDedupStore(docs: DataFrame, storePath: String,
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      checkpointPath: String): StreamingQuery =
     docs.writeStream
       .outputMode("append")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // resolved per batch, not at wiring time: the metadata file exists

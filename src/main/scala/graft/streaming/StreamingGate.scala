@@ -30,13 +30,12 @@ object StreamingGate {
     * micro-batches each replay runs (maxFilesPerTrigger = 1). */
   private val NumBatches = 4
 
-  /** State-store/shuffle partition count for the GATE replays (r19,
-    * VERDICT #5): every gate corpus is ≤100k rows, but a stateful
-    * micro-batch pays a task + state-store open/commit per shuffle
-    * partition per batch — at the close's 32 session partitions × ~6
-    * micro-batches × 5 streaming entries × 4 corpora, that fixed cost WAS
-    * the close's top line item (q74+q80 ≈ 82 s/close since r14). Eight
-    * partitions keep the replay genuinely distributed (the batch-boundary
+  /** State-store/shuffle partition count for the GATE replays: every gate
+    * corpus is ≤100k rows, but a stateful micro-batch pays a task +
+    * state-store open/commit per shuffle partition per batch — at 32
+    * session partitions × ~6 micro-batches × 5 streaming entries × 4
+    * corpora, that fixed cost dominates a gate replay (q74+q80 ≈ 82 s).
+    * Eight partitions keep the replay genuinely distributed (the batch-boundary
     * and late-data semantics the entries pin are partition-count-
     * independent — LWW/sessionize state is per-key, fold orders are
     * pinned within key) while cutting the fixed cost ~4×. Gate harness
@@ -181,7 +180,7 @@ object StreamingGate {
           val expectRows = release(files)
           require(expectRows > 0, s"q83 $label phase carried no rows")
           val q = StreamingLww.mergeIntoStorePartitioned(
-            StreamingLww.jsonlSource(rs, src, maxFilesPerTrigger = 1),
+            StreamingLww.jsonlSource(rs, src),
             storePath, ckpt, PartBoundaries, Trigger.AvailableNow())
           q.awaitTermination()
           val got = q.recentProgress.toSeq.map(_.numInputRows).sum
@@ -308,21 +307,17 @@ object StreamingGate {
           graft.Triple(TtlSentinelSubject, "<p>", "s0", sent0))))
         placer.placeLines("sentinel1.json", Seq(line(
           graft.Triple(TtlSentinelSubject, "<p>", "s1", sent0 + span))))
-        // ONE store write (r20, VERDICT r19 #4 — q74's fewer-jobs
-        // discipline applied to the SINK, with NumBatches and the
-        // two-sentinel handshake untouched): the previous foreachBatch
-        // ran a parquet commit per micro-batch — 7 write jobs of KB-scale
-        // output, the committer a fixed share of each ~0.5–0.9 s addBatch
-        // (the per-batch durationMs of the replay's progress
-        // events). Batches now collect into a driver buffer (gate-scale,
-        // bounded — the documented harness-collect class) tagged with
-        // their batch id; the store is written once
-        // after termination. Emission content per batch is unchanged, so
-        // the oracle and the state-metric asserts below carry over.
+        // ONE store write (q74's fewer-jobs discipline applied to the
+        // SINK): a parquet commit per micro-batch would run 7 write jobs
+        // of KB-scale output, the committer a fixed share of each
+        // ~0.5–0.9 s addBatch. Batches collect into a driver buffer
+        // (gate-scale, bounded — the documented harness-collect class)
+        // tagged with their batch id; the store is written once after
+        // termination, with the same per-batch emission content.
         val buf =
           new java.util.concurrent.ConcurrentLinkedQueue[(Long, graft.Triple)]()
         val q = StreamingLww.winnersWithTtl(
-            StreamingLww.jsonlSource(rs, src, maxFilesPerTrigger = 1),
+            StreamingLww.jsonlSource(rs, src),
             s"$d milliseconds", ttl)
           .writeStream
           .outputMode("update")
@@ -435,12 +430,10 @@ object StreamingGate {
         val raw = TripleStore.table(rs, dir, "events")
         val ev = raw.select(col("user_id"), col("event_id"),
           Relational.eventTsMs(raw).as("ts_ms"), col("value"))
-        // ONE export job, sliced driver-side (r19, VERDICT #5): the
-        // previous per-slice collects plus a min/max agg ran five Spark
-        // jobs over the same gate-scale table — measured as ~7 s of
-        // q74's ~16 s replay, the single largest share. Same rows, same
-        // slice rule, same within-file scan order.
-        // ts decodes as Option (ADVICE r19): the generator contract is
+        // ONE export job, sliced driver-side: per-slice collects plus a
+        // min/max agg would run five Spark jobs over the same gate-scale
+        // table (~7 s of a ~16 s replay).
+        // ts decodes as Option: the generator contract is
         // "no NULL event ts", but a violating corpus must surface as this
         // named error, not as an opaque encoder NPE from a non-optional
         // Long field
@@ -485,8 +478,8 @@ object StreamingGate {
       .withColumn("session_id", row_number().over(w).cast("long"))
       .select(col("user_id"), col("session_id"), col("session_start"),
         col("session_end"), col("n_events"),
-        // the session-sum fold order is PINNED across all three engines
-        // (r15, closing ADVICE r13's boundary risk): stream state buffer,
+        // the session-sum fold order is PINNED across all three engines:
+        // stream state buffer,
         // batch kernel and DuckDB oracle each fold the non-null values
         // sequentially in (ts_ms, event_id) order from 0.0, so the
         // pre-round value is the same BITS everywhere. The round itself

@@ -33,49 +33,20 @@ object StreamingLww {
     * [[graft.TripleStore.writeJsonl]] is the batch twin): files dropped
     * into `path` become micro-batches, so any process that can write a
     * file can feed the engine — no broker required. Explicit schema (a
-    * streaming read must never sample 100 TB to infer four columns);
-    * `maxFilesPerTrigger` bounds a micro-batch when a backlog accumulates,
-    * keeping per-batch sink I/O predictable. Compose with [[winners]] /
+    * streaming read must never sample 100 TB to infer four columns); one
+    * file per micro-batch, so a backlog replays as file-sized batches and
+    * per-batch sink I/O stays predictable. Compose with [[winners]] /
     * [[winnersWithTtl]] / [[mergeIntoStorePartitioned]]. */
-  def jsonlSource(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerTrigger: Int = 64): Dataset[Triple] = {
+  def jsonlSource(spark: org.apache.spark.sql.SparkSession,
+      path: String): Dataset[Triple] = {
     import spark.implicits._
     spark.readStream
       .schema("subject STRING, predicate STRING, object STRING, ts_ms BIGINT")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      // malformed lines fail the batch loudly (same invariant as the batch
-      // twin TripleStore.fromJsonl) — PERMISSIVE would null them silently
-      // and poison the store under null keys
+      .option("maxFilesPerTrigger", 1)
+      // malformed lines fail the batch loudly — PERMISSIVE would null them
+      // silently and poison the store under null keys
       .option("mode", "FAILFAST")
       .json(path)
-      .as[Triple]
-  }
-
-  /** Ingestion hygiene for at-least-once sources (redelivered files,
-    * replayed batches): suppress EXACT duplicate rows — all four columns
-    * equal — within the watermark window, so downstream per-batch work
-    * (merges, counts, billing) isn't inflated by redelivery. State is one
-    * fingerprint per distinct row, evicted once the watermark passes.
-    *
-    * CONTRACT — this trades late-data tolerance for bounded state: any row
-    * (duplicate or DISTINCT) whose event time falls behind the watermark is
-    * dropped by Spark's standard late-data filter before the operator.
-    * Use it only when the source's event-time disorder is bounded by
-    * `watermarkDelay`; for unboundedly-late sources feed the LWW kernel
-    * directly — its strict-`>` merge is already idempotent under
-    * redelivery, so dedup is a cost optimization you can skip, never a
-    * correctness requirement. (Asserted in StreamingLwwSpec: an in-window
-    * redelivery is suppressed, an in-window distinct row passes, and a
-    * behind-watermark distinct row is dropped.) */
-  def dedupWithinWatermark(updates: Dataset[Triple],
-      watermarkDelay: String): Dataset[Triple] = {
-    import updates.sparkSession.implicits._
-    updates
-      .withColumn("event_ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("event_ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(
-        "subject", "predicate", "object", "ts_ms")
-      .drop("event_ts")
       .as[Triple]
   }
 
@@ -232,18 +203,4 @@ object StreamingLww {
           }
       }
   }
-
-  /** Q11 tumbling 1-minute windows with a watermark over an event stream
-    * (`ts` must be TimestampType). The watermark bounds state: windows older
-    * than it are finalized and evicted, the Spark analog of the reference's
-    * 5 s health/merge cadence bounding staleness (`MasterServer.py:233`). */
-  def tumblingCounts(events: DataFrame, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-      // stableRound, NOT the builtin: keeps the stream in bit-lockstep
-      // with batch q11Tumbling (its spec equates the two on shared input)
-      .agg(count(lit(1)).as("cnt"),
-        graft.functions.StableRound.stableRound(sum(col("value")), 2)
-          .as("sum_value"))
 }

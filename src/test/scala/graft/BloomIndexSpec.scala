@@ -13,7 +13,7 @@ import graft.operators.BloomIndex
   * contains (as long as it is a corpus superset), appends preserve the
   * superset invariant, and a poisoned (over-full) bloom changes cost, not
   * results. */
-class BloomIndexSpec extends AnyFunSuite {
+class BloomIndexSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -38,7 +38,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("admit == the plain anti-join relation (dups, within-batch dups, " +
     "all-new and all-dup batches)") {
     val corpus = hashed((0L until 40L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus.select("content_hash"), idx)
     // batch: 10 corpus dups, 2 within-batch dup groups, 8 fresh
     val batch = hashed(
@@ -61,12 +61,12 @@ class BloomIndexSpec extends AnyFunSuite {
       (50L until 60L).map(i => (i, s"new $i")) ++
         Seq((60L, "doc 3"), (61L, "doc 7")))
     val want = reference(batch, corpus)
-    val clean = Files.createTempDirectory("graft_bloomidx").toString + "/c"
+    val clean = tmp("graft_bloomidx") + "/c"
     BloomIndex.build(corpus.select("content_hash"), clean)
     assert(admitted(clean, batch, corpus) == want)
     // poison: fold EVERY batch hash into the index too — now every row is
     // bloom-positive (maximal false-positive routing for the new rows)
-    val poisoned = Files.createTempDirectory("graft_bloomidx").toString + "/p"
+    val poisoned = tmp("graft_bloomidx") + "/p"
     BloomIndex.build(corpus.select("content_hash"), poisoned)
     BloomIndex.append(spark, poisoned, batch.select("content_hash"))
     assert(admitted(poisoned, batch, corpus) == want,
@@ -76,7 +76,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("append preserves the no-false-negative invariant: previously " +
     "admitted hashes are rejected by the grown index") {
     val corpus0 = hashed((0L until 20L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus0.select("content_hash"), idx)
     val epoch1 = hashed(Seq((100L, "e1 a"), (101L, "e1 b"), (102L, "doc 5")))
     val a1 = BloomIndex.admit(spark, idx, epoch1, corpus0)
@@ -112,7 +112,7 @@ class BloomIndexSpec extends AnyFunSuite {
       Prop.forAll(genCase) { case (docs, cut) =>
         val corpus = hashed(docs.take(cut))
         val batch = hashed(docs.drop(cut))
-        val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+        val idx = tmp("graft_bloomidx") + "/i"
         BloomIndex.build(corpus.select("content_hash"), idx)
         admitted(idx, batch, corpus) == reference(batch, corpus)
       })
@@ -123,7 +123,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "steady state (all-duplicates batch); bloom_build over zero rows is " +
     "NULL and must not reach the blob merge") {
     val corpus = hashed((0L until 10L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus.select("content_hash"), idx)
     val allDup = hashed(Seq((50L, "doc 1"), (51L, "doc 2")))
     val a = BloomIndex.admit(spark, idx, allDup, corpus)
@@ -138,7 +138,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "writer CAS guard) — a lost append race can never silently drop " +
     "admitted hashes") {
     import org.apache.hadoop.fs.Path
-    val base = Files.createTempDirectory("graft_bloomidx").toString
+    val base = tmp("graft_bloomidx")
     val fs = new Path(base).getFileSystem(
       spark.sessionState.newHadoopConf())
     Files.createDirectories(java.nio.file.Paths.get(s"$base/.staging_v1"))
@@ -164,7 +164,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "and the nested orphan is removed — rename()==true is not proof of " +
     "winning") {
     import org.apache.hadoop.fs.Path
-    val base = Files.createTempDirectory("graft_bloomidx").toString
+    val base = tmp("graft_bloomidx")
     val fs = new Path(base).getFileSystem(
       spark.sessionState.newHadoopConf())
     // the racer committed v1 inside the check-to-rename window; our rename
@@ -203,7 +203,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("append retains the latest three snapshots — a reader pinned two " +
     "appends back still completes") {
     val corpus = hashed((0L until 10L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus.select("content_hash"), idx)
     (1 to 3).foreach { i =>
       BloomIndex.append(spark, idx,
@@ -217,7 +217,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("a REBUILD into an appended root clears the stale later snapshots " +
     "— latest() must serve the fresh build, never an outranking old v>0") {
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     val oldCorpus = hashed((0L until 10L).map(i => (i, s"old $i")))
     BloomIndex.build(oldCorpus.select("content_hash"), idx)
     (1 to 2).foreach { i =>
@@ -255,7 +255,7 @@ class BloomIndexSpec extends AnyFunSuite {
     } yield epochs
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8),
       Prop.forAll(genEpochs) { epochs =>
-        val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+        val idx = tmp("graft_bloomidx") + "/i"
         var nextId = 0L
         def frame(texts: Seq[String]): DataFrame = {
           val rows = texts.map { t => nextId += 1; (nextId, t) }
@@ -286,7 +286,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "with no corpus keys carry NULL blooms (their rows admit uncheck-ed " +
     "— the exact NOT-EXISTS answer for an empty shard)") {
     val corpus = hashed((0L until 40L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus.select("content_hash"), idx, numShards = 4L)
     val v0 = spark.read.parquet(s"$idx/v0")
     assert(v0.count() == 4 &&
@@ -308,7 +308,7 @@ class BloomIndexSpec extends AnyFunSuite {
     // hash lands in a shard with no current blob — the exact path a
     // left-behind add-shard would silently leak false negatives through
     val corpus0 = hashed(Seq.empty[(Long, String)])
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus0.select("content_hash"), idx, numShards = 4L)
     val epoch1 = hashed((0L until 24L).map(i => (i, s"e1 $i")))
     val a1 = BloomIndex.admit(spark, idx, epoch1, corpus0)
@@ -333,7 +333,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "task-side through the per-JVM cache (the q61 no-literal convention, " +
     "extended to the sharded index)") {
     val corpus = hashed((0L until 2000L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     // default gate geometry: 1<<20 bits => ~128 KB total blob, ~16 KB per
     // shard at N=8 — any blob leaked into the plan or a literal would
     // surface as one giant token
@@ -369,7 +369,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "probe after buildSized over a grown corpus sees the NEW blooms — a " +
     "stale false would skip the exact check and silently admit dups " +
     "(ADVICE r17)") {
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     val corpus0 = hashed((0L until 50L).map(i => (i, s"doc $i")))
     BloomIndex.build(corpus0.select("content_hash"), idx, numShards = 2L)
     // prime the cache with v0's blooms
@@ -392,7 +392,7 @@ class BloomIndexSpec extends AnyFunSuite {
     "version layout: per-shard membership matches per-shard keys, a NULL " +
     "shard is None, and a missing shard row fails loudly") {
     val corpus = hashed((0L until 400L).map(i => (i, s"doc $i")))
-    val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+    val idx = tmp("graft_bloomidx") + "/i"
     BloomIndex.build(corpus.select("content_hash"), idx, numShards = 4L)
     val conf = spark.sessionState.newHadoopConf()
     val ver = s"$idx/v0"
@@ -479,7 +479,7 @@ class BloomIndexSpec extends AnyFunSuite {
     val saved = C.maxBytes
     try {
       val corpus = hashed((0L until 3000L).map(i => (i, s"doc $i")))
-      val idx = Files.createTempDirectory("graft_bloomidx").toString + "/i"
+      val idx = tmp("graft_bloomidx") + "/i"
       BloomIndex.build(corpus.select("content_hash"), idx, numShards = 8L)
       val batch = hashed((0L until 500L).map(i =>
         (10000L + i, if (i % 5 == 0) s"doc $i" else s"fresh $i")))

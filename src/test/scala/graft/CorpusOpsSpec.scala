@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Docs, Vectors}
 import graft.plans.ZOrderKey
 
-/** Round-7 corpus/layout operators (q54–q59): the properties the SQL-oracle
-  * gate can't express — coverage/overlap laws, in-memory model cross-checks,
-  * scrub completeness on adversarial shapes, quantization error bounds, and
-  * the z-order layout's BOTH-dimension file pruning. */
-class CorpusOpsSpec extends AnyFunSuite {
+/** Corpus/layout operators (q54–q65): the properties the SQL-oracle gate
+  * can't express — coverage/overlap laws, in-memory model cross-checks,
+  * scrub completeness on adversarial shapes, quantization error bounds and
+  * the z-key's bit interleave. */
+class CorpusOpsSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -110,73 +110,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(viaSql == 39L)
   }
 
-  test("z-clustered layout prunes files on BOTH dimensions; a single-column " +
-    "sort cannot prune the other dimension") {
-    // dimensions of unequal bit width MUST be scale-normalized before
-    // interleaving (suppkey spans ~4 bits here vs partkey's ~8 — raw
-    // interleave leaves the key dominated by partkey's high bits)
-    val li = ZOrderKey.withScaledZKey(
-      spark.read.parquet(s"$sf/lineitem.parquet"), "l_partkey", "l_suppkey")
-    val base = java.nio.file.Files.createTempDirectory("graft_zlay").toString
-    val (zdir, sdir) = (s"$base/z", s"$base/s")
-    // exact equal-depth buckets over a fully tie-broken order, NOT
-    // repartitionByRange: range boundaries come from sampling seeded by
-    // the RDD id, so in a shared test session the file cuts (and thus the
-    // overlap counts below) would wobble run to run
-    // 16 files = 4 z-bits so EACH dimension contributes ≥2 bits to the
-    // cuts (8 files give partkey a single bit — barely clusters)
-    def writeClustered(key: String, dir: String): Unit = {
-      val w = org.apache.spark.sql.expressions.Window.orderBy(
-        col(key), col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"))
-      li.withColumn("bucket", ntile(16).over(w))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-    }
-    writeClustered("zkey", zdir)
-    writeClustered("l_partkey", sdir)
-    // a file can serve min/max skipping for a predicate iff its [min, max]
-    // stats intersect the predicate range — count intersecting files
-    def overlapping(dir: String, c: String, lo: Long, hi: Long): Int =
-      spark.read.parquet(dir).inputFiles.count { f =>
-        val (mn, mx) = spark.read.parquet(f).agg(min(col(c)), max(col(c)))
-          .as[(Long, Long)].head()
-        mx >= lo && mn <= hi
-      }
-    def nFiles(dir: String): Int = spark.read.parquet(dir).inputFiles.length
-    val (pLo, pHi, sLo, sHi) = li
-      .agg(min("l_partkey"), max("l_partkey"), min("l_suppkey"), max("l_suppkey"))
-      .as[(Long, Long, Long, Long)].head()
-    // an eighth-of-range box in each dimension
-    val (pboxHi, sboxHi) = (pLo + (pHi - pLo) / 8, sLo + (sHi - sLo) / 8)
-    val zn = nFiles(zdir)
-    assert(zn >= 8, "need multiple files for a pruning statement")
-    assert(overlapping(zdir, "l_partkey", pLo, pboxHi) <= zn / 2,
-      "z layout should prune most files on the first dimension")
-    assert(overlapping(zdir, "l_suppkey", sLo, sboxHi) <= zn / 2,
-      "z layout should prune most files on the second dimension")
-    // the single-column sort prunes its own column but NOT the other:
-    // suppkey is uncorrelated with partkey, so every file spans its range
-    assert(overlapping(sdir, "l_partkey", pLo, pboxHi) <= 3)
-    assert(overlapping(sdir, "l_suppkey", sLo, sboxHi) == nFiles(sdir))
-  }
-
-  test("withScaledZKey normalizes sub-1 value ranges into the full bit " +
-    "budget; a constant column collapses to zero cleanly") {
-    val df = Seq((0.2, 10L), (0.5, 20L), (0.8, 30L)).toDF("a", "b")
-    val z = ZOrderKey.withScaledZKey(df, "a", "b").select("zkey")
-      .as[Long].collect().sorted
-    // 0.8 and 30 both scale to 65535 — a clamped divisor (the old
-    // greatest(range, 1.0)) would have crushed the [0.2, 0.8] dimension
-    // into a sliver of the budget
-    assert(z.last == ZOrderKey.interleave(65535L, 65535L))
-    assert(z.head == 0L)
-    val zc = ZOrderKey.withScaledZKey(
-      Seq((7.0, 10L), (7.0, 30L)).toDF("a", "b"), "a", "b")
-      .select("zkey").as[Long].collect().sorted
-    assert(zc.toSeq == Seq(0L, ZOrderKey.interleave(0L, 65535L)))
-  }
-
   test("q58 quantization: int8 range, max element hits ±127, dequant error " +
     "bounded by mx/254, checksum consistent") {
     val embs = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -206,7 +139,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("q58 degenerate vectors (zero, NaN, Inf, 1e30) quantize to zeros " +
     "with the -1 sentinel scale; sane vectors unaffected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q58z").toString
+    val dir = tmp("graft_q58z")
     Seq(
       (1L, Some(Array(0f, 0f, 0f, 0f)), 0),
       (2L, Some(Array(1f, -2f, 0.5f, 2f)), 0),
@@ -474,39 +407,5 @@ class CorpusOpsSpec extends AnyFunSuite {
       r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getDouble(6))).toMap
     assert(got == expected)
-  }
-
-  test("q62 approx variant: every non-sketch column identical to the exact " +
-    "report, dup counts within the HLL sketch's error budget") {
-    val rsd = 0.05
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      Option(r.getString(0)) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getDouble(6))).toMap
-    val exact = keyed(Docs.q62SourceReport(spark, sf))
-    val approx = keyed(Docs.q62SourceReportApprox(spark, sf, rsd))
-    assert(approx.keySet == exact.keySet)
-    exact.foreach { case (src, e) =>
-      val a = approx(src)
-      // n_dup_docs (position 3 / tuple _3) is the only column allowed to
-      // differ; |approxDup - exactDup| == |approxDistinct - exactDistinct|,
-      // bounded by a generous multiple of rsd·n_docs plus a small-count
-      // floor (HLL++ switches to exact linear counting at low cardinality,
-      // so tiny sources should in fact match exactly)
-      assert((e._1, e._2, e._4, e._5, e._6) ==
-        (a._1, a._2, a._4, a._5, a._6), s"non-sketch column drifted: $src")
-      val tol = math.max(4.0, 6 * rsd * e._1)
-      assert(math.abs(a._3 - e._3) <= tol,
-        s"$src: approx dup ${a._3} vs exact ${e._3} beyond tol $tol")
-    }
-    // the sketch may OVERestimate distinct hashes; the clamp keeps the
-    // exact report's n_dup_docs >= 0 invariant at every precision,
-    // including the sloppiest HLL++ admits (p >= 4 caps rsd just over
-    // 0.25), where overestimates are most likely
-    Seq(0.05, 0.15, 0.25).foreach { r =>
-      Docs.q62SourceReportApprox(spark, sf, r).collect().foreach { row =>
-        assert(row.getLong(3) >= 0L,
-          s"rsd=$r source=${row.get(0)}: negative n_dup_docs ${row.getLong(3)}")
-      }
-    }
   }
 }

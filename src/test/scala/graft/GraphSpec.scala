@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.obs.Work
 import graft.operators.Graph
 
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -264,8 +264,7 @@ class GraphSpec extends AnyFunSuite {
     val es = (0 until 300).map(i =>
       (s"<n${i % 23}>", s"<n${(i * 7 + 1) % 29}>")).toDF("src", "dst")
     Graph.writeBucketedEdges(es, "graft_pr_edges_bkt", 4)
-    val plainDir = java.nio.file.Files
-      .createTempDirectory("graft_pr_plain").toString + "/e"
+    val plainDir = tmp("graft_pr_plain") + "/e"
     es.write.parquet(plainDir)
     // value equivalence: same arithmetic, different physical distribution —
     // only aggregate summation order may differ (sub-ulp)
@@ -325,8 +324,7 @@ class GraphSpec extends AnyFunSuite {
     "of the frame OOM'd a 48 GiB heap)") {
     val es = (0 until 240).map(i =>
       (s"<m${i % 17}>", s"<m${(i * 5 + 2) % 19}>")).toDF("src", "dst")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pr_mat").toString + "/e"
+    val dir = tmp("graft_pr_mat") + "/e"
     es.write.parquet(dir)
     val want = Graph.pageRank(es, iters = 4).as[(String, Double)]
       .collect().toMap
@@ -403,7 +401,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("ccStar with a reliable checkpoint dir: same labels, checkpoint " +
     "files land in the dir, and superseded rounds' files are deleted") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccstar_ckpt")
+    val dir = new java.io.File(tmp("graft_ccstar_ckpt"))
     val hub = (1 to 50).map(i => ("<hub>", f"<leaf_$i%02d>"))
     // the chain forces MULTIPLE contraction rounds (its middle nodes are
     // both a hi and a lo), so the superseded-round cleanup actually runs
@@ -421,14 +419,14 @@ class GraphSpec extends AnyFunSuite {
     def rddDirs(f: java.io.File): Array[java.io.File] =
       Option(f.listFiles).getOrElse(Array.empty)
         .flatMap(c => if (c.getName.startsWith("rdd-")) Array(c) else rddDirs(c))
-    assert(rddDirs(dir.toFile).length == 2,
+    assert(rddDirs(dir).length == 2,
       s"expected exactly input-snapshot + final-round checkpoints under " +
-        s"$dir, found: ${rddDirs(dir.toFile).map(_.getName).mkString(",")}")
+        s"$dir, found: ${rddDirs(dir).map(_.getName).mkString(",")}")
   }
 
   test("ccStar local finish under a reliable checkpoint dir: same labels, " +
     "and the collected round's files are deleted too") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccstar_lf_ckpt")
+    val dir = new java.io.File(tmp("graft_ccstar_lf_ckpt"))
     val chain = Seq(("<b>", "<a>"), ("<c>", "<b>"), ("<d>", "<c>"),
       ("<e>", "<d>"))
     val edgeSeq = chain ++ Seq(("<p>", "<q>"), ("<solo>", "<solo>"))
@@ -442,9 +440,9 @@ class GraphSpec extends AnyFunSuite {
     def rddDirs(f: java.io.File): Array[java.io.File] =
       Option(f.listFiles).getOrElse(Array.empty)
         .flatMap(c => if (c.getName.startsWith("rdd-")) Array(c) else rddDirs(c))
-    assert(rddDirs(dir.toFile).length == 1,
+    assert(rddDirs(dir).length == 1,
       s"expected only the input snapshot's checkpoint under $dir, found: " +
-        rddDirs(dir.toFile).map(_.getName).mkString(","))
+        rddDirs(dir).map(_.getName).mkString(","))
   }
 
   test("ccStar local finish replaces the round tail with probe + collect: " +

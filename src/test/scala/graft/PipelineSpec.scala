@@ -9,7 +9,7 @@ import graft.operators.{Docs, Vectors}
 /** LLM-pipeline pillars: properties that the SQL-oracle gate can't express —
   * LSH locality/recall vs the brute-force baseline, and the typed multimodal
   * feature extraction. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -64,7 +64,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q47 repetition metrics match hand-computed fractions, incl. a doc " +
     "too short for 3-grams") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    val dir = tmp("graft_rep")
     Seq((0L, "a a a b"), (1L, "x y z"), (2L, "p q"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val got = Docs.q47Repetition(spark, dir)
@@ -100,7 +100,7 @@ class PipelineSpec extends AnyFunSuite {
       val len = 1 + rnd.nextInt(30)
       (i, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep_prop").toString
+    val dir = tmp("graft_rep_prop")
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val got = Docs.q47Repetition(spark, dir)
       .as[(Long, Option[Double], Option[Double], Option[Double],
@@ -130,7 +130,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q48 decontamination: planted 8-gram overlaps are found and counted, " +
     "benchmark members and gram-free docs excluded, via a broadcast probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon").toString
+    val dir = tmp("graft_decon")
     val bench = "w1 w2 w3 w4 w5 w6 w7 w8 w9" // doc 0: two 8-grams
     Seq(
       (0L, bench),                           // benchmark member (0 % 7 == 0)
@@ -209,7 +209,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // a doc longer than the whole budget advances the offset past an
     // entire chunk window: ids skip (0, 2) and the invariant still holds
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack").toString
+    val dir = tmp("graft_pack")
     Seq((0L, Seq.fill(5000)("t").mkString(" ")),
       (16L, Seq.fill(10)("t").mkString(" ")),
       (32L, Seq.fill(10)("t").mkString(" ")))
@@ -223,7 +223,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q52 incremental dedup: corpus-known hashes rejected, within-batch " +
     "dups collapse to min doc_id, batch-unique docs admitted") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = tmp("graft_incr")
     Seq(
       (0L, "known doc"),    // corpus (0 % 10 < 8)
       (1L, "other corpus"), // corpus
@@ -367,7 +367,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IVF: every vector lands in exactly one cluster; probed top-k " +
     "overlaps brute force with matching scores") {
-    val (assigned, centroids) = Vectors.ivfAssign(spark, sf, k = 16, iters = 2)
+    val (assigned, centroids) = Vectors.ivfAssign(spark, sf, k = 16, iters = 3)
     assert(assigned.count() == 500)
     assert(assigned.select("vec_id").distinct().count() == 500)
     assert(centroids.count() == 16)
@@ -375,9 +375,10 @@ class PipelineSpec extends AnyFunSuite {
     val bf = Vectors.q21TopkCosine(spark, sf)
       .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
       .collect().map(r => (r._1, r._2) -> r._3).toMap
-    val ivf = Vectors.ivfTopk(spark, sf, k = 16, nprobe = 4, topk = 10)
-      .select("query_id", "neighbor_id", "cos_sim").as[(Long, Long, Double)]
-      .collect()
+    val ivf = Scratch.pinned(Scratch.pin(assigned))(a =>
+      Vectors.ivfProbe(a, centroids, nprobe = 4, topk = 10)
+        .select("query_id", "neighbor_id", "cos_sim")
+        .as[(Long, Long, Double)].collect())
     assert(ivf.nonEmpty)
     val shared = ivf.filter(r => bf.contains((r._1, r._2)))
     assert(shared.nonEmpty, "IVF(4/16 probes) found none of the true top-10")
@@ -396,10 +397,13 @@ class PipelineSpec extends AnyFunSuite {
         Vectors.IvfGateNprobe, Vectors.IvfGateTopK)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-    val inMem = Vectors.ivfTopk(spark, sf, Vectors.IvfGateK,
-        Vectors.IvfGateNprobe, Vectors.IvfGateTopK)
-      .select("query_id", "neighbor_id", "cos_sim", "rank")
-      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
+    val (assigned, centroids) =
+      Vectors.ivfAssign(spark, sf, Vectors.IvfGateK, iters = 3)
+    val inMem = Scratch.pinned(Scratch.pin(assigned))(a =>
+      Vectors.ivfProbe(a, centroids, Vectors.IvfGateNprobe,
+          Vectors.IvfGateTopK)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)))
     assert(fromDisk.nonEmpty && fromDisk.sameElements(inMem))
   }
 
@@ -420,7 +424,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // daily-crawl shape end to end: corpus-only layout + appended batch
     // must serve the SAME probes as the unsplit index
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf_inc").toString
+    val out = tmp("graft_ivf_inc")
     Vectors.ivfAssignBatch(corpus, cents)
       .repartitionByRange(col("cluster"))
       .sortWithinPartitions("cluster", "vec_id")
@@ -479,7 +483,7 @@ class PipelineSpec extends AnyFunSuite {
     val (_, cents) = Vectors.ivfAssign(spark, sf, k = 8, iters = 3)
     // the int8-at-rest layout: assignment from the DEQUANTIZED view (the
     // store is the source of truth), rows carry the q58 codec projection
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf_q").toString
+    val out = tmp("graft_ivf_q")
     val qstore = Vectors.quantizedStoreRows(corpus).localCheckpoint(true)
     Vectors.ivfAssignBatch(Vectors.dequantizedView(qstore), cents)
       .select("vec_id", "cluster")
@@ -716,7 +720,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("multimodal: binaryFile source end-to-end — real files from disk " +
     "through mediaFromFiles into the batch decoder") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = java.nio.file.Paths.get(tmp("graft_media"))
     val payloads = Map(
       7L -> ("png", Array.tabulate(300)(i => (i % 251).toByte)),
       42L -> ("jpg", "real bytes from a real file".getBytes("UTF-8")),
@@ -733,14 +737,13 @@ class PipelineSpec extends AnyFunSuite {
         java.util.Arrays.equals(r.media, bytes),
         s"file $id.$ext did not round-trip: $r")
     }
-    // and the production rows flow through the SAME per-partition decoder
-    // as the derived table — features match a local fakeDecode of the raw
-    // bytes exactly
+    // and the production rows flow through the per-partition decoder —
+    // features match a local headerDecode of the raw bytes exactly
     val feats = Multimodal
-      .extractFeatures(Multimodal.mediaFromFiles(spark, dir.toString))
+      .extractImageFeatures(Multimodal.mediaFromFiles(spark, dir.toString))
       .collect().map(f => f.doc_id -> f).toMap
     payloads.foreach { case (id, (ext, bytes)) =>
-      val expect = Multimodal.fakeDecode(
+      val expect = Multimodal.headerDecode(
         Multimodal.MediaRow(id, bytes, ext, bytes.length.toLong))
       val got = feats(id)
       assert(got.features.sameElements(expect.features) &&
@@ -804,7 +807,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("multimodal: extractImageFeatures carries real dimensions for image " +
     "payloads and degrades to the stub for non-images, end-to-end from disk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media_img")
+    val dir = java.nio.file.Paths.get(tmp("graft_media_img"))
     val png = encodeImage("png", 64, 48)
     val jpg = encodeImage("jpg", 17, 11)
     java.nio.file.Files.write(dir.resolve("1.png"), png)
@@ -884,7 +887,7 @@ class PipelineSpec extends AnyFunSuite {
     // membership identity: the one-scan store-side assignment (decode →
     // validity → normalize → argmax inline on the quantized rows) must
     // equal routing the decoded view through the shared assignStep kernel
-    val p = Vectors.ivfQuantizedIndexPath(spark, sf, Vectors.IvfGateK)
+    val p = Vectors.ivfQuantizedIndexPath(spark, sf)
     val lists = spark.read.parquet(s"$p/lists")
     val inline = lists.select("vec_id", "cluster")
       .as[(Long, Long)].collect().toMap
@@ -919,7 +922,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("multimodal: a non-conforming file name fails loudly with its path, " +
     "not as an opaque null-encoder error downstream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media_bad")
+    val dir = java.nio.file.Paths.get(tmp("graft_media_bad"))
     java.nio.file.Files.write(dir.resolve("7.png"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(dir.resolve("README.txt"), "oops".getBytes)
     val ex = intercept[Exception] {
@@ -935,11 +938,21 @@ class PipelineSpec extends AnyFunSuite {
       s"expected a descriptive failure naming the file, got:\n$all")
   }
 
+  /** `documents` as media rows: the UTF-8 text bytes are the payload. */
+  private def textMedia: org.apache.spark.sql.Dataset[Multimodal.MediaRow] =
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("media"),
+        lit("text/plain").as("format"),
+        octet_length(col("text")).cast("bigint").as("n_bytes"))
+      .as[Multimodal.MediaRow]
+
   test("multimodal: typed batch feature extraction is deterministic with " +
     "fixed width and normalized histogram") {
-    val media = Multimodal.mediaTable(spark, sf)
-    val feats1 = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
-    val feats2 = Multimodal.extractFeatures(media).collect().sortBy(_.doc_id)
+    val media = textMedia
+    val feats1 = Multimodal.extractImageFeatures(media).collect()
+      .sortBy(_.doc_id)
+    val feats2 = Multimodal.extractImageFeatures(media).collect()
+      .sortBy(_.doc_id)
     assert(feats1.length == 500)
     assert(feats1.forall(_.features.length == 8))
     feats1.foreach { f =>
@@ -988,7 +1001,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("multimodal: frame sampling covers the payload with stable indices " +
     "and stride-bounded count") {
-    val media = Multimodal.mediaTable(spark, sf)
+    val media = textMedia
     val all = Multimodal.sampleFrames(media, frameBytes = 64, stride = 1)
       .collect().groupBy(_.doc_id)
     val payloads = media.collect().map(m => m.doc_id -> m.media).toMap
@@ -1004,21 +1017,5 @@ class PipelineSpec extends AnyFunSuite {
       val expect = (all(id).length + 3) / 4
       assert(frames.length == expect, s"doc $id: ${frames.length} vs $expect")
     }
-  }
-
-  test("multimodal: mean-pool resize halves width and conserves histogram " +
-    "mass") {
-    val feats = Multimodal.extractFeatures(Multimodal.mediaTable(spark, sf))
-    val resized = Multimodal.resizeFeatures(feats, width = 4).collect()
-    assert(resized.forall(_.features.length == 4))
-    resized.foreach { f =>
-      assert(math.abs(f.features.sum - 1f) < 1e-3)
-    }
-  }
-
-  test("multimodal: media payload bytes round-trip the metadata") {
-    val rows = Multimodal.mediaTable(spark, sf).collect()
-    assert(rows.forall(r => r.media.length.toLong == r.n_bytes))
-    assert(rows.forall(_.format == "text/plain"))
   }
 }

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 
-class ScratchSpec extends AnyFunSuite {
+class ScratchSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
@@ -101,10 +101,6 @@ class ScratchSpec extends AnyFunSuite {
     import streaming.StreamingLww
     import spark.implicits._
     val sc = spark.sparkContext
-    val dirs = scala.collection.mutable.Buffer[JPath]()
-    def tmp(prefix: String): String = {
-      val d = Files.createTempDirectory(prefix); dirs += d; d.toString
-    }
     // the RDDs the result's own plan reads, subqueries included: the only
     // blocks an operator may leave pinned
     def backing(df: DataFrame): Set[Int] =
@@ -127,8 +123,10 @@ class ScratchSpec extends AnyFunSuite {
       "Vectors.cosineNearDupPairs" -> (() => Vectors.cosineNearDupPairs(
         TripleStore.table(spark, sf, "embeddings"), Vectors.NearDupThreshold)),
       "Vectors.lshTopk" -> (() => Vectors.lshTopk(spark, sf, 10)),
-      "Vectors.ivfTopk" -> (() =>
-        Vectors.ivfTopk(spark, sf, k = 16, nprobe = 4, topk = 10)),
+      // a k no other spec builds, so the memoized index is built here
+      "Vectors.ivfIndexPath" -> { () =>
+        spark.read.parquet(Vectors.ivfIndexPath(spark, sf, k = 16) + "/lists")
+      },
       "Vectors.q71AnnRecall" -> (() => Vectors.q71AnnRecall(spark, sf)),
       "BloomIndex.admit + append" -> { () =>
         val idx = tmp("graft_pin_bloom") + "/i"
@@ -154,18 +152,16 @@ class ScratchSpec extends AnyFunSuite {
         }
         spark.read.parquet(s"$dir/store")
       })
-    try {
-      val leaks = cases.flatMap { case (name, run) =>
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val result = run()
-        result.collect()
-        val left = sc.getPersistentRDDs.keySet.toSet -- before -- backing(result)
-        if (left.isEmpty) None
-        else Some(s"$name left ${left.size} RDD(s) pinned: " +
-          left.toSeq.sorted.mkString(", "))
-      }
-      assert(leaks.isEmpty, leaks.mkString("\n"))
-    } finally dirs.foreach(d => FileUtils.deleteQuietly(d.toFile))
+    val leaks = cases.flatMap { case (name, run) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val result = run()
+      result.collect()
+      val left = sc.getPersistentRDDs.keySet.toSet -- before -- backing(result)
+      if (left.isEmpty) None
+      else Some(s"$name left ${left.size} RDD(s) pinned: " +
+        left.toSeq.sorted.mkString(", "))
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
   }
 
   test("neardupPairs' staged shape stages and deletes through a non-local " +
@@ -198,12 +194,15 @@ class ScratchSpec extends AnyFunSuite {
     }
   }
 
-  test("the java.nio media fixture refuses a non-local default filesystem " +
-    "instead of serving an empty scratch directory") {
+  test("q82's media fixture is written through a non-local default " +
+    "filesystem and serves the local session's rows") {
+    def rows(s: org.apache.spark.sql.SparkSession, dir: String) =
+      functions.Multimodal.q82MediaFiles(s, dir).collect().map(_.toString)
+        .toSeq
+    val local = rows(spark, sf)
     try {
-      val e = intercept[IllegalArgumentException](functions.Multimodal
-        .q82MediaFiles(GraftTestFs.session(spark), s"file:$sf").count())
-      assert(e.getMessage.contains("graftfs"), e.getMessage)
+      assert(rows(GraftTestFs.session(spark), s"file:$sf") == local,
+        "q82 on graftfs diverged from the local session's rows")
     } finally {
       FileUtils.deleteQuietly(GraftTestFs.prefix.toFile)
     }

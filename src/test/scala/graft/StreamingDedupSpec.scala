@@ -1,91 +1,17 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingDedup
 
-/** Ingest-time exact dedup: first copy per content hash survives, in-horizon
-  * duplicates drop, state evicts with the watermark, and the out-of-horizon
-  * re-emission bound is pinned (not hidden). */
-class StreamingDedupSpec extends AnyFunSuite {
+/** Ingest-time exact dedup store: micro-batched merges equal the batch q18
+  * relation, the replay guard is scoped to the stream, and a crash mid-swap
+  * is recovered. */
+class StreamingDedupSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
-
-  /** (doc_id, text, event-time millis) → the streaming input frame. */
-  private def frame(src: MemoryStream[(Long, String, Long)]) =
-    StreamingDedup.firstSeen(
-      src.toDS().toDF("doc_id", "text", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms"))),
-      "10 seconds")
-
-  test("first copy per content hash survives; in-horizon duplicates drop " +
-    "across micro-batches; state evicts with the watermark; an " +
-    "out-of-horizon copy re-emits (the documented bounded-state contract)") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[(Long, String, Long)]
-    val q = frame(source)
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // batch 1: two copies of "alpha" in ONE batch + a singleton
-      source.addData((0L, "alpha", 1_000L), (1L, "alpha", 2_000L),
-        (2L, "beta", 1_500L))
-      q.processAllAvailable()
-      // batch 2: a later in-horizon copy of "alpha" (dropped), a new doc,
-      // and a copy of "beta" (dropped)
-      source.addData((3L, "alpha", 4_000L), (4L, "gamma", 5_000L),
-        (5L, "beta", 6_000L))
-      q.processAllAvailable()
-      val kept = spark.table("dedup_stream")
-        .select("doc_id", "text").as[(Long, String)].collect().toSet
-      assert(kept === Set((0L, "alpha"), (2L, "beta"), (4L, "gamma")),
-        "exactly the first-arriving copy per hash")
-
-      // batch 3: jump event time far past horizon → old hash state evicts
-      source.addData((6L, "delta", 60_000L))
-      q.processAllAvailable()
-      // batch 4: "alpha" again, beyond the horizon of its first copy — the
-      // state that would have dropped it is gone, so it re-emits
-      source.addData((7L, "alpha", 61_000L))
-      q.processAllAvailable()
-      val evicted = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsRemoved)).sum
-      assert(evicted > 0, "watermark must evict expired hash state")
-      val again = spark.table("dedup_stream")
-        .filter(col("doc_id") === 7L).count()
-      assert(again === 1L, "out-of-horizon copy re-emits by design")
-    } finally q.stop()
-  }
-
-  test("with all rows inside one horizon, streaming output == batch " +
-    "first-per-hash on the same data") {
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Seq(
-      (0L, "doc x", 1_000L), (1L, "doc y", 2_000L), (2L, "doc x", 3_000L),
-      (3L, "doc z", 3_500L), (4L, "doc y", 4_000L), (5L, "doc x", 5_000L))
-    val source = MemoryStream[(Long, String, Long)]
-    val q = frame(source)
-      .writeStream.format("memory").queryName("dedup_stream_eq")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      rows.grouped(2).foreach { g =>
-        source.addData(g: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("dedup_stream_eq")
-      .select("doc_id").as[Long].collect().toSet
-    // batch twin: first arrival per text — arrival order here is doc_id
-    // order, so min(doc_id) per distinct text
-    val batch = rows.toDF("doc_id", "text", "ts_ms")
-      .groupBy("text").agg(min("doc_id").as("doc_id"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(streamed === batch)
-    assert(streamed === Set(0L, 1L, 3L))
-  }
 
   test("dedup store: micro-batched (min, sum) merges over a real " +
     "readStream equal batch q18 exactly, regardless of chopping; " +
@@ -103,8 +29,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // replay guard: applying the highest-seen batch id again must not
     // double n_copies (sum is not idempotent; the _applied_upto marker is
     // what makes the checkpoint replay safe)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_dedup_replay").toString + "/store"
+    val store = tmp("graft_dedup_replay") + "/store"
     val docs = Seq((1L, "same"), (2L, "same"), (3L, "other"))
       .toDF("doc_id", "text")
     graft.streaming.StreamingDedup.applyDedupBatch(docs, store, batchId = 0L, streamId = "ckptA")
@@ -152,9 +77,9 @@ class StreamingDedupSpec extends AnyFunSuite {
     "query's PERSISTED id (not the path), so a new stream at the same " +
     "checkpoint path is not suppressed") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_dedup_scope")
-    val store = root.toString + "/store"
-    val ckpt = root.toString + "/ckpt"
+    val root = tmp("graft_dedup_scope")
+    val store = root + "/store"
+    val ckpt = root + "/ckpt"
     val s1 = MemoryStream[(Long, String)]
     s1.addData((1L, "x"), (2L, "x"))
     val q1 = StreamingDedup.mergeIntoDedupStore(
@@ -183,14 +108,12 @@ class StreamingDedupSpec extends AnyFunSuite {
       .select("n_copies").as[Long].collect().sum == 3L,
       "fresh-checkpoint stream's first batch was swallowed as a replay")
     // no metadata file → scope falls back to the path string
-    assert(StreamingDedup.streamScope(root.toString + "/nope")
-      == root.toString + "/nope")
+    assert(StreamingDedup.streamScope(root + "/nope") == root + "/nope")
   }
 
   test("malformed _applied_upto marker degrades to nothing-suppressed, " +
     "not a permanently-failing stream") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_dedup_badmarker").toString + "/store"
+    val store = tmp("graft_dedup_badmarker") + "/store"
     StreamingDedup.applyDedupBatch(
       Seq((1L, "a")).toDF("doc_id", "text"), store, 0L, "ckptA")
     java.nio.file.Files.write(
@@ -207,8 +130,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("dedup store crash recovery: a store stranded at '.old' mid-swap is " +
     "restored — with its replay marker — before the next batch merges") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_dedup_crash").toString + "/store"
+    val store = tmp("graft_dedup_crash") + "/store"
     graft.streaming.StreamingDedup.applyDedupBatch(
       Seq((1L, "a"), (2L, "a")).toDF("doc_id", "text"), store, batchId = 0L,
       streamId = "ckptA")

@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -17,7 +15,7 @@ import graft.streaming.StreamingLww
   * consuming all updates must equal the batch kernel on the same rows, with
   * rows arriving out of order and across micro-batches (the reference's
   * async per-node update buffering, `MongoDBConnector.py:23,76`). */
-class StreamingLwwSpec extends AnyFunSuite {
+class StreamingLwwSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -95,9 +93,9 @@ class StreamingLwwSpec extends AnyFunSuite {
   test("partitioned merge sink: converges to batch LWW and leaves " +
     "untouched shards' files byte-for-byte alone") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_sink")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt").toString
+    val dir = tmp("graft_part_sink")
+    val storePath = s"$dir/store"
+    val ckpt = s"$dir/ckpt"
     // boundaries give 3 shards: (-inf,<b>) / [<b>,<c>) / [<c>,inf)
     val boundaries = Seq("<b>", "<c>")
     val b1 = Seq(
@@ -196,9 +194,9 @@ class StreamingLwwSpec extends AnyFunSuite {
 
   test("partitioned sink crash recovery: a shard stranded at '.old' " +
     "mid-swap is restored before the next batch merges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_crash")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt").toString
+    val dir = tmp("graft_part_crash")
+    val storePath = s"$dir/store"
+    val ckpt = s"$dir/ckpt"
     val old = java.nio.file.Paths.get(storePath + ".old")
     partitionedCrashRecovery(spark, storePath, ckpt) {
       // simulate dying between the per-shard moves: shard 2's live directory
@@ -234,9 +232,9 @@ class StreamingLwwSpec extends AnyFunSuite {
   test("partitioned sink: stale staging and backup dirs from a crash " +
     "during the WRITE phase are cleared, not merged") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_stale")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt").toString
+    val dir = tmp("graft_part_stale")
+    val storePath = s"$dir/store"
+    val ckpt = s"$dir/ckpt"
     val boundaries = Seq("<b>", "<c>")
     // simulate a crash mid-staging before ANY batch succeeded: garbage in
     // .next, plus a stray .old with a shard the store also (correctly)
@@ -262,17 +260,17 @@ class StreamingLwwSpec extends AnyFunSuite {
     "already-merged partitioned store idempotently, and the restarted " +
     "stream continues to batch-LWW convergence") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_replay")
-    val storePath = dir.resolve("store").toString
-    val ckpt = dir.resolve("ckpt")
+    val dir = tmp("graft_part_replay")
+    val storePath = s"$dir/store"
+    val ckpt = s"$dir/ckpt"
     val boundaries = Seq("<b>", "<c>")
     val source = MemoryStream[Triple]
     source.addData(batch1: _*)
     StreamingLww.mergeIntoStorePartitioned(
-      source.toDS(), storePath, ckpt.toString, boundaries).awaitTermination()
+      source.toDS(), storePath, ckpt, boundaries).awaitTermination()
     source.addData(batch2: _*)
     StreamingLww.mergeIntoStorePartitioned(
-      source.toDS(), storePath, ckpt.toString, boundaries).awaitTermination()
+      source.toDS(), storePath, ckpt, boundaries).awaitTermination()
     val after2 = spark.read.parquet(storePath)
       .select("subject", "predicate", "object", "ts_ms")
       .as[Triple].collect().toSet
@@ -281,9 +279,9 @@ class StreamingLwwSpec extends AnyFunSuite {
     // with a FRESH checkpoint replays the source's whole retained history
     // against the already-merged store — strict-`>` LWW must make every
     // replayed row a no-op
-    val ckptB = dir.resolve("ckpt_replay")
+    val ckptB = s"$dir/ckpt_replay"
     StreamingLww.mergeIntoStorePartitioned(
-      source.toDS(), storePath, ckptB.toString, boundaries).awaitTermination()
+      source.toDS(), storePath, ckptB, boundaries).awaitTermination()
     val afterReplay = spark.read.parquet(storePath)
       .select("subject", "predicate", "object", "ts_ms")
       .as[Triple].collect().toSet
@@ -292,7 +290,7 @@ class StreamingLwwSpec extends AnyFunSuite {
     // and the restarted lineage keeps converging: one more update
     source.addData(Triple("<c>", "<q>", "newest", 500L))
     StreamingLww.mergeIntoStorePartitioned(
-      source.toDS(), storePath, ckptB.toString, boundaries).awaitTermination()
+      source.toDS(), storePath, ckptB, boundaries).awaitTermination()
     val store = spark.read.parquet(storePath)
       .select("subject", "predicate", "object", "ts_ms")
       .as[Triple].collect().toSet
@@ -306,8 +304,8 @@ class StreamingLwwSpec extends AnyFunSuite {
 
   test("jsonl file source: a malformed line fails the batch loudly " +
     "(FAILFAST), never silently nulling keys into the store") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_file_bad")
-    val in = dir.resolve("in"); java.nio.file.Files.createDirectories(in)
+    val in = java.nio.file.Paths.get(tmp("graft_file_bad"), "in")
+    java.nio.file.Files.createDirectories(in)
     java.nio.file.Files.writeString(in.resolve("bad.json"),
       """{"subject":"<a>","predicate":"<p>","object":"v","ts_ms":1}""" +
         "\nnot json at all\n")
@@ -327,7 +325,7 @@ class StreamingLwwSpec extends AnyFunSuite {
 
   test("jsonl file source: files dropped into a directory stream through " +
     "the partitioned merge sink to batch-LWW convergence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_file_src")
+    val dir = java.nio.file.Paths.get(tmp("graft_file_src"))
     val in = dir.resolve("in"); java.nio.file.Files.createDirectories(in)
     val storePath = dir.resolve("store").toString
     val ckpt = dir.resolve("ckpt").toString
@@ -337,9 +335,9 @@ class StreamingLwwSpec extends AnyFunSuite {
         s"""{"subject":"${t.subject}","predicate":"${t.predicate}",""" +
         s""""object":"${t.`object`}","ts_ms":${t.ts_ms}}""").mkString("\n")
       // write-then-move so the source never lists a half-written file
-      val tmp = dir.resolve(name)
-      java.nio.file.Files.writeString(tmp, body)
-      java.nio.file.Files.move(tmp, in.resolve(name)); ()
+      val staged = dir.resolve(name)
+      java.nio.file.Files.writeString(staged, body)
+      java.nio.file.Files.move(staged, in.resolve(name)); ()
     }
     drop("b1.json", batch1)
     StreamingLww.mergeIntoStorePartitioned(
@@ -357,34 +355,6 @@ class StreamingLwwSpec extends AnyFunSuite {
         (batch1 ++ batch2).toDF("subject", "predicate", "object", "ts_ms"))
       .as[Triple].collect().toSet
     assert(store == batch)
-  }
-
-  test("dedupWithinWatermark: in-window redelivery suppressed, in-window " +
-    "distinct rows pass, behind-watermark rows drop (the documented trade)") {
-    implicit val sqlCtx = spark.sqlContext
-    val hour = 3600000L
-    val source = MemoryStream[Triple]
-    // delay 1h; event times chosen so the watermark actually moves
-    val q = StreamingLww.dedupWithinWatermark(source.toDS(), "1 hour")
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    val t1 = Triple("<a>", "<p>", "v1", 2 * hour)
-    val t2 = Triple("<b>", "<p>", "v1", 2 * hour + 1)
-    // comfortably above the ~1h watermark (exactly-at-watermark behavior is
-    // an implementation detail Spark leaves unspecified)
-    val inWindow = Triple("<c>", "<p>", "w", 2 * hour - 1000L)
-    val late = Triple("<d>", "<p>", "LATE", 1000L)      // far behind it
-    try {
-      source.addData(t1, t2); q.processAllAvailable()    // watermark -> 1h
-      source.addData(t1); q.processAllAvailable()        // exact redelivery
-      source.addData(inWindow, late); q.processAllAvailable()
-    } finally q.stop()
-    val emitted = spark.table("dedup_stream").as[Triple].collect().toSeq
-    assert(emitted.size == emitted.distinct.size, "a duplicate got through")
-    assert(emitted.toSet == Set(t1, t2, inWindow),
-      s"expected the three in-window distinct rows only, got $emitted")
-    assert(!emitted.contains(late),
-      "a behind-watermark row passed — the documented drop semantics changed")
   }
 
   test("winnersWithTtl: state evicts after ttl, stale late arrivals are " +
@@ -430,39 +400,6 @@ class StreamingLwwSpec extends AnyFunSuite {
     assert(finalPerKey == Set(
       Triple("<a>", "<p>", "v2", 6000L),
       Triple("<b>", "<p>", "b2", 5000L)))
-  }
-
-  test("tumbling windows with watermark == batch groupBy on the same rows") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(min: Int, sec: Int) =
-      Timestamp.valueOf(f"2026-01-01 00:$min%02d:$sec%02d")
-    val rows = Seq(
-      (ts(0, 10), "click", 1.0), (ts(0, 50), "click", 2.0),
-      (ts(1, 5), "click", 4.0), (ts(1, 30), "view", 8.0),
-      (ts(3, 0), "click", 16.0))
-
-    val source = MemoryStream[(Timestamp, String, Double)]
-    val q = StreamingLww.tumblingCounts(
-        source.toDS().toDF("ts", "event_type", "value"), "2 minutes")
-      .writeStream.format("memory").queryName("tumbling_stream")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      source.addData(rows: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.table("tumbling_stream")
-      .select(col("window.start"), col("event_type"), col("cnt"),
-        col("sum_value"))
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-
-    val batch = StreamingLww.tumblingCounts(
-        rows.toDF("ts", "event_type", "value"), "2 minutes")
-      .select(col("window.start"), col("event_type"), col("cnt"),
-        col("sum_value"))
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-
-    assert(streamed == batch)
-    assert(streamed.size == 4)
   }
 
   test("q83's replay merges to exactly the q3 batch LWW relation") {

@@ -12,7 +12,7 @@ import graft.streaming.{ClosedSession, SessionEvent, StreamingSessions}
 /** Streaming gap-sessionization: batch equivalence on real driver data,
   * disorder handling (a late-but-admissible event must FUSE two apparent
   * sessions), and the split fold itself. */
-class StreamingSessionsSpec extends AnyFunSuite {
+class StreamingSessionsSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -272,7 +272,7 @@ class StreamingSessionsSpec extends AnyFunSuite {
 
   test("session state survives a checkpoint restart: an open session " +
     "extends across a stopped-and-restarted query") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sess_restart")
+    val root = tmp("graft_sess_restart")
     val (srcDir, ckpt, outDir) = (s"$root/src", s"$root/ckpt", s"$root/out")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val base = 1000L * GapMs

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Lww
 
-class TripleStoreSpec extends AnyFunSuite {
+class TripleStoreSpec extends AnyFunSuite with TempDirs {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
@@ -272,7 +272,7 @@ class TripleStoreSpec extends AnyFunSuite {
     "subject-sharded layout cannot, and subject probes still prune") {
     import org.apache.spark.sql.functions.{col, max, min}
     val t = TripleStore.triples(spark, sf)
-    val base = Files.createTempDirectory("graft_zstore").toString
+    val base = tmp("graft_zstore")
     val (zdir, sdir) = (s"$base/z", s"$base/s")
     TripleStore.writeZOrdered(t, zdir, numShards = 16)
     TripleStore.writeSharded(t, sdir, 16)
@@ -349,7 +349,7 @@ class TripleStoreSpec extends AnyFunSuite {
     val df = boundarySubjects.zipWithIndex.map { case (s, i) =>
       (s, "<p>", s"v$i", i.toLong)
     }.toDF("subject", "predicate", "object", "ts_ms")
-    val out = Files.createTempDirectory("graft_nonascii").resolve("st").toString
+    val out = tmp("graft_nonascii") + "/st"
     TripleStore.writeSharded(df, out, numShards = 3)
     val files = spark.read.parquet(out).inputFiles
     val ranges = files.toSeq.map { f =>
@@ -383,7 +383,7 @@ class TripleStoreSpec extends AnyFunSuite {
     val df = boundarySubjects.zipWithIndex.map { case (s, i) =>
       (s, if (i % 2 == 0) "<p>" else "<q>", s"v$i", i.toLong)
     }.toDF("subject", "predicate", "object", "ts_ms")
-    val out = Files.createTempDirectory("graft_nonascii_z").resolve("z").toString
+    val out = tmp("graft_nonascii_z") + "/z"
     TripleStore.writeZOrdered(df, out, numShards = 3)
     val back = spark.read.parquet(out)
     assert(back.select("subject").as[String].collect().toSet ==
@@ -402,12 +402,11 @@ class TripleStoreSpec extends AnyFunSuite {
       .toDF("subject", "predicate", "object", "ts_ms")
     val constSubj = (1 to 50).map(i => ("<same>", s"<p$i>", s"v$i", i.toLong))
       .toDF("subject", "predicate", "object", "ts_ms")
-    val base = Files.createTempDirectory("graft_zdegen")
-    TripleStore.writeZOrdered(one, base.resolve("one").toString, numShards = 2)
-    TripleStore.writeZOrdered(constSubj, base.resolve("c").toString,
-      numShards = 4)
-    assert(spark.read.parquet(base.resolve("one").toString).count() == 1)
-    val back = spark.read.parquet(base.resolve("c").toString)
+    val base = tmp("graft_zdegen")
+    TripleStore.writeZOrdered(one, s"$base/one", numShards = 2)
+    TripleStore.writeZOrdered(constSubj, s"$base/c", numShards = 4)
+    assert(spark.read.parquet(s"$base/one").count() == 1)
+    val back = spark.read.parquet(s"$base/c")
     assert(back.count() == 50)
     assert(back.select("predicate").as[String].collect().toSet ==
       (1 to 50).map(i => s"<p$i>").toSet)
@@ -434,8 +433,7 @@ class TripleStoreSpec extends AnyFunSuite {
     val orig = boundarySubjects.zipWithIndex.map { case (s, i) =>
       (s, "<p>", s"v$i", 1700000000000L + i)
     }.toDF("subject", "predicate", "object", "ts_ms")
-    val dir = Files.createTempDirectory("graft_tsv_nonascii")
-      .resolve("out").toString
+    val dir = tmp("graft_tsv_nonascii") + "/out"
     TripleStore.writeTsv(orig, dir)
     val back = TripleStore.fromTsv(spark, dir)
     assert(back.as[Triple].collect().toSet == orig.as[Triple].collect().toSet)
@@ -450,7 +448,7 @@ class TripleStoreSpec extends AnyFunSuite {
       ("<s3>", "<p>", "  both  ", 1700000000002L),
       ("<s4>", "<p>", "back\\slash", 1700000000003L))
       .toDF("subject", "predicate", "object", "ts_ms")
-    val dir = Files.createTempDirectory("graft_tsv_ws").resolve("out").toString
+    val dir = tmp("graft_tsv_ws") + "/out"
     TripleStore.writeTsv(orig, dir)
     val back = TripleStore.fromTsv(spark, dir)
     assert(back.as[Triple].collect().toSet == orig.as[Triple].collect().toSet)
@@ -458,28 +456,33 @@ class TripleStoreSpec extends AnyFunSuite {
 
   test("writeTsv/fromTsv round-trip preserves rows and timestamps") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_tsv_rt").resolve("out").toString
+    val dir = tmp("graft_tsv_rt") + "/out"
     val orig = TripleStore.updates(spark, sf)
     TripleStore.writeTsv(orig, dir)
     val back = TripleStore.fromTsv(spark, dir)
     assert(back.as[Triple].collect().toSet == orig.as[Triple].collect().toSet)
   }
 
-  test("writeJsonl/fromJsonl round-trip the reference's JSON wire format, " +
-    "including non-ASCII and quote-bearing values") {
-    val dir = Files.createTempDirectory("graft_jsonl").resolve("out").toString
+  test("writeJsonl round-trips the reference's JSON wire format through " +
+    "the streaming jsonl source, including non-ASCII and quote-bearing " +
+    "values") {
+    val dir = tmp("graft_jsonl") + "/out"
     val orig = Seq(
       ("<Albert_Einstein>", "<hasWonPrize>", "<Nobel_Prize>", 1717245045123L),
       ("<₩uNo>", "<p>", "say \"hi\"\tok", 0L),
       ("<😀_img>", "<q>", "multi\nline", -62135596800000L))
       .toDF("subject", "predicate", "object", "ts_ms")
     TripleStore.writeJsonl(orig, dir)
-    val back = TripleStore.fromJsonl(spark, dir)
-    assert(back.as[Triple].collect().toSet == orig.as[Triple].collect().toSet)
+    val q = graft.streaming.StreamingLww.jsonlSource(spark, dir)
+      .writeStream.format("memory").queryName("jsonl_roundtrip")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(spark.table("jsonl_roundtrip").as[Triple].collect().toSet ==
+      orig.as[Triple].collect().toSet)
   }
 
   test("fromTsv: O15 bulk load parses reference-format timestamps") {
-    val dir = Files.createTempDirectory("graft_tsv").toFile
+    val dir = new java.io.File(tmp("graft_tsv"))
     val f = new java.io.File(dir, "fixture.tsv")
     // reference smoke rows (MongoDBConnector.py:211, MasterServer.py:59-63);
     // initial bulk-load rows get datetime.min (MongoDBConnector.py:254)
