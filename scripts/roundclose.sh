@@ -68,6 +68,14 @@ localfs=$(grep -rlE 'LocalFileSystem|fs\.file\.impl|fs\.AbstractFileSystem\.file
   | grep -vE '^src/main/scala/graft/(NioLocalFs|LocalSession)\.scala$' | xargs)
 step "one local-filesystem owner (NioLocalFs)${localfs:+ (also in: $localfs)}" \
   "$([ -z "$localfs" ]; echo $?)"
+# one store-commit owner: streaming/StoreSwap.scala is the only code in
+# src/main that reads or writes a store's replay markers, swaps staged
+# shards in or restores stranded ones; a sink with its own copy brings back
+# a second store protocol
+storeowners=$(grep -rlE '_applied_upto|commitShards|recover\(\)' src/main/scala \
+  | grep -v '^src/main/scala/graft/streaming/StoreSwap\.scala$' | xargs)
+step "one store-commit owner (StoreSwap)${storeowners:+ (also in: $storeowners)}" \
+  "$([ -z "$storeowners" ]; echo $?)"
 # no test-only surface: every non-override def in src/main is named again
 # somewhere in src/main or perfbench/src outside comments, except the spec
 # references the script lists with their reasons; a function only specs

@@ -192,13 +192,17 @@ object TripleStore {
       .write.mode("overwrite").parquet(path)
   }
 
+  /** Shard counts of the [[shardedPath]] and [[reshardedPath]] layouts. */
+  private val ShardedShards = 3
+  private val ReshardedShards = 5
+
   /** Once-per-JVM materialization of [[triples]] as a sharded layout
     * (one write job, reused by every subsequent sharded query — the Spark
     * analog of the reference's one-off preprocessing notebook). */
-  def shardedPath(spark: SparkSession, dir: String, numShards: Int = 3): String =
-    Scratch.once(("sharded", dir, numShards)) {
+  def shardedPath(spark: SparkSession, dir: String): String =
+    Scratch.once(("sharded", dir)) {
       val out = Scratch.path(spark, "graft_sharded")
-      writeSharded(triples(spark, dir), out, numShards)
+      writeSharded(triples(spark, dir), out, ShardedShards)
       out
     }
 
@@ -215,10 +219,10 @@ object TripleStore {
 
   /** Once-per-JVM materialization of [[triples]] as the z-ordered
     * layout ([[writeZOrdered]]) — the two-dimensional serving layout. */
-  def zOrderedPath(spark: SparkSession, dir: String, numShards: Int = 8): String =
-    Scratch.once(("zordered", dir, numShards)) {
+  def zOrderedPath(spark: SparkSession, dir: String): String =
+    Scratch.once(("zordered", dir)) {
       val out = Scratch.path(spark, "graft_zordered")
-      writeZOrdered(triples(spark, dir), out, numShards)
+      writeZOrdered(triples(spark, dir), out, 8)
       out
     }
 
@@ -240,10 +244,10 @@ object TripleStore {
 
   /** Once-per-JVM O20 exercise: the 3-shard layout resharded to 5, so
     * the gate query pays the reshard job once per JVM. */
-  def reshardedPath(spark: SparkSession, dir: String, toShards: Int = 5): String =
-    Scratch.once(("resharded", dir, toShards)) {
+  def reshardedPath(spark: SparkSession, dir: String): String =
+    Scratch.once(("resharded", dir)) {
       val out = Scratch.path(spark, "graft_resharded")
-      reshard(spark, shardedPath(spark, dir), out, toShards)
+      reshard(spark, shardedPath(spark, dir), out, ReshardedShards)
       out
     }
 
@@ -354,8 +358,8 @@ object TripleStore {
     import spark.implicits._
     val cpo = graft.plans.RangeBucket.codePointOrdering
     val rows = Seq(
-      ("sharded3", shardedPath(spark, dir), 3),
-      ("resharded5", reshardedPath(spark, dir), 5)).map {
+      ("sharded3", shardedPath(spark, dir), ShardedShards),
+      ("resharded5", reshardedPath(spark, dir), ReshardedShards)).map {
       case (label, path, nExpect) =>
         val footer = describeShardsFromLayout(spark, path)
           .select("file", "n_rows", "min_subject", "max_subject")

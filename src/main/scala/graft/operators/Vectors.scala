@@ -483,11 +483,10 @@ object Vectors {
     * An ANN index IS an ETL artifact: built once per corpus version,
     * served by every query after — the same materialization class as the
     * sharded store (q28) and bucketed tables (q31). */
-  def ivfIndexPath(spark: SparkSession, dir: String, k: Int,
-      iters: Int = 3): String =
-    Scratch.once(("ivfIndex", dir, k, iters)) {
+  def ivfIndexPath(spark: SparkSession, dir: String, k: Int): String =
+    Scratch.once(("ivfIndex", dir, k)) {
       val out = Scratch.path(spark, "graft_ivf")
-      val (assigned, centroids) = ivfAssign(spark, dir, k, iters)
+      val (assigned, centroids) = ivfAssign(spark, dir, k, iters = 3)
       Scratch.pinned(centroids) { cs =>
         assigned.repartitionByRange(col("cluster"))
           .sortWithinPartitions("cluster", "vec_id")
@@ -533,7 +532,7 @@ object Vectors {
     * REPLAY CONTRACT: the parquet append itself is NOT idempotent — the
     * same batch applied twice duplicates its vec_ids in the lists layout,
     * shifting probe ranks (the same non-idempotence class the dedup
-    * store's `_applied_upto` marker guards). Callers without a `batchId`
+    * store's per-shard replay markers guard). Callers without a `batchId`
     * get at-most-once as THEIR obligation. With a `batchId`, an
     * already-applied batch is suppressed (loudly, on stderr) via an
     * underscore-prefixed marker file in the lists dir — invisible to the
@@ -799,16 +798,15 @@ object Vectors {
 
   /** Embedding-cosine near-duplicate pairs: banded LSH + the over-full-
     * bucket guard, exact cosine only on candidates — the all-pairs
-    * comparison never happens. Defaults are the SCALE config (2 bands × 16
-    * planes = 65,536 buckets per band): near-identical vectors agree on
+    * comparison never happens. The scale config is 2 bands × 16 planes
+    * (65,536 buckets per band): near-identical vectors agree on
     * every sign bit with high probability, so each band catches them, while
     * independent vectors collide w.p. ~2^-16 per band. `maxBucketSize`
     * bounds the worst bucket's self-join fan-in regardless of data skew
     * ([[refineOverfullBuckets]]). Input: any DataFrame with
     * (vec_id, embedding). */
   def cosineNearDupPairs(vectors: DataFrame, threshold: Double,
-      numBands: Int = 2, planesPerBand: Int = 16,
-      maxBucketSize: Int = 1 << 20): DataFrame = {
+      numBands: Int, planesPerBand: Int, maxBucketSize: Int): DataFrame = {
     // cached: the refined banding feeds both sides of the candidate join —
     // without it the dominant cost (numBands × planesPerBand folds/vector)
     // doubles. Scoped to this call: the candidate set (bounded by the bucket
@@ -847,12 +845,12 @@ object Vectors {
     * recall-style ANN result this has an EXACT SQL oracle: DuckDB rebuilds
     * the buckets from the same plane literals, self-joins within bucket,
     * and scores with the same sequential-fold double dot product. The
-    * library scale config ([[cosineNearDupPairs]] defaults, 2×16 planes +
+    * library scale config ([[cosineNearDupPairs]] at 2×16 planes +
     * bucket guard) is property-tested in PipelineSpec; this entry pins the
     * pipeline's exact semantics under the driver's hash compare. */
   def q38CosineNeardup(spark: SparkSession, dir: String): DataFrame =
     cosineNearDupPairs(table(spark, dir, "embeddings"), NearDupThreshold,
-      numBands = 1, planesPerBand = NumPlanes)
+      numBands = 1, planesPerBand = NumPlanes, maxBucketSize = 1 << 20)
       .orderBy("id_a", "id_b")
 
   val q38Sql: String =

@@ -101,7 +101,9 @@ object StreamingGate {
         StreamingDedup.mergeIntoDedupStore(stream, storePath, ckpt)
           .awaitTermination()
     }
-    spark.read.parquet(store).orderBy("content_hash")
+    spark.read.parquet(store)
+      .select("content_hash", "rep_doc_id", "n_copies")
+      .orderBy("content_hash")
   }
 
   /** The LWW replay's shard cut points over the triple store's subject

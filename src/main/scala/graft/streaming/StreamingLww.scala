@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.{Scratch, Triple}
+import graft.Triple
 import graft.operators.Lww
 
 /** Q11: the reference's asynchronous LWW exchange as Structured Streaming.
@@ -86,27 +85,14 @@ object StreamingLww {
     * `Trigger.ProcessingTime("5 seconds")` for the reference's 5 s
     * anti-entropy cadence (`MasterServer.py:233`).
     *
-    * The store is a shard-PARTITIONED parquet
-    * layout (`storePath/shard=k/`), and each micro-batch LWW-merges into
-    * ONLY the shards its keys touch — read pruned to those partition
-    * directories, merged output staged and swapped in per touched shard by
-    * [[StoreSwap]]. The batch is read once and pins no executor blocks: it
-    * is written partitioned by shard to a [[Scratch.scoped]] directory,
-    * whose `shard=k` names are the touched shards. Each move is one `FileSystem.rename` on the store's
-    * filesystem, atomic where that rename is (HDFS, local disk); a rename
-    * that returns `false` fails the batch. A crash in ANY window leaves
-    * each shard wholly old or wholly new — never deleted — and the
-    * checkpointed batch replays against either state idempotently because
-    * the merge is strict-`>` LWW (`MongoDBConnector.py:150-153`). (Dynamic
-    * partition overwrite of the live path would instead delete-then-rename
-    * in place: a crash between the two permanently loses the shard.)
-    *
-    * Per-batch I/O is O(affected shards), not O(store): at 100 TB with a
-    * 5 s cadence (`MasterServer.py:233`) a batch touching one shard of a
-    * 1,024-shard store moves ~0.1% of the data instead of all of it (the
-    * bounded-merge shape proven in `ScaleBench`). A production deployment
-    * would layer a MERGE-capable table format for file-level atomicity,
-    * same structure. */
+    * Each micro-batch goes through [[StoreSwap.merge]] with [[Lww.merge]],
+    * sharded on the subject's range shard: it rewrites only the shards its
+    * keys touch, so per-batch I/O is O(touched shards), not O(store). The
+    * strict-`>` merge (`MongoDBConnector.py:150-153`) is idempotent, so a
+    * replay against either side of a crash converges; the shard markers
+    * only spare a redelivered batch its I/O. (Dynamic partition overwrite
+    * of the live path would instead delete-then-rename in place: a crash
+    * between the two permanently loses the shard.) */
   def mergeIntoStorePartitioned(updates: Dataset[Triple], storePath: String,
       checkpointPath: String, boundaries: Seq[String],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -114,40 +100,10 @@ object StreamingLww {
       .outputMode("update")
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[Triple], _: Long) =>
-        val bs = batch.sparkSession
-        val swap = new StoreSwap(bs, storePath)
-        swap.recover()
-        // the batch is read ONCE, into scratch shard directories: their
-        // names are the touched shards and the merge reads them back (a
-        // second action on `batch` would re-read the source and count its
-        // rows twice in the query's numInputRows)
-        Scratch.scoped(bs) { dir =>
-          val staged = new Path(dir, "batch")
-          val rows = batch.toDF().withColumn("shard", shardCol(boundaries))
-          rows.write.partitionBy("shard").parquet(staged.toString)
-          val touched = staged.getFileSystem(bs.sessionState.newHadoopConf())
-            .listStatus(staged).map(_.getPath.getName)
-            .filter(_.startsWith("shard=")).toSeq
-          if (touched.nonEmpty) {
-            // the store's layout is the staged batch's: reading both with
-            // that schema spares a footer-reading job per read
-            def read(path: String): DataFrame =
-              bs.read.schema(rows.schema).parquet(path)
-            val b = read(staged.toString)
-            val base =
-              if (swap.hasShards)
-                read(storePath).filter(col("shard")
-                  .isin(touched.map(_.stripPrefix("shard=").toInt): _*))
-              else b.limit(0)
-            Lww.merge(base, b)
-              .withColumn("shard", shardCol(boundaries))
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy("shard")
-              .parquet(swap.staging)
-            swap.commitShards(touched)
-          }
-        }
+      .foreachBatch { (batch: Dataset[Triple], batchId: Long) =>
+        StoreSwap.merge(batch.toDF(), storePath, batchId,
+          StoreSwap.streamScope(checkpointPath), shardCol(boundaries))(
+          Lww.merge)
       }
       .start()
 

@@ -580,7 +580,8 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     // running repeated sweeps must not accumulate storage-memory blocks
     val df = (1L to 10L).map(s => (s, vec(s.toInt))).toDF("vec_id", "embedding")
     Docs.q19MinhashPairs(spark, sf).count()
-    Vectors.cosineNearDupPairs(df, threshold = 0.98).count()
+    Vectors.cosineNearDupPairs(df, threshold = 0.98, numBands = 2,
+      planesPerBand = 16, maxBucketSize = 1 << 20).count()
     Vectors.lshTopk(spark, sf, 3).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "cacheManager should hold no entries after the pipelines return")
@@ -594,7 +595,8 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val rows = Seq((1L, vec(1)), (2L, near)) ++
       (3L to 20L).map(s => (s, vec(s.toInt)))
     val df = rows.toDF("vec_id", "embedding")
-    val pairs = Vectors.cosineNearDupPairs(df, threshold = 0.98)
+    val pairs = Vectors.cosineNearDupPairs(df, threshold = 0.98,
+        numBands = 2, planesPerBand = 16, maxBucketSize = 1 << 20)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
@@ -641,7 +643,7 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       (3L to 20L).map(s => (s, vec(s.toInt)))
     val df = rows.toDF("vec_id", "embedding")
     val wide = Vectors.cosineNearDupPairs(df, threshold = 0.98,
-        numBands = 4, planesPerBand = 16)
+        numBands = 4, planesPerBand = 16, maxBucketSize = 1 << 20)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(wide == Set((1L, 2L)))
     val capped = Vectors.cosineNearDupPairs(df, threshold = 0.98,
@@ -971,7 +973,8 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
         Vectors.bandedProjection(emb, 2, 16))
       .queryExecution.executedPlan.toString
     // ...and the end-to-end scoring path
-    val fullPlan = Vectors.cosineNearDupPairs(emb, 0.95)
+    val fullPlan = Vectors.cosineNearDupPairs(emb, 0.95, numBands = 2,
+        planesPerBand = 16, maxBucketSize = 1 << 20)
       .queryExecution.executedPlan.toString
     for (plan <- Seq(candPlan, fullPlan)) {
       assert(!plan.contains("Cartesian"), s"cartesian product in ANN path:\n$plan")

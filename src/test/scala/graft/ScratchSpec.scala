@@ -121,7 +121,8 @@ class ScratchSpec extends AnyFunSuite with TempDirs {
       "Docs.neardupPairs" -> (() => Docs.neardupPairs(spark, sf)),
       "Docs.q53CorpusToBatches" -> (() => Docs.q53CorpusToBatches(spark, sf)),
       "Vectors.cosineNearDupPairs" -> (() => Vectors.cosineNearDupPairs(
-        TripleStore.table(spark, sf, "embeddings"), Vectors.NearDupThreshold)),
+        TripleStore.table(spark, sf, "embeddings"), Vectors.NearDupThreshold,
+        numBands = 2, planesPerBand = 16, maxBucketSize = 1 << 20)),
       "Vectors.lshTopk" -> (() => Vectors.lshTopk(spark, sf, 10)),
       // a k no other spec builds, so the memoized index is built here
       "Vectors.ivfIndexPath" -> { () =>

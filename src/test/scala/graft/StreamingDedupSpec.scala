@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingDedup
+import graft.streaming.{StoreSwap, StreamingDedup}
 
 /** Ingest-time exact dedup store: micro-batched merges equal the batch q18
   * relation, the replay guard is scoped to the stream, and a crash mid-swap
@@ -27,10 +28,11 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
       "streamed dedup store diverged from the batch q18 relation")
 
     // replay guard: applying the highest-seen batch id again must not
-    // double n_copies (sum is not idempotent; the _applied_upto marker is
-    // what makes the checkpoint replay safe)
+    // double n_copies (sum is not idempotent; the shards' _applied_upto
+    // markers are what make the checkpoint replay safe)
     val store = tmp("graft_dedup_replay") + "/store"
-    val docs = Seq((1L, "same"), (2L, "same"), (3L, "other"))
+    // a null text hashes to a null key, which the store keeps in shard 0
+    val docs = Seq((1L, "same"), (2L, "same"), (3L, "other"), (4L, null))
       .toDF("doc_id", "text")
     graft.streaming.StreamingDedup.applyDedupBatch(docs, store, batchId = 0L, streamId = "ckptA")
     val once = spark.read.parquet(store)
@@ -41,14 +43,16 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
       .select("content_hash", "rep_doc_id", "n_copies")
       .as[(String, Long, Long)].collect().toSet
     assert(once == twice, "replay of an applied batch changed the store")
-    assert(once.map(_._3).sum == 3L, s"copy counts wrong: $once")
+    assert(once.toSeq.map(_._3).sum == 4L, s"copy counts wrong: $once")
+    assert(once.contains((null, 4L, 1L)), s"null-text row lost: $once")
     // and a genuinely NEW batch still merges
     graft.streaming.StreamingDedup.applyDedupBatch(
       Seq((9L, "same")).toDF("doc_id", "text"), store, batchId = 1L,
       streamId = "ckptA")
     val after = spark.read.parquet(store)
+      .select("content_hash", "rep_doc_id", "n_copies")
       .as[(String, Long, Long)].collect().toSet
-    assert(after.map(_._3).sum == 4L, s"new batch failed to merge: $after")
+    assert(after.toSeq.map(_._3).sum == 5L, s"new batch failed to merge: $after")
     // a DIFFERENT stream (fresh checkpoint, batch ids restart at 0) must
     // NOT be suppressed by stream A's marker — its data is genuinely new
     graft.streaming.StreamingDedup.applyDedupBatch(
@@ -56,7 +60,7 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
       streamId = "ckptB")
     val gen2 = spark.read.parquet(store)
       .select("n_copies").as[Long].collect().sum
-    assert(gen2 == 5L,
+    assert(gen2 == 6L,
       "a new stream's first batch was wrongly treated as a replay")
   }
 
@@ -86,11 +90,14 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
       s1.toDS().toDF("doc_id", "text"), store, ckpt)
     q1.awaitTermination()
     // the guard's scope is exactly the id Spark persisted in the
-    // checkpoint's metadata file, and the store marker carries it
-    assert(StreamingDedup.streamScope(ckpt) == q1.id.toString)
-    val marker = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(store).resolve("_applied_upto")), "UTF-8")
-    assert(marker.startsWith(q1.id.toString + "\n"), s"marker: $marker")
+    // checkpoint's metadata file, and every shard's marker carries it
+    assert(StoreSwap.streamScope(ckpt) == q1.id.toString)
+    val markers = shardMarkers(store)
+    assert(markers.nonEmpty, "no shard carries a marker")
+    markers.foreach { m =>
+      val marker = new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
+      assert(marker.startsWith(q1.id.toString + "\n"), s"$m: $marker")
+    }
     assert(spark.read.parquet(store)
       .select("n_copies").as[Long].collect().sum == 2L)
     // delete + recreate the checkpoint at the SAME path: batch ids restart
@@ -108,7 +115,7 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
       .select("n_copies").as[Long].collect().sum == 3L,
       "fresh-checkpoint stream's first batch was swallowed as a replay")
     // no metadata file → scope falls back to the path string
-    assert(StreamingDedup.streamScope(root + "/nope") == root + "/nope")
+    assert(StoreSwap.streamScope(root + "/nope") == root + "/nope")
   }
 
   test("malformed _applied_upto marker degrades to nothing-suppressed, " +
@@ -116,9 +123,8 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
     val store = tmp("graft_dedup_badmarker") + "/store"
     StreamingDedup.applyDedupBatch(
       Seq((1L, "a")).toDF("doc_id", "text"), store, 0L, "ckptA")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(store).resolve("_applied_upto"),
-      "ckptA\nnot-a-number".getBytes("UTF-8"))
+    shardMarkers(store).foreach(java.nio.file.Files.write(_,
+      "ckptA\nnot-a-number".getBytes("UTF-8")))
     // previously a NumberFormatException that failed every future batch;
     // the torn marker now reads as foreign — batch 0 re-applies (the
     // documented degraded mode: a double count beats a dead stream)
@@ -130,33 +136,55 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
 
   test("dedup store crash recovery: a store stranded at '.old' mid-swap is " +
     "restored — with its replay marker — before the next batch merges") {
-    val store = tmp("graft_dedup_crash") + "/store"
-    graft.streaming.StreamingDedup.applyDedupBatch(
-      Seq((1L, "a"), (2L, "a")).toDF("doc_id", "text"), store, batchId = 0L,
-      streamId = "ckptA")
-    // simulate dying between the two swap moves: base gone, .old present
-    java.nio.file.Files.move(java.nio.file.Paths.get(store),
-      java.nio.file.Paths.get(store + ".old"))
-    graft.streaming.StreamingDedup.applyDedupBatch(
-      Seq((3L, "a"), (4L, "b")).toDF("doc_id", "text"), store, batchId = 1L,
-      streamId = "ckptA")
-    val got = spark.read.parquet(store)
-      .select("content_hash", "rep_doc_id", "n_copies")
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
+    val root = tmp("graft_dedup_crash")
+    val store = root + "/store"
+    val path = java.nio.file.Paths.get(_: String)
     val hash = (s: String) => java.security.MessageDigest
       .getInstance("SHA-256").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    // batch 0's counts survived the crash AND batch 1 merged on top
-    assert(got == Map(hash("a") -> (1L, 3L), hash("b") -> (4L, 1L)), got)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(store + ".old")), ".old not cleaned up")
-    // the restored marker still suppresses a replay of batch 1
-    graft.streaming.StreamingDedup.applyDedupBatch(
-      Seq((5L, "a")).toDF("doc_id", "text"), store, batchId = 1L,
+    // two texts in different shards: cut points 4, 8, c on the hash
+    def text(inShard: Char => Boolean): String =
+      Iterator.from(0).map(i => s"t$i").find(t => inShard(hash(t).head)).get
+    val (lo, hi) = (text(_ < '4'), text(_ >= 'c'))
+    StreamingDedup.applyDedupBatch(
+      Seq((1L, lo), (2L, hi)).toDF("doc_id", "text"), store, batchId = 0L,
       streamId = "ckptA")
-    val counts = spark.read.parquet(store)
-      .select("n_copies").as[Long].collect().sum
-    assert(counts == 4L, "replay after recovery double-counted")
+    val batch0 = root + "/batch0"
+    FileUtils.copyDirectory(new java.io.File(store), new java.io.File(batch0))
+    val batch1 = Seq((3L, lo), (4L, hi), (5L, hi)).toDF("doc_id", "text")
+    StreamingDedup.applyDedupBatch(batch1, store, batchId = 1L,
+      streamId = "ckptA")
+    // rebuild what dying between batch 1's two shard renames leaves:
+    // shard 0 swapped in with batch 1's marker, shard 3's live directory
+    // gone, its batch-0 state at .old and its batch-1 state still staged
+    java.nio.file.Files.createDirectories(path(store + ".old"))
+    java.nio.file.Files.createDirectories(path(store + ".next"))
+    java.nio.file.Files.move(path(s"$store/shard=3"),
+      path(s"$store.next/shard=3"))
+    java.nio.file.Files.move(path(s"$batch0/shard=3"),
+      path(s"$store.old/shard=3"))
+    // the checkpoint redelivers batch 1: shard 3 is restored and merged,
+    // shard 0 is skipped by its marker
+    StreamingDedup.applyDedupBatch(batch1, store, batchId = 1L,
+      streamId = "ckptA")
+    def got(): Map[String, (Long, Long)] = spark.read.parquet(store)
+      .select("content_hash", "rep_doc_id", "n_copies")
+      .as[(String, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got() == Map(hash(lo) -> (1L, 2L), hash(hi) -> (2L, 3L)), got())
+    Seq(".old", ".next").foreach(x => assert(
+      !java.nio.file.Files.exists(path(store + x)), s"$x not cleaned up"))
+    // both shards' markers now suppress a further replay of batch 1
+    StreamingDedup.applyDedupBatch(
+      Seq((6L, lo), (7L, hi)).toDF("doc_id", "text"), store, batchId = 1L,
+      streamId = "ckptA")
+    assert(got() == Map(hash(lo) -> (1L, 2L), hash(hi) -> (2L, 3L)),
+      "replay after recovery double-counted")
   }
+
+  /** The `_applied_upto` marker of every shard of `store`. */
+  private def shardMarkers(store: String): Seq[java.nio.file.Path] =
+    Option(new java.io.File(store).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
+      .map(_.toPath.resolve("_applied_upto"))
 }

@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.operators.Lww
 import graft.streaming.StreamingLww
@@ -161,6 +162,37 @@ class StreamingLwwSpec extends AnyFunSuite with TempDirs {
       // schema inference would each add jobs
       assert(work.jobs == 3, s"one micro-batch ran ${work.jobs} jobs")
     }
+  }
+
+  test("partitioned sink: a redelivered batch id leaves the shards it " +
+    "already merged byte-untouched") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("graft_part_redeliver")
+    val storePath = s"$dir/store"
+    val ckpt = s"$dir/ckpt"
+    val source = MemoryStream[Triple]
+    source.addData(Triple("<a>", "<p>", "v1", 100L),
+      Triple("<c>", "<q>", "x", 50L))
+    def run(): StreamingQuery = {
+      val q = StreamingLww.mergeIntoStorePartitioned(source.toDS(),
+        storePath, ckpt, Seq("<b>", "<c>"))
+      q.awaitTermination()
+      q
+    }
+    run()
+    def files(): Set[(String, Long, Long)] = FileUtils
+      .listFiles(new java.io.File(storePath), null, true).asScala
+      .map(f => (f.getPath, f.length, f.lastModified)).toSet
+    val before = files()
+    // a crash after the shard swap but before the commit log entry: the
+    // restarted query re-runs batch 0 under the same query id
+    Seq("0", ".0.crc").foreach(f =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(ckpt, "commits", f)))
+    val rerun = run()
+    assert(rerun.recentProgress.map(p => (p.batchId, p.numInputRows))
+      .contains((0L, 2L)), "batch 0 was not redelivered")
+    assert(files() == before, "a redelivered batch rewrote its shards")
   }
 
   /** The partitioned sink's crash-recovery case on session `s`: after a

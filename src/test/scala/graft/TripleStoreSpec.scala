@@ -54,7 +54,7 @@ class TripleStoreSpec extends AnyFunSuite with TempDirs {
 
   test("describeShardsFromLayout: footer-derived shard map matches the " +
     "data, after a reshard reports the NEW boundaries") {
-    val path5 = TripleStore.reshardedPath(spark, sf, toShards = 5)
+    val path5 = TripleStore.reshardedPath(spark, sf)
     val desc = TripleStore.describeShardsFromLayout(spark, path5)
       .select("shard_id", "n_rows", "min_subject", "max_subject")
       .as[(Long, Long, String, String)].collect().toSeq
@@ -82,7 +82,7 @@ class TripleStoreSpec extends AnyFunSuite with TempDirs {
     "above the row threshold it audits the deterministic first/middle/" +
     "last 3-file sample — never the whole store (r16: a describe must " +
     "not hide a full corpus scan at 100x)") {
-    val path5 = TripleStore.reshardedPath(spark, sf, toShards = 5)
+    val path5 = TripleStore.reshardedPath(spark, sf)
     val footer = TripleStore.describeShardsFromLayout(spark, path5)
       .select("file", "n_rows", "min_subject", "max_subject")
       .as[(String, Long, String, String)].collect().sortBy(_._1).toSeq
@@ -112,7 +112,7 @@ class TripleStoreSpec extends AnyFunSuite with TempDirs {
     "listing-vs-footer reconciliation is an FS metadata op, so the " +
     "sampled branch catches it too (r17, the r16 sampled-branch blind " +
     "spot)") {
-    val path5 = TripleStore.reshardedPath(spark, sf, toShards = 5)
+    val path5 = TripleStore.reshardedPath(spark, sf)
     val footer = TripleStore.describeShardsFromLayout(spark, path5)
       .select("file", "n_rows", "min_subject", "max_subject")
       .as[(String, Long, String, String)].collect().sortBy(_._1).toSeq
@@ -238,7 +238,7 @@ class TripleStoreSpec extends AnyFunSuite with TempDirs {
 
   test("reshard 3->5 (O20): content preserved, ranges disjoint, pruning " +
     "still holds on the new boundaries") {
-    val path5 = TripleStore.reshardedPath(spark, sf, toShards = 5)
+    val path5 = TripleStore.reshardedPath(spark, sf)
     val before = spark.read.parquet(TripleStore.shardedPath(spark, sf))
     val after = spark.read.parquet(path5)
     assert(after.count() == before.count())
