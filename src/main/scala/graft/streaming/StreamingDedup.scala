@@ -38,18 +38,24 @@ object StreamingDedup {
     * scope is the query id Structured Streaming persists in the
     * checkpoint ([[StoreSwap.streamScope]]). */
   def mergeIntoDedupStore(docs: DataFrame, storePath: String,
-      checkpointPath: String): StreamingQuery =
+      checkpointPath: String): StreamingQuery = {
+    // read at the first batch, not at wiring time: the metadata file
+    // exists only once the query has started
+    lazy val streamId = StoreSwap.streamScope(checkpointPath)
     docs.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // resolved per batch, not at wiring time: the metadata file exists
-        // only once the query has started
-        applyDedupBatch(batch, storePath, batchId,
-          StoreSwap.streamScope(checkpointPath))
+        applyDedupBatch(batch, storePath, batchId, streamId)
       }
       .start()
+  }
+
+  /** The dedup store's columns; reading with them spares a footer-reading
+    * schema job. */
+  private[graft] val StoreSchema =
+    "content_hash STRING, rep_doc_id LONG, n_copies LONG"
 
   /** The dedup store's shard cut points over lower-case hex sha-256. */
   private val HashBoundaries = Seq("4", "8", "c")

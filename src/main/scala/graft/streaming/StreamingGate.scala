@@ -101,7 +101,7 @@ object StreamingGate {
         StreamingDedup.mergeIntoDedupStore(stream, storePath, ckpt)
           .awaitTermination()
     }
-    spark.read.parquet(store)
+    spark.read.schema(StreamingDedup.StoreSchema).parquet(store)
       .select("content_hash", "rep_doc_id", "n_copies")
       .orderBy("content_hash")
   }

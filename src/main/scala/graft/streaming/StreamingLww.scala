@@ -95,17 +95,20 @@ object StreamingLww {
     * between the two permanently loses the shard.) */
   def mergeIntoStorePartitioned(updates: Dataset[Triple], storePath: String,
       checkpointPath: String, boundaries: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    // read at the first batch, once the query has written its metadata,
+    // and reused for the query's later batches
+    lazy val streamId = StoreSwap.streamScope(checkpointPath)
     updates.writeStream
       .outputMode("update")
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[Triple], batchId: Long) =>
-        StoreSwap.merge(batch.toDF(), storePath, batchId,
-          StoreSwap.streamScope(checkpointPath), shardCol(boundaries))(
-          Lww.merge)
+        StoreSwap.merge(batch.toDF(), storePath, batchId, streamId,
+          shardCol(boundaries))(Lww.merge)
       }
       .start()
+  }
 
   /** [[winners]] with watermark-driven state eviction (SURVEY §2.2's
     * `GroupStateTimeout` ask): per-key state is dropped once the event-time
