@@ -71,9 +71,11 @@ step "one local-filesystem owner (NioLocalFs)${localfs:+ (also in: $localfs)}" \
 # one store-commit owner: streaming/StoreSwap.scala is the only code in
 # src/main that reads or writes a store's replay markers, swaps staged
 # shards in or restores stranded ones; a sink with its own copy brings back
-# a second store protocol
-storeowners=$(grep -rlE '_applied_upto|commitShards|recover\(\)' src/main/scala \
-  | grep -v '^src/main/scala/graft/streaming/StoreSwap\.scala$' | xargs)
+# a second store protocol; and it is the only streaming code that stages a
+# batch (Scratch.scoped), so a sink cannot bring back a staging copy of its own
+storeowners=$( { grep -rlE '_applied_upto|commitShards|recover\(\)' src/main/scala;
+  grep -rl 'Scratch\.scoped' src/main/scala/graft/streaming; } \
+  | grep -v '^src/main/scala/graft/streaming/StoreSwap\.scala$' | sort -u | xargs)
 step "one store-commit owner (StoreSwap)${storeowners:+ (also in: $storeowners)}" \
   "$([ -z "$storeowners" ]; echo $?)"
 # no test-only surface: every non-override def in src/main is named again

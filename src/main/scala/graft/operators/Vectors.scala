@@ -577,14 +577,17 @@ object Vectors {
   private def ivfAppendRows(spark: SparkSession, indexPath: String,
       batchId: Option[Long], streamId: String)(
       rows: DataFrame => DataFrame): Unit = {
-    val scope = streamId.replaceAll("[^A-Za-z0-9._-]", "_")
+    // hex of the UTF-8 bytes: file-name safe and injective, so two stream
+    // ids (say `a/b` and `a_b`) never share a marker
+    val scope = streamId.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .map("%02x".format(_)).mkString
     val marker = batchId.map(id => new org.apache.hadoop.fs.Path(
       s"$indexPath/lists", s"_applied_${scope}_batch_$id"))
     lazy val fs = marker.get.getFileSystem(
       spark.sessionState.newHadoopConf())
     if (marker.exists(fs.exists(_)))
       System.err.println(s"[graft.Vectors] ivfAppendBatch: batch " +
-        s"${batchId.get} of stream $scope already applied at $indexPath: " +
+        s"${batchId.get} of stream $streamId already applied at $indexPath: " +
         "replay suppressed")
     else {
       rows(spark.read.parquet(s"$indexPath/centroids"))

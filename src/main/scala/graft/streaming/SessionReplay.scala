@@ -66,11 +66,8 @@ object SessionReplay {
     * `AvailableNow`. */
   def run(spark: SparkSession, src: String, gapMs: Long,
       watermarkDelay: String, storePath: String, ckpt: String): Unit = {
-    val stream = spark.readStream
-      .schema("user_id LONG, event_id LONG, ts_ms LONG, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .option("mode", "FAILFAST")
-      .json(src)
+    val stream = StreamingLww.jsonlSource(spark, src,
+        "user_id LONG, event_id LONG, ts_ms LONG, value DOUBLE")
       .withColumn("ts", timestamp_millis(col("ts_ms")))
     StreamingSessions.sessionize(stream, gapMs, watermarkDelay)
       .toDF()

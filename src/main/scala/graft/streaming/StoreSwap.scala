@@ -29,36 +29,34 @@ private[graft] object StoreSwap {
   /** Merges one micro-batch into `store`:
     *   1. restores shards a crashed commit left at `.old`, clears
     *      `.next`/`.old`;
-    *   2. writes `batch` once, partitioned by `shard`, to a
-    *      [[Scratch.scoped]] directory, whose `shard=k` names are the
-    *      touched shards (a second action on a streaming batch would
-    *      re-read its source);
+    *   2. finds the touched shards. With `shard = Some(c)` it writes
+    *      `batch` once, partitioned by `c`, to a [[Scratch.scoped]]
+    *      directory, whose `shard=k` names are the touched shards (a second
+    *      action on a streaming batch would re-read its source). With
+    *      `None` the store is the one shard `shard=0`, and the batch is read
+    *      once, straight from its source, by the merge;
     *   3. skips each touched shard whose marker for `streamId` is already
     *      at or past `batchId`, i.e. a redelivered batch, and says so on
     *      stderr;
-    *   4. reads the remaining shards of the store and of the staged batch
-    *      with the staged schema (no footer-reading inference job) and
-    *      without `shard`;
-    *   5. writes `combine(base, batch)`, partitioned by `shard`, to
-    *      `<store>.next`, writes each staged shard's marker and swaps the
-    *      staged shards in.
-    * `shard` is an expression over the batch's columns that `combine` keeps
+    *   4. reads the remaining shards of the store with the batch's schema
+    *      (no footer-reading inference job) and without `shard`;
+    *   5. writes `combine(base, batch)`, partitioned by shard, to
+    *      `<store>.next`, writes each merged shard's marker and swaps the
+    *      merged shards in.
+    * `c` is an expression over the batch's columns that `combine` keeps
     * per key, so a merged row lands in the shard its inputs came from. A
     * null key's shard is null, which parquet would write as
     * `__HIVE_DEFAULT_PARTITION__`; such rows go to shard 0. */
   def merge(batch: DataFrame, store: String, batchId: Long, streamId: String,
-      shard: Column)(combine: (DataFrame, DataFrame) => DataFrame): Unit = {
+      shard: Option[Column])(
+      combine: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
-    val shardOf = coalesce(shard, lit(0))
+    val shardOf = shard.fold(lit(0))(coalesce(_, lit(0)))
+    val rows = batch.withColumn("shard", shardOf)
     val swap = new Swap(spark, store)
     swap.recover()
-    Scratch.scoped(spark) { dir =>
-      val staged = new Path(dir, "batch")
-      val rows = batch.withColumn("shard", shardOf)
-      rows.write.partitionBy("shard").parquet(staged.toString)
-      val touched = staged.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(staged).map(_.getPath.getName)
-        .filter(_.startsWith("shard=")).toSeq
+
+    def mergeShards(touched: Seq[String], batchRows: DataFrame): Unit = {
       val (done, todo) = touched.partition(swap.applied(_, streamId) >= batchId)
       // logged: were the scope ever to collide, a silent skip would read
       // as data loss with no trace
@@ -68,10 +66,10 @@ private[graft] object StoreSwap {
           "those shards skipped")
       if (todo.nonEmpty) {
         val ids = todo.map(_.stripPrefix("shard=").toInt)
-        def read(path: String): DataFrame =
-          spark.read.schema(rows.schema).parquet(path)
-            .filter(col("shard").isin(ids: _*)).drop("shard")
-        combine(read(store), read(staged.toString))
+        def inTodo(df: DataFrame): DataFrame =
+          df.filter(col("shard").isin(ids: _*)).drop("shard")
+        combine(inTodo(spark.read.schema(rows.schema).parquet(store)),
+            inTodo(batchRows))
           .withColumn("shard", shardOf)
           .write.mode(SaveMode.Overwrite)
           .partitionBy("shard")
@@ -79,6 +77,17 @@ private[graft] object StoreSwap {
         todo.foreach(swap.mark(_, streamId, batchId))
         swap.commitShards(todo)
       }
+    }
+
+    if (shard.isEmpty) mergeShards(Seq("shard=0"), rows)
+    else Scratch.scoped(spark) { dir =>
+      val staged = new Path(dir, "batch")
+      rows.write.partitionBy("shard").parquet(staged.toString)
+      val touched = staged.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(staged).map(_.getPath.getName)
+        .filter(_.startsWith("shard=")).toSeq
+      mergeShards(touched,
+        spark.read.schema(rows.schema).parquet(staged.toString))
     }
   }
 

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.plans.RangeBucket
-
 /** Ingest-time exact deduplication — the streaming twin of the batch
   * content-hash dedup ([[graft.operators.Docs.q18ExactDedup]]). A 100 TB
   * corpus is not assembled in one batch job: it arrives as a crawl stream,
@@ -30,13 +28,14 @@ object StreamingDedup {
     *
     * This keeps NO streaming state — the store IS the state, so nothing is
     * watermark-evicted and copies arbitrarily far apart still merge. Each
-    * batch goes through [[StoreSwap.merge]], sharded on the hash's leading
-    * hex digit ([[HashBoundaries]]). Content hashes have no locality, so a
-    * batch of n documents rewrites min(n, 4) of the 4 shards. `sum` is not
-    * idempotent, so the per-shard replay markers are what keep a
-    * checkpoint redelivery of an applied batch from double counting; their
-    * scope is the query id Structured Streaming persists in the
-    * checkpoint ([[StoreSwap.streamScope]]). */
+    * batch goes through [[StoreSwap.merge]] into the one shard `shard=0`:
+    * content hashes have no locality, so a hash-sharded store would have
+    * every shard rewritten by any batch of more than a few documents, and
+    * the merge reads the batch straight from its source, with no staging
+    * copy. `sum` is not idempotent, so the shard's replay marker is what
+    * keeps a checkpoint redelivery of an applied batch from double
+    * counting; its scope is the query id Structured Streaming persists in
+    * the checkpoint ([[StoreSwap.streamScope]]). */
   def mergeIntoDedupStore(docs: DataFrame, storePath: String,
       checkpointPath: String): StreamingQuery = {
     // read at the first batch, not at wiring time: the metadata file
@@ -57,22 +56,17 @@ object StreamingDedup {
   private[graft] val StoreSchema =
     "content_hash STRING, rep_doc_id LONG, n_copies LONG"
 
-  /** The dedup store's shard cut points over lower-case hex sha-256. */
-  private val HashBoundaries = Seq("4", "8", "c")
-
   /** One micro-batch's merge, exposed for direct replay testing:
     * `streamId` scopes the replay markers ([[StoreSwap.streamScope]] in
-    * production). Each document is staged as its own store row,
+    * production). Each document enters the merge as its own store row,
     * `(hash, doc_id, 1)`: the merge's (min, sum) folds a batch's copies
-    * together with the store's, where aggregating the batch before staging
-    * would add a shuffle job per batch. */
+    * together with the store's in its one shuffle. */
   private[graft] def applyDedupBatch(batch: DataFrame, storePath: String,
       batchId: Long, streamId: String): Unit =
     StoreSwap.merge(
       batch.select(sha2(col("text"), 256).as("content_hash"),
         col("doc_id").as("rep_doc_id"), lit(1L).as("n_copies")),
-      storePath, batchId, streamId,
-      RangeBucket.shardId(col("content_hash"), HashBoundaries)) {
+      storePath, batchId, streamId, shard = None) {
       (store, b) =>
         store.unionByName(b).groupBy("content_hash")
           .agg(min(col("rep_doc_id")).as("rep_doc_id"),

@@ -93,12 +93,9 @@ object StreamingGate {
           .select("doc_id", "text")
           .repartition(NumBatches)
           .write.json(src)
-        val stream = rs.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .option("mode", "FAILFAST")
-          .json(src)
-        StreamingDedup.mergeIntoDedupStore(stream, storePath, ckpt)
+        StreamingDedup.mergeIntoDedupStore(
+            StreamingLww.jsonlSource(rs, src, "doc_id LONG, text STRING"),
+            storePath, ckpt)
           .awaitTermination()
     }
     spark.read.schema(StreamingDedup.StoreSchema).parquet(store)
@@ -142,6 +139,7 @@ object StreamingGate {
   private def lwwReplay(spark: SparkSession, dir: String): DataFrame = {
     val store = replayOnce(spark, dir, "graft_stream_lww") {
       (rs, src, storePath, ckpt) =>
+        import rs.implicits._
         TripleStore.triples(rs, dir)
           .transform(graft.operators.Lww.compact)
           .withColumn("shard",
@@ -182,7 +180,8 @@ object StreamingGate {
           val expectRows = release(files)
           require(expectRows > 0, s"q83 $label phase carried no rows")
           val q = StreamingLww.mergeIntoStorePartitioned(
-            StreamingLww.jsonlSource(rs, src),
+            StreamingLww.jsonlSource(rs, src, StreamingLww.TripleSchema)
+              .as[graft.Triple],
             storePath, ckpt, PartBoundaries, Trigger.AvailableNow())
           q.awaitTermination()
           val got = q.recentProgress.toSeq.map(_.numInputRows).sum
@@ -319,7 +318,8 @@ object StreamingGate {
         val buf =
           new java.util.concurrent.ConcurrentLinkedQueue[(Long, graft.Triple)]()
         val q = StreamingLww.winnersWithTtl(
-            StreamingLww.jsonlSource(rs, src),
+            StreamingLww.jsonlSource(rs, src, StreamingLww.TripleSchema)
+              .as[graft.Triple],
             s"$d milliseconds", ttl)
           .writeStream
           .outputMode("update")

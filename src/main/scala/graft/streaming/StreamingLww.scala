@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -27,27 +27,28 @@ import graft.operators.Lww
   */
 object StreamingLww {
 
-  /** File-shaped streaming source over the reference's JSONL wire format
-    * (its master relays rows as JSON over HTTP, `MasterServer.py:327`;
+  /** File-shaped streaming source over JSONL (the reference's wire format:
+    * its master relays rows as JSON over HTTP, `MasterServer.py:327`;
     * [[graft.TripleStore.writeJsonl]] is the batch twin): files dropped
     * into `path` become micro-batches, so any process that can write a
-    * file can feed the engine — no broker required. Explicit schema (a
-    * streaming read must never sample 100 TB to infer four columns); one
-    * file per micro-batch, so a backlog replays as file-sized batches and
-    * per-batch sink I/O stays predictable. Compose with [[winners]] /
-    * [[winnersWithTtl]] / [[mergeIntoStorePartitioned]]. */
-  def jsonlSource(spark: org.apache.spark.sql.SparkSession,
-      path: String): Dataset[Triple] = {
-    import spark.implicits._
+    * file can feed the engine — no broker required. `schema` is a DDL
+    * string (a streaming read must never sample 100 TB to infer its
+    * columns; [[TripleSchema]] for triples); one file per micro-batch, so a
+    * backlog replays as file-sized batches and per-batch sink I/O stays
+    * predictable. The LWW operators take `.as[Triple]` of it; the q70 and
+    * q74 replays read their own columns through it. */
+  def jsonlSource(spark: org.apache.spark.sql.SparkSession, path: String,
+      schema: String): DataFrame =
     spark.readStream
-      .schema("subject STRING, predicate STRING, object STRING, ts_ms BIGINT")
+      .schema(schema)
       .option("maxFilesPerTrigger", 1)
       // malformed lines fail the batch loudly — PERMISSIVE would null them
       // silently and poison the store under null keys
       .option("mode", "FAILFAST")
       .json(path)
-      .as[Triple]
-  }
+
+  /** [[graft.Triple]]'s columns, as [[jsonlSource]] reads them. */
+  val TripleSchema = "subject STRING, predicate STRING, object STRING, ts_ms BIGINT"
 
   /** Emit the current winner of every key touched in each micro-batch
     * (update output mode). */
@@ -105,7 +106,7 @@ object StreamingLww {
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[Triple], batchId: Long) =>
         StoreSwap.merge(batch.toDF(), storePath, batchId, streamId,
-          shardCol(boundaries))(Lww.merge)
+          Some(shardCol(boundaries)))(Lww.merge)
       }
       .start()
   }

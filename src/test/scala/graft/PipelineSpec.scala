@@ -471,6 +471,22 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       s"cross-stream append broke the scope: max copies $counts (want 3)")
   }
 
+  test("incremental IVF: two streams whose ids differ only in characters " +
+    "a file name cannot hold keep separate replay markers, so both batch 0s " +
+    "land") {
+    val (_, cents) = Vectors.ivfAssign(spark, sf, k = 8, iters = 3)
+    val batch = TripleStore.table(spark, sf, "embeddings")
+      .filter(col("vec_id") % 10 >= 8)
+    val out = tmp("graft_ivf_scope")
+    cents.write.parquet(s"$out/centroids")
+    Seq("a/b", "a_b").foreach(id => Vectors.ivfAppendBatch(spark, out, batch,
+      batchId = Some(0L), streamId = id))
+    val copies = spark.read.parquet(s"$out/lists").groupBy("vec_id").count()
+      .select("count").distinct().as[Long].collect().toSeq
+    assert(copies == Seq(2L),
+      s"per-vec_id copies $copies: one stream's batch 0 read as a replay")
+  }
+
   test("int8-at-rest IVF (r17): ivfProbeQuantized over a quantized lists " +
     "layout returns exactly ivfProbe over the decoded normalized view " +
     "(the quantized probe moves the decode above the cluster join and " +

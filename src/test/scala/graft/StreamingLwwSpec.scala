@@ -239,6 +239,53 @@ class StreamingLwwSpec extends AnyFunSuite with TempDirs {
     }(java.nio.file.Files.exists(old))
   }
 
+  test("partitioned sink: a redelivered batch after a partial commit " +
+    "skips the shard already swapped in and merges the one stranded at " +
+    "'.old'") {
+    val dir = tmp("graft_part_partial")
+    val store = s"$dir/store"
+    val path = java.nio.file.Paths.get(_: String)
+    val shard = Some(graft.plans.RangeBucket.shardId(col("subject"),
+      Seq("<b>", "<c>")))
+    def merge(rows: Seq[Triple], batchId: Long): Unit =
+      graft.streaming.StoreSwap.merge(rows.toDF(), store, batchId, "ckptA",
+        shard)(Lww.merge)
+    val b0 = Seq(Triple("<a>", "<p>", "v1", 100L), // shard 0
+      Triple("<c>", "<q>", "x", 50L))              // shard 2
+    val b1 = Seq(Triple("<a>", "<p>", "v2", 300L),
+      Triple("<c>", "<q>", "y", 80L))
+    merge(b0, 0L)
+    val batch0 = s"$dir/batch0"
+    FileUtils.copyDirectory(new java.io.File(store), new java.io.File(batch0))
+    merge(b1, 1L)
+    // rebuild what dying between batch 1's shard commits leaves: shard 0
+    // swapped in with batch 1's marker; shard 2's live directory gone, its
+    // batch-0 state at .old and its batch-1 state still staged in .next
+    java.nio.file.Files.createDirectories(path(store + ".old"))
+    java.nio.file.Files.createDirectories(path(store + ".next"))
+    java.nio.file.Files.move(path(s"$store/shard=2"),
+      path(s"$store.next/shard=2"))
+    java.nio.file.Files.move(path(s"$batch0/shard=2"),
+      path(s"$store.old/shard=2"))
+    def files(shard: String): Set[(String, Long, Long)] = FileUtils
+      .listFiles(new java.io.File(store, shard), null, true).asScala
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+    val shard0 = files("shard=0")
+    merge(b1, 1L)
+    assert(files("shard=0") == shard0,
+      "the redelivered batch rewrote the shard it had already committed")
+    val got = spark.read.parquet(store)
+      .select("subject", "predicate", "object", "ts_ms")
+      .as[Triple].collect().toSet
+    val batch = Lww.upsert(
+        Seq.empty[Triple].toDF("subject", "predicate", "object", "ts_ms"),
+        (b0 ++ b1).toDF("subject", "predicate", "object", "ts_ms"))
+      .as[Triple].collect().toSet
+    assert(got == batch)
+    Seq(".old", ".next").foreach(x => assert(
+      !java.nio.file.Files.exists(path(store + x)), s"$x not cleaned up"))
+  }
+
   test("partitioned sink crash recovery on a non-local default filesystem: " +
     "a shard stranded at '.old' through the Hadoop FileSystem is restored") {
     val s = GraftTestFs.session(spark)
@@ -341,7 +388,7 @@ class StreamingLwwSpec extends AnyFunSuite with TempDirs {
     java.nio.file.Files.writeString(in.resolve("bad.json"),
       """{"subject":"<a>","predicate":"<p>","object":"v","ts_ms":1}""" +
         "\nnot json at all\n")
-    val q = StreamingLww.jsonlSource(spark, in.toString)
+    val q = StreamingLww.jsonlSource(spark, in.toString, StreamingLww.TripleSchema)
       .writeStream.format("memory").queryName("failfast_stream").start()
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try q.processAllAvailable() finally q.stop()
@@ -373,11 +420,13 @@ class StreamingLwwSpec extends AnyFunSuite with TempDirs {
     }
     drop("b1.json", batch1)
     StreamingLww.mergeIntoStorePartitioned(
-      StreamingLww.jsonlSource(spark, in.toString), storePath, ckpt,
+      StreamingLww.jsonlSource(spark, in.toString, StreamingLww.TripleSchema)
+        .as[Triple], storePath, ckpt,
       boundaries).awaitTermination()
     drop("b2.json", batch2)
     StreamingLww.mergeIntoStorePartitioned(
-      StreamingLww.jsonlSource(spark, in.toString), storePath, ckpt,
+      StreamingLww.jsonlSource(spark, in.toString, StreamingLww.TripleSchema)
+        .as[Triple], storePath, ckpt,
       boundaries).awaitTermination()
     val store = spark.read.parquet(storePath)
       .select("subject", "predicate", "object", "ts_ms")

@@ -473,7 +473,8 @@ class TripleStoreSpec extends AnyFunSuite with TempDirs {
       ("<😀_img>", "<q>", "multi\nline", -62135596800000L))
       .toDF("subject", "predicate", "object", "ts_ms")
     TripleStore.writeJsonl(orig, dir)
-    val q = graft.streaming.StreamingLww.jsonlSource(spark, dir)
+    val q = graft.streaming.StreamingLww.jsonlSource(spark, dir,
+        graft.streaming.StreamingLww.TripleSchema)
       .writeStream.format("memory").queryName("jsonl_roundtrip")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
